@@ -1,7 +1,10 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions.{expr, timestamp_micros}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table access for the driver-generated corpus (TESTDATA.md).
   *
@@ -12,8 +15,48 @@ import org.apache.spark.sql.functions.{expr, timestamp_micros}
 object Tables {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     graft.GraftExtensions.register(spark) // engine SQL functions always on
-    spark.read.parquet(s"$dir/$name.parquet")
+    read(spark, s"$dir/$name.parquet")
   }
+
+  /** `spark.read.parquet(path)`, without its footer-reading job after the
+    * first read: the inferred schema is cached per path with the stamp it
+    * was inferred under, and a later read whose stamp matches passes the
+    * cached schema to the reader instead of inferring. The stamp is the
+    * modification time and length of every file, taken from the file
+    * index the reader builds anyway (so a cache hit lists the tree once,
+    * as any read does, and runs no job), plus the parquet-to-Spark type
+    * mappings the sessions vary (`nanosAsLong`, `inferTimestampNTZ`); a
+    * rewritten table or a changed setting is inferred again. Footer
+    * decoding on the driver would avoid even the first job but would
+    * re-implement Spark's footer merge and type mapping; the cache reuses
+    * Spark's own answer. */
+  private def read(spark: SparkSession, path: String): DataFrame = {
+    val settings = SchemaSettings.map(k => spark.conf.getOption(k))
+    val hit = Option(schemas.get(path)).collect {
+      case (`settings`, files, cached) => (files, spark.read.schema(cached).parquet(path))
+    }.collect { case (files, df) if stamp(df).contains(files) => df }
+    hit.getOrElse {
+      val df = spark.read.parquet(path)
+      stamp(df).foreach(files => schemas.put(path, (settings, files, df.schema)))
+      df
+    }
+  }
+
+  /** (path, modification time, length) of every file the read's file
+    * index listed; None for a relation without one. */
+  private def stamp(df: DataFrame): Option[Seq[(String, Long, Long)]] =
+    df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation => r.location }
+      .collect { case index: PartitioningAwareFileIndex =>
+        index.allFiles().map(f => (f.getPath.toString, f.getModificationTime, f.getLen)).sorted
+      }
+
+  private val SchemaSettings = Seq("spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+  /** path → (settings and file stamp it was inferred under, schema); one
+    * entry per path, replaced when either changes. */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[String,
+    (Seq[Option[String]], Seq[(String, Long, Long)], StructType)]()
 
   def lineitem(s: SparkSession, d: String): DataFrame  = apply(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame    = apply(s, d, "orders")

@@ -1,6 +1,9 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -9,18 +12,22 @@ import org.apache.spark.sql.functions._
   * Components in MapReduce and Beyond", SoCC'14), run entirely inside
   * Catalyst — no RDD conversion, no Pregel runtime.
   *
-  * Why a second CC engine next to [[Traversal.connectedComponents]]
-  * (GraphX): the GraphX path materializes vertex/edge RDDs outside the
-  * SQL optimizer — every use pays Dataset→RDD encoding, loses AQE
-  * (skew-split, runtime partition coalescing), and pins
-  * MEMORY_AND_DISK caches the SQL planner can't see. At 100 TB the
-  * edge list IS a DataFrame already; keeping the iteration in
-  * DataFrames means each round's two shuffles ride the same AQE
-  * machinery as every other operator, and `localCheckpoint` per round
-  * caps lineage exactly like the PageRank/k-core family
-  * (SCALE.md §4). Star-contraction converges in O(log² n) rounds
-  * worst-case and ~log d in practice — at any scale the bound is
-  * rounds × (edge shuffle), never a transitive-closure blowup.
+  * Two paths, one contract, picked by [[DriverFinish]]'s memory rule on
+  * the edge count the first round already observes × Catalyst's row
+  * size (no extra job):
+  *  - an edge list within `spark.sql.autoBroadcastJoinThreshold` is
+  *    collected once and finished on the driver by union-find with
+  *    min-id roots — the star loop's cost at these sizes is scheduling
+  *    per round, not bytes. The result has at most two rows of the
+  *    same width per edge, so it stays within twice the budget;
+  *  - a larger list (or any list when the threshold is −1) runs the
+  *    star-contraction loop below. There each round's two shuffles
+  *    ride the same AQE machinery as every other operator, and
+  *    `localCheckpoint` per round caps lineage exactly like the
+  *    PageRank/k-core family (SCALE.md §4). Star-contraction converges
+  *    in O(log² n) rounds worst-case and ~log d in practice — at any
+  *    scale the bound is rounds × (edge shuffle), never a
+  *    transitive-closure blowup.
   *
   * Algorithm (per round, on an undirected edge list E):
   *  - large-star: for every node x, connect each strictly LARGER
@@ -37,9 +44,9 @@ import org.apache.spark.sql.functions._
   * Convergence: a (count, xor-of-xxhash64) fingerprint of the edge
   * set, one tiny aggregate per round — order-free, so it is stable
   * across partitionings. At the fixed point every edge is
-  * (member, root) with root = the component's minimum id (the same
-  * contract GraphX documents), which ComponentsDFSpec pins by direct
-  * equivalence against [[Traversal.connectedComponents]].
+  * (member, root) with root = the component's minimum id (the contract
+  * GraphX documents), which ComponentsDFSpec pins on both paths by
+  * direct equivalence against GraphX Pregel CC.
   *
   * Ref anchor: the reference's only global-graph analytic is Neo4j CC
   * over waste/facility nodes (`analysis_queries.cql` section 4); this
@@ -58,9 +65,7 @@ object ComponentsDF {
     */
   def run(edges: DataFrame, maxIter: Int = 25): DataFrame = {
     // The convergence fingerprint rides each round's materialization as
-    // an `observe` metric: localCheckpoint(eager) executes through
-    // withAction, so the observed aggregate completes with the
-    // checkpoint job — one job per round instead of checkpoint +
+    // an observed metric — one job per round instead of checkpoint +
     // fingerprint re-scan (guide §1.2: don't re-pass over what the
     // round already materialized).
     var (e, fp) = checkpointFp(edges
@@ -68,36 +73,59 @@ object ComponentsDF {
         greatest(col("src"), col("dst")).cast("long").as("v"))
       .filter(col("u") =!= col("v"))
       .distinct())
-
-    var converged = false
-    var i = 0
-    while (i < maxIter && !converged) {
-      val (next, nfp) = checkpointFp(smallStar(largeStar(e)))
-      converged = nfp == fp
-      fp = nfp
-      e = next
-      i += 1
+    if (DriverFinish.fits(e.sparkSession, BigInt(fp._1) * DriverFinish.rowBytes(e.schema)))
+      e.sparkSession.createDataFrame(unionFind(e.collect()).asJava, starForest(e).schema)
+    else {
+      var converged = false
+      var i = 0
+      while (i < maxIter && !converged) {
+        val (next, nfp) = checkpointFp(smallStar(largeStar(e)))
+        converged = nfp == fp
+        fp = nfp
+        e = next
+        i += 1
+      }
+      require(converged, s"ComponentsDF did not converge in $maxIter rounds")
+      starForest(e)
     }
-    require(converged, s"ComponentsDF did not converge in $maxIter rounds")
-    // Fixed point is a star forest stored canonically as
-    // (u = root, v = member) since root = component min: add the
-    // roots' own rows to make the per-vertex assignment total over
-    // edge-touched vertices.
+  }
+
+  /** The fixed point is a star forest stored canonically as
+    * (u = root, v = member) since root = component min: add the roots'
+    * own rows to make the per-vertex assignment total over edge-touched
+    * vertices. */
+  private def starForest(e: DataFrame): DataFrame =
     e.select(col("v").as("vid"), col("u").as("component"))
       .unionByName(e.select(col("u").as("vid"), col("u").as("component")))
       .distinct()
+
+  /** The driver finish: union-find over the collected (u, v) edges,
+    * always hanging the larger root under the smaller, so every root is
+    * its component's minimum id — the star loop's fixed point. */
+  private def unionFind(edges: Array[Row]): Seq[Row] = {
+    val parent = mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var y = x // path compression
+      while (y != r) { val next = parent(y); parent(y) = r; y = next }
+      r
+    }
+    for (row <- edges) {
+      val (a, b) = (find(row.getLong(0)), find(row.getLong(1)))
+      parent(math.max(a, b)) = math.min(a, b)
+      parent.getOrElseUpdate(math.min(a, b), math.min(a, b))
+    }
+    parent.keys.toSeq.map(v => Row(v, find(v)))
   }
 
   /** Eagerly localCheckpoint `df` with the order-free edge-set
     * fingerprint (count + xor of per-edge hashes — no sort, stable
     * across partitionings) observed ON the materialization job. */
   private def checkpointFp(df: DataFrame): (DataFrame, (Long, Long)) = {
-    val obs = org.apache.spark.sql.Observation()
-    val ck = df.observe(obs, count(lit(1)).as("n"),
-        coalesce(bit_xor(xxhash64(col("u"), col("v"))), lit(0L)).as("h"))
-      .localCheckpoint(true)
-    val m = obs.get
-    (ck, (m("n").asInstanceOf[Long], m("h").asInstanceOf[Long]))
+    val (ck, m) = graft.core.ObservedCheckpoint.aggregate(df, count(lit(1)).as("n"),
+      coalesce(bit_xor(xxhash64(col("u"), col("v"))), lit(0L)).as("h"))
+    (ck, (m.getLong(0), m.getLong(1)))
   }
 
   /** Connect every strictly-larger neighbor of x to min(Γ(x) ∪ {x}).

@@ -1,39 +1,44 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.graphx.{Edge => GxEdge, Graph => GxGraph, VertexId}
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.core.ObservedCheckpoint
 
 /** Unbounded graph traversal (SURVEY.md J8, §4 custom-work item 3): the
   * reference's decision-tree chains (`Condition -NEXT_CHECK-> …`) and
   * AVV hierarchy (`schema.cql:119-122`) need reachability to a fixpoint.
   *
-  * Two engines, per SURVEY's decision table:
-  *  - [[reachFixpoint]]: iterative DataFrame joins on the driver —
-  *    bounded only by graph depth, each iteration one shuffle join;
-  *    frontier is cached and localCheckpointed to cut lineage (without
-  *    it, iteration N replays all N-1 prior joins — quadratic).
-  *  - [[connectedComponents]]: GraphX Pregel-based CC for global
-  *    analytics the join loop can't express efficiently.
+  * Two paths per closure, one contract, picked by [[DriverFinish]]'s
+  * memory rule:
+  *  - while the edge projection (by Catalyst's size estimate, the number
+  *    `JoinSelection` compares with the same threshold — no job) and the
+  *    closure built from it both fit `spark.sql.autoBroadcastJoinThreshold`,
+  *    the edges (and the seeded start set) are collected in one job and
+  *    the closure is a level-synchronous BFS on the driver, returned as a
+  *    local frame;
+  *  - otherwise, or when the threshold is −1, iterative DataFrame joins
+  *    bounded only by graph depth, each level one shuffle join; every
+  *    level is localCheckpointed to cut lineage (without it, iteration N
+  *    replays all N-1 prior joins — quadratic). A closure that outgrows
+  *    the budget on the driver costs its collect job and the partial BFS
+  *    before this loop starts.
+  * Both paths apply the same rules level by level: a visited-set
+  * anti-join on (start, reached), so first reach = min depth and cyclic
+  * graphs terminate (SURVEY §7 hard-part 5); SQL key equality (a null
+  * endpoint never joins); and, for witnesses, the per-level min path
+  * string in Spark's `min` order (UTF-8 bytes).
   *
   * Scale notes: the join loop shuffles the frontier on dst each round;
   * at 100 TB the edge table would be bucketed by src_uid so each
-  * iteration is a co-located join. Cycle safety: the visited-set
-  * anti-join guarantees termination on cyclic graphs (SURVEY §7
-  * hard-part 5).
+  * iteration is a co-located join.
   */
 object Traversal {
-
-  /** Eagerly localCheckpoint `df` with its row count observed ON the
-    * materialization job (localCheckpoint(eager) runs through
-    * withAction, so the observed aggregate completes with it) — the
-    * fixpoint loops' emptiness probe without a second job per level. */
-  private def checkpointCount(df: DataFrame): (DataFrame, Long) = {
-    val obs = org.apache.spark.sql.Observation()
-    val ck = df.observe(obs, count(lit(1)).as("n")).localCheckpoint(true)
-    (ck, obs.get("n").asInstanceOf[Long])
-  }
 
   /** All (start, reached, depth) pairs following `edges`
     * (src_uid→dst_uid) from every node to fixpoint, cycle-safe.
@@ -49,6 +54,10 @@ object Traversal {
   def reachFixpoint(edges: DataFrame, maxIter: Int = 50,
                     seed: Option[DataFrame] = None): DataFrame = {
     val e0 = edges.select(col("src_uid"), col("dst_uid"))
+    def firstLevel(e: DataFrame) = seeded(e, seed).select(col("src_uid").as("start"),
+      col("dst_uid").as("reached"), lit(1).as("depth"))
+    val onDriver = driverReach(e0, seed, maxIter, firstLevel(e0).schema, witness = false)
+    if (onDriver.isDefined) return onDriver.get
     val e = e0.cache()
     // Levels are kept as a LIST of checkpointed frames and only unioned
     // lazily (for the per-round anti-join) and once at the end: the old
@@ -57,10 +66,7 @@ object Traversal {
     // bytes written over the loop (guide §1.2: remove passes that
     // recompute what is already materialized). A union of checkpointed
     // RDDs is lineage-free already; nothing needs re-materializing.
-    val level1 = seed.fold(e: DataFrame)(sd =>
-      e.join(sd.select(col("src_uid")).distinct(), Seq("src_uid"), "left_semi"))
-    val first = level1.select(col("src_uid").as("start"), col("dst_uid").as("reached"),
-      lit(1).as("depth")).localCheckpoint(true)
+    val first = firstLevel(e).localCheckpoint(true)
     var levels = Vector(first)
     var frontier = first
     var i = 1
@@ -68,10 +74,8 @@ object Traversal {
     def acc = levels.reduce(_ unionByName _)
     while (i < maxIter && !done) {
       // the emptiness probe rides the checkpoint job as an observed
-      // count (localCheckpoint(eager) executes through withAction) —
-      // the old separate isEmpty() was one extra scheduled job per
-      // level (guide §1.2)
-      val (next, n) = checkpointCount(
+      // count — no separate isEmpty() job per level (guide §1.2)
+      val (next, n) = ObservedCheckpoint.count(
         frontier.join(e, frontier("reached") === e("src_uid"))
           .select(col("start"), col("dst_uid").as("reached"), (col("depth") + 1).as("depth"))
           .join(acc.select(col("start").as("s2"), col("reached").as("r2")),
@@ -107,19 +111,18 @@ object Traversal {
     */
   def reachFixpointWitness(edges: DataFrame, maxIter: Int = 50,
                            seed: Option[DataFrame] = None): DataFrame = {
-    val e = edges.select(col("src_uid"), col("dst_uid"), col("rel_type")).cache()
-    // same seeding contract as reachFixpoint: restrict STARTS up front
-    // when the caller will only keep seeded sources
-    val level1 = seed.fold(e: DataFrame)(sd =>
-      e.join(sd.select(col("src_uid")).distinct(), Seq("src_uid"), "left_semi"))
+    val e0 = edges.select(col("src_uid"), col("dst_uid"), col("rel_type"))
     def minPath(df: DataFrame, depth: Int): DataFrame =
       df.groupBy("start", "reached").agg(min(col("path")).as("path"))
         .withColumn("depth", lit(depth))
-    var frontier = minPath(level1.select(col("src_uid").as("start"),
+    def firstLevel(e: DataFrame) = minPath(seeded(e, seed).select(col("src_uid").as("start"),
         col("dst_uid").as("reached"),
         concat(col("src_uid"), lit("|"), col("rel_type"), lit("|"),
           col("dst_uid")).as("path")), 1)
-      .localCheckpoint(true)
+    val onDriver = driverReach(e0, seed, maxIter, firstLevel(e0).schema, witness = true)
+    if (onDriver.isDefined) return onDriver.get
+    val e = e0.cache()
+    var frontier = firstLevel(e).localCheckpoint(true)
     // same level-list discipline as reachFixpoint: levels stay
     // individually checkpointed, the accumulated closure is only a lazy
     // union — no per-round re-materialization of everything seen so far
@@ -128,9 +131,7 @@ object Traversal {
     var done = false
     def acc = levels.reduce(_ unionByName _)
     while (i < maxIter && !done) {
-      // same observed-count fusion as reachFixpoint: no separate
-      // isEmpty job per level
-      val (next, n) = checkpointCount(minPath(
+      val (next, n) = ObservedCheckpoint.count(minPath(
         frontier.join(e, frontier("reached") === e("src_uid"))
           .select(col("start"), col("dst_uid").as("reached"),
             concat(col("path"), lit("|"), col("rel_type"), lit("|"),
@@ -149,20 +150,100 @@ object Traversal {
     acc
   }
 
-  /** GraphX connected components over a node/edge DataFrame pair with
-    * caller-supplied stable Long vertex ids. Returns (vid, component)
-    * where component = min vertex id in the component (GraphX contract).
-    */
-  def connectedComponents(vertices: DataFrame, edges: DataFrame,
-                          spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val vrdd = vertices.select(col("vid").cast("long")).as[Long].rdd.map(v => (v, ()))
-    val erdd = edges.select(col("src_vid").cast("long"), col("dst_vid").cast("long"))
-      .as[(Long, Long)].rdd.map { case (s, d) => GxEdge(s, d, ()) }
-    val graph = GxGraph(vrdd, erdd, (),
-      edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
-      vertexStorageLevel = StorageLevel.MEMORY_AND_DISK)
-    graph.connectedComponents().vertices
-      .toDF("vid", "component")
+  /** The level-1 edges: every edge, or only those leaving a seed node. */
+  private def seeded(e: DataFrame, seed: Option[DataFrame]): DataFrame =
+    seed.fold(e)(sd =>
+      e.join(sd.select(col("src_uid")).distinct(), Seq("src_uid"), "left_semi"))
+
+  /** The driver finish of both closures, or None when the edge input
+    * (Catalyst's size estimate of its plan — no job) or the closure
+    * itself passes [[DriverFinish]]'s budget. One job collects the edges
+    * together with the seeded start set (Spark's own semi-join decides
+    * which seeds match, so key typing stays Spark's); the BFS then
+    * mirrors the distributed loop level by level. Level 1 of the plain
+    * closure keeps one row per edge, as its loop does. The closure is
+    * charged [[DriverFinish.rowBytes]] per row plus each witness's bytes
+    * as it grows; once the charge passes the budget the partial result is
+    * dropped and the caller runs its distributed loop, whose levels can
+    * spill. */
+  private def driverReach(e: DataFrame, seed: Option[DataFrame], maxIter: Int,
+                          schema: StructType,
+                          witness: Boolean): Option[DataFrame] = {
+    val spark = e.sparkSession
+    if (!DriverFinish.fits(spark, e.queryExecution.optimizedPlan.stats.sizeInBytes))
+      return None
+    var left = DriverFinish.budget(spark).get
+    val rowBytes = DriverFinish.rowBytes(schema)
+    val tagged = e.withColumn("seed_start", lit(false))
+    // the seed side stays a plain semi-join: repeated starts collapse in
+    // the driver's set, so a distinct would only add an exchange
+    val rows = seed.fold(tagged)(sd => tagged.unionByName(
+        e.join(sd.select(col("src_uid")), Seq("src_uid"), "left_semi")
+          .select(col("src_uid"), lit(true).as("seed_start")),
+        allowMissingColumns = true))
+      .collect()
+    val (starts, edgeRows) = rows.partition(_.getAs[Boolean]("seed_start"))
+    val startSet = starts.map(_.get(0)).toSet
+    val edgeList = edgeRows.toSeq.map(r =>
+      (r.get(0), r.get(1), if (witness) utf8(r.get(2)) else null))
+    val adj = edgeList.filter(_._1 != null).groupBy(_._1)
+
+    type Hop = (Any, Any, UTF8String) // (start, reached, path)
+    def sep(p: UTF8String, rel: UTF8String, d: Any): UTF8String =
+      if (p == null || rel == null || d == null) null
+      else UTF8String.concat(p, UTF8String.fromString("|"), rel,
+        UTF8String.fromString("|"), utf8(d))
+    /** `hops` as (start, reached) groups, null-safe like Spark's
+      * groupBy, keeping the min non-null path as Spark's `min` does;
+      * each new group is charged to the budget, None once it is spent. */
+    def collapse(hops: Iterator[Hop]): Option[Vector[Hop]] = {
+      val best = mutable.LinkedHashMap.empty[(Any, Any), UTF8String]
+      while (hops.hasNext) {
+        val (s, r, p) = hops.next()
+        best.get((s, r)) match {
+          case None =>
+            left -= rowBytes + (if (p == null) 0 else p.numBytes)
+            if (left < 0) return None
+            best((s, r)) = p
+          case Some(cur) =>
+            if (p != null && (cur == null || p.binaryCompare(cur) < 0)) best((s, r)) = p
+        }
+      }
+      Some(best.iterator.map { case ((s, r), p) => (s, r, p) }.toVector)
+    }
+
+    val level1 = edgeList.iterator
+      .filter(t => seed.isEmpty || (t._1 != null && startSet.contains(t._1)))
+      .map { case (s, d, rel) => (s, d, if (witness) sep(utf8(s), rel, d) else null) }
+    var frontier: Seq[Hop] =
+      if (witness) collapse(level1).getOrElse(return None)
+      else {
+        val hops = level1.toVector
+        left -= hops.size * rowBytes
+        if (left < 0) return None
+        hops
+      }
+    val out = mutable.ArrayBuffer.empty[Row]
+    val visited = mutable.HashSet.empty[(Any, Any)]
+    def emit(level: Seq[Hop], depth: Int): Unit = level.foreach { case (s, r, p) =>
+      out += (if (witness) Row(s, r, if (p == null) null else p.toString, depth)
+              else Row(s, r, depth))
+      if (s != null && r != null) visited += ((s, r))
+    }
+    emit(frontier, 1)
+    var i = 1
+    while (i < maxIter && frontier.nonEmpty) {
+      val next = collapse(for {
+        (s, r, p) <- frontier.iterator if r != null
+        (_, d, rel) <- adj.getOrElse(r, Nil).iterator
+        if s == null || d == null || !visited.contains((s, d))
+      } yield (s, d, if (witness) sep(p, rel, d) else null)).getOrElse(return None)
+      if (next.nonEmpty) { i += 1; emit(next, i) }
+      frontier = next
+    }
+    Some(spark.createDataFrame(out.asJava, schema))
   }
+
+  private def utf8(v: Any): UTF8String =
+    if (v == null) null else UTF8String.fromString(v.toString)
 }

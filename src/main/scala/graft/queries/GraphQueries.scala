@@ -140,25 +140,31 @@ object GraphQueries extends QueryPack {
       .orderBy("start", "reached", "depth")
   }
 
-  /** g08 — GraphX Pregel connected components over the
-    * customer–nation–region forest. Stable long vids chosen so the
-    * component representative (min vid, the GraphX contract) is the
-    * region key — making the result exactly SQL-checkable.
+  /** g08 — connected components ([[graft.graph.ComponentsDF]]) over
+    * the customer–nation–region forest. Stable long vids chosen so the
+    * component representative (min vid) is the region key — making the
+    * result exactly SQL-checkable. A vertex on no edge is its own
+    * component.
     */
   def g08Components(s: SparkSession, dir: String): DataFrame = {
-    val regions = Tables.region(s, dir).select(col("r_regionkey").cast("long").as("vid"))
-    val nations = Tables.nation(s, dir).select((col("n_nationkey") + 100).cast("long").as("vid"))
-    val customers = Tables.customer(s, dir).select((col("c_custkey") + 1000).cast("long").as("vid"))
-    val vertices = regions.unionByName(nations).unionByName(customers)
     val e1 = Tables.customer(s, dir).select(
-      (col("c_custkey") + 1000).cast("long").as("src_vid"),
-      (col("c_nationkey") + 100).cast("long").as("dst_vid"))
+      (col("c_custkey") + 1000).cast("long").as("src"),
+      (col("c_nationkey") + 100).cast("long").as("dst"))
     val e2 = Tables.nation(s, dir).select(
-      (col("n_nationkey") + 100).cast("long").as("src_vid"),
-      col("n_regionkey").cast("long").as("dst_vid"))
-    graft.graph.Traversal.connectedComponents(vertices, e1.unionByName(e2), s)
+      (col("n_nationkey") + 100).cast("long").as("src"),
+      col("n_regionkey").cast("long").as("dst"))
+    forestVertices(s, dir)
+      .join(graft.graph.ComponentsDF.run(e1.unionByName(e2)), Seq("vid"), "left")
+      .select(col("vid"), coalesce(col("component"), col("vid")).as("component"))
       .orderBy("vid")
   }
+
+  /** Every vertex of the g08/g11 forest: regions at their key, nations
+    * at 100 + key, customers at 1000 + key. */
+  private def forestVertices(s: SparkSession, dir: String): DataFrame =
+    Tables.region(s, dir).select(col("r_regionkey").cast("long").as("vid"))
+      .unionByName(Tables.nation(s, dir).select((col("n_nationkey") + 100).cast("long").as("vid")))
+      .unionByName(Tables.customer(s, dir).select((col("c_custkey") + 1000).cast("long").as("vid")))
 
   /** g09 — the fluent DSL (M3, Cypher-subset-as-library): MATCH
     * (c:Customer)-[:IN_NATION]->()-[:IN_REGION]->(r) RETURN r.name,
@@ -186,29 +192,26 @@ object GraphQueries extends QueryPack {
       .df.select("uid", "name").orderBy("uid")
   }
 
-  /** g11 — GraphX ShortestPaths from the region landmarks: hop distance
-    * per vertex (regions 0, nations 1, customers 2 in the forest) —
-    * checkably deterministic unlike float-scored graph analytics. */
+  /** g11 — hop distance per vertex to the nearest region landmark
+    * (regions 0, nations 1, customers 2 in the forest, −1 when no
+    * landmark is reachable) — checkably deterministic unlike
+    * float-scored graph analytics. Distances follow edge direction
+    * (customer→nation→region containment), so they are the depths of a
+    * reach fixpoint over the REVERSED edges seeded from the landmarks.
+    */
   def g11ShortestPaths(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.graphx.{Edge => GxEdge, Graph => GxGraph}
-    import org.apache.spark.graphx.lib.ShortestPaths
-    import s.implicits._
-    val landmarks = Tables.region(s, dir).select(col("r_regionkey").cast("long"))
-      .as[Long].collect().toSeq
-    val vtx = Tables.region(s, dir).select(col("r_regionkey").cast("long").as("vid"))
-      .unionByName(Tables.nation(s, dir).select((col("n_nationkey") + 100).cast("long").as("vid")))
-      .unionByName(Tables.customer(s, dir).select((col("c_custkey") + 1000).cast("long").as("vid")))
-      .as[Long].rdd.map(v => (v, ()))
-    // ShortestPaths measures hops FOLLOWING edge direction to a
-    // landmark — edges point customer→nation→region (containment)
-    val e = Tables.nation(s, dir).select((col("n_nationkey") + 100).cast("long"),
-        col("n_regionkey").cast("long")).as[(Long, Long)].rdd
-      .union(Tables.customer(s, dir).select((col("c_custkey") + 1000).cast("long"),
-        (col("c_nationkey") + 100).cast("long")).as[(Long, Long)].rdd)
-      .map { case (src, dst) => GxEdge(src, dst, ()) }
-    ShortestPaths.run(GxGraph(vtx, e, ()), landmarks).vertices
-      .map { case (vid, spmap) => (vid, if (spmap.isEmpty) -1 else spmap.values.min) }
-      .toDF("vid", "dist")
+    val landmarks = Tables.region(s, dir).select(col("r_regionkey").cast("long").as("src_uid"))
+    val reversed = Tables.nation(s, dir).select(col("n_regionkey").cast("long").as("src_uid"),
+        (col("n_nationkey") + 100).cast("long").as("dst_uid"))
+      .unionByName(Tables.customer(s, dir).select(
+        (col("c_nationkey") + 100).cast("long").as("src_uid"),
+        (col("c_custkey") + 1000).cast("long").as("dst_uid")))
+    val depths = graft.graph.Traversal.reachFixpoint(reversed, seed = Some(landmarks))
+      .select(col("reached").as("vid"), col("depth"))
+      .unionByName(landmarks.select(col("src_uid").as("vid"), lit(0).as("depth")))
+      .groupBy("vid").agg(min(col("depth")).as("depth"))
+    forestVertices(s, dir).join(depths, Seq("vid"), "left")
+      .select(col("vid"), coalesce(col("depth"), lit(-1)).as("dist"))
       .orderBy("vid")
   }
 
@@ -571,16 +574,6 @@ object GraphQueries extends QueryPack {
     * two semi-join-shaped inner joins against the checkpointed survivor
     * set; lineage resets per round so the plan never grows with the
     * iteration count. */
-  /** Eager localCheckpoint with the row count observed ON the
-    * materialization job (localCheckpoint(eager) executes through
-    * withAction) — the peeling loops' convergence probe without a
-    * second count() job per round (guide §1.2). */
-  private def checkpointCount(df: DataFrame): (DataFrame, Long) = {
-    val obs = org.apache.spark.sql.Observation()
-    val ck = df.observe(obs, count(lit(1)).as("n")).localCheckpoint(true)
-    (ck, obs.get("n").asInstanceOf[Long])
-  }
-
   private[queries] def kCoreEdges(pairs: DataFrame, k: Int, iters: Int): DataFrame = {
     var edges = pairs
     var prevAlive = -1L
@@ -594,7 +587,7 @@ object GraphQueries extends QueryPack {
       // convergence within `iters`). The count rides the checkpoint job
       // as an observed metric. On equality `edges` stands from the
       // previous round, built from the SAME survivor set.
-      val (alive, n) = checkpointCount(
+      val (alive, n) = graft.core.ObservedCheckpoint.count(
         edges.select(col("u1").as("u"))
           .unionAll(edges.select(col("u2").as("u")))
           .groupBy("u").agg(count(lit(1)).as("deg"))
@@ -634,7 +627,7 @@ object GraphQueries extends QueryPack {
     * exact implications, the uncertain arm is exact counting). */
   private[queries] def kCoreMembersBipartite(incidence0: DataFrame, k: Int,
                                              iters: Int): DataFrame = {
-    var (inc, prevRows) = checkpointCount(incidence0) // distinct (user_id, b)
+    var (inc, prevRows) = graft.core.ObservedCheckpoint.count(incidence0) // distinct (user_id, b)
     var converged = false
     var it = 0
     while (it < iters && !converged) {
@@ -662,7 +655,7 @@ object GraphQueries extends QueryPack {
       // count means an unchanged table and every remaining round is the
       // identity; the count rides the checkpoint job as an observed
       // metric.
-      val (inc2, rows) = checkpointCount(inc.join(alive, "user_id"))
+      val (inc2, rows) = graft.core.ObservedCheckpoint.count(inc.join(alive, "user_id"))
       inc = inc2
       if (rows == prevRows) converged = true
       else { prevRows = rows; it += 1 }
@@ -1690,7 +1683,7 @@ object GraphQueries extends QueryPack {
     * user graph ([[graft.graph.ComponentsDF]], alternating
     * large-star/small-star — Kiveris et al. SoCC'14): per clicking
     * user, the component id (min user_id in the component, the same
-    * contract as GraphX g08) and the component size; users sharing no
+    * contract as g08) and the component size; users sharing no
     * bucket with anyone are their own singleton component. This is the
     * 100 TB CC path: the whole iteration stays inside Catalyst (AQE
     * skew-split, runtime coalescing, one window + one distinct per

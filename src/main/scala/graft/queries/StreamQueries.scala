@@ -929,7 +929,7 @@ object StreamQueries extends QueryPack {
     * hash — the strongest form of the §2.10 contract this suite
     * states. */
   def s18StreamComponents(s: SparkSession, dir: String): DataFrame = {
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val ev = graft.core.Tables(s, dir, "events")
     val streamDir = Files.createTempDirectory("graft-s18-in")
     val ckpt = Files.createTempDirectory("graft-s18-ckpt")
     val scratch = Files.createTempDirectory("graft-s18-scratch")
@@ -937,10 +937,9 @@ object StreamQueries extends QueryPack {
     val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", streamParts)
     try {
-      val ev = s.read.parquet(s"$dir/events.parquet")
       stageSlices(ev, col("event_id") % 3, 3, streamDir, scratch)
       val raw = graft.core.Tables.withEventTs(
-        s.readStream.schema(schema)
+        s.readStream.schema(ev.schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(streamDir.toString))
       val q = raw.writeStream
@@ -952,8 +951,7 @@ object StreamQueries extends QueryPack {
         if (!q.awaitTermination(300000))
           sys.error("s18: stream did not finish within 300s")
       } finally q.stop()
-      val assigned = s.read
-        .parquet(graft.streaming.StreamingCC.latest(stateRoot.toString))
+      val assigned = graft.streaming.StreamingCC.latest(s, stateRoot.toString)
       val users = assigned.filter(col("vid") % 2 === 0)
         .select(expr("vid div 2").as("user_id"), col("component"))
       val full = users.join(

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Incremental connected components over a streaming edge feed via
   * star-compressed state (the streaming twin of
@@ -42,18 +43,23 @@ object StreamingCC {
     val prior = new java.io.File(s"$stateRoot/v$batchId")
     val edges =
       if (prior.isDirectory)
-        incidence.unionByName(s.read.parquet(prior.toString)
+        incidence.unionByName(s.read.schema(StateSchema).parquet(prior.toString)
           .select(col("component").as("src"), col("vid").as("dst")))
       else incidence
     graft.graph.ComponentsDF.run(edges)
       .write.mode("overwrite").parquet(s"$stateRoot/v${batchId + 1}")
   }
 
-  /** Latest state version under `stateRoot` (the final assignment). */
-  def latest(stateRoot: String): String = {
+  /** The component state: one (vid, component) row per vertex seen.
+    * Fixed, so state reads pass it instead of inferring it per batch. */
+  private val StateSchema: StructType = StructType(Seq(
+    StructField("vid", LongType), StructField("component", LongType)))
+
+  /** The latest state version under `stateRoot` (the final assignment). */
+  def latest(s: SparkSession, stateRoot: String): DataFrame = {
     val vs = Option(new java.io.File(stateRoot).listFiles()).toSeq.flatten
       .map(_.getName).filter(_.matches("v\\d+")).map(_.drop(1).toInt)
     require(vs.nonEmpty, s"StreamingCC: no state versions under $stateRoot")
-    s"$stateRoot/v${vs.max}"
+    s.read.schema(StateSchema).parquet(s"$stateRoot/v${vs.max}")
   }
 }

@@ -1,7 +1,8 @@
 package graft.graph
 
+import org.apache.spark.graphx.{Edge => GxEdge, Graph => GxGraph}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.SparkSpec
 
@@ -11,7 +12,10 @@ import graft.SparkSpec
   * (already-converged input), forests of mixed sizes, and duplicate /
   * reversed / self-loop edges (input hygiene). GraphX is the
   * spec-by-construction side — its min-id contract is documented
-  * upstream — so equality pins ComponentsDF to the same contract. */
+  * upstream — so equality pins ComponentsDF to the same contract, on
+  * both of its paths: the driver finish these small inputs take by
+  * default, and the distributed star loop forced by
+  * `autoBroadcastJoinThreshold = -1`. */
 class ComponentsDFSpec extends SparkSpec {
 
   private def edgesDF(pairs: Seq[(Long, Long)]): DataFrame = {
@@ -19,17 +23,38 @@ class ComponentsDFSpec extends SparkSpec {
     pairs.toDF("src", "dst")
   }
 
-  /** (vid -> component) from both engines; GraphX needs the vertex set. */
-  private def bothEngines(pairs: Seq[(Long, Long)]): (Map[Long, Long], Map[Long, Long]) = {
-    val e = edgesDF(pairs)
-    val verts = e.select(col("src").as("vid"))
-      .unionByName(e.select(col("dst").as("vid"))).distinct()
-    val df = ComponentsDF.run(e).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val gx = Traversal.connectedComponents(
-      verts, e.select(col("src").as("src_vid"), col("dst").as("dst_vid")), spark)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    (df, gx)
+  /** GraphX Pregel connected components: (vid -> min vid of its
+    * component) for every vertex of an edge. The reference side. */
+  private def graphX(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val sc = spark.sparkContext
+    val vertices = sc.parallelize(pairs.flatMap { case (a, b) => Seq(a, b) }.distinct)
+      .map(v => (v, ()))
+    val edges = sc.parallelize(pairs).map { case (a, b) => GxEdge(a, b, ()) }
+    GxGraph(vertices, edges, (),
+        edgeStorageLevel = StorageLevel.MEMORY_AND_DISK,
+        vertexStorageLevel = StorageLevel.MEMORY_AND_DISK)
+      .connectedComponents().vertices.collect().toMap
+  }
+
+  private def assignment(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** Whether a result came back as a driver-built local frame. */
+  private def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  /** Build `f` under each path and `check` it with the path's name. */
+  private def bothPaths(f: => DataFrame)(check: (String, DataFrame) => Unit): Unit = {
+    val d = f
+    assert(isLocal(d), "a small input should take the driver finish")
+    check("driver", d)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val l = f
+      assert(!isLocal(l), "threshold -1 should run the distributed loop")
+      check("distributed", l)
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
   test("chain, cycle, star, forest, dup/reversed/self-loop edges all match GraphX") {
@@ -45,11 +70,14 @@ class ComponentsDFSpec extends SparkSpec {
       "dups, reversals, self-loops" -> Seq(
         (5L, 6L), (6L, 5L), (5L, 6L), (7L, 7L), (6L, 7L)))
     for ((name, pairs) <- shapes) {
-      val (df, gx) = bothEngines(pairs)
-      assert(df == gx, s"$name: ComponentsDF disagrees with GraphX\n df=$df\n gx=$gx")
-      // min-id contract directly, independent of GraphX
-      df.groupBy(_._2).foreach { case (comp, members) =>
-        assert(members.keys.min == comp, s"$name: component $comp is not its min id")
+      val gx = graphX(pairs)
+      bothPaths(ComponentsDF.run(edgesDF(pairs))) { (path, out) =>
+        val df = assignment(out)
+        assert(df == gx, s"$name ($path): ComponentsDF disagrees with GraphX\n df=$df\n gx=$gx")
+        // min-id contract directly, independent of GraphX
+        df.groupBy(_._2).foreach { case (comp, members) =>
+          assert(members.keys.min == comp, s"$name ($path): component $comp is not its min id")
+        }
       }
     }
   }
@@ -62,16 +90,20 @@ class ComponentsDFSpec extends SparkSpec {
       val j = (i * 7 + 3) % 120
       if ((i + j) % 3 != 0 && i != j) Some((i, j)) else None
     }
-    val (df, gx) = bothEngines(pairs)
-    assert(df == gx)
+    val gx = graphX(pairs)
+    bothPaths(ComponentsDF.run(edgesDF(pairs))) { (path, out) =>
+      assert(assignment(out) == gx, s"$path disagrees with GraphX")
+    }
     // repartitioning the edge list must not change the assignment
-    val re = ComponentsDF.run(edgesDF(pairs).repartition(13)).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(re == df, "component assignment changed under repartition")
+    bothPaths(ComponentsDF.run(edgesDF(pairs).repartition(13))) { (path, out) =>
+      assert(assignment(out) == gx, s"$path: component assignment changed under repartition")
+    }
   }
 
   test("empty edge list yields an empty assignment") {
-    assert(ComponentsDF.run(edgesDF(Nil)).collect().isEmpty)
+    bothPaths(ComponentsDF.run(edgesDF(Nil))) { (path, out) =>
+      assert(out.collect().isEmpty, path)
+    }
   }
 
   test("celebrity bucket connects linearly: 300-member bipartite star is one component") {
@@ -80,10 +112,18 @@ class ComponentsDFSpec extends SparkSpec {
     // star must still produce a single component in few rounds
     val bucket = 9000001L // odd = bucket-side id
     val pairs = (0L until 300L).map(u => (u * 2, bucket))
-    val out = ComponentsDF.run(edgesDF(pairs)).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(out.size == 301 && out.values.toSet == Set(0L),
-      s"expected one component rooted at user 0, got ${out.values.toSet}")
+    bothPaths(ComponentsDF.run(edgesDF(pairs))) { (path, out) =>
+      val got = assignment(out)
+      assert(got.size == 301 && got.values.toSet == Set(0L),
+        s"$path: expected one component rooted at user 0, got ${got.values.toSet}")
+    }
+  }
+
+  test("both paths return the same schema") {
+    val pairs = Seq((1L, 2L), (3L, 2L))
+    var schemas = Map.empty[String, org.apache.spark.sql.types.StructType]
+    bothPaths(ComponentsDF.run(edgesDF(pairs))) { (path, out) => schemas += path -> out.schema }
+    assert(schemas("driver") == schemas("distributed"))
   }
 
   test("g48 (pair CC) and g49 (bipartite CC) agree on the corpus at both SFs") {

@@ -4,14 +4,20 @@
 # Runs, in order, and FAILS FAST on any red:
 #   1. sbt -batch compile             (build green)
 #   2. sbt -batch test                (full ScalaTest suite green)
-#   3. graft.Verify @ sf0.01          (correctness dump for all queries)
-#   4. tools/check.py                 (DuckDB oracle: 0 fail required)
+#   3. graft.Verify @ each sf         (correctness dump for all queries)
+#   4. tools/check.py @ each sf       (DuckDB oracle: 0 fail required)
+# Steps 3-4 run at sf0.01 AND sf0.001 by default: the loop kernels take
+# a different path (driver finish or distributed loop) depending on
+# input size, and reds have shown up at one scale but not the other.
 #
-# Usage: tools/pregate.sh [sfdir]     (default /root/testdata/sf0.01)
+# Usage: tools/pregate.sh [sfdir ...]
+#        (default: sf0.01 and sf0.001 of the corpus in ../testdata beside
+#        the checkout)
 # Exit 0 = safe to snapshot/commit. Non-zero = DO NOT SHIP.
 set -euo pipefail
 DIR="$(cd "$(dirname "$0")/.." && pwd)"
-SF="${1:-/root/testdata/sf0.01}"
+DATA="$(cd "$DIR/.." && pwd)/testdata"
+if [ "$#" -gt 0 ]; then SFS=("$@"); else SFS=("$DATA/sf0.01" "$DATA/sf0.001"); fi
 OUT="$(mktemp -d /tmp/pregate.XXXXXX)"
 cd "$DIR"
 
@@ -25,18 +31,21 @@ echo "$TEST_OUT" | grep -E "Tests: succeeded|All tests passed" || true
 echo "$TEST_OUT" | grep -q "All tests passed" \
   || { echo "PREGATE RED: sbt test not green"; exit 1; }
 
-echo "== pregate 3/4: graft.Verify @ $SF =="
-tools/run.sh graft.Verify "$SF" "$OUT/verify" 2> "$OUT/verify.err" >/dev/null
-if grep -q "\[verify\]" "$OUT/verify.err"; then
-  echo "PREGATE RED: Verify logged per-query failures:"
-  grep "\[verify\]" "$OUT/verify.err"
-  exit 1
-fi
+for SF in "${SFS[@]}"; do
+  TAG="$(basename "$SF")"
+  echo "== pregate 3/4: graft.Verify @ $SF =="
+  tools/run.sh graft.Verify "$SF" "$OUT/verify-$TAG" 2> "$OUT/verify-$TAG.err" >/dev/null
+  if grep -q "\[verify\]" "$OUT/verify-$TAG.err"; then
+    echo "PREGATE RED: Verify @ $TAG logged per-query failures:"
+    grep "\[verify\]" "$OUT/verify-$TAG.err"
+    exit 1
+  fi
 
-echo "== pregate 4/4: DuckDB oracle =="
-CHECK="$(python3 tools/check.py "$SF" "$OUT/verify" 2>&1 || true)"
-echo "$CHECK" | tail -1
-echo "$CHECK" | tail -1 | grep -qE ", 0 fail, 0 err," \
-  || { echo "PREGATE RED: oracle mismatches/errs above"; exit 1; }
+  echo "== pregate 4/4: DuckDB oracle @ $SF =="
+  CHECK="$(python3 tools/check.py "$SF" "$OUT/verify-$TAG" 2>&1 || true)"
+  echo "$CHECK" | tail -1
+  echo "$CHECK" | tail -1 | grep -qE ", 0 fail, 0 err," \
+    || { echo "PREGATE RED: oracle mismatches/errs @ $TAG above"; exit 1; }
+done
 
 echo "PREGATE GREEN: safe to snapshot."
