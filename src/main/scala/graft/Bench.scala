@@ -10,7 +10,10 @@ object Bench {
     // (profiling showed d06 at 3.2s cold vs 1.1s warm with an identical
     // plan). One untimed pass per query at the smallest SF compiles
     // every plan shape cheaply; the timed pass then reflects what a
-    // long-running cluster actually executes.
+    // long-running cluster actually executes. The compiled classes last
+    // until the timed pass because GraftSession.local sizes Spark's
+    // class cache to the whole query surface; at Spark's default of 100
+    // entries nearly all of them would be evicted before it.
     spark.range(1000000).selectExpr("sum(id)").collect()
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     val wd = if (new java.io.File(warmDir).isDirectory) warmDir else sfDir

@@ -39,14 +39,16 @@ object ObservedCheckpoint {
     (ck, await(obs, MetricsWait))
   }
 
-  /** The metrics of `obs`, or [[ObservedMetricsTimeout]] after `wait`. */
+  /** The metrics of `obs`, observed on an action that has already run
+    * (a checkpoint here, a write in the ETL), or [[ObservedMetricsTimeout]]
+    * after `wait`. */
   private[graft] def await(obs: Observation, wait: FiniteDuration): Row =
     try Await.result(obs.future, wait)
     catch {
       case _: java.util.concurrent.TimeoutException =>
         throw new ObservedMetricsTimeout(
           s"observed metrics '${obs.name}' did not arrive within $wait of " +
-            "their checkpoint job; localCheckpoint(eager) may no longer " +
+            "the job they were observed on; that action may no longer " +
             "complete observations")
     }
 }

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.StructType
 object Tables {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     graft.GraftExtensions.register(spark) // engine SQL functions always on
-    read(spark, s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
   }
 
   /** `spark.read.parquet(path)`, without its footer-reading job after the
@@ -26,11 +26,13 @@ object Tables {
     * index the reader builds anyway (so a cache hit lists the tree once,
     * as any read does, and runs no job), plus the parquet-to-Spark type
     * mappings the sessions vary (`nanosAsLong`, `inferTimestampNTZ`); a
-    * rewritten table or a changed setting is inferred again. Footer
-    * decoding on the driver would avoid even the first job but would
-    * re-implement Spark's footer merge and type mapping; the cache reuses
-    * Spark's own answer. */
-  private def read(spark: SparkSession, path: String): DataFrame = {
+    * rewritten table or a changed setting is inferred again. A partitioned
+    * directory (the graph store's `label=`/`rel_type=` layout) works the
+    * same way: the cached schema carries the partition columns, and every
+    * leaf file is in the stamp. Footer decoding on the driver would avoid
+    * even the first job but would re-implement Spark's footer merge and
+    * type mapping; the cache reuses Spark's own answer. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
     val settings = SchemaSettings.map(k => spark.conf.getOption(k))
     val hit = Option(schemas.get(path)).collect {
       case (`settings`, files, cached) => (files, spark.read.schema(cached).parquet(path))
@@ -103,6 +105,20 @@ object Tables {
   * on a real cluster, minus cluster-only knobs.
   */
 object GraftSession {
+
+  /** Size of Spark's JVM-wide cache of compiled generated classes
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). Every
+    * whole-stage-codegen stage and generated projection is a class
+    * compiled with Janino, once for the driver's class loader and once
+    * for the executor's; an LRU smaller than the working set evicts each
+    * class before it is used again, so every pass recompiles it. Measured
+    * at sf0.001 on 4 cores: the benchmark's ETL + chat session fills 243
+    * entries, its three loop kernels 177, and a sweep of all 314 queries
+    * 4,068, plus 470 more on a second sweep; holding them all costs
+    * 25–30 MB of metaspace. 8192 holds the whole query surface with
+    * headroom (BENCH_NOTES "Generated-code reuse"). */
+  val CodegenCacheEntries = 8192
+
   def local(cores: Int = 32, appName: String = "graft"): SparkSession = {
     val spark = SparkSession
       .builder()
@@ -120,7 +136,15 @@ object GraftSession {
       // rejects as an event-time column.
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false")
+      // static: read once, when the first session in the JVM creates the
+      // cache, so it must be on the builder of that first session
+      .config(CodegenCacheKey, CodegenCacheEntries.toString)
       .getOrCreate()
+    val cacheEntries = spark.conf.get(CodegenCacheKey)
+    require(cacheEntries == CodegenCacheEntries.toString,
+      s"$CodegenCacheKey is $cacheEntries, not $CodegenCacheEntries: a SparkSession " +
+        "was created in this JVM before GraftSession.local, and this static setting " +
+        "cannot change after that; build the first session through GraftSession.local")
     spark.sparkContext.setLogLevel("WARN")
     graft.GraftExtensions.register(spark) // engine SQL functions always on
     // MV/aggregate-navigation rewrite, through the public end-of-optimizer
@@ -131,4 +155,6 @@ object GraftSession {
     }
     spark
   }
+
+  private val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
 }

@@ -3,6 +3,8 @@ package graft.devtools
 import org.apache.spark.sql.Observation
 import org.apache.spark.sql.functions._
 
+import graft.core.ObservedCheckpoint
+
 /** Dev-only micro-profiler (scratch space — contents change per
   * investigation; currently: does `observe` deliver metrics through an
   * eager `localCheckpoint` action, so iterative loops can fuse their
@@ -24,18 +26,16 @@ object Scratch {
       .observe(obs, count(lit(1)).as("n"),
         coalesce(bit_xor(xxhash64(col("u"), col("v"))), lit(0L)).as("h"))
       .localCheckpoint(true)
-    // If localCheckpoint(eager) runs through withAction, obs.get returns
-    // without any further action. Guard with a timeout so a miss is a
-    // clean verdict, not a hang.
+    // If localCheckpoint(eager) runs through withAction, the metrics
+    // arrive without any further action. The wait is bounded so a miss is
+    // a clean verdict, not a hang.
     val got =
       try {
-        val m = concurrent.Await.result(
-          concurrent.Future(obs.get)(concurrent.ExecutionContext.global),
-          concurrent.duration.Duration(10, "s"))
+        val m = ObservedCheckpoint.await(obs, concurrent.duration.Duration(10, "s"))
         println(s"observe-through-localCheckpoint: YES  $m")
         true
       } catch {
-        case _: java.util.concurrent.TimeoutException =>
+        case _: ObservedCheckpoint.ObservedMetricsTimeout =>
           println("observe-through-localCheckpoint: NO (timed out)")
           false
       }

@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.{ObservedCheckpoint, Tables}
 import graft.graph.{GraphStore, SchemaRegistry}
 
 /** End-to-end ETL orchestration — the reference's three entry points
@@ -28,7 +29,7 @@ object Pipeline {
   private def readOr(spark: SparkSession, path: String, scaffold: DataFrame): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.parquet(path) else scaffold
+    if (fs.exists(p)) Tables.parquet(spark, path) else scaffold
   }
 
   /** Align a stored frame to the expected column ORDER by name (the
@@ -60,7 +61,9 @@ object Pipeline {
     * Import counters (SURVEY A5) ride the write job via `observe` —
     * the distributed replacement for the reference's per-row counter
     * increments. No extra pass over the store: at 100 TB a post-hoc
-    * count() is a full re-scan per metric. */
+    * count() is a full re-scan per metric. The wait for the observed
+    * counters is bounded ([[ObservedCheckpoint.await]]), so a lost
+    * listener event fails the import instead of hanging it. */
   def importFacilities(spark: SparkSession, jsonPath: String, store: String,
                        clock: Column): Long = {
     val incoming = Facilities.facilityNodes(spark, jsonPath)
@@ -72,7 +75,7 @@ object Pipeline {
     GraphStore.writeNodes(merged.observe(obs,
       coalesce(sum(when(col("label") === "Facility", 1L)), lit(0L)).as("facilities")),
       nodesPath(store)) // label-partitioned
-    obs.get("facilities").asInstanceOf[Long]
+    counters(obs).getLong(0)
   }
 
   /** Phase 2 (`waste_items.py`): CSV → parse/classify → WasteItem +
@@ -114,12 +117,19 @@ object Pipeline {
     GraphStore.writeEdges(mergedEdges.observe(edgeObs, count(lit(1)).as("edges")),
       edgesPath(store)) // rel_type-partitioned
 
-    (nodeObs.get("items").asInstanceOf[Long],
-      nodeObs.get("streams").asInstanceOf[Long],
-      edgeObs.get("edges").asInstanceOf[Long])
+    val nodeCounts = counters(nodeObs)
+    (nodeCounts.getLong(0), nodeCounts.getLong(1), counters(edgeObs).getLong(0))
   }
 
-  /** `init_db --stats` (`neo4j_db.py:122-148`): one-job label counts. */
+  /** The counters observed on a finished write job, in `observe` order. */
+  private def counters(obs: org.apache.spark.sql.Observation) =
+    ObservedCheckpoint.await(obs, ObservedCheckpoint.MetricsWait)
+
+  /** `init_db --stats` (`neo4j_db.py:122-148`): label counts from one
+    * aggregation plus an edge count, two jobs each (AQE runs the shuffle
+    * stage as its own job). Right after an import it runs 6 jobs: the
+    * rewritten node and edge directories each need a schema-inference
+    * job first; on an unchanged store it runs 4. */
   def stats(spark: SparkSession, store: String): Stats = {
     val nodes = readOr(spark, nodesPath(store),
       spark.emptyDataFrame.withColumn("label", lit("")))

@@ -128,8 +128,10 @@ object GraphStore {
   def writeEdges(edges: DataFrame, path: String): Unit =
     edges.write.mode("overwrite").partitionBy("rel_type").parquet(path)
 
-  def readNodes(spark: SparkSession, path: String): DataFrame = spark.read.parquet(path)
-  def readEdges(spark: SparkSession, path: String): DataFrame = spark.read.parquet(path)
+  /** Reads go through [[graft.core.Tables.parquet]]: an unchanged store
+    * reuses its inferred schema instead of running a footer job per read. */
+  def readNodes(spark: SparkSession, path: String): DataFrame = graft.core.Tables.parquet(spark, path)
+  def readEdges(spark: SparkSession, path: String): DataFrame = graft.core.Tables.parquet(spark, path)
 
   /** The 100 TB layout (SURVEY §4 "bucketing node/edge tables by uid"):
     * nodes bucketed+sorted by `uid`, edges by `src_uid`, same bucket

@@ -70,6 +70,29 @@ class TablesSpec extends SparkSpec {
     } finally TempDirs.deleteQuietly(dir, "tables-spec")
   }
 
+  test("a partitioned store directory has Spark's schema, and a rewrite is inferred again") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-tables-store")
+    val path = s"$dir/nodes"
+    def write(df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.mode("overwrite").partitionBy("label").parquet(path)
+    try {
+      write(spark.range(4).selectExpr("CAST(id AS STRING) AS uid",
+        "IF(id % 2 = 0, 'Facility', 'WasteItem') AS label"))
+      val before = Tables.parquet(spark, path).schema
+      assert(before === spark.read.parquet(path).schema)
+      assert(before.fieldNames.last === "label", "the partition column is read last")
+      assert(Tables.parquet(spark, path).schema === before, "a repeated read changed the schema")
+      // rewritten with one more column and another partition value
+      write(spark.range(3).selectExpr("CAST(id AS STRING) AS uid", "id AS rank",
+        "IF(id = 0, 'WasteStream', 'WasteItem') AS label"))
+      val after = Tables.parquet(spark, path)
+      assert(after.schema === spark.read.parquet(path).schema)
+      assert(after.schema !== before)
+      assert(after.groupBy("label").count().collect().map(r => r.getString(0) -> r.getLong(1))
+        .toMap === Map("WasteStream" -> 1L, "WasteItem" -> 2L))
+    } finally TempDirs.deleteQuietly(dir, "tables-spec")
+  }
+
   test("a table read through Tables has Spark's schema") {
     val dir = java.nio.file.Files.createTempDirectory("graft-tables-read")
     try {
