@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming driven through the DuckDB gate (SURVEY §2.10):
   * the events table replayed through real `readStream` file sources,
@@ -51,56 +52,141 @@ object StreamQueries extends QueryPack {
   private val noTrailingBatch: Map[String, String] =
     Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
 
-  /** Stage the events table into a fresh watch directory, hand `build`
-    * a source factory (each call opens an independent schema-pinned
-    * file stream with the batch path's ts normalization — s02 needs
-    * two), run the built plan to completion into a uniquely-named
-    * memory sink, and return the sink table. One scope owns the whole
+  /** A staged stream's working directories, all under one temp root
+    * (its checkpoint sits beside them): `in` is the file source's watch
+    * directory, `scratch` holds staging intermediates, and `state` holds
+    * a `foreachBatch` store. */
+  private final case class StreamDirs(in: Path, scratch: Path, state: Path)
+
+  /** Where a staged stream's rows go and how its result is read back. */
+  private sealed trait StreamSink
+
+  /** A uniquely named memory sink in output `mode`; the result is
+    * `result` of the sink table. */
+  private final case class MemorySink(mode: String,
+                                      result: DataFrame => DataFrame = identity)
+    extends StreamSink
+
+  /** `foreachBatch(fold(state))`: each micro-batch folds into a store
+    * under `state`, and the result is `result(state)` — the final store
+    * state, not a sink stream. */
+  private final case class BatchSink(fold: Path => (DataFrame, Long) => Unit,
+                                     result: Path => DataFrame)
+    extends StreamSink
+
+  /** Run one staged stream to completion and return its result. `stage`
+    * fills `in` and returns the schema the file source reads it with;
+    * `build` gets a source factory (each call opens an independent
+    * schema-pinned file stream, one file per micro-batch, with the
+    * batch path's ts normalization when `eventTs` — s02 needs two) and
+    * returns the plan `sink` consumes. One scope owns the whole
     * lifecycle:
     *
-    *  - the sink name is unique per invocation (Verify and Bench call
-    *    each query function repeatedly in one session);
-    *  - a timed-out stream fails LOUDLY — returning a half-filled
-    *    memory table would hand the gate silent garbage;
+    *  - the memory sink name is unique per invocation (Verify and Bench
+    *    call each query function repeatedly in one session);
+    *  - a timed-out stream fails LOUDLY — returning a half-filled result
+    *    would hand the gate silent garbage;
+    *  - a row dropped by a watermark fails the query too: late rows
+    *    vanish without error otherwise, so a corpus staged out of
+    *    event-time order would read as a mysteriously small result;
     *  - the state-store partition count is pinned from
     *    shuffle.partitions when batch 0 plans, and each partition pays
     *    per-batch store setup/commit IO — 32 partitions of near-empty
-    *    state cost the stateful join ~4s/run, so streams run at 8
-    *    (restored on every exit path AFTER the stream is done: batch 0
-    *    can plan after start() returns, and leaving the session at 8
-    *    would silently re-partition every later query);
-    *  - the staged copy and checkpoint are deleted on every exit path,
-    *    including a throw during plan construction, and a cleanup
-    *    failure never masks the stream's own exception (the result
-    *    lives in the memory sink, not on disk);
-    *  - the memory sink itself is dropped before returning: Bench runs
-    *    each stream query 4× (warmup + 3 timed) and Verify adds more,
-    *    and each run's sink would otherwise pin its full result set in
-    *    driver memory for the session lifetime. The result is
-    *    materialized into block-manager storage (localCheckpoint) first
-    *    so the returned DataFrame outlives the dropped view; the
-    *    session-level cache clears in Bench/Verify release those
-    *    blocks once the result has been consumed.
+    *    state cost the stateful join ~4s/run, so streams run at
+    *    [[streamParts]] (default 2). That and `extraConf` (s08 swaps in
+    *    the RocksDB state store) are restored on every exit path AFTER
+    *    the stream is done: batch 0 can plan after start() returns, and
+    *    leaving the session at 2 would silently re-partition every later
+    *    query;
+    *  - the result is materialized (localCheckpoint) before the temp
+    *    root is deleted, so it outlives the staged files, the store and
+    *    the dropped memory sink; Bench runs each stream query 4× (warmup
+    *    + 3 timed) and Verify adds more, and each run's sink would
+    *    otherwise pin its full result set in driver memory for the
+    *    session lifetime. The session-level cache clears in Bench/Verify
+    *    release the checkpoint blocks once the result has been consumed;
+    *  - the temp root is deleted on every exit path, including a throw
+    *    during plan construction, and a cleanup failure never masks the
+    *    stream's own exception.
     */
-  private def runStaged(s: SparkSession, dir: String, tag: String,
-                        mode: String,
+  private def runStream(s: SparkSession, tag: String, sink: StreamSink,
+                        eventTs: Boolean = true,
                         extraConf: Map[String, String] = Map.empty)
-                       (build: (() => DataFrame) => DataFrame): DataFrame =
-    runStagedImpl(s, dir, tag, mode, sentinels = false, extraConf)(build)
+                       (stage: StreamDirs => StructType)
+                       (build: (() => DataFrame) => DataFrame): DataFrame = {
+    val root = Files.createTempDirectory(s"graft-$tag-")
+    val dirs = StreamDirs(Files.createDirectory(root.resolve("in")),
+      Files.createDirectory(root.resolve("scratch")),
+      Files.createDirectory(root.resolve("state")))
+    val ckpt = Files.createDirectory(root.resolve("ckpt"))
+    val memName = tag + "_" + java.util.UUID.randomUUID.toString.replace("-", "")
+    val conf = extraConf + ("spark.sql.shuffle.partitions" -> streamParts)
+    val prev = conf.keys.map(k => k -> s.conf.getOption(k)).toMap
+    try {
+      conf.foreach { case (k, v) => s.conf.set(k, v) }
+      val schema = stage(dirs)
+      val src = () => {
+        val raw = s.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1")
+          .option("pathGlobFilter", "*.parquet")
+          .parquet(dirs.in.toString)
+        if (eventTs) graft.core.Tables.withEventTs(raw) else raw
+      }
+      val writer = build(src).writeStream
+        .option("checkpointLocation", ckpt.toString)
+        .trigger(Trigger.AvailableNow())
+      val q = (sink match {
+        case MemorySink(mode, _) =>
+          writer.format("memory").queryName(memName).outputMode(mode)
+        case BatchSink(fold, _) => writer.foreachBatch(fold(dirs.state))
+      }).start()
+      try {
+        if (!q.awaitTermination(300000))
+          sys.error(s"$tag: stream did not finish within 300s")
+        // recentProgress holds the last ~100 batches: full coverage at
+        // gate scale, a lower bound on very long stress replays
+        val dropped = q.recentProgress.iterator
+          .flatMap(p => Option(p.stateOperators).map(_.toSeq).getOrElse(Seq.empty))
+          .map(_.numRowsDroppedByWatermark).sum
+        if (dropped > 0)
+          sys.error(s"$tag: $dropped row(s) dropped by watermark " +
+            "(late arrivals across staged micro-batches — the staged " +
+            "corpus violates the event-time-ordering contract)")
+      } finally q.stop()
+      (sink match {
+        case MemorySink(_, result) => result(s.table(memName))
+        case BatchSink(_, result)  => result(dirs.state)
+      }).localCheckpoint(true)
+    } finally {
+      s.catalog.dropTempView(memName)
+      prev.foreach {
+        case (k, Some(v)) => s.conf.set(k, v)
+        case (k, None)    => s.conf.unset(k)
+      }
+      graft.core.TempDirs.deleteQuietly(root, tag)
+    }
+  }
 
-  /** [[runStaged]] over a table other than `events` (s14 streams the
-    * documents corpus); no event-ts normalization, no sentinels. */
-  private def runStagedTable(s: SparkSession, dir: String, tag: String,
-                             mode: String, table: String)
-                            (build: (() => DataFrame) => DataFrame): DataFrame =
-    runStagedImpl(s, dir, tag, mode, sentinels = false, Map.empty,
-      table = table)(build)
+  /** The stage step of a stream over a corpus table: [[stageTable]] into
+    * `in`, plus the two heartbeat files when `sentinels`, read with the
+    * table's own schema. */
+  private def stagedTable(s: SparkSession, dir: String, table: String,
+                          sentinels: Boolean = false): StreamDirs => StructType = {
+    require(table == "events" || !sentinels,
+      "sentinel heartbeats are events-schema-specific")
+    val schema = s.read.parquet(s"$dir/$table.parquet").schema
+    d => {
+      stageTable(dir, table, d.in)
+      if (sentinels) stageSentinels(s, dir, schema, d.in, d.scratch)
+      schema
+    }
+  }
 
   /** s01 — event-time tumbling-window aggregation (the streaming twin
     * of q18): readStream → 5-minute windows → complete-mode memory
     * sink; the value sum rides decimal per the dsum determinism note. */
   def s01StreamWindow(s: SparkSession, dir: String): DataFrame =
-    runStaged(s, dir, "s01", "complete") { src =>
+    runStream(s, "s01", MemorySink("complete"))(stagedTable(s, dir, "events")) { src =>
       src()
         .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
         .agg(count(lit(1)).as("cnt"),
@@ -119,7 +205,8 @@ object StreamQueries extends QueryPack {
     * batch join the oracle runs; at scale the same plan runs over
     * arriving files with the watermarks GC'ing join state. */
   def s02StreamJoin(s: SparkSession, dir: String): DataFrame =
-    runStaged(s, dir, "s02", "append", noTrailingBatch) { src =>
+    runStream(s, "s02", MemorySink("append"), extraConf = noTrailingBatch)(
+      stagedTable(s, dir, "events")) { src =>
       val clicks = src().filter(col("event_type") === "click")
         .select(col("event_id").as("c_event"), col("user_id").as("c_user"),
           col("ts").as("c_ts"))
@@ -143,7 +230,7 @@ object StreamQueries extends QueryPack {
     * (dropDuplicatesWithinWatermark) trades that state for approximate
     * dedup, which would NOT hash-match a DISTINCT oracle. */
   def s03StreamDedup(s: SparkSession, dir: String): DataFrame =
-    runStaged(s, dir, "s03", "append") { src =>
+    runStream(s, "s03", MemorySink("append"))(stagedTable(s, dir, "events")) { src =>
       src().filter(col("event_type").isin("click", "purchase"))
         .select(col("user_id"), col("event_type"), to_date(col("ts")).as("d"))
         .dropDuplicates("user_id", "event_type", "d")
@@ -164,7 +251,7 @@ object StreamQueries extends QueryPack {
     * total_value is spec-covered but not gated: it accumulates doubles
     * in per-batch order, which no SQL oracle can replay. */
   def s04StreamSessionize(s: SparkSession, dir: String): DataFrame =
-    runStaged(s, dir, "s04", "append") { src =>
+    runStream(s, "s04", MemorySink("append"))(stagedTable(s, dir, "events")) { src =>
       import graft.streaming.StreamingSessionize
       implicit val enc = org.apache.spark.sql.Encoders.product[StreamingSessionize.Click]
       val clicks = src().filter(col("event_type") === "click")
@@ -187,25 +274,16 @@ object StreamQueries extends QueryPack {
     * ride the wall clock) are excluded from the gated projection. */
   def s05StreamUpsert(s: SparkSession, dir: String): DataFrame = {
     import graft.streaming.StreamingIngest
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
-    val streamDir = Files.createTempDirectory("graft-s05-in")
-    val ckpt = Files.createTempDirectory("graft-s05-ckpt")
-    val storeRoot = Files.createTempDirectory("graft-s05-store")
-    val store = storeRoot.resolve("nodes").toString
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
+    def store(state: Path) = state.resolve("nodes").toString
     // the upsert store's final state is identical without the trailing
     // no-data batch (see noTrailingBatch), which would otherwise rewrite
     // the whole store from an empty input
-    val prevNoData = noTrailingBatch.keys.map(k => k -> s.conf.getOption(k)).toMap
-    s.conf.set("spark.sql.shuffle.partitions", streamParts)
-    noTrailingBatch.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
-      stageTable(dir, "events", streamDir)
-      val raw = graft.core.Tables.withEventTs(
-        s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(streamDir.toString))
-      val nodes = raw.select(
+    runStream(s, "s05",
+      BatchSink(st => StreamingIngest.upsertBatch(store(st), Seq("last_type", "last_value")),
+        st => s.read.parquet(store(st))
+          .select(col("uid"), col("last_type"), col("last_value"))),
+      extraConf = noTrailingBatch)(stagedTable(s, dir, "events")) { src =>
+      val nodes = src().select(
         lit("User").as("label"),
         concat(lit("User:"), col("user_id")).as("uid"),
         concat(lit("user_"), col("user_id")).as("name"),
@@ -213,30 +291,8 @@ object StreamQueries extends QueryPack {
         col("value").as("last_value"),
         col("ts").as("created_at"),
         col("ts").as("updated_at"))
-      val deduped = StreamingIngest.dedup(nodes, "uid", "updated_at", "1 hour")
-      val q = deduped.writeStream
-        .foreachBatch(StreamingIngest.upsertBatch(store, Seq("last_type", "last_value")) _)
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try {
-        if (!q.awaitTermination(300000))
-          sys.error("s05: stream did not finish within 300s")
-      } finally q.stop()
-      s.read.parquet(store)
-        .select(col("uid"), col("last_type"), col("last_value"))
-        .localCheckpoint(true)
-        .orderBy("uid")
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      prevNoData.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None)    => s.conf.unset(k)
-      }
-      graft.core.TempDirs.deleteQuietly(streamDir, "s05")
-      graft.core.TempDirs.deleteQuietly(ckpt, "s05")
-      graft.core.TempDirs.deleteQuietly(storeRoot, "s05")
-    }
+      StreamingIngest.dedup(nodes, "uid", "updated_at", "1 hour")
+    }.orderBy("uid")
   }
 
   /** s06 — stream-static dimension enrichment: the event stream joined
@@ -250,7 +306,7 @@ object StreamQueries extends QueryPack {
   def s06StreamEnrich(s: SparkSession, dir: String): DataFrame = {
     val cust = broadcast(graft.core.Tables.customer(s, dir)
       .select(col("c_custkey"), col("c_mktsegment")))
-    runStaged(s, dir, "s06", "complete") { src =>
+    runStream(s, "s06", MemorySink("complete"))(stagedTable(s, dir, "events")) { src =>
       src().join(cust, col("user_id") === col("c_custkey"))
         .groupBy(col("c_mktsegment").as("segment"))
         .agg(count(lit(1)).as("cnt"),
@@ -276,7 +332,8 @@ object StreamQueries extends QueryPack {
     * plain batch LEFT JOIN.
     */
   def s07StreamOuterJoin(s: SparkSession, dir: String): DataFrame =
-    runStagedSentinels(s, dir, "s07", "append") { src =>
+    runStream(s, "s07", MemorySink("append"))(
+      stagedTable(s, dir, "events", sentinels = true)) { src =>
       val clicks = src().filter(col("event_type").isin("click", "sentinel"))
         .select(col("event_id").as("c_event"), col("user_id").as("c_user"),
           col("ts").as("c_ts"))
@@ -303,9 +360,10 @@ object StreamQueries extends QueryPack {
     * order cannot leak into the result.
     */
   def s08StreamRollup(s: SparkSession, dir: String): DataFrame =
-    runStagedSentinels(s, dir, "s08", "append",
+    runStream(s, "s08", MemorySink("append"),
       extraConf = Map("spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) { src =>
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))(
+      stagedTable(s, dir, "events", sentinels = true)) { src =>
       import graft.streaming.StreamingActivity
       implicit val enc = org.apache.spark.sql.Encoders.product[StreamingActivity.Click]
       val clicks = src().filter(col("event_type").isin("click", "sentinel"))
@@ -315,106 +373,6 @@ object StreamQueries extends QueryPack {
     }.filter(col("user_id") >= 0)
       .orderBy("user_id")
 
-  /** Stage the events table plus two far-future sentinel files and run
-    * `build`'s plan to completion (same contract as [[runStaged]]):
-    * sentinel rows (event_type 'sentinel', user_id -1, ts max+2h and
-    * max+4h) arrive as micro-batches 1 and 2 and exist to ADVANCE THE
-    * WATERMARK past every real row after the data has all arrived —
-    * the deterministic replay of a production stream draining a quiet
-    * topic via heartbeats. Outer joins need it to emit null-padded
-    * rows, timer-based operators to fire their last timers; callers
-    * filter `user_id >= 0` to drop sentinel-derived rows. `extraConf`
-    * entries are set for the stream's lifetime and restored after
-    * (s08 swaps in the RocksDB state store). */
-  private def runStagedSentinels(s: SparkSession, dir: String, tag: String,
-                                 mode: String,
-                                 extraConf: Map[String, String] = Map.empty)
-                                (build: (() => DataFrame) => DataFrame): DataFrame =
-    runStagedImpl(s, dir, tag, mode, sentinels = true, extraConf)(build)
-
-  /** The one staging engine behind [[runStaged]] and
-    * [[runStagedSentinels]]; `sentinels` adds the two heartbeat files,
-    * `extraConf` entries are set for the stream's lifetime and
-    * restored after (s08 swaps in the RocksDB state store). */
-  private def runStagedImpl(s: SparkSession, dir: String, tag: String,
-                            mode: String, sentinels: Boolean,
-                            extraConf: Map[String, String],
-                            table: String = "events")
-                           (build: (() => DataFrame) => DataFrame): DataFrame = {
-    require(table == "events" || !sentinels,
-      "sentinel heartbeats are events-schema-specific")
-    val schema = s.read.parquet(s"$dir/$table.parquet").schema
-    val streamDir = Files.createTempDirectory(s"graft-$tag-in")
-    val ckpt = Files.createTempDirectory(s"graft-$tag-ckpt")
-    val scratch = Files.createTempDirectory(s"graft-$tag-scratch")
-    val sink = tag + "_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    val prevExtra = extraConf.keys.map(k => k -> s.conf.getOption(k)).toMap
-    s.conf.set("spark.sql.shuffle.partitions", streamParts)
-    extraConf.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
-      stageTable(dir, table, streamDir)
-      if (sentinels) stageSentinels(s, dir, schema, streamDir, scratch)
-      val src = () => {
-        val raw = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(streamDir.toString)
-        if (table == "events") graft.core.Tables.withEventTs(raw) else raw
-      }
-      val q = build(src).writeStream.format("memory").queryName(sink)
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try {
-        if (!q.awaitTermination(300000))
-          sys.error(s"$tag: stream did not finish within 300s")
-        // watermark drops are silent divergence (a late part's rows
-        // vanish without error) — surface them loudly so a stress
-        // corpus staged out of event-time order is visible, not a
-        // mysteriously-small state reading. recentProgress holds the
-        // last ~100 batches: full coverage at gate scale, a lower
-        // bound on very long stress replays.
-        val dropped = q.recentProgress.iterator
-          .flatMap(p => Option(p.stateOperators).map(_.toSeq).getOrElse(Seq.empty))
-          .map(_.numRowsDroppedByWatermark).sum
-        if (dropped > 0) {
-          // STRICT by default (round-10 ADVICE): a gate/oracle run
-          // whose staged corpus violates the event-time-ordering
-          // contract must FAIL, not pass with silently-missing rows.
-          // `graft.stream.allowWatermarkDrops` opts a deliberately
-          // late-data experiment back into the old log-only behavior.
-          val msg = s"$tag: $dropped row(s) dropped by watermark " +
-            "(late arrivals across staged micro-batches — the staged " +
-            "corpus violates the event-time-ordering contract)"
-          if (s.conf.getOption("graft.stream.allowWatermarkDrops")
-              .exists(_.toBoolean))
-            System.err.println(s"[stream] $msg")
-          else sys.error(msg)
-        }
-      } finally q.stop()
-      // materialize before the cleanup deletes the staged files: the
-      // rows live in the memory sink, the checkpoint keeps them safe
-      val out = s.table(sink).localCheckpoint(true)
-      s.catalog.dropTempView(sink)
-      out
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      prevExtra.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None)    => s.conf.unset(k)
-      }
-      graft.core.TempDirs.deleteQuietly(streamDir, tag)
-      graft.core.TempDirs.deleteQuietly(ckpt, tag)
-      graft.core.TempDirs.deleteQuietly(scratch, tag)
-    }
-  }
-
-  /** Write the two heartbeat files (ts max+2h / max+4h, user_id -1,
-    * event_type 'sentinel') into the watch directory and pin all three
-    * files' modification times so the file source processes events ->
-    * sentinel1 -> sentinel2 (a sentinel processed first would put every
-    * real row below the watermark and drop it). */
   /** Stage a table's parquet into a stream-source dir. A
     * driver-generated table is ONE file; a Spark-written one (the
     * ScaleGen stress corpora) is a DIRECTORY of part files — those
@@ -425,9 +383,9 @@ object StreamQueries extends QueryPack {
     * the round-9 s15 stress reading caught exactly that). Contract for
     * watermarked streams: part-id order must ascend in EVENT TIME
     * (ScaleGen writes events repartitionByRange(ts), and the runner
-    * reports numRowsDroppedByWatermark loudly if a corpus violates
-    * this). Sentinel heartbeats are staged separately with LATER
-    * mtimes. */
+    * fails the query on any row dropped by watermark if a corpus
+    * violates this). Sentinel heartbeats are staged separately with
+    * LATER mtimes. */
   private def stageTable(dir: String, table: String, streamDir: Path): Unit = {
     val src = Paths.get(s"$dir/$table.parquet")
     val base = System.currentTimeMillis() - 3600000L
@@ -492,8 +450,19 @@ object StreamQueries extends QueryPack {
     }
   }
 
+  /** Write the two heartbeat files into the watch directory: sentinel
+    * rows (event_type 'sentinel', user_id -1, ts max+2h and max+4h)
+    * arrive as micro-batches after every staged part and exist to
+    * ADVANCE THE WATERMARK past every real row after the data has all
+    * arrived — the deterministic replay of a production stream draining
+    * a quiet topic via heartbeats. Outer joins need it to emit
+    * null-padded rows, timer-based operators to fire their last timers;
+    * callers filter `user_id >= 0` to drop sentinel-derived rows. Both
+    * files' modification times are pinned so the file source processes
+    * events -> sentinel1 -> sentinel2 (a sentinel processed first would
+    * put every real row below the watermark and drop it). */
   private def stageSentinels(s: SparkSession, dir: String,
-                             schema: org.apache.spark.sql.types.StructType,
+                             schema: StructType,
                              streamDir: Path, scratch: Path): Unit = {
     val raw = s.read.parquet(s"$dir/events.parquet")
     val tsIsLong =
@@ -557,7 +526,8 @@ object StreamQueries extends QueryPack {
     * within a micro-batch is arrival-order-dependent, but its key
     * columns are not. */
   def s09StreamDedupBounded(s: SparkSession, dir: String): DataFrame =
-    runStaged(s, dir, "s09", "append", noTrailingBatch) { src =>
+    runStream(s, "s09", MemorySink("append"), extraConf = noTrailingBatch)(
+      stagedTable(s, dir, "events")) { src =>
       src().filter(col("event_type").isin("view", "purchase"))
         .select(col("user_id"), col("event_type"), col("ts"),
           to_date(col("ts")).as("d"))
@@ -579,7 +549,8 @@ object StreamQueries extends QueryPack {
     * history length. Sentinel rows form their own user −1 session,
     * filtered after the sink. */
   def s10StreamSessionWindow(s: SparkSession, dir: String): DataFrame =
-    runStagedSentinels(s, dir, "s10", "append") { src =>
+    runStream(s, "s10", MemorySink("append"))(
+      stagedTable(s, dir, "events", sentinels = true)) { src =>
       src().filter(col("event_type").isin("click", "sentinel"))
         .withWatermark("ts", "1 hour")
         .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
@@ -605,54 +576,23 @@ object StreamQueries extends QueryPack {
     * merge's idempotency covers replays beyond the watermark. */
   def s11StreamEdgeUpsert(s: SparkSession, dir: String): DataFrame = {
     import graft.streaming.StreamingIngest
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
-    val streamDir = Files.createTempDirectory("graft-s11-in")
-    val ckpt = Files.createTempDirectory("graft-s11-ckpt")
-    val storeRoot = Files.createTempDirectory("graft-s11-store")
-    val store = storeRoot.resolve("edges").toString
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
+    def store(state: Path) = state.resolve("edges").toString
     // same trailing-batch argument as s05: min/max edge merge over an
     // empty batch is a no-op that would still rewrite the store
-    val prevNoData = noTrailingBatch.keys.map(k => k -> s.conf.getOption(k)).toMap
-    s.conf.set("spark.sql.shuffle.partitions", streamParts)
-    noTrailingBatch.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
-      stageTable(dir, "events", streamDir)
-      val raw = graft.core.Tables.withEventTs(
-        s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(streamDir.toString))
-      val edges = raw.select(
+    runStream(s, "s11",
+      BatchSink(st => StreamingIngest.upsertEdgeBatch(store(st)),
+        st => s.read.parquet(store(st))),
+      extraConf = noTrailingBatch)(stagedTable(s, dir, "events")) { src =>
+      src().select(
         concat(lit("User:"), col("user_id")).as("src_uid"),
         concat(lit("Type:"), col("event_type")).as("dst_uid"),
         lit("DID").as("rel_type"),
         expr("unix_micros(ts)").as("first_us"),
         expr("unix_micros(ts)").as("last_us"),
         col("ts"))
-      val deduped = edges.withWatermark("ts", "1 hour")
+        .withWatermark("ts", "1 hour")
         .dropDuplicates("src_uid", "dst_uid", "ts").drop("ts")
-      val q = deduped.writeStream
-        .foreachBatch(StreamingIngest.upsertEdgeBatch(store) _)
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try {
-        if (!q.awaitTermination(300000))
-          sys.error("s11: stream did not finish within 300s")
-      } finally q.stop()
-      s.read.parquet(store)
-        .localCheckpoint(true)
-        .orderBy("src_uid", "dst_uid")
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      prevNoData.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None)    => s.conf.unset(k)
-      }
-      graft.core.TempDirs.deleteQuietly(streamDir, "s11")
-      graft.core.TempDirs.deleteQuietly(ckpt, "s11")
-      graft.core.TempDirs.deleteQuietly(storeRoot, "s11")
-    }
+    }.orderBy("src_uid", "dst_uid")
   }
 
   /** s12 — streaming incremental rollup (q74's merge algebra across
@@ -673,45 +613,20 @@ object StreamQueries extends QueryPack {
     * compaction (a re-merge rewrite) bounds the partition count. */
   def s12StreamRollupMerge(s: SparkSession, dir: String): DataFrame = {
     import graft.streaming.StreamingIngest
-    val streamDir = Files.createTempDirectory("graft-s12-in")
-    val ckpt = Files.createTempDirectory("graft-s12-ckpt")
-    val storeRoot = Files.createTempDirectory("graft-s12-store")
-    val store = storeRoot.resolve("rollup").toString
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamParts)
-    try {
+    def store(state: Path) = state.resolve("rollup").toString
+    runStream(s, "s12",
+      BatchSink(st => StreamingIngest.rollupBatch(store(st)),
+        st => s.read.parquet(store(st))
+          .groupBy("event_type", "d")
+          .agg(sum("cnt").as("cnt"), sum("total").as("mtotal"),
+            min("vmin").as("vmin"), max("vmax").as("vmax"))
+          .select(col("event_type"), col("d"), col("cnt"),
+            round(col("mtotal"), 2).cast("double").as("total"),
+            col("vmin"), col("vmax")))) { d =>
       s.read.parquet(s"$dir/events.parquet").repartition(4)
-        .write.mode("overwrite").parquet(streamDir.toString)
-      val schema = s.read.parquet(streamDir.toString).schema
-      val raw = graft.core.Tables.withEventTs(
-        s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("pathGlobFilter", "*.parquet")
-          .parquet(streamDir.toString))
-      val q = raw.writeStream
-        .foreachBatch(StreamingIngest.rollupBatch(store) _)
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try {
-        if (!q.awaitTermination(300000))
-          sys.error("s12: stream did not finish within 300s")
-      } finally q.stop()
-      s.read.parquet(store)
-        .groupBy("event_type", "d")
-        .agg(sum("cnt").as("cnt"), sum("total").as("mtotal"),
-          min("vmin").as("vmin"), max("vmax").as("vmax"))
-        .select(col("event_type"), col("d"), col("cnt"),
-          round(col("mtotal"), 2).cast("double").as("total"),
-          col("vmin"), col("vmax"))
-        .localCheckpoint(true)
-        .orderBy("event_type", "d")
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      graft.core.TempDirs.deleteQuietly(streamDir, "s12")
-      graft.core.TempDirs.deleteQuietly(ckpt, "s12")
-      graft.core.TempDirs.deleteQuietly(storeRoot, "s12")
-    }
+        .write.mode("overwrite").parquet(d.in.toString)
+      s.read.parquet(d.in.toString).schema
+    }(src => src()).orderBy("event_type", "d")
   }
 
   /** s13 — streaming CDC apply (q63's incremental twin): a change feed
@@ -736,19 +651,19 @@ object StreamQueries extends QueryPack {
     * overwrite law composed with this one). */
   def s13StreamCdcApply(s: SparkSession, dir: String): DataFrame = {
     import graft.streaming.StreamingIngest
-    val feedDir = Files.createTempDirectory("graft-s13-in")
-    val ckpt = Files.createTempDirectory("graft-s13-ckpt")
-    val storeRoot = Files.createTempDirectory("graft-s13-store")
-    val store = storeRoot.resolve("state").toString
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamParts)
-    try {
+    def store(state: Path) = state.resolve("snapshot").toString
+    runStream(s, "s13",
+      BatchSink(st => StreamingIngest.cdcBatch(store(st)),
+        st => s.read.parquet(store(st))
+          .filter(!col("deleted"))
+          .select("c_custkey", "c_name", "c_acctbal")),
+      eventTs = false) { d =>
       val base = graft.core.Tables.customer(s, dir)
         .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
       // seed the store with the base snapshot at seq 0, nothing deleted
       base.withColumn("seq", lit(0))
         .withColumn("deleted", lit(false))
-        .write.mode("overwrite").parquet(store)
+        .write.mode("overwrite").parquet(store(d.state))
       // the change feed: deletes at seq 2, first updates at seq 1, a
       // second update wave at seq 3 (%33 ⊂ %11 — exercises the seq
       // gate), inserts as updates on unseen keys. %50∩%33 keys see
@@ -769,32 +684,9 @@ object StreamQueries extends QueryPack {
           .select((col("c_custkey") + 2000000).as("c_custkey"), col("c_name"),
             col("c_acctbal"), lit("U").as("op"), lit(1).as("seq")))
       changes.repartition(1).write.partitionBy("seq")
-        .mode("overwrite").parquet(feedDir.toString)
-      val schema = s.read.parquet(feedDir.toString).schema
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(feedDir.toString)
-        .writeStream
-        .foreachBatch(StreamingIngest.cdcBatch(store) _)
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try {
-        if (!q.awaitTermination(300000))
-          sys.error("s13: stream did not finish within 300s")
-      } finally q.stop()
-      s.read.parquet(store)
-        .filter(!col("deleted"))
-        .select("c_custkey", "c_name", "c_acctbal")
-        .localCheckpoint(true)
-        .orderBy("c_custkey")
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      graft.core.TempDirs.deleteQuietly(feedDir, "s13")
-      graft.core.TempDirs.deleteQuietly(ckpt, "s13")
-      graft.core.TempDirs.deleteQuietly(storeRoot, "s13")
-    }
+        .mode("overwrite").parquet(d.in.toString)
+      s.read.parquet(d.in.toString).schema
+    }(src => src()).orderBy("c_custkey")
   }
 
   /** s14 — streaming RAG ingestion: the documents corpus arriving as a
@@ -809,7 +701,8 @@ object StreamQueries extends QueryPack {
     * equals batch chunking.
     */
   def s14StreamRagIngest(s: SparkSession, dir: String): DataFrame =
-    runStagedTable(s, dir, "s14", "append", table = "documents") { src =>
+    runStream(s, "s14", MemorySink("append"), eventTs = false)(
+      stagedTable(s, dir, "documents")) { src =>
       val chunkText = col("t").substr((col("chunk_idx") * 500 + 1).cast("int"), lit(500))
       src().select(col("doc_id"), trim(col("text")).as("t"))
         .filter(length(col("t")) > 0)
@@ -839,7 +732,8 @@ object StreamQueries extends QueryPack {
     * at production scale the same agg runs update-mode on RocksDB
     * with the verdict join consuming the changelog. */
   def s15StreamLshDedup(s: SparkSession, dir: String): DataFrame = {
-    val keepers = runStagedTable(s, dir, "s15", "complete", table = "documents") { src =>
+    val keepers = runStream(s, "s15", MemorySink("complete"), eventTs = false)(
+        stagedTable(s, dir, "documents")) { src =>
       TextQueries.lshBandRows(src().select(col("doc_id"), col("text")))
         .groupBy("band", "bh").agg(min("doc_id").as("keeper_id"))
     }
@@ -862,7 +756,8 @@ object StreamQueries extends QueryPack {
   def s16StreamCountmin(s: SparkSession, dir: String): DataFrame = {
     def bucket(k: Column, r: Column): Column =
       substring(md5(concat(k.cast("string"), lit(":"), r.cast("string"))), 1, 2)
-    val sketch = runStaged(s, dir, "s16", "complete") { src =>
+    val sketch = runStream(s, "s16", MemorySink("complete"))(
+        stagedTable(s, dir, "events")) { src =>
       src().select(col("user_id"), explode(sequence(lit(0), lit(3))).as("r"))
         .groupBy(col("r"), bucket(col("user_id"), col("r")).as("bucket"))
         .agg(count(lit(1)).as("c"))
@@ -892,7 +787,8 @@ object StreamQueries extends QueryPack {
     * event types so the battery provably discriminates. Gated against
     * the batch recomputation: incremental counting equals one-pass. */
   def s17StreamExpectations(s: SparkSession, dir: String): DataFrame = {
-    val agg = runStaged(s, dir, "s17", "complete") { src =>
+    val agg = runStream(s, "s17", MemorySink("complete"))(
+        stagedTable(s, dir, "events")) { src =>
       src().agg(
         sum(when(col("user_id").isNull, 1L).otherwise(0L)).as("_r0"),
         sum(when(col("value").isNotNull && col("value") < 0, 1L).otherwise(0L)).as("_r1"),
@@ -929,47 +825,24 @@ object StreamQueries extends QueryPack {
     * hash — the strongest form of the §2.10 contract this suite
     * states. */
   def s18StreamComponents(s: SparkSession, dir: String): DataFrame = {
+    import graft.streaming.StreamingCC
     val ev = graft.core.Tables(s, dir, "events")
-    val streamDir = Files.createTempDirectory("graft-s18-in")
-    val ckpt = Files.createTempDirectory("graft-s18-ckpt")
-    val scratch = Files.createTempDirectory("graft-s18-scratch")
-    val stateRoot = Files.createTempDirectory("graft-s18-state")
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamParts)
-    try {
-      stageSlices(ev, col("event_id") % 3, 3, streamDir, scratch)
-      val raw = graft.core.Tables.withEventTs(
-        s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(streamDir.toString))
-      val q = raw.writeStream
-        .foreachBatch(graft.streaming.StreamingCC.mergeBatch(stateRoot.toString) _)
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try {
-        if (!q.awaitTermination(300000))
-          sys.error("s18: stream did not finish within 300s")
-      } finally q.stop()
-      val assigned = graft.streaming.StreamingCC.latest(s, stateRoot.toString)
-      val users = assigned.filter(col("vid") % 2 === 0)
-        .select(expr("vid div 2").as("user_id"), col("component"))
-      val full = users.join(
-          users.groupBy("component").agg(min(col("user_id")).as("comp_user")),
-          "component")
-        .select(col("user_id"), col("comp_user").as("component"))
-      full.join(full.groupBy(col("component"))
-          .agg(count(lit(1)).as("comp_size")), "component")
-        .select("user_id", "component", "comp_size")
-        .localCheckpoint(true)
-        .orderBy("user_id")
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      graft.core.TempDirs.deleteQuietly(streamDir, "s18")
-      graft.core.TempDirs.deleteQuietly(ckpt, "s18")
-      graft.core.TempDirs.deleteQuietly(scratch, "s18")
-      graft.core.TempDirs.deleteQuietly(stateRoot, "s18")
-    }
+    runStream(s, "s18",
+      BatchSink(st => StreamingCC.mergeBatch(st.toString), { st =>
+        val users = StreamingCC.latest(s, st.toString)
+          .filter(col("vid") % 2 === 0)
+          .select(expr("vid div 2").as("user_id"), col("component"))
+        val full = users.join(
+            users.groupBy("component").agg(min(col("user_id")).as("comp_user")),
+            "component")
+          .select(col("user_id"), col("comp_user").as("component"))
+        full.join(full.groupBy(col("component"))
+            .agg(count(lit(1)).as("comp_size")), "component")
+          .select("user_id", "component", "comp_size")
+      })) { d =>
+      stageSlices(ev, col("event_id") % 3, 3, d.in, d.scratch)
+      ev.schema
+    }(src => src()).orderBy("user_id")
   }
 
   /** s19 — streaming ExactSubstr dedup (d39's incremental twin, counts
@@ -989,48 +862,21 @@ object StreamQueries extends QueryPack {
     * Per doc: window count and duplicated-window count (the span merge
     * is d39's batch post-pass; counts are the streaming-side verdict a
     * cleaner acts on at ingest). */
-  def s19StreamExactDedup(s: SparkSession, dir: String): DataFrame = {
-    val docsPq = s"$dir/documents.parquet"
-    val schema = s.read.parquet(docsPq).schema
-    val streamDir = Files.createTempDirectory("graft-s19-in")
-    val ckpt = Files.createTempDirectory("graft-s19-ckpt")
-    val scratch = Files.createTempDirectory("graft-s19-scratch")
-    val stateRoot = Files.createTempDirectory("graft-s19-state")
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamParts)
-    try {
-      val d = s.read.parquet(docsPq)
-      val maxId = d.agg(max("doc_id")).head.getLong(0)
+  def s19StreamExactDedup(s: SparkSession, dir: String): DataFrame =
+    runStream(s, "s19",
+      BatchSink(st => graft.streaming.StreamingExactDedup.scoreBatch(st.toString),
+        st => s.read.option("recursiveFileLookup", "true")
+          .parquet(s"$st/verdicts")
+          .select("doc_id", "n_windows", "n_dup")),
+      eventTs = false) { d =>
+      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val maxId = docs.agg(max("doc_id")).head.getLong(0)
       val cut = maxId / 3 + 1
       // slice k = contiguous doc_id range [k·cut, (k+1)·cut) — integer
       // division reproduces the old range filters exactly
-      stageSlices(d, expr(s"doc_id div $cut"), 3, streamDir, scratch)
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(streamDir.toString)
-        .writeStream
-        .foreachBatch(
-          graft.streaming.StreamingExactDedup.scoreBatch(stateRoot.toString) _)
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try {
-        if (!q.awaitTermination(300000))
-          sys.error("s19: stream did not finish within 300s")
-      } finally q.stop()
-      s.read.option("recursiveFileLookup", "true")
-        .parquet(s"$stateRoot/verdicts")
-        .select("doc_id", "n_windows", "n_dup")
-        .localCheckpoint(true)
-        .orderBy("doc_id")
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      graft.core.TempDirs.deleteQuietly(streamDir, "s19")
-      graft.core.TempDirs.deleteQuietly(ckpt, "s19")
-      graft.core.TempDirs.deleteQuietly(scratch, "s19")
-      graft.core.TempDirs.deleteQuietly(stateRoot, "s19")
-    }
-  }
+      stageSlices(docs, expr(s"doc_id div $cut"), 3, d.in, d.scratch)
+      docs.schema
+    }(src => src()).orderBy("doc_id")
 
   /** s20 — streaming release manifest (d42's incremental twin): docs
     * arrive in three slices and each micro-batch folds its per-shard
@@ -1043,42 +889,17 @@ object StreamQueries extends QueryPack {
     * pipeline whose manifest is always current as shards ingest,
     * with O(shards) state. */
   def s20StreamManifest(s: SparkSession, dir: String): DataFrame = {
-    val docsPq = s"$dir/documents.parquet"
-    val schema = s.read.parquet(docsPq).schema
-    val streamDir = Files.createTempDirectory("graft-s20-in")
-    val ckpt = Files.createTempDirectory("graft-s20-ckpt")
-    val scratch = Files.createTempDirectory("graft-s20-scratch")
-    val stateRoot = Files.createTempDirectory("graft-s20-state")
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamParts)
-    try {
-      val d = s.read.parquet(docsPq)
+    import graft.streaming.StreamingManifest
+    runStream(s, "s20",
+      BatchSink(st => StreamingManifest.foldBatch(st.toString),
+        st => s.read.parquet(StreamingManifest.latest(st.toString))
+          .select("shard", "n_docs", "n_chars", "content_fp")),
+      eventTs = false) { d =>
+      val docs = s.read.parquet(s"$dir/documents.parquet")
       // interleaved on purpose: order-free
-      stageSlices(d, col("doc_id") % 3, 3, streamDir, scratch)
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(streamDir.toString)
-        .writeStream
-        .foreachBatch(
-          graft.streaming.StreamingManifest.foldBatch(stateRoot.toString) _)
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try {
-        if (!q.awaitTermination(300000))
-          sys.error("s20: stream did not finish within 300s")
-      } finally q.stop()
-      s.read.parquet(graft.streaming.StreamingManifest.latest(stateRoot.toString))
-        .select("shard", "n_docs", "n_chars", "content_fp")
-        .localCheckpoint(true)
-        .orderBy("shard")
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      graft.core.TempDirs.deleteQuietly(streamDir, "s20")
-      graft.core.TempDirs.deleteQuietly(ckpt, "s20")
-      graft.core.TempDirs.deleteQuietly(scratch, "s20")
-      graft.core.TempDirs.deleteQuietly(stateRoot, "s20")
-    }
+      stageSlices(docs, col("doc_id") % 3, 3, d.in, d.scratch)
+      docs.schema
+    }(src => src()).orderBy("shard")
   }
 
   /** s21 — streaming sketch profile: the a02 mergeable-HLL law under
@@ -1091,49 +912,24 @@ object StreamQueries extends QueryPack {
     * within 5% of exact distinct — DuckDB's sketch differs from
     * DataSketches, so the law, not the bits, is the contract. */
   def s21StreamSketch(s: SparkSession, dir: String): DataFrame = {
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
-    val streamDir = Files.createTempDirectory("graft-s21-in")
-    val ckpt = Files.createTempDirectory("graft-s21-ckpt")
-    val storeRoot = Files.createTempDirectory("graft-s21-store")
-    val store = storeRoot.resolve("sketches").toString
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamParts)
-    try {
-      stageTable(dir, "events", streamDir)
-      val raw = graft.core.Tables.withEventTs(
-        s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(streamDir.toString))
-      val q = raw.writeStream
-        .foreachBatch(graft.streaming.StreamingIngest.sketchBatch(store) _)
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try {
-        if (!q.awaitTermination(300000))
-          sys.error("s21: stream did not finish within 300s")
-      } finally q.stop()
-      val merged = s.read.parquet(store)
-        .groupBy("event_type")
-        .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("est"),
-          sum(col("cnt")).as("n_events"))
-      val exact = graft.core.Tables.events(s, dir)
-        .groupBy("event_type")
-        .agg(countDistinct(col("user_id")).as("exact_users"),
-          count(lit(1)).as("exact_events"))
-      merged.join(exact, "event_type")
-        .select(col("event_type"), col("exact_users"), col("n_events"),
-          (col("n_events") === col("exact_events")).as("count_ok"),
-          (abs(col("est") - col("exact_users")) <=
-            col("exact_users") * 0.05).as("sketch_ok"))
-        .orderBy("event_type")
-        .localCheckpoint(true)
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      graft.core.TempDirs.deleteQuietly(streamDir, "s21")
-      graft.core.TempDirs.deleteQuietly(ckpt, "s21")
-      graft.core.TempDirs.deleteQuietly(storeRoot, "s21")
-    }
+    def store(state: Path) = state.resolve("sketches").toString
+    runStream(s, "s21",
+      BatchSink(st => graft.streaming.StreamingIngest.sketchBatch(store(st)), { st =>
+        val merged = s.read.parquet(store(st))
+          .groupBy("event_type")
+          .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("est"),
+            sum(col("cnt")).as("n_events"))
+        val exact = graft.core.Tables.events(s, dir)
+          .groupBy("event_type")
+          .agg(countDistinct(col("user_id")).as("exact_users"),
+            count(lit(1)).as("exact_events"))
+        merged.join(exact, "event_type")
+          .select(col("event_type"), col("exact_users"), col("n_events"),
+            (col("n_events") === col("exact_events")).as("count_ok"),
+            (abs(col("est") - col("exact_users")) <=
+              col("exact_users") * 0.05).as("sketch_ok"))
+          .orderBy("event_type")
+      }))(stagedTable(s, dir, "events"))(src => src())
   }
 
   /** s22 — STREAMING structured rule extraction (q110's incremental
@@ -1147,44 +943,17 @@ object StreamQueries extends QueryPack {
     * from any slicing or arrival order; the gate hash-matches q110's
     * oracle exactly. The operational story: rules land in the graph as
     * their source documents ingest, no batch re-run. */
-  def s22StreamRuleExtract(s: SparkSession, dir: String): DataFrame = {
-    val streamDir = Files.createTempDirectory("graft-s22-in")
-    val ckpt = Files.createTempDirectory("graft-s22-ckpt")
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamParts)
-    try {
+  def s22StreamRuleExtract(s: SparkSession, dir: String): DataFrame =
+    runStream(s, "s22",
+      MemorySink("append", _.orderBy("name", "branch", "stream")),
+      eventTs = false) { d =>
       val docs = graft.sources.RuleExtract.fixtureDocs(
         graft.core.Tables.part(s, dir).select(col("p_partkey"), col("p_name")))
       // three part-files = three micro-batches (order is irrelevant:
       // extraction is stateless, unlike s19's order-pinned dedup)
-      docs.repartition(3).write.mode("overwrite").parquet(streamDir.toString)
-      val schema = s.read.parquet(streamDir.toString).schema
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(streamDir.toString)
-      val sink = "s22_sink_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val q = graft.sources.RuleExtract.candidates(src)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try {
-        if (!q.awaitTermination(300000))
-          sys.error("s22: stream did not finish within 300s")
-      } finally q.stop()
-      val out = s.table(sink)
-        .orderBy("name", "branch", "stream")
-        .localCheckpoint(true)
-      s.catalog.dropTempView(sink)
-      out
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      graft.core.TempDirs.deleteQuietly(streamDir, "s22")
-      graft.core.TempDirs.deleteQuietly(ckpt, "s22")
-    }
-  }
+      docs.repartition(3).write.mode("overwrite").parquet(d.in.toString)
+      s.read.parquet(d.in.toString).schema
+    }(src => graft.sources.RuleExtract.candidates(src()))
 
   /** s23 — the d48 quality classifier at INGEST: the same
     * hashed-feature linear scorer running per micro-batch over a
@@ -1194,39 +963,13 @@ object StreamQueries extends QueryPack {
     * filtering runs ON the firehose (each batch one narrow codegen'd
     * scan, no state store, no shuffle) instead of as a post-hoc
     * full-corpus pass. */
-  def s23StreamQuality(s: SparkSession, dir: String): DataFrame = {
-    val streamDir = Files.createTempDirectory("graft-s23-in")
-    val ckpt = Files.createTempDirectory("graft-s23-ckpt")
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", streamParts)
-    try {
+  def s23StreamQuality(s: SparkSession, dir: String): DataFrame =
+    runStream(s, "s23", MemorySink("append", _.orderBy("doc_id")),
+      eventTs = false) { d =>
       graft.core.Tables.documents(s, dir).select("doc_id", "text")
-        .repartition(3).write.mode("overwrite").parquet(streamDir.toString)
-      val schema = s.read.parquet(streamDir.toString).schema
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(streamDir.toString)
-      val sink = "s23_sink_" +
-        java.util.UUID.randomUUID.toString.replace("-", "")
-      val q = TextQueries.qualityClassify(src)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try {
-        if (!q.awaitTermination(300000))
-          sys.error("s23: stream did not finish within 300s")
-      } finally q.stop()
-      val out = s.table(sink).orderBy("doc_id").localCheckpoint(true)
-      s.catalog.dropTempView(sink)
-      out
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      graft.core.TempDirs.deleteQuietly(streamDir, "s23")
-      graft.core.TempDirs.deleteQuietly(ckpt, "s23")
-    }
-  }
+        .repartition(3).write.mode("overwrite").parquet(d.in.toString)
+      s.read.parquet(d.in.toString).schema
+    }(src => TextQueries.qualityClassify(src()))
 
   val queries: Map[String, QueryFn] = Map(
     "s23_stream_quality" -> (s23StreamQuality _),

@@ -13,12 +13,17 @@ class PlanSweepSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
+  /** Each query's sorted rows from the sweep, reused as run 1 of the
+    * determinism comparison so a query runs twice per suite, not three
+    * times. Empty when the sweep did not run (e.g. under `-z`). */
+  private val swept = scala.collection.mutable.Map.empty[String, Seq[String]]
+
   test("all queries execute and none plans a cartesian product") {
     val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       val res =
         try {
           val df = fn(spark, dir)
-          df.collect()
+          swept(name) = df.collect().map(_.toString).toSeq.sorted
           val plan = df.queryExecution.executedPlan.toString
           if (plan.contains("CartesianProduct")) Some(s"$name: CartesianProduct in plan")
           else None
@@ -38,17 +43,22 @@ class PlanSweepSpec extends SparkSpec {
   }
 
   test("every query is run-to-run deterministic (the oracle hash contract)") {
+    // clear the Dataset CacheManager too, or a query that cache()s
+    // internally serves run 2 from run 1's cache and the determinism
+    // comparison proves nothing
+    def release(): Unit = {
+      spark.catalog.clearCache()
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    }
+    release()
     val diffs = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       def run(): Seq[String] = {
         val rows = fn(spark, dir).collect().map(_.toString).toSeq.sorted
-        // clear the Dataset CacheManager too, or a query that cache()s
-        // internally serves run 2 from run 1's cache and the
-        // determinism comparison proves nothing
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+        release()
         rows
       }
-      val (a, b) = (run(), run())
+      val a = swept.getOrElse(name, run())
+      val b = run()
       if (a == b) None
       else Some(s"$name: ${a.size} vs ${b.size} rows, first diff: " +
         a.zip(b).find { case (x, y) => x != y }.orElse(Some(("size", "mismatch"))).get)
