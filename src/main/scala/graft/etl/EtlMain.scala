@@ -56,15 +56,11 @@ object EtlMain {
         val targets = WasteItems.loadTargets(spark, csv).localCheckpoint(true)
         val cls = WasteItems.classified(targets)
         val streams = WasteItems.streamNodes(cls).count()
-        // existence check, not a catch-all: a corrupt store should fail
-        // the dry-run, not silently report every target as unmatched
-        val nodesP = new org.apache.hadoop.fs.Path(s"$store/nodes")
-        val nodesFs = nodesP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val knownFacilities =
-          if (nodesFs.exists(nodesP))
-            spark.read.parquet(s"$store/nodes").filter(col("label") === "Facility")
-              .select("uid", "name")
-          else cls.select(col("target").as("name")).limit(0).withColumn("uid", lit(""))
+        // a corrupt store fails the dry-run instead of reporting every
+        // target as unmatched: readOr only falls back when there is no store
+        val knownFacilities = Pipeline.readOr(spark, Pipeline.nodesPath(store),
+            cls.select(lit("").as("label"), lit("").as("uid"), col("target").as("name")).limit(0))
+          .filter(col("label") === "Facility").select("uid", "name")
         val unmatched = WasteItems.unmatchedFacilities(cls, knownFacilities)
           .collect().map(_.getString(0))
         println(s"dry-run: ${WasteItems.itemNodes(targets).count()} items, " +

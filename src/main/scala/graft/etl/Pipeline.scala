@@ -19,14 +19,14 @@ object Pipeline {
 
   case class Stats(labels: Map[String, Long], totalNodes: Long, totalEdges: Long)
 
-  private def nodesPath(store: String) = s"$store/nodes"
+  private[etl] def nodesPath(store: String) = s"$store/nodes"
   private def edgesPath(store: String) = s"$store/edges"
 
   /** Existence check, NOT a catch-all: swallowing a transient read
     * error would hand back the empty scaffold and the phase's final
     * overwrite would wipe the store. A real read failure must fail the
     * run. */
-  private def readOr(spark: SparkSession, path: String, scaffold: DataFrame): DataFrame = {
+  private[etl] def readOr(spark: SparkSession, path: String, scaffold: DataFrame): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) Tables.parquet(spark, path) else scaffold

@@ -6,10 +6,10 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType,
 
 /** Cypher-string front-end over node/edge DataFrames — the reference's
   * arbitrary-Cypher query API (`neo4j_db.py:93-106`) for its READ
-  * surface, parsed and compiled to the same DataFrame plans the typed
-  * [[GraphDSL]] builds, so Catalyst optimizes the whole chain (label
-  * filters push into the node scan, hops are uid equi-joins, implicit
-  * Cypher grouping is one hash aggregate).
+  * surface, parsed and compiled to DataFrame plans, so Catalyst
+  * optimizes the whole chain (label filters push into the node scan,
+  * hops are uid equi-joins, implicit Cypher grouping is one hash
+  * aggregate).
   *
   * Supported subset = every read query shape the reference issues or
   * documents (`etl_implementation.md:229-257`, `neo4j_db.py:29-157`):
@@ -18,10 +18,10 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType,
   * symmetric edge closure, one keyed join, walk orientation defining
   * the bound rel's src/dst (incl. `|` type alternation,
   * comma-separated chains joined on shared variables, bounded
-  * variable-length `-[:R*lo..hi]->` hops compiled to the same
-  * unrolled-join union as `GraphDSL.outVar` — walk semantics, depth
-  * capped at 10 — and unbounded `-[:R*]->` compiled to the
-  * `Traversal.reachFixpoint` reachability closure, distinct pairs),
+  * variable-length `-[:R*lo..hi]->` hops compiled to a union of
+  * unrolled joins — walk semantics, depth capped at 10 — and
+  * unbounded `-[:R*]->` compiled to the `Traversal.reachFixpoint`
+  * reachability closure, distinct pairs),
   * `p = shortestPath((a)-[:T*..k]->(b))` with `length(p)` (bounded
   * unrolled BFS: per-depth distinct level sets + one min-depth
   * aggregate), general named paths `p = (a)-[:T*1..2]->(b)` whose
@@ -52,10 +52,10 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType,
   * `count([DISTINCT] n)` / `min` / `max` / `sum` / `avg` / `collect`,
   * `labels(n)[0]`, `type(r)`, property access, `$param` substitution,
   * `ORDER BY ... [ASC|DESC]` (including non-returned expressions,
-  * which sort pre-projection), `SKIP`, `LIMIT`. Write statements
-  * (`MERGE` templates) compile through [[CypherWrite]] to the
-  * [[GraphStore]] upsert sinks; other writes (`SET`, `DELETE`) are
-  * rejected with a pointer.
+  * which sort pre-projection), `SKIP`, `LIMIT`. Write statements are
+  * not compiled here: [[GraphDb.query]] routes `MERGE`, `CREATE`,
+  * `SET`, `REMOVE` and `DELETE` through [[CypherWrite]] to the
+  * [[GraphStore]] upserts, and [[run]] rejects them with a pointer.
   *
   * Node tables are `(label, uid, <props...>)`, edge tables
   * `(src_uid, rel_type, dst_uid, <props...>)` — the engine-wide graph
@@ -1331,10 +1331,9 @@ object CypherFrontend {
         rel.varLen match {
           case Some((lo, hi)) =>
             // bounded var-length: union of k-fold edge chains, k in
-            // lo..hi — the same unrolled-joins plan GraphDSL.outVar
-            // builds (g12), one declarative plan with no driver loop.
-            // Path-multiplicity (walk) semantics: a destination appears
-            // once per distinct walk, matching outVar's contract.
+            // lo..hi (g12, g32), one declarative plan with no driver
+            // loop. Path-multiplicity (walk) semantics: a destination
+            // appears once per distinct walk.
             //
             // UNBOUNDED `*` (hi == Unbounded) instead compiles to the
             // Traversal.reachFixpoint REACHABILITY closure: DISTINCT
@@ -3400,8 +3399,8 @@ object CypherFrontend {
       case EAgg("count", Some(EVar(v)), true) if relVars(v) =>
         // a relationship's identity is the full (src, type, dst) edge —
         // distinct on src alone would merge parallel edges. This is the
-        // ENGINE's edge-identity contract (GraphStore.edgeCols: upserts
-        // key on exactly this triple, so duplicate triples cannot exist
+        // ENGINE's edge-identity contract (GraphStore.upsertEdges keys
+        // on exactly this triple, so duplicate triples cannot exist
         // in a stored graph); it diverges from Neo4j only for ad-hoc
         // edge frames that carry duplicate (src, type, dst) rows, where
         // Neo4j's per-relationship element ids would count each copy

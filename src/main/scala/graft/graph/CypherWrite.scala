@@ -374,14 +374,6 @@ object CypherWrite {
 
   // -------------------------------------------------------- compiler
 
-  /** Apply one write template to the graph for a whole params batch.
-    *
-    * `params` columns = the template's `$names` (all strings, like the
-    * driver's params dicts), plus an optional `_seq` LONG giving the
-    * reference's loop order for in-batch duplicate-key merging.
-    * `propCols` = the property columns of the nodes table (between
-    * `name` and `created_at` in [[GraphStore.nodeCols]] order).
-    */
   /** Does the statement contain a write clause? (Token-level — string
     * literals can spell MERGE without tripping this.) The [[GraphDb]]
     * facade uses it to route `query()` between the read compiler and
@@ -412,10 +404,18 @@ object CypherWrite {
     }
   }
 
-  /** Route a write statement to its compiler by clause: `MERGE`
-    * templates to [[merge]], `MATCH...SET` to [[update]],
-    * `MATCH...[DETACH] DELETE` to [[delete]]. One entry point so
-    * [[GraphDb.query]] can accept the reference's full write surface. */
+  /** Apply one write template to the graph for a whole params batch,
+    * routed by clause: `MERGE` templates to [[merge]], `CREATE` to
+    * [[create]], `MATCH...[DETACH] DELETE` to [[delete]], `MATCH...SET`
+    * and `REMOVE` to [[update]]. One entry point so [[GraphDb.query]]
+    * can accept the reference's full write surface.
+    *
+    * `params` columns = the template's `$names` (all strings, like the
+    * driver's params dicts), plus an optional `_seq` LONG giving the
+    * reference's loop order for in-batch duplicate-key merging.
+    * `propCols` = the property columns of the nodes table (between
+    * `name` and `created_at`, the layout [[GraphDb.empty]] builds).
+    */
   def apply(template: String, params: DataFrame, graph: Graph,
             clock: Column, propCols: Seq[String]): Graph = {
     val kws = CypherFrontend.tokenize(template).collect { case TKw(k) => k }.toSet

@@ -19,15 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object GraphStore {
 
-  /** Canonical node schema: (label, uid, name, props, created_at, updated_at). */
-  val nodeCols: Seq[String] = Seq("label", "uid", "name", "props", "created_at", "updated_at")
-
-  /** Canonical edge schema mirrors `schema.cql:104-142`'s relationship
-    * catalog: typed, directed, with optional properties. Edge identity =
-    * (src_uid, dst_uid, rel_type) (`waste_items.py:383-419` MERGE key).
-    */
-  val edgeCols: Seq[String] = Seq("src_uid", "dst_uid", "rel_type", "src_label", "dst_label", "created_at")
-
   /** Idempotent batch node upsert — the Cypher `MERGE` contract
     * (`facilities.py:109-135`) as one full-outer join:
     *   - key match → update: per-property, a non-empty incoming value
@@ -66,8 +57,9 @@ object GraphStore {
         when(col("i.uid").isNotNull, clock).otherwise(col("e.updated_at")).as("updated_at")): _*)
   }
 
-  /** Idempotent edge upsert: union + drop duplicate (src,dst,rel_type),
-    * keeping the earliest created_at (re-runs don't churn timestamps).
+  /** Idempotent edge upsert: union + drop duplicate (src,dst,rel_type)
+    * — edge identity, the `waste_items.py:383-419` MERGE key — keeping
+    * the earliest created_at (re-runs don't churn timestamps).
     */
   def upsertEdges(existing: DataFrame, incoming: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window

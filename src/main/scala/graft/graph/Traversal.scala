@@ -3,7 +3,7 @@ package graft.graph
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
@@ -56,44 +56,13 @@ object Traversal {
     val e0 = edges.select(col("src_uid"), col("dst_uid"))
     def firstLevel(e: DataFrame) = seeded(e, seed).select(col("src_uid").as("start"),
       col("dst_uid").as("reached"), lit(1).as("depth"))
-    val onDriver = driverReach(e0, seed, maxIter, firstLevel(e0).schema, witness = false)
-    if (onDriver.isDefined) return onDriver.get
-    val e = e0.cache()
-    // Levels are kept as a LIST of checkpointed frames and only unioned
-    // lazily (for the per-round anti-join) and once at the end: the old
-    // form re-checkpointed the whole accumulated closure EVERY round —
-    // one extra full-materialization job per level, quadratic total
-    // bytes written over the loop (guide §1.2: remove passes that
-    // recompute what is already materialized). A union of checkpointed
-    // RDDs is lineage-free already; nothing needs re-materializing.
-    val first = firstLevel(e).localCheckpoint(true)
-    var levels = Vector(first)
-    var frontier = first
-    var i = 1
-    var done = false
-    def acc = levels.reduce(_ unionByName _)
-    while (i < maxIter && !done) {
-      // the emptiness probe rides the checkpoint job as an observed
-      // count — no separate isEmpty() job per level (guide §1.2)
-      val (next, n) = ObservedCheckpoint.count(
-        frontier.join(e, frontier("reached") === e("src_uid"))
-          .select(col("start"), col("dst_uid").as("reached"), (col("depth") + 1).as("depth"))
-          .join(acc.select(col("start").as("s2"), col("reached").as("r2")),
-            col("start") === col("s2") && col("reached") === col("r2"), "left_anti")
-          // collapse parallel paths within the level: on a diamond
-          // (a→b1→c, a→b2→c) the hop join yields (a,c) once per path, and
-          // without this the frontier grows multiplicatively (k paths per
-          // layer ⇒ k^depth rows) while acc double-counts reachability
-          .dropDuplicates(Seq("start", "reached")))
-      if (n == 0L) done = true
-      else {
-        levels :+= next
-        frontier = next
-        i += 1
-      }
-    }
-    e.unpersist(blocking = false) // every level is checkpointed — lineage-free
-    acc
+    driverReach(e0, seed, maxIter, firstLevel(e0).schema, witness = false).getOrElse(
+      // collapse parallel paths within the level: on a diamond
+      // (a→b1→c, a→b2→c) the hop join yields (a,c) once per path, and
+      // without this the frontier grows multiplicatively (k paths per
+      // layer ⇒ k^depth rows) while acc double-counts reachability
+      levelLoop(e0, firstLevel, maxIter, (col("depth") + 1).as("depth"))(
+        (hops, _) => hops.dropDuplicates(Seq("start", "reached"))))
   }
 
   /** [[reachFixpoint]] variant that also carries ONE deterministic
@@ -119,23 +88,40 @@ object Traversal {
         col("dst_uid").as("reached"),
         concat(col("src_uid"), lit("|"), col("rel_type"), lit("|"),
           col("dst_uid")).as("path")), 1)
-    val onDriver = driverReach(e0, seed, maxIter, firstLevel(e0).schema, witness = true)
-    if (onDriver.isDefined) return onDriver.get
+    driverReach(e0, seed, maxIter, firstLevel(e0).schema, witness = true).getOrElse(
+      levelLoop(e0, firstLevel, maxIter,
+        concat(col("path"), lit("|"), col("rel_type"), lit("|"), col("dst_uid")).as("path"))(
+        minPath))
+  }
+
+  /** The distributed loop of both closures, one shuffle join per level.
+    * Level 1 is `firstLevel` of the cached edges `e0`; each later level
+    * joins the frontier's `reached` to an edge's `src_uid`, projects
+    * (start, reached, `carry`), drops the pairs an earlier level
+    * reached (the visited-set anti-join) and `collapse`s the rest at
+    * its depth. It stops at the first empty level or after `maxIter`
+    * levels. */
+  private def levelLoop(e0: DataFrame, firstLevel: DataFrame => DataFrame, maxIter: Int,
+                        carry: Column)(collapse: (DataFrame, Int) => DataFrame): DataFrame = {
     val e = e0.cache()
-    var frontier = firstLevel(e).localCheckpoint(true)
-    // same level-list discipline as reachFixpoint: levels stay
-    // individually checkpointed, the accumulated closure is only a lazy
-    // union — no per-round re-materialization of everything seen so far
-    var levels = Vector(frontier)
+    // Levels are kept as a LIST of checkpointed frames and only unioned
+    // lazily (for the per-round anti-join) and once at the end:
+    // re-checkpointing the accumulated closure every round would add one
+    // full-materialization job per level, quadratic total bytes written
+    // over the loop (guide §1.2). A union of checkpointed RDDs is
+    // lineage-free already; nothing needs re-materializing.
+    val first = firstLevel(e).localCheckpoint(true)
+    var levels = Vector(first)
+    var frontier = first
     var i = 1
     var done = false
     def acc = levels.reduce(_ unionByName _)
     while (i < maxIter && !done) {
-      val (next, n) = ObservedCheckpoint.count(minPath(
+      // the emptiness probe rides the checkpoint job as an observed
+      // count — no separate isEmpty() job per level (guide §1.2)
+      val (next, n) = ObservedCheckpoint.count(collapse(
         frontier.join(e, frontier("reached") === e("src_uid"))
-          .select(col("start"), col("dst_uid").as("reached"),
-            concat(col("path"), lit("|"), col("rel_type"), lit("|"),
-              col("dst_uid")).as("path"))
+          .select(col("start"), col("dst_uid").as("reached"), carry)
           .join(acc.select(col("start").as("s2"), col("reached").as("r2")),
             col("start") === col("s2") && col("reached") === col("r2"), "left_anti"),
         i + 1))
@@ -146,7 +132,7 @@ object Traversal {
         i += 1
       }
     }
-    e.unpersist(blocking = false)
+    e.unpersist(blocking = false) // every level is checkpointed — lineage-free
     acc
   }
 

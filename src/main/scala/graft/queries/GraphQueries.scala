@@ -166,19 +166,18 @@ object GraphQueries extends QueryPack {
       .unionByName(Tables.nation(s, dir).select((col("n_nationkey") + 100).cast("long").as("vid")))
       .unionByName(Tables.customer(s, dir).select((col("c_custkey") + 1000).cast("long").as("vid")))
 
-  /** g09 — the fluent DSL (M3, Cypher-subset-as-library): MATCH
-    * (c:Customer)-[:IN_NATION]->()-[:IN_REGION]->(r) RETURN r.name,
-    * count(*) — compiled straight to DataFrame joins. */
+  /** g09 — customers per region over a two-hop chain through an
+    * anonymous nation node, compiled by [[graft.graph.CypherFrontend]]
+    * to two uid equi-joins and one hash aggregate. */
   def g09DslTwohop(s: SparkSession, dir: String): DataFrame =
-    graft.graph.GraphDSL.on(nodes(s, dir), edges(s, dir))
-      .matchLabel("Customer")
-      .out("IN_NATION")
-      .out("IN_REGION")
-      .groupCount("name")
-      .select(col("name").as("region_name"), col("cnt"))
+    graft.graph.CypherFrontend.run(
+      """MATCH (c:Customer)-[:IN_NATION]->()-[:IN_REGION]->(r)
+        |RETURN r.name AS region_name, count(*) AS cnt
+        |ORDER BY cnt DESC, region_name""".stripMargin,
+      nodes(s, dir), edges(s, dir))
 
-  /** g10 — DSL anti-pattern: MATCH (c:Customer) WHERE NOT
-    * (c)-[:PLACED]->() — reuses g03's edge set through the DSL. */
+  /** g10 — the anti-pattern `WHERE NOT (c)-[:PLACED]->()` over g03's
+    * edge set: customers without a 1998 order, one left-anti join. */
   def g10DslOrphans(s: SparkSession, dir: String): DataFrame = {
     val placed = Tables.orders(s, dir)
       .filter(col("o_orderdate") >= lit("1998-01-01").cast("timestamp")).select(
@@ -186,10 +185,10 @@ object GraphQueries extends QueryPack {
       uidOf("Order", col("o_orderkey")).as("dst_uid"),
       lit("PLACED").as("rel_type"),
       lit("Customer").as("src_label"), lit("Order").as("dst_label"))
-    graft.graph.GraphDSL.on(nodes(s, dir), placed)
-      .matchLabel("Customer")
-      .whereNotOut("PLACED")
-      .df.select("uid", "name").orderBy("uid")
+    graft.graph.CypherFrontend.run(
+      """MATCH (c:Customer) WHERE NOT (c)-[:PLACED]->()
+        |RETURN c.uid AS uid, c.name AS name ORDER BY uid""".stripMargin,
+      nodes(s, dir), placed)
   }
 
   /** g11 — hop distance per vertex to the nearest region landmark
@@ -215,17 +214,16 @@ object GraphQueries extends QueryPack {
       .orderBy("vid")
   }
 
-  /** g12 — variable-length path `(c:Customer)-[:IN*1..2]->(x)`: the
-    * containment edges relabeled to one type so depth 1 lands on
-    * nations, depth 2 on regions; grouped by (hops, name). Unrolled
-    * joins in a single plan — no driver-side iteration. */
+  /** g12 — variable-length path over both containment types from
+    * customers: depth 1 lands on nations, depth 2 on regions; grouped
+    * by (`length(p)`, name). Unrolled joins in a single plan — no
+    * driver-side iteration. */
   def g12DslVarLength(s: SparkSession, dir: String): DataFrame =
-    graft.graph.GraphDSL.on(nodes(s, dir),
-        edges(s, dir).withColumn("rel_type", lit("IN")))
-      .matchLabel("Customer")
-      .outVar("IN", 1, 2)
-      .df.groupBy("hops", "name").agg(count(lit(1)).as("cnt"))
-      .orderBy("hops", "name")
+    graft.graph.CypherFrontend.run(
+      """MATCH p = (c:Customer)-[:IN_NATION|IN_REGION*1..2]->(x)
+        |RETURN length(p) AS hops, x.name AS name, count(*) AS cnt
+        |ORDER BY hops, name""".stripMargin,
+      nodes(s, dir), edges(s, dir))
 
   /** g13 — PageRank in integer fixed-point (damping 0.85, 3 iterations,
     * rank scaled by 1e9, floor division): float PageRank sums
@@ -271,17 +269,15 @@ object GraphQueries extends QueryPack {
     pr.orderBy(desc("pr"), asc("uid")).limit(30)
   }
 
-  /** g14 — reverse traversal `(n:Nation)<-[:IN_NATION]-(m)`: the DSL's
-    * backward hop (Cypher's other arrow), counting residents per
-    * nation with path multiplicity — the same plan shape as a forward
-    * hop, joined on dst_uid instead of src_uid. */
+  /** g14 — reverse traversal `(n:Nation)<-[:IN_NATION]-(m)`: the
+    * backward hop, counting residents per label with path multiplicity
+    * — the same plan shape as a forward hop, joined on dst_uid instead
+    * of src_uid. */
   def g14DslReverse(s: SparkSession, dir: String): DataFrame =
-    graft.graph.GraphDSL.on(nodes(s, dir), edges(s, dir))
-      .matchLabel("Nation")
-      .where(col("name") < "NATION_2")
-      .in("IN_NATION")
-      .df.groupBy("label").agg(count(lit(1)).as("cnt"))
-      .orderBy("label")
+    graft.graph.CypherFrontend.run(
+      """MATCH (n:Nation)<-[:IN_NATION]-(m) WHERE n.name < 'NATION_2'
+        |RETURN labels(m)[0] AS label, count(*) AS cnt ORDER BY label""".stripMargin,
+      nodes(s, dir), edges(s, dir))
 
   /** g15 — out-degree distribution per label: the first profiling query
     * run on any new graph (degree histograms expose skew — the hot-key
@@ -510,22 +506,20 @@ object GraphQueries extends QueryPack {
       .drop("aa_micro")
   }
 
-  /** g19 — OPTIONAL MATCH through the DSL (`Cypher OPTIONAL MATCH
-    * (n)-[:IN_NATION]->(m)`): every node survives the hop; per label,
-    * how many rows matched and how many distinct nations they reach —
+  /** g19 — `OPTIONAL MATCH (n)-[:IN_NATION]->(m)`: every node
+    * survives the hop; per label, how many rows matched and how many
+    * distinct nations they reach —
     * Customer/Supplier rows match (each has exactly one nation edge),
     * Nation/Region rows come back null-padded. The left join broadcasts
     * the edge and dimension sides exactly like the required-match hop.
     */
   def g19DslOptional(s: SparkSession, dir: String): DataFrame =
-    graft.graph.GraphDSL.on(nodes(s, dir), edges(s, dir))
-      .outOptional("IN_NATION")
-      .df
-      .groupBy("label")
-      .agg(count(lit(1)).as("n_rows"),
-        count(col("m_uid")).as("n_matched"),
-        countDistinct(col("m_name")).as("n_nations"))
-      .orderBy("label")
+    graft.graph.CypherFrontend.run(
+      """MATCH (n) OPTIONAL MATCH (n)-[:IN_NATION]->(m)
+        |RETURN labels(n)[0] AS label, count(*) AS n_rows,
+        |       count(m) AS n_matched, count(DISTINCT m.name) AS n_nations
+        |ORDER BY label""".stripMargin,
+      nodes(s, dir), edges(s, dir))
 
   /** g20 — co-occurrence lift (PMI's ratio form) over the click
     * bipartite graph: for user pairs sharing ≥2 five-minute buckets,
@@ -956,8 +950,7 @@ object GraphQueries extends QueryPack {
     * node/edge tables, hash-matched against SQL oracles. g27 is the
     * reference's label-histogram validation query, g28 its
     * grouped-hop shape, g29 a filtered two-hop with string predicate.
-    * The compiled plans are the DSL's: label filters push into the node
-    * scan, hops are uid equi-joins, the implicit Cypher grouping is one
+    * In the compiled plans label filters push into the node scan, hops are uid equi-joins, the implicit Cypher grouping is one
     * hash aggregate. */
   def g27CypherLabels(s: SparkSession, dir: String): DataFrame =
     graft.graph.CypherFrontend.run(
@@ -996,8 +989,8 @@ object GraphQueries extends QueryPack {
   /** g32 — bounded variable-length path in Cypher TEXT form
     * (`-[:T1|T2*1..2]->`): depth-1 walks reach Nation (from customers/
     * suppliers) and Region (from nations); depth-2 walks reach Region
-    * via a nation. Compiles to the same unrolled-join union as
-    * GraphDSL.outVar (g12's plan) — path multiplicity preserved, so
+    * via a nation. Compiles to the same unrolled-join union as g12's
+    * plan — path multiplicity preserved, so
     * the per-(src,dst)-label path counts are exactly checkable. */
   def g32CypherVarLength(s: SparkSession, dir: String): DataFrame =
     graft.graph.CypherFrontend.run(

@@ -469,12 +469,33 @@ class CypherFrontendSpec extends SparkSpec {
       chainNodes, chainEdges).as[(String, Long)].collect().toSeq
     // depth1: B,X,Y; depth2: C (via B), C (via X), C (via Y); depth3: D + 2×(C->D)... D via B->C->D, X->C->D, Y->C->D
     assert(got === Seq(("B", 1L), ("C", 3L), ("D", 3L), ("X", 1L), ("Y", 1L)))
-    // identical to the typed DSL's unrolled plan
-    val typed = GraphDSL.on(chainNodes, chainEdges)
-      .where($"name" === "A").outVar("CHILD_OF", 1, 3)
-      .df.groupBy("name").agg(count(lit(1)).as("walks"))
-      .orderBy("name").as[(String, Long)].collect().toSeq
-    assert(got === typed)
+  }
+
+  // diamond: a→b, a→c, b→d, c→d (two distinct paths a⇒d)
+  private lazy val diamondNodes: DataFrame = Seq(
+    ("Start", "a", "A"), ("Mid", "b", "B"), ("Mid", "c", "C"), ("End", "d", "D"))
+    .toDF("label", "uid", "name")
+  private lazy val diamondEdges: DataFrame = Seq(
+    ("a", "R", "b"), ("a", "R", "c"), ("b", "R", "d"), ("c", "R", "d"))
+    .toDF("src_uid", "rel_type", "dst_uid")
+
+  test("diamond: a two-hop gives one row per path; DISTINCT one") {
+    val paths = CypherFrontend.run(
+      "MATCH (s:Start)-[:R]->()-[:R]->(x) RETURN x.uid AS uid",
+      diamondNodes, diamondEdges).as[String].collect().toSeq
+    assert(paths === Seq("d", "d"))
+    val distinct = CypherFrontend.run(
+      "MATCH (s:Start)-[:R]->()-[:R]->(x) RETURN DISTINCT x.uid AS uid",
+      diamondNodes, diamondEdges).as[String].collect().toSeq
+    assert(distinct === Seq("d"))
+  }
+
+  test("diamond: length(p) over *1..2 counts each walk's hops") {
+    val got = CypherFrontend.run(
+      "MATCH p = (s:Start)-[:R*1..2]->(x) RETURN length(p) AS hops, x.uid AS uid ORDER BY hops, uid",
+      diamondNodes, diamondEdges).as[(Int, String)].collect().toSeq
+    // depth 1: b, c; depth 2: d twice (one per path)
+    assert(got === Seq((1, "b"), (1, "c"), (2, "d"), (2, "d")))
   }
 
   test("var-length exact *2 and *..2 bounds") {

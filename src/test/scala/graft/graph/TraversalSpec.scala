@@ -27,7 +27,12 @@ class TraversalSpec extends SparkSpec {
       assert(!l.queryExecution.analyzed.isInstanceOf[LocalRelation],
         "threshold -1 should run the distributed loop")
       assert(d.schema == l.schema)
-      val rows = (df: DataFrame) => df.collect().map(_.toSeq).toSet
+      // no input here repeats an edge, so every row is a distinct pair
+      val rows = (df: DataFrame) => {
+        val r = df.collect().map(_.toSeq)
+        assert(r.length == r.distinct.length, s"repeated rows in ${r.toSeq}")
+        r.toSet
+      }
       (rows(d), rows(l))
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }

@@ -23,7 +23,11 @@ column Python ints ("274"), which is precisely the dtype sensitivity the
 driver exhibits. Floats are hashed at FULL precision (the driver does;
 gates that could differ in ulps round on both sides by repo convention).
 
-Runs after `tools/run.sh graft.Verify <sfDir> <outDir>`.
+Runs after `tools/run.sh graft.Verify <sfDir> <outDir>`. To check a
+subset, give Verify a third argument, comma-separated name substrings
+(`graft.Verify <sfDir> <outDir> g09,g12`): it writes only the matching
+queries plus the full oracle_sql.json, and this script checks each query
+written.
 Usage: python3 tools/check.py /root/testdata/sf0.01 /tmp/verify_out
 """
 import hashlib
