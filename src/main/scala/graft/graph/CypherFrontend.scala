@@ -66,7 +66,10 @@ object CypherFrontend {
 
   // ---------------------------------------------------------------- AST
 
-  private sealed trait Expr
+  /** An expression or a predicate — the node type of the one tree walk
+    * ([[mapChildren]], [[children]], [[subterms]]). */
+  private sealed trait Term
+  private sealed trait Expr extends Term
   private case class EVar(name: String) extends Expr
   private case class EProp(v: String, key: String) extends Expr
   private case class ELit(v: Any) extends Expr
@@ -138,14 +141,14 @@ object CypherFrontend {
   /** A pattern predicate / EXISTS subquery used as a boolean VALUE —
     * `RETURN exists((a)-[:R]->(b))`, `EXISTS { }` in a CASE RESULT or
     * any other expression position. Rides the SAME pre-joined flag
-    * columns the predicate positions use (patternsE/existsChainsE find
-    * it, predCol resolves it), so the 100 TB cost stays one
+    * columns the predicate positions use (the tree walk finds it,
+    * predCol resolves it), so the 100 TB cost stays one
     * DISTINCT-probe left join per distinct pattern — never per-row
     * subquery execution. The bare pattern-as-list-of-paths value form
     * stays refused (its value is a path list, not a boolean). */
   private case class EPredVal(p: Pred) extends Expr
 
-  private sealed trait Pred
+  private sealed trait Pred extends Term
   private case class PCmp(op: String, l: Expr, r: Expr) extends Pred
   private case class PStr(op: String, l: Expr, r: Expr) extends Pred
   private case class PAnd(l: Pred, r: Pred) extends Pred
@@ -161,7 +164,6 @@ object CypherFrontend {
   /** `e IN list` — literal/param lists compile to `isin` (pushdown-
     * friendly), column-valued lists to `array_contains`. */
   private case class PIn(l: Expr, r: Expr) extends Pred
-  /** (v)-[:T1|T2]->() / ()<-[:T]-(v) existence predicate. */
   /** Single-hop pattern predicate `(v)-[:T]->(target)`. `targetVar`
     * is the target's variable name when one is written — if that
     * variable is BOUND in the outer frame the predicate correlates
@@ -228,10 +230,10 @@ object CypherFrontend {
   /** One `WITH items [WHERE pred]` pipeline stage: projects/aggregates
     * the rows so far, optionally filters the projected frame (the
     * post-aggregation WHERE = SQL HAVING), then later MATCH clauses
-    * join against the carried variables. */
-  /** WITH sub-clauses in openCypher order: projection → ORDER BY →
-    * SKIP/LIMIT → WHERE (the WHERE filters the paginated frame). Order
-    * keys are expressions over the projected columns. */
+    * join against the carried variables. Sub-clauses run in openCypher
+    * order: projection → ORDER BY → SKIP/LIMIT → WHERE (the WHERE
+    * filters the paginated frame); order keys are expressions over the
+    * projected columns. */
   private case class WithStage(distinct: Boolean, items: Seq[RetItem],
                                orderBy: Seq[(Expr, Boolean)],
                                skip: Option[Long], limit: Option[Long],
@@ -263,6 +265,105 @@ object CypherFrontend {
                            orderBy: Seq[OrderKey], skip: Option[Long],
                            limit: Option[Long],
                            star: Boolean = false)
+
+  // ---------------------------------------------------------- tree walk
+
+  /** `t` with `f` applied to each of its direct children — the one place
+    * the shape of [[Expr]] and [[Pred]] is spelled out. `f` must map an
+    * expression to an expression and a predicate to a predicate.
+    * Subquery terms ([[PPattern]], [[PExistsChain]], [[ECountSub]],
+    * [[ECountChain]], [[ECollect]]) are leaves: their chains and inner
+    * WHERE / RETURN compile in their own frame (`chainFrame`), not in the
+    * enclosing scope. */
+  private def mapChildren(t: Term)(f: Term => Term): Term = {
+    def e(x: Expr): Expr = f(x).asInstanceOf[Expr]
+    def p(x: Pred): Pred = f(x).asInstanceOf[Pred]
+    t match {
+      case EAgg(fn, a, d) => EAgg(fn, a.map(e), d)
+      case EList(xs) => EList(xs.map(e))
+      case ECase(op, ws, els) =>
+        ECase(op.map(e), ws.map { case (c, v) =>
+          (c.fold(x => Left(p(x)), x => Right(e(x))), e(v)) }, els.map(e))
+      case EArith(op, l, r) => EArith(op, e(l), e(r))
+      case EFn(fn, as) => EFn(fn, as.map(e))
+      case EIndex(b, ix) => EIndex(e(b), e(ix))
+      case ESlice(b, lo, hi) => ESlice(e(b), lo.map(e), hi.map(e))
+      case EMapLit(es) => EMapLit(es.map { case (k, v) => (k, e(v)) })
+      case EComp(v, l, w, m) => EComp(v, e(l), w.map(p), m.map(e))
+      case EReduce(acc, init, v, l, body) => EReduce(acc, e(init), v, e(l), e(body))
+      case EPredVal(x) => EPredVal(p(x))
+      case PCmp(op, l, r) => PCmp(op, e(l), e(r))
+      case PStr(op, l, r) => PStr(op, e(l), e(r))
+      case PIn(l, r) => PIn(e(l), e(r))
+      case PAnd(l, r) => PAnd(p(l), p(r))
+      case POr(l, r) => POr(p(l), p(r))
+      case PXor(l, r) => PXor(p(l), p(r))
+      case PNot(x) => PNot(p(x))
+      case PIsNull(x, neg) => PIsNull(e(x), neg)
+      case PBoolE(x) => PBoolE(e(x))
+      case PQuant(q, v, l, w) => PQuant(q, v, e(l), p(w))
+      case _: EVar | _: EProp | _: ELit | _: EParam | _: ELabels0 | _: EType |
+           _: EMapProj | _: ECountSub | _: ECountChain | _: ECollect |
+           _: PPattern | _: PHasLabel | _: PExistsChain => t
+    }
+  }
+
+  /** The direct children of `t`, in source order (read off
+    * [[mapChildren]], so the two cannot disagree). */
+  private def children(t: Term): Seq[Term] = {
+    val out = Seq.newBuilder[Term]
+    mapChildren(t) { c => out += c; c }
+    out.result()
+  }
+
+  /** `t` and every term under it, pre-order. */
+  private def subterms(t: Term): Seq[Term] = t +: children(t).flatMap(subterms)
+
+  /** `e` with every outermost expression that `pf` matches replaced. */
+  private def rewrite(e: Expr)(pf: PartialFunction[Expr, Expr]): Expr = {
+    def go(t: Term): Term = t match {
+      case x: Expr if pf.isDefinedAt(x) => pf(x)
+      case _ => mapChildren(t)(go)
+    }
+    go(e).asInstanceOf[Expr]
+  }
+
+  /** The variables a subquery term binds; None for every other term. */
+  private def subqueryVars(t: Term): Option[Set[String]] = {
+    def chainVars(cs: Seq[Chain]): Set[String] =
+      cs.flatMap(c => c.head.v.toSeq ++
+        c.hops.flatMap { case (r, n) => r.v.toSeq ++ n.v.toSeq }).toSet
+    t match {
+      case pp: PPattern => Some(Set(pp.v) ++ pp.targetVar)
+      case cs: ECountSub => Some(Set(cs.v))
+      case PExistsChain(cs, _) => Some(chainVars(cs))
+      case ECountChain(cs, _) => Some(chainVars(cs))
+      case ec: ECollect => Some(chainVars(ec.chains))
+      case _ => None
+    }
+  }
+
+  /** The subquery terms in a quantifier's body that bind its OWN lambda
+    * variable — the parts the higher-order `filter` cannot evaluate (a
+    * join per element), compiled by the explode route instead. */
+  private def lambdaBound(q: PQuant): Seq[Term] =
+    subterms(q.where).filter(t => subqueryVars(t).exists(_(q.v)))
+
+  /** The terms under `t` that pre-join as columns of the frame, in walk
+    * order: every subquery term, and every quantifier with a
+    * [[lambdaBound]] body (the explode route). The one filter: a subquery
+    * term on an enclosing quantifier's lambda variable is not the
+    * frame's — it belongs to that quantifier, or, under a nested
+    * quantifier, is refused by predCol. */
+  private def probeTerms(t: Term, lambdas: Set[String] = Set.empty): Seq[Term] = t match {
+    case q: PQuant =>
+      children(q).flatMap(probeTerms(_, lambdas + q.v)) ++
+        (if (lambdas.isEmpty && lambdaBound(q).nonEmpty) Seq(q) else Nil)
+    case _ => subqueryVars(t) match {
+      case Some(vs) => if ((vs & lambdas).isEmpty) Seq(t) else Nil
+      case None => children(t).flatMap(probeTerms(_, lambdas))
+    }
+  }
 
   // ---------------------------------------------------------- tokenizer
 
@@ -351,9 +452,9 @@ object CypherFrontend {
     def query(allowEmptyStages: Boolean = false): Query = {
       for (w <- Seq("MERGE", "SET", "DELETE", "DETACH", "CREATE", "REMOVE"))
         require(!toks.exists { case TKw(k) => k == w; case _ => false },
-          s"$w is a write clause: MERGE templates compile via " +
-            "graft.graph.CypherWrite.merge; other writes are the " +
-            "graft.graph.GraphStore sinks' job")
+          s"$w is a write clause: run it through graft.graph.GraphDb.query, " +
+            "which compiles MERGE, CREATE, SET, REMOVE and DELETE with " +
+            "graft.graph.CypherWrite.apply")
       def matchClause(optional: Boolean): MatchClause = {
         eatKw("MATCH")
         // `p = shortestPath((a)-[:T*lo..hi]->(b))` — one var-length hop
@@ -855,8 +956,7 @@ object CypherFrontend {
           && toks.lift(pos + 1).exists(_.text == "(") =>
         // percentileCont(x, p) / percentileDisc(x, p): the literal
         // fraction rides INSIDE the fn name (`percentilecont:0.5`) so
-        // every EAgg traversal (hasAgg, liftAggs, zeroRowExpr) stays
-        // single-argument — fn is opaque to all of them
+        // the tree walk sees one argument — fn is opaque to it
         pos += 1; eatSym("(")
         val arg = expr()
         eatSym(",")
@@ -1789,16 +1889,16 @@ object CypherFrontend {
           if (cl.optional) {
             // Cypher scoping: OPTIONAL MATCH's WHERE filters the
             // matches INSIDE the left join — unmatched rows stay
-            // null-padded instead of being dropped post-join. Pattern
-            // predicates / COUNT {} subqueries in that WHERE pre-join
-            // their flag/count columns onto the CLAUSE frame, so the
-            // whole predicate stays a Column inside the join condition
-            val pats = cl.where.toSeq.flatMap(collectPatterns)
+            // null-padded instead of being dropped post-join. Subquery
+            // terms in that WHERE pre-join their columns onto the
+            // CLAUSE frame, so the whole predicate stays a Column
+            // inside the join condition
+            val terms = cl.where.toSeq.flatMap(probeTerms(_))
             // a pattern predicate here compiles against the CLAUSE
             // frame; an endpoint bound only in the OUTER pipeline
             // would silently degrade to an existential — refuse and
             // point at the correlated form instead
-            pats.foreach { pp =>
+            terms.collect { case pp: PPattern => pp }.foreach { pp =>
               (Seq(pp.v) ++ pp.targetVar).foreach { r =>
                 require(!(df.columns.contains(ns(r, "uid")) &&
                     !cdf.columns.contains(ns(r, "uid"))),
@@ -1807,22 +1907,10 @@ object CypherFrontend {
                     "the OPTIONAL MATCH itself")
               }
             }
-            val cnts = cl.where.toSeq.flatMap(countSubsP)
-            val exs = cl.where.toSeq.flatMap(collectExistsChains)
-            val (cdf1, flags) = joinPatternFlags(cdf, pats)
-            val (cdf2, cmap) = joinCountSubs(cdf1, cnts)
-            val (cdf3, emap) = joinExistsChainFlags(cdf2, exs)
-            val extra = cl.where.map { p => (_: DataFrame) =>
-              patternFlags = flags; countSubCols = cmap; existsFlags = emap
-              try predCol(p)
-              finally {
-                patternFlags = Map.empty; countSubCols = Map.empty
-                existsFlags = Map.empty
-              }
+            df = withProbes(cdf, terms) { wide =>
+              joinOnShared(df, wide, shared, "left_outer",
+                cl.where.map(p => (_: DataFrame) => predCol(p)))
             }
-            df = joinOnShared(df, cdf3, shared, "left_outer", extra)
-            val scratch = (flags.values ++ cmap.values ++ emap.values).toSeq
-            if (scratch.nonEmpty) df = df.drop(scratch: _*)
           } else {
             df = joinOnShared(df, cdf, shared, "inner", None)
             cl.where.foreach(p => df = applyPred(df, p, negated = false))
@@ -1837,7 +1925,10 @@ object CypherFrontend {
           val ws =
             if (!ws0.star) ws0
             else ws0.copy(items = starItems(df) ++ ws0.items)
-          df = applyWith(ws, df, bound, corrCols)
+          // subquery terms among the WITH items pre-join their
+          // columns, same contract as the RETURN twin
+          df = withProbes(df, ws.items.flatMap(i => probeTerms(i.expr)))(
+            applyWith(ws, _, bound, corrCols))
           // carried pattern variables only — scalar aliases are plain
           // columns, never join keys for later MATCHes
           bound = ws.items.collect {
@@ -1941,10 +2032,13 @@ object CypherFrontend {
             inner.items.foreach { i =>
               val n = i.alias.getOrElse(i.text)
               if (newCols.contains(n))
-                scala.util.Try(exprCol(zeroRowExpr(i.expr))).foreach { zc =>
-                  df = df.withColumn(n, coalesce(col("`" + n + "`"),
-                    zc.cast(joinedSchema(n).dataType)))
-                }
+                df = try df.withColumn(n, coalesce(col("`" + n + "`"),
+                    exprCol(zeroRowExpr(i.expr)).cast(joinedSchema(n).dataType)))
+                  catch { case e: Exception =>
+                    throw new IllegalArgumentException(s"CALL { } item '$n' " +
+                      "has no value for an import binding with zero matches: " +
+                      e.getMessage, e)
+                  }
             }
           }
           scalarVars ++= newCols
@@ -1989,30 +2083,18 @@ object CypherFrontend {
             s"RETURN *: extra items shadow variables: ${clash.mkString(", ")}")
           q0.copy(items = expanded ++ q0.items)
         }
-      // COUNT {} subqueries in RETURN items / ORDER BY keys pre-join
-      // their per-uid count columns onto the frame (projection keeps
-      // only the named output, so the scratch columns never surface)
-      val retCnts = (q.items.map(_.expr) ++ q.orderBy.map(_.expr)).flatMap(countSubsE)
-      if (retCnts.nonEmpty) {
-        val (d, cmap) = joinCountSubs(df, retCnts)
-        df = d; countSubCols = countSubCols ++ cmap
-      }
-      // pattern predicates / EXISTS chains inside RETURN/ORDER BY
-      // expressions (CASE conditions etc.) pre-join flag columns the
-      // same way — the projection keeps only named outputs, so the
-      // scratch columns never surface
-      val retPats = (q.items.map(_.expr) ++ q.orderBy.map(_.expr)).flatMap(patternsE)
-      val retExs = (q.items.map(_.expr) ++ q.orderBy.map(_.expr)).flatMap(existsChainsE)
-      val retQs = (q.items.map(_.expr) ++ q.orderBy.map(_.expr)).flatMap(lambdaQuantsE)
-      if (retPats.nonEmpty || retExs.nonEmpty || retQs.nonEmpty) {
-        val (d1, flags) = joinPatternFlags(df, retPats)
-        val (d2, emap) = joinExistsChainFlags(d1, retExs)
-        patternFlags = patternFlags ++ flags
-        existsFlags = existsFlags ++ emap
-        val (d3, qmap) = joinLambdaQuantFlags(d2, retQs)
-        df = d3
-        quantFlags = quantFlags ++ qmap
-      }
+      // subquery terms in RETURN items / ORDER BY keys (CASE
+      // conditions, COUNT {} values etc.) pre-join their columns onto
+      // the frame; the projection keeps only the named outputs
+      withProbes(df, (q.items.map(_.expr) ++ q.orderBy.map(_.expr))
+        .flatMap(probeTerms(_)))(applyReturn(q, _, corrCols))
+    }
+
+    /** RETURN projection/aggregation, then ORDER BY / SKIP / LIMIT;
+      * inside a correlated CALL (`corrCols` non-empty) per import
+      * binding. */
+    private def applyReturn(q: Query, df: DataFrame,
+                            corrCols: Seq[String]): DataFrame = {
       val aggItems = q.items.filter(i => hasAgg(i.expr))
       val outName = (i: RetItem) => i.alias.getOrElse(i.text)
       if (corrCols.nonEmpty) {
@@ -2141,36 +2223,8 @@ object CypherFrontend {
       * non-aggregate items — grouping a pass-through variable groups
       * by ALL its columns (functionally dependent on uid, so one hash
       * aggregate, no re-join to recover properties). */
-    private def applyWith(ws: WithStage, in0: DataFrame, bound: Set[String],
-                          corrCols: Seq[String] = Nil): DataFrame = {
-      // COUNT {} subqueries among the WITH items pre-join their count
-      // columns, same contract as the RETURN twin
-      val in = {
-        val wCnts = ws.items.map(_.expr).flatMap(countSubsE)
-        val withCnts =
-          if (wCnts.isEmpty) in0
-          else {
-            val (d, cmap) = joinCountSubs(in0, wCnts)
-            countSubCols = countSubCols ++ cmap
-            d
-          }
-        // pattern predicates / EXISTS chains inside WITH item
-        // expressions (CASE conditions etc.): same flag pre-join as
-        // the RETURN twin
-        val wPats = ws.items.map(_.expr).flatMap(patternsE)
-        val wExs = ws.items.map(_.expr).flatMap(existsChainsE)
-        val wQs = ws.items.map(_.expr).flatMap(lambdaQuantsE)
-        if (wPats.isEmpty && wExs.isEmpty && wQs.isEmpty) withCnts
-        else {
-          val (d1, flags) = joinPatternFlags(withCnts, wPats)
-          val (d2, emap) = joinExistsChainFlags(d1, wExs)
-          patternFlags = patternFlags ++ flags
-          existsFlags = existsFlags ++ emap
-          val (d3, qmap) = joinLambdaQuantFlags(d2, wQs)
-          quantFlags = quantFlags ++ qmap
-          d3
-        }
-      }
+    private def applyWith(ws: WithStage, in: DataFrame, bound: Set[String],
+                          corrCols: Seq[String]): DataFrame = {
       val (varItems, exprItems) = ws.items.partition {
         i => i.expr.isInstanceOf[EVar] && i.alias.isEmpty
       }
@@ -2282,36 +2336,12 @@ object CypherFrontend {
       case other =>
         // pattern predicates nested under OR/XOR/NOT-of-OR positions
         // cannot be whole-frame semi/anti joins, and COUNT {}
-        // subqueries are values, not joins — materialize each as a
-        // flag / count column (one keyed left join per distinct
-        // pattern) and compile the boolean expression over them.
-        // Multi-hop EXISTS {} chains take the same route: each chain's
-        // DISTINCT shared-key probe becomes one boolean flag column.
-        val pats = collectPatterns(other)
-        val cnts = countSubsP(other)
-        val exs = collectExistsChains(other)
-        val lamQs = collectLambdaQuants(other)
-        if (pats.isEmpty && cnts.isEmpty && exs.isEmpty && lamQs.isEmpty) {
+        // subqueries are values, not joins — each subquery term becomes
+        // a pre-joined flag / count column (one keyed left join per
+        // distinct term) and the boolean expression compiles over them
+        withProbes(df, probeTerms(other)) { d =>
           val c = predCol(other)
-          df.filter(if (negated) !c else c)
-        } else {
-          val (d1, flags) = joinPatternFlags(df, pats)
-          val (d2, cmap) = joinCountSubs(d1, cnts)
-          val (d3, emap) = joinExistsChainFlags(d2, exs)
-          patternFlags = flags; countSubCols = cmap; existsFlags = emap
-          try {
-            // lambda-bound quantifiers explode AFTER the outer flag
-            // joins (their per-element bodies may read outer flags)
-            val (d4, qmap) = joinLambdaQuantFlags(d3, lamQs)
-            quantFlags = qmap
-            val c = predCol(other)
-            d4.filter(if (negated) !c else c)
-              .drop((flags.values ++ cmap.values ++ emap.values ++
-                qmap.values).toSeq: _*)
-          } finally {
-            patternFlags = Map.empty; countSubCols = Map.empty
-            existsFlags = Map.empty; quantFlags = Map.empty
-          }
+          d.filter(if (negated) !c else c)
         }
     }
 
@@ -2339,96 +2369,128 @@ object CypherFrontend {
       (cdf, shared)
     }
 
-    /** Multi-hop EXISTS {} chains anywhere inside a boolean tree. */
-    private def collectExistsChains(p: Pred): Seq[PExistsChain] = p match {
-      case pe: PExistsChain => Seq(pe)
-      case PAnd(l, r) => collectExistsChains(l) ++ collectExistsChains(r)
-      case POr(l, r) => collectExistsChains(l) ++ collectExistsChains(r)
-      case PXor(l, r) => collectExistsChains(l) ++ collectExistsChains(r)
-      case PNot(i) => collectExistsChains(i)
-      case PBoolE(e) => existsChainsE(e)
-      // same rule as collectPatterns: chains over OUTER variables
-      // inside a quantifier body flag-join; chains touching the
-      // lambda variable stay uncollected and refuse
-      case PQuant(_, qv, lst, w) =>
-        (existsChainsE(lst) ++ collectExistsChains(w)).filterNot { pe =>
-          pe.chains.exists(c => c.head.v.contains(qv) ||
-            c.hops.exists { case (r, n) =>
-              r.v.contains(qv) || n.v.contains(qv) })
+    /** Does the predicate CORRELATE variable sets `a` and `b` — a
+      * subquery term whose variables span both (a pattern predicate
+      * from one set to the other, an EXISTS {} chain touching both)?
+      * Gates the disconnected-pattern relaxation:
+      * `MATCH (w) MATCH (s) WHERE NOT (w)-[:R]->(s)` is the
+      * set-difference idiom (inherently pairwise, same as Neo4j), so
+      * the cross join is the semantics, not an accident. */
+    private def predLinks(p: Pred, a: Set[String], b: Set[String]): Boolean =
+      probeTerms(p).flatMap(subqueryVars).exists(vs =>
+        (vs & a).nonEmpty && (vs & b).nonEmpty)
+
+    /** The pre-joined column of each subquery term in scope — a boolean
+      * flag for a pattern, an EXISTS {} chain or an explode-routed
+      * quantifier, a match count for COUNT {}, a list for COLLECT {} —
+      * set by [[withProbes]] while its body is evaluated. */
+    private var probeCols: Map[Term, String] = Map.empty
+    /** Numbers scratch columns, so nested scopes never reuse a name. */
+    private var probeSeq = 0
+
+    /** The one pre-join: left-join one scratch column per distinct term
+      * of `terms` onto `df` ([[joinProbe]]), evaluate `body` over the
+      * widened frame with those columns in [[probeCols]], and drop them
+      * from its result. Explode-routed quantifiers join last — their
+      * per-element bodies may read the other columns. The map is saved
+      * and restored around the call, so a nested scope (an inner WHERE,
+      * a quantifier body) adds to the enclosing terms, never erases
+      * them. */
+    private def withProbes(df: DataFrame, terms: Seq[Term])(
+        body: DataFrame => DataFrame): DataFrame = {
+      val saved = probeCols
+      try {
+        var wide = df
+        val added = terms.distinct.sortBy(_.isInstanceOf[PQuant]).map { t =>
+          probeSeq += 1
+          val c = s"_probe$$$probeSeq"
+          wide = joinProbe(wide, t, c)
+          probeCols += t -> c
+          c
         }
-      case _ => Seq.empty
+        val out = body(wide)
+        val scratch = added.filter(out.columns.contains)
+        if (scratch.isEmpty) out else out.drop(scratch: _*)
+      } finally probeCols = saved
     }
 
-    /** Left-join one boolean flag column per distinct EXISTS {} chain
-      * (its DISTINCT shared-key probe — never the match multiset), so
-      * the WHERE tree can combine chains under OR/XOR/NOT freely. */
-    private def joinExistsChainFlags(df0: DataFrame, exs: Seq[PExistsChain])
-        : (DataFrame, Map[PExistsChain, String]) = {
-      var d = df0
-      val m = exs.distinct.zipWithIndex.map { case (pe, i) =>
-        val flag = s"_exflag$$$i"
+    /** Left-join subquery term `t`'s column `c` onto `d`: one keyed join
+      * against a probe of DISTINCT keys or one aggregate row per key,
+      * never the match multiset, so `d` keeps its rows. A pattern flags
+      * its endpoint probe; an EXISTS {} chain the DISTINCT shared-key
+      * tuples of its compiled frame (inner WHERE applied). COUNT {}
+      * counts the filtered edge set per endpoint (single hop, the
+      * degree table) or the compiled frame per shared-key tuple — the
+      * MATCHES per binding, walk multiplicity included, zero supplied
+      * by coalesce at the use site. COLLECT {} is one ordered window
+      * collect over the compiled frame, the empty list for no matches.
+      * A quantifier takes the explode route. */
+    private def joinProbe(d: DataFrame, t: Term, c: String): DataFrame = t match {
+      case pp: PPattern => joinPatternFlag(d, pp, c)
+      case pe: PExistsChain =>
+        // the DISTINCT shared-key tuples of the chain's compiled frame
         val (cdf, shared) = chainFrame(pe.chains, pe.where, d.columns, "EXISTS { }")
         val probe = cdf
-          .select(shared.map(v => col(ns(v, "uid")).as(s"$flag$$$v")): _*)
+          .select(shared.map(v => col(ns(v, "uid")).as(s"$c$$$v")): _*)
           .distinct()
-          .withColumn(flag, lit(true))
-        val cond = shared.map(v => d(ns(v, "uid")) === probe(s"$flag$$$v"))
+          .withColumn(c, lit(true))
+        val cond = shared.map(v => d(ns(v, "uid")) === probe(s"$c$$$v"))
           .reduce(_ && _)
-        d = d.join(probe, cond, "left_outer")
-          .drop(shared.map(v => s"$flag$$$v"): _*)
-        pe -> flag
-      }.toMap
-      (d, m)
-    }
-
-    /** Raw pattern/chain collectors — [[collectPatterns]] /
-      * [[collectExistsChains]] WITHOUT the quantifier-body filtering.
-      * Used only to DETECT lambda-bound patterns, which route to the
-      * explode compilation ([[joinLambdaQuantFlags]]) instead of the
-      * old refusal. */
-    private def rawPatterns(p: Pred): Seq[PPattern] = p match {
-      case pp: PPattern => Seq(pp)
-      case PAnd(l, r) => rawPatterns(l) ++ rawPatterns(r)
-      case POr(l, r) => rawPatterns(l) ++ rawPatterns(r)
-      case PXor(l, r) => rawPatterns(l) ++ rawPatterns(r)
-      case PNot(i) => rawPatterns(i)
-      case PBoolE(e) => patternsE(e)
-      case PQuant(_, _, _, w) => rawPatterns(w)
-      case _ => Seq.empty
-    }
-    private def rawChains(p: Pred): Seq[PExistsChain] = p match {
-      case pe: PExistsChain => Seq(pe)
-      case PAnd(l, r) => rawChains(l) ++ rawChains(r)
-      case POr(l, r) => rawChains(l) ++ rawChains(r)
-      case PXor(l, r) => rawChains(l) ++ rawChains(r)
-      case PNot(i) => rawChains(i)
-      case PBoolE(e) => existsChainsE(e)
-      case PQuant(_, _, _, w) => rawChains(w)
-      case _ => Seq.empty
-    }
-    private def chainTouches(pe: PExistsChain, qv: String): Boolean =
-      pe.chains.exists(c => c.head.v.contains(qv) ||
-        c.hops.exists { case (r, n) => r.v.contains(qv) || n.v.contains(qv) })
-    /** The quantifier body's patterns / EXISTS chains that bind its
-      * OWN lambda variable — the parts the HOF `filter` route cannot
-      * evaluate (a join per element). */
-    private def lambdaBound(q: PQuant): (Seq[PPattern], Seq[PExistsChain]) =
-      (rawPatterns(q.where).filter(pp =>
-         pp.v == q.v || pp.targetVar.contains(q.v)),
-       rawChains(q.where).filter(chainTouches(_, q.v)))
-    /** Top-level quantifiers in this tree that need the explode route.
-      * Does not recurse into quantifier BODIES — a lambda-bound
-      * quantifier nested inside another quantifier keeps the loud
-      * refusal (its row scope is an inner element, not the frame). */
-    private def collectLambdaQuants(p: Pred): Seq[PQuant] = p match {
-      case q: PQuant =>
-        val (ps, cs) = lambdaBound(q)
-        if (ps.nonEmpty || cs.nonEmpty) Seq(q) else Seq.empty
-      case PAnd(l, r) => collectLambdaQuants(l) ++ collectLambdaQuants(r)
-      case POr(l, r) => collectLambdaQuants(l) ++ collectLambdaQuants(r)
-      case PXor(l, r) => collectLambdaQuants(l) ++ collectLambdaQuants(r)
-      case PNot(i) => collectLambdaQuants(i)
-      case _ => Seq.empty
+        d.join(probe, cond, "left_outer").drop(shared.map(v => s"$c$$$v"): _*)
+      case q: PQuant => joinLambdaQuantFlag(d, q, c)
+      case cs: ECountSub =>
+        val counts = patternProbe(cs.types, cs.forward, cs.targetLabel,
+            cs.undirected)
+          .groupBy(col("_probe").as(s"$c$$probe"))
+          .agg(count(lit(1)).as(c))
+        d.join(counts, d(ns(cs.v, "uid")) === counts(s"$c$$probe"),
+          "left_outer").drop(s"$c$$probe")
+      case cc: ECountChain =>
+        val (cdf, shared) =
+          chainFrame(cc.chains, cc.where, d.columns, "COUNT { }")
+        val counts = cdf
+          .groupBy(shared.map(v => col(ns(v, "uid")).as(s"$c$$$v")): _*)
+          .agg(count(lit(1)).as(c))
+        val cond = shared.map(v => d(ns(v, "uid")) === counts(s"$c$$$v"))
+          .reduce(_ && _)
+        d.join(counts, cond, "left_outer")
+          .drop(shared.map(v => s"$c$$$v"): _*)
+      case ec: ECollect =>
+        val (cdf, shared) =
+          chainFrame(ec.chains, ec.where, d.columns, "COLLECT { }")
+        // shared keys ride as `k$<var>`, apart from the sort (`s<j>`)
+        // and value (`v`) columns whatever the variables are named;
+        // the returned value rides as the FINAL sort key so tie
+        // order (and the no-ORDER-BY default) is deterministic
+        val sortPairs = ec.orderBy :+ (ec.ret, true)
+        val proj = cdf.select(
+          shared.map(v => col(ns(v, "uid")).as(s"$c$$k$$$v")) ++
+            sortPairs.zipWithIndex.map { case ((e2, _), j) =>
+              exprCol(e2).as(s"$c$$s$j") } :+
+            exprCol(ec.ret).as(s"$c$$v"): _*)
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(shared.map(v => col(s"$c$$k$$$v")): _*)
+          .orderBy(sortPairs.zipWithIndex.map { case ((_, asc), j) =>
+            if (asc) col(s"$c$$s$j").asc_nulls_last
+            else col(s"$c$$s$j").desc_nulls_first }: _*)
+          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
+            org.apache.spark.sql.expressions.Window.unboundedFollowing)
+        var lists = proj
+          .withColumn(c, collect_list(col(s"$c$$v")).over(w))
+          .select(shared.map(v => col(s"$c$$k$$$v")) :+ col(c): _*)
+          .dropDuplicates(shared.map(v => s"$c$$k$$$v"))
+        ec.limit.foreach(n =>
+          lists = lists.withColumn(c, slice(col(c), 1, n.toInt)))
+        val dt = lists.schema(c).dataType
+        val cond = shared.map(v => d(ns(v, "uid")) === lists(s"$c$$k$$$v"))
+          .reduce(_ && _)
+        // empty-list refill happens HERE, where the element type
+        // is known (the use site cannot type an empty array)
+        d.join(lists, cond, "left_outer")
+          .drop(shared.map(v => s"$c$$k$$$v"): _*)
+          .withColumn(c, coalesce(col("`" + c + "`"),
+            array().cast(dt)))
+      case other => sys.error(s"not a subquery term: $other")
     }
 
     /** Quantifier bodies that bind the LAMBDA variable inside a
@@ -2437,231 +2499,54 @@ object CypherFrontend {
       * element, so the list EXPLODES (rowid-keyed, all outer columns
       * carried), each element masquerades as a bound node variable
       * (its uid/label columns synthesized from the element value),
-      * the EXISTING flag-join machinery compiles the lambda-bound
-      * patterns/chains against it, the body evaluates per element
-      * over those flags, and the match count re-aggregates by rowid —
+      * [[withProbes]] pre-joins the [[lambdaBound]] terms against it,
+      * the body evaluates per element over those columns, and the match
+      * count re-aggregates by rowid —
       * the COLLECT {} machinery's shape. Scale: one explode + the
       * same DISTINCT probes outer patterns use + one keyed
       * count-aggregate; never per-row subqueries. */
-    private def joinLambdaQuantFlags(d0: DataFrame, qs: Seq[PQuant])
-        : (DataFrame, Map[PQuant, String]) = {
-      var d = d0
-      val m = qs.distinct.zipWithIndex.map { case (q, i) =>
-        val flag = s"_qntflag$$$i"
-        val rid = s"$flag$$rid"; val szC = s"$flag$$sz"
-        val elemC = s"$flag$$elem"; val cntC = s"$flag$$n"
-        d = d.withColumn(rid, monotonically_increasing_id())
-          .withColumn(szC, size(exprCol(q.list)))
-        var ex = d.select(col("*"), explode(exprCol(q.list)).as(elemC))
-        // the element's node identity: identity structs (collect(n),
-        // nodes(p)) expose a …$uid/label field; plain string lists ARE
-        // uid lists
-        val elemT = ex.schema.apply(elemC).dataType
-        def field(suffix: String): Option[Column] = elemT match {
-          case st: StructType =>
-            st.fieldNames.find(f => f == suffix || f.endsWith("$" + suffix))
-              .map(f => col(elemC).getField(f))
-          case _ if suffix == "uid" => Some(col(elemC))
-          case _ => None
-        }
-        val elemUid = field("uid").getOrElse(sys.error(
-          "a pattern predicate on a quantifier's lambda variable needs " +
-            "a list of nodes (collect(n)/nodes(p)) or of uid strings"))
-        ex = ex.withColumn(ns(q.v, "uid"), elemUid)
-        field("label").foreach(c => ex = ex.withColumn(ns(q.v, "label"), c))
-        val (lamPats, lamChains) = lambdaBound(q)
-        val (ex1, pFlags) = joinPatternFlags(ex, lamPats)
-        val (ex2, eFlags) = joinExistsChainFlags(ex1, lamChains)
-        // per-element body: the lambda variable resolves to the element
-        // value, lambda-bound patterns/chains to their fresh flags,
-        // outer flags/columns ride along from the carried frame
-        val savedP = patternFlags; val savedE = existsFlags
-        patternFlags = patternFlags ++ pFlags
-        existsFlags = existsFlags ++ eFlags
-        val bodyC =
-          try withLambda(q.v -> col(elemC))(predCol(q.where))
-          finally { patternFlags = savedP; existsFlags = savedE }
-        val counts = ex2.filter(bodyC)
-          .groupBy(rid).agg(count(lit(1)).as(cntC))
-        d = d.join(counts.select(col(rid), col(cntC)), Seq(rid), "left_outer")
-        val n = coalesce(col(cntC), lit(0L))
-        val bool = q.q match {
-          case "all" => n === col(szC).cast("long")
-          case "any" => n > 0L
-          case "none" => n === 0L
-          case "single" => n === 1L
-          case other => sys.error(s"unknown quantifier $other")
-        }
-        // null list → null quantifier value (Cypher's ternary logic)
-        d = d.withColumn(flag,
-            when(col(szC).isNull, lit(null).cast("boolean")).otherwise(bool))
-          .drop(rid, szC, cntC)
-        q -> flag
-      }.toMap
-      (d, m)
-    }
-
-    /** Pattern predicates anywhere inside a boolean tree (they cannot
-      * appear under quantifier lambdas — those bind list elements,
-      * not nodes). */
-    /** Does the predicate CORRELATE variable sets `a` and `b` — a
-      * pattern predicate whose endpoints span both, or an EXISTS {}
-      * chain touching both? Gates the disconnected-pattern relaxation:
-      * `MATCH (w) MATCH (s) WHERE NOT (w)-[:R]->(s)` is the
-      * set-difference idiom (inherently pairwise, same as Neo4j), so
-      * the cross join is the semantics, not an accident. */
-    private def predLinks(p: Pred, a: Set[String], b: Set[String]): Boolean = {
-      def chainVars(cs: Seq[Chain]): Set[String] =
-        cs.flatMap(c => c.head.v.toSeq ++
-          c.hops.flatMap { case (r, n) => r.v.toSeq ++ n.v.toSeq }).toSet
-      collectPatterns(p).exists(pp => pp.targetVar.exists(tv =>
-        (a(pp.v) && b(tv)) || (b(pp.v) && a(tv)))) ||
-      collectExistsChains(p).exists { pe =>
-        val vs = chainVars(pe.chains)
-        (vs & a).nonEmpty && (vs & b).nonEmpty
+    private def joinLambdaQuantFlag(d0: DataFrame, q: PQuant, flag: String): DataFrame = {
+      val rid = s"$flag$$rid"; val szC = s"$flag$$sz"
+      val elemC = s"$flag$$elem"; val cntC = s"$flag$$n"
+      val d = d0.withColumn(rid, monotonically_increasing_id())
+        .withColumn(szC, size(exprCol(q.list)))
+      var ex = d.select(col("*"), explode(exprCol(q.list)).as(elemC))
+      // the element's node identity: identity structs (collect(n),
+      // nodes(p)) expose a …$uid/label field; plain string lists ARE
+      // uid lists
+      val elemT = ex.schema.apply(elemC).dataType
+      def field(suffix: String): Option[Column] = elemT match {
+        case st: StructType =>
+          st.fieldNames.find(f => f == suffix || f.endsWith("$" + suffix))
+            .map(f => col(elemC).getField(f))
+        case _ if suffix == "uid" => Some(col(elemC))
+        case _ => None
       }
-    }
-
-    private def collectPatterns(p: Pred): Seq[PPattern] = p match {
-      case pp: PPattern => Seq(pp)
-      case PAnd(l, r) => collectPatterns(l) ++ collectPatterns(r)
-      case POr(l, r) => collectPatterns(l) ++ collectPatterns(r)
-      case PXor(l, r) => collectPatterns(l) ++ collectPatterns(r)
-      case PNot(i) => collectPatterns(i)
-      case PBoolE(e) => patternsE(e)
-      // a quantifier body's patterns ride the same flag columns as
-      // long as they bind OUTER node variables (a plain column
-      // reference resolves inside the higher-order lambda); a pattern
-      // on the lambda variable itself stays uncollected and refuses
-      case PQuant(_, qv, lst, w) =>
-        (patternsE(lst) ++ collectPatterns(w))
-          .filterNot(pp => pp.v == qv || pp.targetVar.contains(qv))
-      case _ => Seq.empty
-    }
-
-    /** COUNT {} subquery expressions (single-hop and chain forms)
-      * anywhere inside an expression / predicate tree. */
-    private def countSubsE(e: Expr): Seq[Expr] = e match {
-      case cs: ECountSub => Seq(cs)
-      case cc: ECountChain => Seq(cc)
-      case ec: ECollect => Seq(ec) // inner exprs are subquery-scoped
-      case EArith(_, l, r) => countSubsE(l) ++ countSubsE(r)
-      case EFn(_, as) => as.flatMap(countSubsE)
-      case EReduce(_, init, _, lst, body) =>
-        countSubsE(init) ++ countSubsE(lst) ++ countSubsE(body)
-      case EComp(_, lst, wh, mp) =>
-        countSubsE(lst) ++ wh.toSeq.flatMap(countSubsP) ++
-          mp.toSeq.flatMap(countSubsE)
-      case EAgg(_, a, _) => a.toSeq.flatMap(countSubsE)
-      case EIndex(b, ix) => countSubsE(b) ++ countSubsE(ix)
-      case ESlice(b, lo, hi) =>
-        countSubsE(b) ++ (lo.toSeq ++ hi.toSeq).flatMap(countSubsE)
-      case EMapLit(es) => es.flatMap(kv => countSubsE(kv._2))
-      case EList(items) => items.flatMap(countSubsE)
-      case ECase(op, whens, els) =>
-        op.toSeq.flatMap(countSubsE) ++ whens.flatMap { case (c, v) =>
-          (c match {
-            case Left(p) => countSubsP(p)
-            case Right(x) => countSubsE(x)
-          }) ++ countSubsE(v)
-        } ++ els.toSeq.flatMap(countSubsE)
-      case EPredVal(p) => countSubsP(p)
-      case _ => Seq.empty
-    }
-    /** Pattern predicates nested inside EXPRESSIONS (CASE conditions,
-      * comprehension filters) — the column-only positions that used to
-      * refuse; they pre-join flag columns exactly like WHERE trees.
-      * Quantifier lambdas are excluded (they bind list elements). */
-    private def patternsE(e: Expr): Seq[PPattern] = e match {
-      case EArith(_, l, r) => patternsE(l) ++ patternsE(r)
-      case EFn(_, as) => as.flatMap(patternsE)
-      case EAgg(_, a, _) => a.toSeq.flatMap(patternsE)
-      case EIndex(b, ix) => patternsE(b) ++ patternsE(ix)
-      case ESlice(b, lo, hi) =>
-        patternsE(b) ++ (lo.toSeq ++ hi.toSeq).flatMap(patternsE)
-      case EMapLit(es) => es.flatMap(kv => patternsE(kv._2))
-      case EList(items) => items.flatMap(patternsE)
-      case EReduce(_, init, _, lst, body) =>
-        patternsE(init) ++ patternsE(lst) ++ patternsE(body)
-      case EComp(_, lst, wh, mp) =>
-        patternsE(lst) ++ wh.toSeq.flatMap(collectPatterns) ++
-          mp.toSeq.flatMap(patternsE)
-      case ECase(op, whens, els) =>
-        op.toSeq.flatMap(patternsE) ++ whens.flatMap { case (c, v) =>
-          (c match {
-            case Left(p) => collectPatterns(p)
-            case Right(x) => patternsE(x)
-          }) ++ patternsE(v)
-        } ++ els.toSeq.flatMap(patternsE)
-      case EPredVal(p) => collectPatterns(p)
-      case _ => Seq.empty
-    }
-    /** Lambda-bound quantifiers nested inside expressions (CASE
-      * conditions, boolean values) — same traversal shape as
-      * [[patternsE]], feeding [[joinLambdaQuantFlags]] so
-      * `RETURN any(x IN list WHERE (x)-[:R]->(...)) AS flag` value
-      * positions compile instead of refusing. */
-    private def lambdaQuantsE(e: Expr): Seq[PQuant] = e match {
-      case EArith(_, l, r) => lambdaQuantsE(l) ++ lambdaQuantsE(r)
-      case EFn(_, as) => as.flatMap(lambdaQuantsE)
-      case EAgg(_, a, _) => a.toSeq.flatMap(lambdaQuantsE)
-      case EIndex(b, ix) => lambdaQuantsE(b) ++ lambdaQuantsE(ix)
-      case ESlice(b, lo, hi) =>
-        lambdaQuantsE(b) ++ (lo.toSeq ++ hi.toSeq).flatMap(lambdaQuantsE)
-      case EMapLit(es) => es.flatMap(kv => lambdaQuantsE(kv._2))
-      case EList(items) => items.flatMap(lambdaQuantsE)
-      case EReduce(_, init, _, lst, body) =>
-        lambdaQuantsE(init) ++ lambdaQuantsE(lst) ++ lambdaQuantsE(body)
-      case EComp(_, lst, wh, mp) =>
-        lambdaQuantsE(lst) ++ wh.toSeq.flatMap(collectLambdaQuants) ++
-          mp.toSeq.flatMap(lambdaQuantsE)
-      case ECase(op, whens, els) =>
-        op.toSeq.flatMap(lambdaQuantsE) ++ whens.flatMap { case (c, v) =>
-          (c match {
-            case Left(p) => collectLambdaQuants(p)
-            case Right(x) => lambdaQuantsE(x)
-          }) ++ lambdaQuantsE(v)
-        } ++ els.toSeq.flatMap(lambdaQuantsE)
-      case EPredVal(p) => collectLambdaQuants(p)
-      case _ => Seq.empty
-    }
-    /** Multi-hop EXISTS {} chains nested inside expressions. */
-    private def existsChainsE(e: Expr): Seq[PExistsChain] = e match {
-      case EArith(_, l, r) => existsChainsE(l) ++ existsChainsE(r)
-      case EFn(_, as) => as.flatMap(existsChainsE)
-      case EAgg(_, a, _) => a.toSeq.flatMap(existsChainsE)
-      case EIndex(b, ix) => existsChainsE(b) ++ existsChainsE(ix)
-      case ESlice(b, lo, hi) =>
-        existsChainsE(b) ++ (lo.toSeq ++ hi.toSeq).flatMap(existsChainsE)
-      case EMapLit(es) => es.flatMap(kv => existsChainsE(kv._2))
-      case EList(items) => items.flatMap(existsChainsE)
-      case EReduce(_, init, _, lst, body) =>
-        existsChainsE(init) ++ existsChainsE(lst) ++ existsChainsE(body)
-      case EComp(_, lst, wh, mp) =>
-        existsChainsE(lst) ++ wh.toSeq.flatMap(collectExistsChains) ++
-          mp.toSeq.flatMap(existsChainsE)
-      case ECase(op, whens, els) =>
-        op.toSeq.flatMap(existsChainsE) ++ whens.flatMap { case (c, v) =>
-          (c match {
-            case Left(p) => collectExistsChains(p)
-            case Right(x) => existsChainsE(x)
-          }) ++ existsChainsE(v)
-        } ++ els.toSeq.flatMap(existsChainsE)
-      case EPredVal(p) => collectExistsChains(p)
-      case _ => Seq.empty
-    }
-
-    private def countSubsP(p: Pred): Seq[Expr] = p match {
-      case PCmp(_, l, r) => countSubsE(l) ++ countSubsE(r)
-      case PStr(_, l, r) => countSubsE(l) ++ countSubsE(r)
-      case PIn(l, r) => countSubsE(l) ++ countSubsE(r)
-      case PIsNull(e, _) => countSubsE(e)
-      case PBoolE(e) => countSubsE(e)
-      case PAnd(l, r) => countSubsP(l) ++ countSubsP(r)
-      case POr(l, r) => countSubsP(l) ++ countSubsP(r)
-      case PXor(l, r) => countSubsP(l) ++ countSubsP(r)
-      case PNot(i) => countSubsP(i)
-      case _ => Seq.empty
+      val elemUid = field("uid").getOrElse(sys.error(
+        "a pattern predicate on a quantifier's lambda variable needs " +
+          "a list of nodes (collect(n)/nodes(p)) or of uid strings"))
+      ex = ex.withColumn(ns(q.v, "uid"), elemUid)
+      field("label").foreach(c => ex = ex.withColumn(ns(q.v, "label"), c))
+      // per-element body: the lambda variable resolves to the element
+      // value, lambda-bound terms to their fresh columns, outer
+      // columns ride along from the carried frame
+      val counts = withProbes(ex, lambdaBound(q)) { ex2 =>
+        ex2.filter(withLambda(q.v -> col(elemC))(predCol(q.where)))
+          .groupBy(rid).agg(count(lit(1)).as(cntC))
+      }
+      val n = coalesce(col(cntC), lit(0L))
+      val bool = q.q match {
+        case "all" => n === col(szC).cast("long")
+        case "any" => n > 0L
+        case "none" => n === 0L
+        case "single" => n === 1L
+        case other => sys.error(s"unknown quantifier $other")
+      }
+      // null list → null quantifier value (Cypher's ternary logic)
+      d.join(counts, Seq(rid), "left_outer")
+        .withColumn(flag,
+          when(col(szC).isNull, lit(null).cast("boolean")).otherwise(bool))
+        .drop(rid, szC, cntC)
     }
 
     /** The probe endpoints of one relationship pattern as a 1-column
@@ -2689,48 +2574,40 @@ object CypherFrontend {
       else oneDir(e, "dst_uid", "src_uid")
     }
 
-    /** Left-join one boolean flag column per distinct pattern onto
-      * `df0` (DISTINCT endpoint probes — broadcast-eligible sets,
-      * never the edge multiset); returns the widened frame and the
-      * pattern → flag-column map. */
-    private def joinPatternFlags(df0: DataFrame, pats: Seq[PPattern])
-        : (DataFrame, Map[PPattern, String]) = {
-      var d = df0
-      val m = pats.distinct.zipWithIndex.map { case (pp, i) =>
-        val flag = s"_patflag$$$i"
-        val vBound = d.columns.contains(ns(pp.v, "uid"))
-        val tBound = pp.targetVar.filter(tv => d.columns.contains(ns(tv, "uid")))
-        def oneKeyFlag(keyVar: String, flipped: Boolean): Unit = {
-          val probe = patternProbe(pp.types,
-              if (flipped) !pp.forward else pp.forward,
-              if (flipped) None else pp.targetLabel, pp.undirected)
-            .select(col("_probe").as(s"$flag$$probe")).distinct()
-            .withColumn(flag, lit(true))
-          var cond = d(ns(keyVar, "uid")) === probe(s"$flag$$probe")
-          // flipped probe: the BOUND endpoint's written label still
-          // binds (same Neo4j-parity rule as the semi/anti form)
-          if (flipped)
-            pp.targetLabel.foreach(l =>
-              cond = cond && d(ns(keyVar, "label")) === lit(l))
-          d = d.join(probe, cond, "left_outer").drop(s"$flag$$probe")
-        }
-        tBound match {
-          case Some(tv) if vBound => // both bound: 2-key pair flag
-            val pair = pairProbe(pp.types, pp.forward, pp.targetLabel,
-                pp.undirected)
-              .select(col("_src").as(s"$flag$$s"), col("_dst").as(s"$flag$$d"))
-              .distinct().withColumn(flag, lit(true))
-            d = d.join(pair, d(ns(pp.v, "uid")) === pair(s"$flag$$s") &&
-              d(ns(tv, "uid")) === pair(s"$flag$$d"), "left_outer")
-              .drop(s"$flag$$s", s"$flag$$d")
-          case Some(tv) => // target-only bound: flipped 1-key flag
-            oneKeyFlag(tv, flipped = true)
-          case None =>
-            oneKeyFlag(pp.v, flipped = false)
-        }
-        pp -> flag
-      }.toMap
-      (d, m)
+    /** A pattern predicate's flag column: its DISTINCT endpoint probe
+      * left-joined on the bound endpoint's uid (both endpoints bound:
+      * the DISTINCT pair probe on both uids). */
+    private def joinPatternFlag(d: DataFrame, pp: PPattern, flag: String): DataFrame = {
+      val vBound = d.columns.contains(ns(pp.v, "uid"))
+      val tBound = pp.targetVar.filter(tv => d.columns.contains(ns(tv, "uid")))
+      def oneKeyFlag(keyVar: String, flipped: Boolean): DataFrame = {
+        val probe = patternProbe(pp.types,
+            if (flipped) !pp.forward else pp.forward,
+            if (flipped) None else pp.targetLabel, pp.undirected)
+          .select(col("_probe").as(s"$flag$$probe")).distinct()
+          .withColumn(flag, lit(true))
+        var cond = d(ns(keyVar, "uid")) === probe(s"$flag$$probe")
+        // flipped probe: the BOUND endpoint's written label still
+        // binds (same Neo4j-parity rule as the semi/anti form)
+        if (flipped)
+          pp.targetLabel.foreach(l =>
+            cond = cond && d(ns(keyVar, "label")) === lit(l))
+        d.join(probe, cond, "left_outer").drop(s"$flag$$probe")
+      }
+      tBound match {
+        case Some(tv) if vBound => // both bound: 2-key pair flag
+          val pair = pairProbe(pp.types, pp.forward, pp.targetLabel,
+              pp.undirected)
+            .select(col("_src").as(s"$flag$$s"), col("_dst").as(s"$flag$$d"))
+            .distinct().withColumn(flag, lit(true))
+          d.join(pair, d(ns(pp.v, "uid")) === pair(s"$flag$$s") &&
+            d(ns(tv, "uid")) === pair(s"$flag$$d"), "left_outer")
+            .drop(s"$flag$$s", s"$flag$$d")
+        case Some(tv) => // target-only bound: flipped 1-key flag
+          oneKeyFlag(tv, flipped = true)
+        case None =>
+          oneKeyFlag(pp.v, flipped = false)
+      }
     }
 
     /** Distinct (source, target) uid pairs of the (type- and
@@ -2758,94 +2635,10 @@ object CypherFrontend {
       oriented.distinct()
     }
 
-    /** Left-join one per-binding match-count column per distinct
-      * COUNT {} subquery. Single-hop: one grouped count of the
-      * filtered edge set (the degree table) keyed on the variable's
-      * uid. Chain form: the compiled pattern frame (inner WHERE
-      * applied) grouped by every variable shared with the outer
-      * scope — the count of MATCHES per binding, walk multiplicity
-      * included, zero supplied by coalesce at the use site. */
-    private def joinCountSubs(df0: DataFrame, subs: Seq[Expr])
-        : (DataFrame, Map[Expr, String]) = {
-      var d = df0
-      val m = subs.distinct.zipWithIndex.map { case (sub, i) =>
-        val cname = s"_cntsub$$$i"
-        sub match {
-          case cs: ECountSub =>
-            val counts = patternProbe(cs.types, cs.forward, cs.targetLabel,
-                cs.undirected)
-              .groupBy(col("_probe").as(s"$cname$$probe"))
-              .agg(count(lit(1)).as(cname))
-            d = d.join(counts, d(ns(cs.v, "uid")) === counts(s"$cname$$probe"),
-              "left_outer").drop(s"$cname$$probe")
-          case cc: ECountChain =>
-            val (cdf, shared) =
-              chainFrame(cc.chains, cc.where, d.columns, "COUNT { }")
-            val counts = cdf
-              .groupBy(shared.map(v => col(ns(v, "uid")).as(s"$cname$$$v")): _*)
-              .agg(count(lit(1)).as(cname))
-            val cond = shared.map(v => d(ns(v, "uid")) === counts(s"$cname$$$v"))
-              .reduce(_ && _)
-            d = d.join(counts, cond, "left_outer")
-              .drop(shared.map(v => s"$cname$$$v"): _*)
-          case ec: ECollect =>
-            val (cdf, shared) =
-              chainFrame(ec.chains, ec.where, d.columns, "COLLECT { }")
-            // the returned value rides as the FINAL sort key so tie
-            // order (and the no-ORDER-BY default) is deterministic
-            val sortPairs = ec.orderBy :+ (ec.ret, true)
-            val proj = cdf.select(
-              shared.map(v => col(ns(v, "uid")).as(s"$cname$$$v")) ++
-                sortPairs.zipWithIndex.map { case ((e2, _), j) =>
-                  exprCol(e2).as(s"$cname$$s$j") } :+
-                exprCol(ec.ret).as(s"$cname$$v"): _*)
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy(shared.map(v => col(s"$cname$$$v")): _*)
-              .orderBy(sortPairs.zipWithIndex.map { case ((_, asc), j) =>
-                if (asc) col(s"$cname$$s$j").asc_nulls_last
-                else col(s"$cname$$s$j").desc_nulls_first }: _*)
-              .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-                org.apache.spark.sql.expressions.Window.unboundedFollowing)
-            var lists = proj
-              .withColumn(cname, collect_list(col(s"$cname$$v")).over(w))
-              .select(shared.map(v => col(s"$cname$$$v")) :+ col(cname): _*)
-              .dropDuplicates(shared.map(v => s"$cname$$$v"))
-            ec.limit.foreach(n =>
-              lists = lists.withColumn(cname, slice(col(cname), 1, n.toInt)))
-            val dt = lists.schema(cname).dataType
-            val cond = shared.map(v => d(ns(v, "uid")) === lists(s"$cname$$$v"))
-              .reduce(_ && _)
-            // empty-list refill happens HERE, where the element type
-            // is known (the use site cannot type an empty array)
-            d = d.join(lists, cond, "left_outer")
-              .drop(shared.map(v => s"$cname$$$v"): _*)
-              .withColumn(cname, coalesce(col("`" + cname + "`"),
-                array().cast(dt)))
-          case other => sys.error(s"not a COUNT subquery: $other")
-        }
-        sub -> cname
-      }.toMap
-      (d, m)
-    }
-
-    /** Flag columns for pattern predicates compiled in the current
-      * applyPred call (empty outside it). */
-    private var patternFlags: Map[PPattern, String] = Map.empty
-    /** Count columns for COUNT {} subqueries currently in scope. */
-    private var countSubCols: Map[Expr, String] = Map.empty
-    /** Flag columns for multi-hop EXISTS {} chains compiled in the
-      * current applyPred call (empty outside it). */
-    private var existsFlags: Map[PExistsChain, String] = Map.empty
-    /** Flag columns for explode-compiled lambda-bound quantifiers
-      * ([[joinLambdaQuantFlags]]; empty outside applyPred). */
-    private var quantFlags: Map[PQuant, String] = Map.empty
-
     private def predCol(p: Pred): Column = p match {
-      case pp: PPattern if patternFlags.contains(pp) =>
-        coalesce(col(patternFlags(pp)), lit(false))
-      case pe: PExistsChain if existsFlags.contains(pe) =>
-        coalesce(col(existsFlags(pe)), lit(false))
-      case q: PQuant if quantFlags.contains(q) => col(quantFlags(q))
+      case t @ (_: PPattern | _: PExistsChain) if probeCols.contains(t) =>
+        coalesce(col(probeCols(t)), lit(false))
+      case q: PQuant if probeCols.contains(q) => col(probeCols(q))
       case PCmp("=", l, r) => exprCol(l) === exprCol(r)
       case PCmp("<>", l, r) => exprCol(l) =!= exprCol(r)
       case PCmp("<", l, r) => exprCol(l) < exprCol(r)
@@ -2897,14 +2690,12 @@ object CypherFrontend {
           case "single" => matches === 1
           case other => sys.error(s"unknown quantifier $other")
         }
-      case PPattern(_, _, _, _, _, _) =>
-        sys.error("pattern predicate on a lambda variable compiles in " +
-          "WHERE and RETURN/WITH value positions (explode route); " +
-          "inside a NESTED quantifier lift it out of the inner lambda")
-      case PExistsChain(_, _) =>
-        sys.error("multi-hop EXISTS { } on a lambda variable compiles " +
-          "in WHERE and RETURN/WITH value positions (explode route); " +
-          "inside a NESTED quantifier lift it out of the inner lambda")
+      case _: PPattern | _: PExistsChain =>
+        sys.error("pattern predicates and EXISTS { } compile in WHERE and " +
+          "RETURN/WITH items, but not on the lambda variable of a " +
+          "quantifier nested inside another quantifier (lift the inner " +
+          "one out), nor in a WITH ORDER BY key, an UNWIND list or a " +
+          "COLLECT { } RETURN")
     }
 
     /** Best-effort STATIC type of an expression — drives Cypher's
@@ -2974,12 +2765,12 @@ object CypherFrontend {
           s"(internal: every shortestPath form should register a " +
           s"witness); project length($v)")
       case e @ (_: ECountSub | _: ECountChain) =>
-        countSubCols.get(e)
+        probeCols.get(e)
           .map(n => coalesce(col("`" + n + "`"), lit(0L)))
           .getOrElse(sys.error(
             "COUNT { } subqueries are supported in WHERE and RETURN/WITH items"))
       case e: ECollect => // empty-list refill applied at the join site
-        countSubCols.get(e).map(n => col("`" + n + "`"))
+        probeCols.get(e).map(n => col("`" + n + "`"))
           .getOrElse(sys.error(
             "COLLECT { } subqueries are supported in WHERE and RETURN/WITH items"))
       case EPredVal(p) =>
@@ -3244,102 +3035,26 @@ object CypherFrontend {
     }
 
     /** Does the predicate reference any WITH/UNWIND scalar alias?
-      * (Gates the correlated no-shared-variable MATCH join.) */
-    private def refsScalar(p: Pred): Boolean = {
-      def inE(e: Expr): Boolean = e match {
-        case EVar(v) => scalarVars(v)
-        case EArith(_, l, r) => inE(l) || inE(r)
-        case EFn(_, as) => as.exists(inE)
-        case EList(items) => items.exists(inE)
-        case EIndex(b, ix) => inE(b) || inE(ix)
-        case ESlice(b, lo, hi) =>
-          inE(b) || lo.exists(inE) || hi.exists(inE)
-        case EMapLit(es) => es.exists(kv => inE(kv._2))
-        // lambda-bound names shadow scalars; the over-approximation
-        // (not excluding them) only ever widens the correlated path
-        case EComp(_, lst, wh, mp) =>
-          inE(lst) || wh.exists(inP) || mp.exists(inE)
-        case EReduce(_, init, _, lst, body) =>
-          inE(init) || inE(lst) || inE(body)
-        case ECase(op, whens, els) =>
-          op.exists(inE) || els.exists(inE) ||
-            whens.exists { case (c, t) => c.fold(inP, inE) || inE(t) }
-        case EAgg(_, a, _) => a.exists(inE)
-        case _ => false
-      }
-      def inP(q: Pred): Boolean = q match {
-        case PCmp(_, l, r) => inE(l) || inE(r)
-        case PStr(_, l, r) => inE(l) || inE(r)
-        case PIn(l, r) => inE(l) || inE(r)
-        case PAnd(l, r) => inP(l) || inP(r)
-        case POr(l, r) => inP(l) || inP(r)
-        case PXor(l, r) => inP(l) || inP(r)
-        case PNot(i) => inP(i)
-        case PIsNull(e, _) => inE(e)
-        case PBoolE(e) => inE(e)
-        case _ => false // PPattern / PHasLabel / PQuant bind no scalars
-      }
-      inP(p)
-    }
-
-    private def isAgg(e: Expr): Boolean = e.isInstanceOf[EAgg]
+      * (Gates the correlated no-shared-variable MATCH join.) Lambda-bound
+      * names shadow scalars; the over-approximation (not excluding
+      * them) only ever widens the correlated path. */
+    private def refsScalar(p: Pred): Boolean =
+      subterms(p).exists { case EVar(v) => scalarVars(v); case _ => false }
 
     /** Does the expression contain an aggregate anywhere? (Cypher
       * allows aggregates inside arithmetic/functions/CASE in RETURN
       * and WITH: `count(*) * 2`, `sum(x) / count(*)`.) */
-    private def hasAgg(e: Expr): Boolean = e match {
-      case _: EAgg => true
-      case EArith(_, l, r) => hasAgg(l) || hasAgg(r)
-      case EFn(_, as) => as.exists(hasAgg)
-      case EList(xs) => xs.exists(hasAgg)
-      case EIndex(b, ix) => hasAgg(b) || hasAgg(ix)
-      case ESlice(b, lo, hi) => hasAgg(b) || lo.exists(hasAgg) || hi.exists(hasAgg)
-      case EMapLit(es) => es.exists(kv => hasAgg(kv._2))
-      case EComp(_, lst, wh, mp) =>
-        hasAgg(lst) || wh.exists(predHasAgg) || mp.exists(hasAgg)
-      case EReduce(_, init, _, lst, body) =>
-        hasAgg(init) || hasAgg(lst) || hasAgg(body)
-      case ECase(op, whens, els) =>
-        op.exists(hasAgg) || els.exists(hasAgg) ||
-          whens.exists { case (c, t) => hasAgg(t) || c.fold(predHasAgg, hasAgg) }
-      case _ => false
-    }
+    private def hasAgg(e: Expr): Boolean = subterms(e).exists(_.isInstanceOf[EAgg])
+
     /** `e` evaluated over ZERO input rows (Neo4j's empty-aggregation
       * results): count/sum → 0, collect → [], every other aggregate →
       * null; non-aggregate sub-terms are left intact so imported
       * scalars resolve in the outer scope. Used to refill zero-match
       * bindings after a correlated CALL{} left join. */
-    private def zeroRowExpr(e: Expr): Expr = e match {
-      case EAgg("count", _, _) => ELit(0L)
-      case EAgg("sum", _, _) => ELit(0L)
+    private def zeroRowExpr(e: Expr): Expr = rewrite(e) {
+      case EAgg("count" | "sum", _, _) => ELit(0L)
       case EAgg("collect", _, _) => EList(Nil)
-      case EAgg(_, _, _) => ELit(null)
-      case EArith(op, l, r) => EArith(op, zeroRowExpr(l), zeroRowExpr(r))
-      case EFn(f, as) => EFn(f, as.map(zeroRowExpr))
-      case EList(xs) => EList(xs.map(zeroRowExpr))
-      case EIndex(b, ix) => EIndex(zeroRowExpr(b), zeroRowExpr(ix))
-      case ESlice(b, lo, hi) =>
-        ESlice(zeroRowExpr(b), lo.map(zeroRowExpr), hi.map(zeroRowExpr))
-      case EMapLit(es) =>
-        EMapLit(es.map { case (k, v) => (k, zeroRowExpr(v)) })
-      case ECase(op, whens, els) =>
-        ECase(op.map(zeroRowExpr),
-          whens.map { case (c, t) => (c, zeroRowExpr(t)) },
-          els.map(zeroRowExpr))
-      case other => other
-    }
-
-    private def predHasAgg(p: Pred): Boolean = p match {
-      case PCmp(_, l, r) => hasAgg(l) || hasAgg(r)
-      case PStr(_, l, r) => hasAgg(l) || hasAgg(r)
-      case PIn(l, r) => hasAgg(l) || hasAgg(r)
-      case PAnd(l, r) => predHasAgg(l) || predHasAgg(r)
-      case POr(l, r) => predHasAgg(l) || predHasAgg(r)
-      case PXor(l, r) => predHasAgg(l) || predHasAgg(r)
-      case PNot(i) => predHasAgg(i)
-      case PIsNull(e, _) => hasAgg(e)
-      case PBoolE(e) => hasAgg(e)
-      case _ => false // PPattern / PHasLabel / PQuant carry no aggregates
+      case _: EAgg => ELit(null)
     }
 
     /** Lift every nested EAgg out of `e`: each distinct aggregate gets
@@ -3349,50 +3064,14 @@ object CypherFrontend {
       * as scalar vars, and projects the rewritten expression on top —
       * one hash aggregate plus one projection, never two passes. */
     private def liftAggs(e: Expr,
-                         acc: scala.collection.mutable.ArrayBuffer[(String, Expr)]): Expr = e match {
-      case a: EAgg =>
-        val tmp = acc.find(_._2 == a).map(_._1).getOrElse {
+                         acc: scala.collection.mutable.ArrayBuffer[(String, Expr)]): Expr =
+      rewrite(e) { case a: EAgg =>
+        EVar(acc.find(_._2 == a).map(_._1).getOrElse {
           val t = s"_agg${acc.size}$$tmp"
           acc += (t -> a)
           t
-        }
-        EVar(tmp)
-      case EArith(op, l, r) => EArith(op, liftAggs(l, acc), liftAggs(r, acc))
-      case EFn(fn, as) => EFn(fn, as.map(liftAggs(_, acc)))
-      case EList(xs) => EList(xs.map(liftAggs(_, acc)))
-      case EIndex(b, ix) => EIndex(liftAggs(b, acc), liftAggs(ix, acc))
-      case ESlice(b, lo, hi) =>
-        ESlice(liftAggs(b, acc), lo.map(liftAggs(_, acc)), hi.map(liftAggs(_, acc)))
-      case EMapLit(es) =>
-        EMapLit(es.map { case (k, v) => (k, liftAggs(v, acc)) })
-      case EComp(v, lst, wh, mp) =>
-        EComp(v, liftAggs(lst, acc), wh.map(liftPredAggs(_, acc)),
-          mp.map(liftAggs(_, acc)))
-      case EReduce(an, init, v, lst, body) =>
-        EReduce(an, liftAggs(init, acc), v, liftAggs(lst, acc),
-          liftAggs(body, acc))
-      case ECase(op, whens, els) =>
-        ECase(op.map(liftAggs(_, acc)),
-          whens.map { case (c, t) =>
-            (c.fold(p => Left(liftPredAggs(p, acc)), v => Right(liftAggs(v, acc))),
-              liftAggs(t, acc))
-          },
-          els.map(liftAggs(_, acc)))
-      case other => other
-    }
-    private def liftPredAggs(p: Pred,
-                             acc: scala.collection.mutable.ArrayBuffer[(String, Expr)]): Pred = p match {
-      case PCmp(op, l, r) => PCmp(op, liftAggs(l, acc), liftAggs(r, acc))
-      case PStr(op, l, r) => PStr(op, liftAggs(l, acc), liftAggs(r, acc))
-      case PIn(l, r) => PIn(liftAggs(l, acc), liftAggs(r, acc))
-      case PAnd(l, r) => PAnd(liftPredAggs(l, acc), liftPredAggs(r, acc))
-      case POr(l, r) => POr(liftPredAggs(l, acc), liftPredAggs(r, acc))
-      case PXor(l, r) => PXor(liftPredAggs(l, acc), liftPredAggs(r, acc))
-      case PNot(i) => PNot(liftPredAggs(i, acc))
-      case PIsNull(e2, n) => PIsNull(liftAggs(e2, acc), n)
-      case PBoolE(e2) => PBoolE(liftAggs(e2, acc))
-      case other => other
-    }
+        })
+      }
 
     private def aggCol(e: Expr): Column = e match {
       case EAgg("count", None, _) => count(lit(1))

@@ -423,7 +423,8 @@ object CypherWrite {
     else if (kws("CREATE")) create(template, params, graph, clock, propCols)
     else if (kws("DELETE")) delete(template, params, graph)
     else if (kws("SET") || kws("REMOVE")) update(template, params, graph, clock, propCols)
-    else sys.error("unsupported write statement: expected MERGE, SET, REMOVE, or DELETE")
+    else sys.error(
+      "unsupported write statement: expected MERGE, CREATE, SET, REMOVE, or DELETE")
   }
 
   /** `MATCH (v:Label {key: $p}) SET v.prop = <$x | datetime() | CASE

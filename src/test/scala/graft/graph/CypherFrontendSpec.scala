@@ -563,7 +563,7 @@ class CypherFrontendSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException] {
       run("MATCH (n) DETACH DELETE n")
     }
-    assert(e.getMessage.contains("GraphStore"))
+    assert(e.getMessage.contains("GraphDb.query"))
     intercept[IllegalArgumentException] {
       run("MERGE (c:Container {uid: 'x'}) RETURN c")
     }
@@ -1895,5 +1895,84 @@ class CypherFrontendSpec extends SparkSpec {
       "MATCH (n) RETURN percentileCont(size(n.name), $f) AS p",
       Map("f" -> 1.5)))
     assert(bad.getMessage.contains("out of [0,1]"))
+  }
+
+  test("exists(pattern) = true filters exactly like the bare pattern predicate") {
+    def names(where: String): Seq[String] =
+      run(s"MATCH (w:WasteItem) WHERE $where RETURN w.name AS n ORDER BY n")
+        .as[String].collect().toSeq
+    val bare = names("(w)-[:DISPOSED_IN]->()")
+    assert(bare === Seq("Asche", "Bauschutt", "Laub"))
+    assert(names("exists((w)-[:DISPOSED_IN]->()) = true") === bare)
+    assert(names("exists((w)-[:DISPOSED_IN]->()) = false") === Seq("Altlack"))
+  }
+
+  test("COUNT { } inside a quantifier counts each row's matches") {
+    // w1 has two disposal edges, w2 and w3 one, w4 none
+    val got = run(
+      """MATCH (w:WasteItem)
+        |WHERE all(k IN [1, 2] WHERE COUNT { (w)-[:DISPOSED_IN|DISPOSED_AT]->() } >= k)
+        |RETURN w.name AS n""".stripMargin).as[String].collect().toSeq
+    assert(got === Seq("Bauschutt"))
+    val one = run(
+      """MATCH (w:WasteItem)
+        |WHERE any(k IN [1] WHERE COUNT { (w)-[:DISPOSED_IN|DISPOSED_AT]->() } = k)
+        |RETURN w.name AS n ORDER BY n""".stripMargin).as[String].collect().toSeq
+    assert(one === Seq("Asche", "Laub"))
+    // on the lambda variable itself, COUNT { } takes the explode route
+    // like a pattern predicate does: one count per list element
+    val lambda = run(
+      """MATCH (s:WasteStream)<-[:DISPOSED_IN]-(w:WasteItem)
+        |WITH s, collect(w) AS items
+        |WHERE any(x IN items WHERE COUNT { (x)-[:DISPOSED_AT]->() } >= 1)
+        |RETURN s.name AS n""".stripMargin).as[String].collect().toSeq
+    assert(lambda === Seq("Restmuell"))
+  }
+
+  test("OPTIONAL MATCH WHERE with a lambda-bound quantifier keeps the null-padded rows") {
+    // w1 is Restmuell's only item with a facility edge; Biomuell's w3
+    // has none, so its binding is rejected and padded, not dropped
+    val where = "WHERE any(x IN [w.uid] WHERE (x)-[:DISPOSED_AT]->())"
+    val opt = run(
+      s"""MATCH (s:WasteStream)
+         |OPTIONAL MATCH (s)<-[:DISPOSED_IN]-(w:WasteItem)
+         |$where
+         |RETURN s.name AS s, w.name AS w ORDER BY s""".stripMargin)
+      .as[(String, String)].collect().toSeq
+    assert(opt === Seq(("Biomuell", null), ("Restmuell", "Bauschutt")))
+    val plain = run(
+      s"""MATCH (s:WasteStream)<-[:DISPOSED_IN]-(w:WasteItem)
+         |$where
+         |RETURN s.name AS s, w.name AS w""".stripMargin)
+      .as[(String, String)].collect().toSeq
+    assert(plain === Seq(("Restmuell", "Bauschutt")))
+  }
+
+  test("correlated CALL: a list comprehension over collect() is [] for zero matches") {
+    val got = run(
+      """MATCH (s:WasteStream)
+        |CALL { WITH s
+        |  MATCH (s)<-[:DISPOSED_IN]-(w:WasteItem) WHERE w.name STARTS WITH 'B'
+        |  RETURN [x IN collect(w.name) | toUpper(x)] AS upper,
+        |         collect(w.name) AS names }
+        |RETURN s.name AS s, upper, names ORDER BY s""".stripMargin)
+      .as[(String, Seq[String], Seq[String])].collect().toSeq
+    assert(got === Seq(("Biomuell", Nil, Nil),
+      ("Restmuell", Seq("BAUSCHUTT"), Seq("Bauschutt"))))
+  }
+
+  test("COLLECT { } shares a variable whatever its name") {
+    // `v` and `s0` are also the suffixes of COLLECT's value and first
+    // sort-key scratch columns
+    for (v <- Seq("v", "s0")) {
+      val got = run(
+        s"""MATCH ($v:WasteStream)
+           |RETURN $v.name AS s,
+           |  COLLECT { MATCH (w)-[:DISPOSED_IN]->($v) RETURN w.name } AS ws
+           |ORDER BY s""".stripMargin)
+        .as[(String, Seq[String])].collect().toSeq
+      assert(got === Seq(("Biomuell", Seq("Laub")),
+        ("Restmuell", Seq("Asche", "Bauschutt"))))
+    }
   }
 }

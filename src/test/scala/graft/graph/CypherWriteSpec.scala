@@ -382,4 +382,12 @@ class CypherWriteSpec extends SparkSpec {
       "MATCH (a:X {name: $n}) DELETE a", facParams, emptyGraph, clock, propCols))
     assert(bad2.getMessage.contains("unexpected"))
   }
+
+  test("a write statement with none of the write verbs names all five") {
+    val e = intercept[RuntimeException](CypherWrite(
+      "MATCH (n:X {uid: $u}) DETACH n", Seq("x").toDF("u"), emptyGraph,
+      clock, propCols))
+    for (verb <- Seq("MERGE", "CREATE", "SET", "REMOVE", "DELETE"))
+      assert(e.getMessage.contains(verb), e.getMessage)
+  }
 }
