@@ -1934,6 +1934,12 @@ object CypherFrontend {
           bound = ws.items.collect {
             case RetItem(EVar(v), None, _) if !scalarVars(v) => v
           }.toSet
+          // ORDER BY keys see the projected frame; their subquery
+          // terms pre-join onto it like the items' did
+          val orderTerms = ws.orderBy.flatMap(o => probeTerms(o._1))
+          def sortCols = ws.orderBy.map { case (e, asc) =>
+            if (asc) exprCol(e).asc_nulls_last else exprCol(e).desc_nulls_first
+          }
           if (corrCols.nonEmpty && (ws.skip.isDefined || ws.limit.isDefined)) {
             // per-row execution: an interior WITH ... SKIP/LIMIT inside
             // a correlated CALL paginates PER IMPORT BINDING, so it
@@ -1942,17 +1948,16 @@ object CypherFrontend {
             require(ws.orderBy.nonEmpty,
               "correlated CALL: WITH ... SKIP/LIMIT needs ORDER BY " +
                 "(per-binding pagination must be deterministic)")
-            val sortCols = ws.orderBy.map { case (e, asc) =>
-              if (asc) exprCol(e).asc_nulls_last else exprCol(e).desc_nulls_first
-            }
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy(corrCols.map(c => col("`" + c + "`")): _*)
-              .orderBy(sortCols: _*)
             val lo = ws.skip.getOrElse(0L)
-            df = df.withColumn("_rn$", row_number().over(w))
-              .filter(col("_rn$") > lit(lo) &&
-                ws.limit.fold(lit(true))(n => col("_rn$") <= lit(lo + n)))
-              .drop("_rn$")
+            df = withProbes(df, orderTerms) { d =>
+              val w = org.apache.spark.sql.expressions.Window
+                .partitionBy(corrCols.map(c => col("`" + c + "`")): _*)
+                .orderBy(sortCols: _*)
+              d.withColumn("_rn$", row_number().over(w))
+                .filter(col("_rn$") > lit(lo) &&
+                  ws.limit.fold(lit(true))(n => col("_rn$") <= lit(lo + n)))
+                .drop("_rn$")
+            }
             ws.where.foreach(p => df = applyPred(df, p, negated = false))
           } else {
           // WITH sub-clauses in openCypher order: ORDER BY, then
@@ -1961,9 +1966,7 @@ object CypherFrontend {
           // pattern predicates on carried node vars still compile to
           // semi/anti joins on their uid)
           if (ws.orderBy.nonEmpty)
-            df = df.orderBy(ws.orderBy.map { case (e, asc) =>
-              if (asc) exprCol(e).asc_nulls_last else exprCol(e).desc_nulls_first
-            }: _*)
+            df = withProbes(df, orderTerms)(_.orderBy(sortCols: _*))
           ws.skip.foreach(n => df = df.offset(n.toInt))
           ws.limit.foreach(n => df = df.limit(n.toInt))
           ws.where.foreach(p => df = applyPred(df, p, negated = false))
@@ -1976,7 +1979,8 @@ object CypherFrontend {
           df =
             if (df == null)
               nodes.sparkSession.range(1).select(explode(exprCol(e)).as(alias))
-            else df.withColumn(alias, explode(exprCol(e)))
+            else withProbes(df, probeTerms(e))(
+              _.withColumn(alias, explode(exprCol(e))))
           scalarVars += alias
         case SCall(inner, imports) if imports.nonEmpty =>
           // correlated subquery: CALL { WITH a, b ... }. The inner
@@ -2463,11 +2467,11 @@ object CypherFrontend {
         // the returned value rides as the FINAL sort key so tie
         // order (and the no-ORDER-BY default) is deterministic
         val sortPairs = ec.orderBy :+ (ec.ret, true)
-        val proj = cdf.select(
-          shared.map(v => col(ns(v, "uid")).as(s"$c$$k$$$v")) ++
+        val proj = withProbes(cdf, sortPairs.flatMap(o => probeTerms(o._1)))(
+          _.select(shared.map(v => col(ns(v, "uid")).as(s"$c$$k$$$v")) ++
             sortPairs.zipWithIndex.map { case ((e2, _), j) =>
               exprCol(e2).as(s"$c$$s$j") } :+
-            exprCol(ec.ret).as(s"$c$$v"): _*)
+            exprCol(ec.ret).as(s"$c$$v"): _*))
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(shared.map(v => col(s"$c$$k$$$v")): _*)
           .orderBy(sortPairs.zipWithIndex.map { case ((_, asc), j) =>
@@ -2691,11 +2695,7 @@ object CypherFrontend {
           case other => sys.error(s"unknown quantifier $other")
         }
       case _: PPattern | _: PExistsChain =>
-        sys.error("pattern predicates and EXISTS { } compile in WHERE and " +
-          "RETURN/WITH items, but not on the lambda variable of a " +
-          "quantifier nested inside another quantifier (lift the inner " +
-          "one out), nor in a WITH ORDER BY key, an UNWIND list or a " +
-          "COLLECT { } RETURN")
+        sys.error(s"pattern predicates and EXISTS { } $probedPositions")
     }
 
     /** Best-effort STATIC type of an expression — drives Cypher's
@@ -2747,6 +2747,13 @@ object CypherFrontend {
       case _ => None
     }
 
+    /** Where [[withProbes]] pre-joins subquery terms — named by each
+      * refusal of a term it did not reach. */
+    private val probedPositions = "compile in WHERE, RETURN/WITH items " +
+      "and ORDER BY keys, UNWIND lists and COLLECT { } RETURN/ORDER BY, but " +
+      "not on the lambda variable of a quantifier nested inside another " +
+      "quantifier (lift the inner one out)"
+
     private def exprCol(e: Expr): Column = e match {
       case EVar(v) if lambdaVars.contains(v) => lambdaVars(v)
       case EVar(v) if scalarVars(v) => col(v) // WITH-bound scalar alias
@@ -2768,11 +2775,11 @@ object CypherFrontend {
         probeCols.get(e)
           .map(n => coalesce(col("`" + n + "`"), lit(0L)))
           .getOrElse(sys.error(
-            "COUNT { } subqueries are supported in WHERE and RETURN/WITH items"))
+            s"COUNT { } subqueries $probedPositions"))
       case e: ECollect => // empty-list refill applied at the join site
         probeCols.get(e).map(n => col("`" + n + "`"))
           .getOrElse(sys.error(
-            "COLLECT { } subqueries are supported in WHERE and RETURN/WITH items"))
+            s"COLLECT { } subqueries $probedPositions"))
       case EPredVal(p) =>
         // a pattern/EXISTS value resolves through the flag columns the
         // enclosing projection pre-joined; the null refill keeps Neo4j

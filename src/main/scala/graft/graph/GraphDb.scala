@@ -59,10 +59,9 @@ final class GraphDb private (val spark: SparkSession,
       .filterNot(Set("label", "uid", "name", "created_at", "updated_at")).toSeq
 
   /** `query(cypher, params)` — the reference's single entry point.
-    * Reads return their result frame. A write statement (`MERGE`
-    * template, `MATCH...SET`, `MATCH...REMOVE`, `MATCH...[DETACH]
-    * DELETE`) with the
-    * reference's per-item params dict binds ONE row, applies, and
+    * Reads return their result frame. A write statement ([[merge]])
+    * with the reference's per-item params dict binds ONE row, an
+    * `UNWIND $batch AS row` template its list of dicts, applies, and
     * returns an empty frame (the driver returns `[]` for writes).
     * The two admin procedures `get_stats` issues verbatim
     * (`neo4j_db.py:128`, `CALL db.labels()` /
@@ -111,10 +110,9 @@ final class GraphDb private (val spark: SparkSession,
       // the cause (round-10 ADVICE)
       CypherWrite.unwindParam(cypher) match {
         case Some(p) =>
-          val batch = params.getOrElse(p, sys.error(
+          params.getOrElse(p, sys.error(
             s"UNWIND $$$p: no parameter '$p' supplied " +
-              s"(got: ${params.keys.toSeq.sorted.mkString(", ")})"))
-          batch match {
+              s"(got: ${params.keys.toSeq.sorted.mkString(", ")})")) match {
             case rows: Seq[_] if rows.isEmpty =>
               // Neo4j's UNWIND over an empty list is a zero-row no-op
               // — a driver loop's legitimate empty final batch
@@ -122,29 +120,36 @@ final class GraphDb private (val spark: SparkSession,
               require(params.size == 1,
                 s"UNWIND $$$p binds the whole batch; extra params not " +
                   s"supported: ${(params.keySet - p).toSeq.sorted.mkString(", ")}")
-              merge(cypher, oneRow(params))
+              // one row per dict, `_seq` = the list position (the driver
+              // loop's first-seen order)
+              val dicts = rows.map(_.asInstanceOf[Map[String, Any]])
+              val cols = dicts.flatMap(_.keys).distinct.sorted
+              merge(cypher, spark.createDataFrame(
+                java.util.Arrays.asList(dicts.zipWithIndex.map { case (d, i) =>
+                  Row.fromSeq((i + 1L) +: cols.map(c =>
+                    d.get(c).flatMap(Option(_)).map(_.toString).orNull))
+                }: _*),
+                StructType(StructField("_seq", LongType) +: cols.map(StructField(_, StringType)))))
             case other => sys.error(
               s"UNWIND $$$p needs a list-of-maps parameter, got " +
                 s"${other.getClass.getSimpleName}")
           }
         case None =>
-          params.values.toSeq match {
-            case Seq(_: Seq[_]) => sys.error(
-              "a list parameter on a write template needs the bulk " +
-                s"idiom: UNWIND $$${params.keys.head} AS row ...")
-            case _ => merge(cypher, oneRow(params))
-          }
+          params.collectFirst { case (k, _: Seq[_]) => k }.foreach(k => sys.error(
+            "a list parameter on a write template needs the bulk " +
+              s"idiom: UNWIND $$$k AS row ..."))
+          merge(cypher, oneRow(params))
       }
       spark.emptyDataFrame
     } else CypherFrontend.run(cypher, g.nodes, g.edges, params)
   }
 
   /** Set-oriented write: the whole params batch through one compiled
-    * template — one distributed job per statement. `MERGE` upserts
-    * (first-seen-wins in-batch dedup per the `_seq` column when
-    * present), `MATCH...SET`/`MATCH...REMOVE` batch property updates
-    * (last-write-wins; REMOVE nulls),
-    * `MATCH...[DETACH] DELETE` batch deletes. */
+    * template ([[CypherWrite.apply]]) — one distributed plan per
+    * statement. `MERGE` upserts (first-seen-wins in-batch dedup per the
+    * `_seq` column when present), `CREATE` appends (uid uniqueness
+    * checked), `SET` and `REMOVE` update properties (last-write-wins;
+    * REMOVE nulls), `[DETACH] DELETE` deletes. */
   def merge(template: String, params: DataFrame): Unit = synchronized {
     g = CypherWrite(template, params, g, clock(), propCols)
   }
@@ -157,11 +162,11 @@ final class GraphDb private (val spark: SparkSession,
     * Catalyst plan of a read query, as (optimized logical, physical)
     * strings — what a reference user pastes to see why a traversal is
     * slow. Nothing executes; write statements are rejected (Neo4j's
-    * EXPLAIN of a write also plans without applying, but this engine's
-    * write path compiles to sinks, not plans). */
+    * EXPLAIN of a write also plans without applying; here writes run
+    * through [[query]]). */
   def explain(cypher: String, params: Map[String, Any] = Map.empty): (String, String) = {
     require(!CypherWrite.isWrite(cypher),
-      "EXPLAIN covers read queries; writes compile to upsert sinks")
+      "EXPLAIN covers read queries; writes run through GraphDb.query")
     val df = CypherFrontend.run(cypher, g.nodes, g.edges, params)
     (df.queryExecution.optimizedPlan.toString,
       df.queryExecution.executedPlan.toString)
@@ -187,24 +192,6 @@ final class GraphDb private (val spark: SparkSession,
   private def oneRow(params: Map[String, Any]): DataFrame = {
     if (params.isEmpty)
       return spark.range(1).select(lit(1L).as("_seq"))
-    // the Neo4j bulk idiom `UNWIND $batch AS row`: a single param whose
-    // value is a list of dicts binds as a MULTI-row frame, `_seq` = the
-    // list position (the driver loop's first-seen order)
-    params.values.toSeq match {
-      case Seq(rows: Seq[_]) if rows.nonEmpty &&
-          rows.forall(_.isInstanceOf[Map[_, _]]) =>
-        val dicts = rows.map(_.asInstanceOf[Map[String, Any]])
-        val cols = dicts.flatMap(_.keys).distinct.sorted
-        val fields = StructType(StructField("_seq", LongType) +:
-          cols.map(c => StructField(c, StringType, nullable = true)))
-        val data = dicts.zipWithIndex.map { case (d, i) =>
-          Row.fromSeq((i + 1).toLong +: cols.map(c =>
-            d.get(c).flatMap(Option(_)).map(_.toString).orNull))
-        }
-        return spark.createDataFrame(
-          scala.jdk.CollectionConverters.SeqHasAsJava(data).asJava, fields)
-      case _ =>
-    }
     val keys = params.keys.toSeq.sorted
     val fields = keys.map { k =>
       val dt = params(k) match {

@@ -1975,4 +1975,41 @@ class CypherFrontendSpec extends SparkSpec {
         ("Restmuell", Seq("Asche", "Bauschutt"))))
     }
   }
+
+  test("subquery terms pre-join in a WITH ORDER BY key") {
+    // order by degree: Bauschutt has two outgoing edges, the rest one or none
+    val got = run(
+      """MATCH (w:WasteItem)
+        |WITH w ORDER BY COUNT { (w)-->() } DESC, w.name LIMIT 2
+        |RETURN w.name AS n""".stripMargin).as[String].collect().toSeq
+    assert(got === Seq("Bauschutt", "Asche"))
+    val flagged = run(
+      """MATCH (w:WasteItem)
+        |WITH w ORDER BY exists((w)-[:DISPOSED_AT]->()) DESC, w.name LIMIT 1
+        |RETURN w.name AS n""".stripMargin).as[String].collect().toSeq
+    assert(flagged === Seq("Bauschutt"))
+  }
+
+  test("subquery terms pre-join in an UNWIND list") {
+    val got = run(
+      """MATCH (s:WasteStream)
+        |UNWIND COLLECT { MATCH (w)-[:DISPOSED_IN]->(s) RETURN w.name } AS item
+        |RETURN s.name AS s, item ORDER BY s, item""".stripMargin)
+      .as[(String, String)].collect().toSeq
+    assert(got === Seq(("Biomuell", "Laub"), ("Restmuell", "Asche"),
+      ("Restmuell", "Bauschutt")))
+  }
+
+  test("subquery terms pre-join in a COLLECT { } RETURN and ORDER BY") {
+    val got = run(
+      """MATCH (s:WasteStream)
+        |RETURN s.name AS s,
+        |  COLLECT { MATCH (w)-[:DISPOSED_IN]->(s) RETURN COUNT { (w)-->() } } AS degrees,
+        |  COLLECT { MATCH (w)-[:DISPOSED_IN]->(s) RETURN w.name
+        |            ORDER BY COUNT { (w)-->() } DESC } AS byDegree
+        |ORDER BY s""".stripMargin)
+      .as[(String, Seq[Long], Seq[String])].collect().toSeq
+    assert(got === Seq(("Biomuell", Seq(1L), Seq("Laub")),
+      ("Restmuell", Seq(1L, 2L), Seq("Bauschutt", "Asche"))))
+  }
 }

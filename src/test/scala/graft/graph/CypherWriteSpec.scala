@@ -103,10 +103,10 @@ class CypherWriteSpec extends SparkSpec {
   private def runAll(g0: CypherWrite.Graph, clk: org.apache.spark.sql.Column): CypherWrite.Graph = {
     // the reference's statement order: facilities, items, then per-item
     // stream/facility targets — each template once, whole batch bound
-    val g1 = CypherWrite.merge(facilityTemplate, facParams, g0, clk, propCols)
-    val g2 = CypherWrite.merge(itemTemplate, itemParams, g1, clk, propCols)
-    val g3 = CypherWrite.merge(streamTemplate, streamParams, g2, clk, propCols)
-    val g4 = CypherWrite.merge(facilityEdgeTemplate, facilityEdgeParams, g3, clk, propCols)
+    val g1 = CypherWrite(facilityTemplate, facParams, g0, clk, propCols)
+    val g2 = CypherWrite(itemTemplate, itemParams, g1, clk, propCols)
+    val g3 = CypherWrite(streamTemplate, streamParams, g2, clk, propCols)
+    val g4 = CypherWrite(facilityEdgeTemplate, facilityEdgeParams, g3, clk, propCols)
     CypherWrite.Graph(g4.nodes.localCheckpoint(true), g4.edges.localCheckpoint(true))
   }
 
@@ -162,7 +162,7 @@ class CypherWriteSpec extends SparkSpec {
         |    f.address = CASE WHEN $address <> '' THEN $address ELSE f.address END,
         |    f.opening_hours = CASE WHEN $opening_hours <> '' THEN $opening_hours ELSE f.opening_hours END,
         |    f.updated_at = datetime()""".stripMargin
-    val g = CypherWrite.merge(t, params, emptyGraph, clock, propCols)
+    val g = CypherWrite(t, params, emptyGraph, clock, propCols)
     val row = g.nodes.select("name", "address", "opening_hours").as[(String, String, String)].head()
     assert(row === (("Hof Ost", "Parkweg 9", "Mo-Fr")))
   }
@@ -227,7 +227,7 @@ class CypherWriteSpec extends SparkSpec {
     assert(g2.edges.join(uids, g2.edges("dst_uid") === uids("uid"), "left_anti").count() === 0)
     // a node with no relationships CAN be plain-DELETEd: merge an
     // isolated one, delete it, counts return to where they were
-    val g3a = CypherWrite.merge(
+    val g3a = CypherWrite(
       """MERGE (f:Facility {uid: $uid})
         |ON CREATE SET f.name = $name, f.created_at = datetime()""".stripMargin,
       Seq(("u:tmp", "Temp Hof")).toDF("uid", "name"), g2, clock2, propCols)
@@ -294,7 +294,7 @@ class CypherWriteSpec extends SparkSpec {
     assert(e === ((Uid.uidOf("Altöl"), Uid.uidOf("Schadstoffmobil"),
       "DISPOSED_IN", "WasteItem", "WasteStream")))
     // MATCH-bound endpoints: unmatched params rows produce no edge
-    val g2 = CypherWrite.merge(facilityTemplate, facParams, g1, clock, propCols)
+    val g2 = CypherWrite(facilityTemplate, facParams, g1, clock, propCols)
     val edgeParams = Seq(
       ("Altöl", "Wertstoffhof Nord"),
       ("Gibt Es Nicht", "Wertstoffhof Nord")).toDF("item_name", "facility_name")
@@ -361,26 +361,82 @@ class CypherWriteSpec extends SparkSpec {
       """MERGE (f:Facility {uid: $uid})
         |ON CREATE SET f.name = $name, f.address = $address, f.created_at = datetime()
         |ON MATCH SET f.updated_at = datetime()""".stripMargin
-    val g1 = CypherWrite.merge(t, Seq(("u:1", "Hof", "Weg 1")).toDF("uid", "name", "address"),
+    val g1 = CypherWrite(t, Seq(("u:1", "Hof", "Weg 1")).toDF("uid", "name", "address"),
       emptyGraph, clock, propCols)
-    val g2 = CypherWrite.merge(t, Seq(("u:1", "Hof", "Weg 2")).toDF("uid", "name", "address"),
+    val g2 = CypherWrite(t, Seq(("u:1", "Hof", "Weg 2")).toDF("uid", "name", "address"),
       g1, clock2, propCols)
     // Neo4j would keep 'Weg 1'; the engine's law takes the non-empty incoming
     assert(g2.nodes.select("address").as[String].head() === "Weg 2")
     // …but an EMPTY incoming never clobbers (the shared non-empty-wins law)
-    val g3 = CypherWrite.merge(t, Seq(("u:1", "Hof", "")).toDF("uid", "name", "address"),
+    val g3 = CypherWrite(t, Seq(("u:1", "Hof", "")).toDF("uid", "name", "address"),
       g1, clock2, propCols)
     assert(g3.nodes.select("address").as[String].head() === "Weg 1")
   }
 
   test("unparseable write shapes fail with clear errors") {
-    val bad1 = intercept[RuntimeException](CypherWrite.merge(
+    val bad1 = intercept[RuntimeException](CypherWrite(
       "MERGE (f:Facility {uid: $uid}) ON MATCH SET f.x = f.y + 1",
       facParams, emptyGraph, clock, propCols))
     assert(bad1.getMessage.contains("SET value") || bad1.getMessage.contains("expected"))
-    val bad2 = intercept[RuntimeException](CypherWrite.merge(
-      "MATCH (a:X {name: $n}) DELETE a", facParams, emptyGraph, clock, propCols))
+    val bad2 = intercept[RuntimeException](CypherWrite(
+      "MATCH (a:X {name: $n}) DELETE a extra", facParams, emptyGraph, clock, propCols))
     assert(bad2.getMessage.contains("unexpected"))
+  }
+
+  test("edge MERGE ON CREATE SET takes only r.created_at = datetime()") {
+    val g = runAll(emptyGraph, clock)
+    val edgeParams = Seq(("Altpapier", "Wertstoffhof Nord"))
+      .toDF("item_name", "facility_name")
+    def edgeMerge(onCreate: String) = CypherWrite(
+      s"""MATCH (w:WasteItem {name: $$item_name})
+         |MATCH (f:Facility {name: $$facility_name})
+         |MERGE (w)-[r:DISPOSED_AT]->(f)
+         |ON CREATE SET $onCreate""".stripMargin,
+      edgeParams, g, clock2, propCols)
+    for ((set, prop) <- Seq("r.weight = datetime()" -> "r.weight",
+        "r.created_at = $item_name" -> "r.created_at")) {
+      val e = intercept[RuntimeException](edgeMerge(set))
+      assert(e.getMessage.contains(prop), e.getMessage)
+    }
+    // the accepted form: the edge forms, created_at = the upsert clock
+    val g2 = edgeMerge("r.created_at = datetime()")
+    assert(g2.edges.count() === g.edges.count() + 1)
+    assert(g2.edges.filter(col("created_at") === "2027-06-01 00:00:00")
+      .select("rel_type").as[String].collect().toSeq === Seq("DISPOSED_AT"))
+  }
+
+  test("clause order: MERGE resolves a MATCH endpoint against the PRE-statement snapshot") {
+    // on an empty graph the MATCH finds nothing, so Neo4j forms no edge;
+    // the node MERGE still runs (node clauses are not gated by MATCH)
+    val g = CypherWrite(
+      """MATCH (a:X {name: $p})
+        |MERGE (b:X {name: $p})
+        |MERGE (a)-[:R]->(b)""".stripMargin,
+      Seq("x").toDF("p"), emptyGraph, clock, propCols)
+    assert(g.nodes.select("label", "name").as[(String, String)].collect().toSeq ===
+      Seq(("X", "x")))
+    assert(g.edges.count() === 0)
+  }
+
+  test("clause order: a MATCH after an updating clause is refused") {
+    val e = intercept[IllegalArgumentException](CypherWrite(
+      """MERGE (a:X {name: $p})
+        |MATCH (b:X {name: $p})
+        |MERGE (a)-[:R]->(b)""".stripMargin,
+      Seq("x").toDF("p"), emptyGraph, clock, propCols))
+    assert(e.getMessage.contains("WITH is required between MERGE and MATCH"), e.getMessage)
+  }
+
+  test("clause order: SET updates a MERGE variable's node, and a MATCH variable's only if the snapshot held it") {
+    val g = CypherWrite(
+      """MATCH (a:Facility {name: $n})
+        |MERGE (b:Facility {name: $n})
+        |SET b.contact = $c
+        |SET a.address = $c""".stripMargin,
+      Seq(("Hof", "Weg 1")).toDF("n", "c"), emptyGraph, clock, propCols)
+    // the MATCH found nothing on the empty graph: only b's SET lands
+    assert(g.nodes.select("name", "contact", "address")
+      .as[(String, String, String)].collect().toSeq === Seq(("Hof", "Weg 1", null)))
   }
 
   test("a write statement with none of the write verbs names all five") {
