@@ -51,11 +51,12 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType,
   * with `AS` aliases, `count(*)` /
   * `count([DISTINCT] n)` / `min` / `max` / `sum` / `avg` / `collect`,
   * `labels(n)[0]`, `type(r)`, property access, `$param` substitution,
-  * `ORDER BY ... [ASC|DESC]` (including non-returned expressions,
-  * which sort pre-projection), `SKIP`, `LIMIT`. Write statements are
-  * not compiled here: [[GraphDb.query]] routes `MERGE`, `CREATE`,
-  * `SET`, `REMOVE` and `DELETE` through [[CypherWrite]] to the
-  * [[GraphStore]] upserts, and [[run]] rejects them with a pointer.
+  * `ORDER BY ... [ASC|DESC]`, `SKIP`, `LIMIT` (RETURN and WITH share
+  * one projection body and one ORDER BY rule, see [[Projection]]).
+  * Write statements are not compiled here: [[GraphDb.query]] routes
+  * `MERGE`, `CREATE`, `SET`, `REMOVE` and `DELETE` through
+  * [[CypherWrite]] to the [[GraphStore]] upserts, and [[run]] rejects
+  * them with a pointer.
   *
   * Node tables are `(label, uid, <props...>)`, edge tables
   * `(src_uid, rel_type, dst_uid, <props...>)` — the engine-wide graph
@@ -136,7 +137,7 @@ object CypherFrontend {
     * engine choice — Neo4j leaves tie order unspecified); with no
     * ORDER BY, ascending by value. */
   private case class ECollect(chains: Seq[Chain], where: Option[Pred],
-                              ret: Expr, orderBy: Seq[(Expr, Boolean)],
+                              ret: Expr, orderBy: Seq[OrderKey],
                               limit: Option[Long]) extends Expr
   /** A pattern predicate / EXISTS subquery used as a boolean VALUE —
     * `RETURN exists((a)-[:R]->(b))`, `EXISTS { }` in a CASE RESULT or
@@ -223,29 +224,46 @@ object CypherFrontend {
                                    * (non-shortest) path on the FIRST
                                    * chain; only `length(p)` projects. */
                                  named: Option[String] = None)
-  private case class RetItem(expr: Expr, alias: Option[String], text: String)
-  /** RETURN-level ORDER BY key: `ref` (the token text) matches output
-    * items/aliases; `expr` sorts pre-projection when it doesn't. */
+  private case class RetItem(expr: Expr, alias: Option[String], text: String) {
+    /** The output column name: the alias, else the item's token text. */
+    def name: String = alias.getOrElse(text)
+  }
+  /** ORDER BY key: `ref` is the key's token text, which names an output
+    * item by its text or alias; `expr` is the key as an expression. */
   private case class OrderKey(expr: Expr, ref: String, asc: Boolean)
-  /** One `WITH items [WHERE pred]` pipeline stage: projects/aggregates
-    * the rows so far, optionally filters the projected frame (the
-    * post-aggregation WHERE = SQL HAVING), then later MATCH clauses
-    * join against the carried variables. Sub-clauses run in openCypher
-    * order: projection → ORDER BY → SKIP/LIMIT → WHERE (the WHERE
-    * filters the paginated frame); order keys are expressions over the
-    * projected columns. */
-  private case class WithStage(distinct: Boolean, items: Seq[RetItem],
-                               orderBy: Seq[(Expr, Boolean)],
-                               skip: Option[Long], limit: Option[Long],
-                               where: Option[Pred],
-                               star: Boolean = false)
+  /** One projection body, the part RETURN and WITH share:
+    * `[DISTINCT] items|* [ORDER BY keys] [SKIP n] [LIMIT n]`.
+    *
+    * Sub-clauses run in openCypher order: items (implicit grouping by
+    * every non-aggregate item when any item aggregates, then DISTINCT),
+    * ORDER BY, SKIP, LIMIT; a WITH's WHERE filters the paged frame. WITH
+    * carries a bare variable through with all its columns; RETURN
+    * projects its value.
+    *
+    * The one ORDER BY rule: a key that names an output item, or reads
+    * only the stage's outputs (its aliases and carried variables),
+    * sorts the projected frame. Any other key reads a variable the
+    * stage drops, and sorts the frame before the projection on its
+    * pre-projection expression (an alias inside it stands for its
+    * item); that is allowed only when the stage neither aggregates nor
+    * is DISTINCT, which drop the rows it would read. The rule is the
+    * same for RETURN, WITH, a correlated CALL body and the UNION tail
+    * (a DISTINCT-like stage over the output names). SKIP/LIMIT page
+    * the whole frame, or, inside a correlated CALL, each import
+    * binding. */
+  private case class Projection(distinct: Boolean, items: Seq[RetItem],
+                                orderBy: Seq[OrderKey], skip: Option[Long],
+                                limit: Option[Long], star: Boolean = false)
   /** Reading clauses compose as a PIPELINE of stages (openCypher's
     * "query is a sequence of clauses, each feeding the next"): any
     * interleaving of MATCH groups, WITH projections, and UNWINDs,
     * terminated by one RETURN. */
   private sealed trait Stage
   private case class SMatch(cl: MatchClause) extends Stage
-  private case class SWith(ws: WithStage) extends Stage
+  /** `WITH projection [WHERE pred]`: the WHERE filters the projected,
+    * paged frame (SQL HAVING after an aggregation); later MATCH clauses
+    * join on the carried variables. */
+  private case class SWith(p: Projection, where: Option[Pred]) extends Stage
   private case class SUnwind(e: Expr, alias: String) extends Stage
   /** `CALL { <subquery> }` subquery stage. `imports` empty = the
     * UNCORRELATED form: compiled in its own scope; at the pipeline
@@ -260,11 +278,8 @@ object CypherFrontend {
     * form of per-row subquery execution (the Graph-RAG per-item
     * top-k retrieval idiom). */
   private case class SCall(inner: Query, imports: Seq[String] = Nil) extends Stage
-  private case class Query(stages: Seq[Stage],
-                           distinct: Boolean, items: Seq[RetItem],
-                           orderBy: Seq[OrderKey], skip: Option[Long],
-                           limit: Option[Long],
-                           star: Boolean = false)
+  /** The reading stages, then the final RETURN. */
+  private case class Query(stages: Seq[Stage], ret: Projection)
 
   // ---------------------------------------------------------- tree walk
 
@@ -351,19 +366,37 @@ object CypherFrontend {
 
   /** The terms under `t` that pre-join as columns of the frame, in walk
     * order: every subquery term, and every quantifier with a
-    * [[lambdaBound]] body (the explode route). The one filter: a subquery
-    * term on an enclosing quantifier's lambda variable is not the
-    * frame's — it belongs to that quantifier, or, under a nested
-    * quantifier, is refused by predCol. */
+    * [[lambdaBound]] body (the explode route). The one filter: a term
+    * that reads an enclosing lambda variable (a quantifier's, a list
+    * comprehension's, or reduce()'s accumulator or element) is not the
+    * frame's — it belongs to that quantifier, or is refused where it is
+    * compiled. */
   private def probeTerms(t: Term, lambdas: Set[String] = Set.empty): Seq[Term] = t match {
     case q: PQuant =>
       children(q).flatMap(probeTerms(_, lambdas + q.v)) ++
-        (if (lambdas.isEmpty && lambdaBound(q).nonEmpty) Seq(q) else Nil)
+        (if ((refs(q) & lambdas).isEmpty && lambdaBound(q).nonEmpty) Seq(q) else Nil)
+    case c: EComp =>
+      probeTerms(c.list, lambdas) ++
+        (c.where.toSeq ++ c.map).flatMap(probeTerms(_, lambdas + c.v))
+    case r: EReduce =>
+      Seq(r.init, r.list).flatMap(probeTerms(_, lambdas)) ++
+        probeTerms(r.body, lambdas + r.acc + r.v)
     case _ => subqueryVars(t) match {
       case Some(vs) => if ((vs & lambdas).isEmpty) Seq(t) else Nil
       case None => children(t).flatMap(probeTerms(_, lambdas))
     }
   }
+
+  /** The variable names `t` reads, subquery variables included. */
+  private def refs(t: Term): Set[String] = subterms(t).flatMap {
+    case EVar(v) => Seq(v)
+    case EProp(v, _) => Seq(v)
+    case ELabels0(v) => Seq(v)
+    case EType(v) => Seq(v)
+    case EMapProj(v, _) => Seq(v)
+    case PHasLabel(v, _) => Seq(v)
+    case x => subqueryVars(x).toSeq.flatten
+  }.toSet
 
   // ---------------------------------------------------------- tokenizer
 
@@ -510,27 +543,9 @@ object CypherFrontend {
           stages += SMatch(matchClause(opt))
         } else if (atKw("WITH")) {
           eatKw("WITH")
-          val wd = if (atKw("DISTINCT")) { eatKw("DISTINCT"); true } else false
-          val wi = Seq.newBuilder[RetItem]
-          var wstar = false
-          if (atSym("*")) { eatSym("*"); wstar = true } else wi += retItem()
-          while (atSym(",")) { eatSym(","); wi += retItem() }
-          val wo = Seq.newBuilder[(Expr, Boolean)]
-          if (atKw("ORDER")) {
-            eatKw("ORDER"); eatKw("BY")
-            def key(): (Expr, Boolean) = {
-              val e = expr()
-              if (atKw("DESC")) { eatKw("DESC"); (e, false) }
-              else { if (atKw("ASC")) eatKw("ASC"); (e, true) }
-            }
-            wo += key()
-            while (atSym(",")) { eatSym(","); wo += key() }
-          }
-          val wskip = if (atKw("SKIP")) { eatKw("SKIP"); Some(num()) } else None
-          val wlimit = if (atKw("LIMIT")) { eatKw("LIMIT"); Some(num()) } else None
-          val ww = if (atKw("WHERE")) { eatKw("WHERE"); Some(pred()) } else None
-          stages += SWith(WithStage(wd, wi.result(), wo.result(), wskip,
-            wlimit, ww, star = wstar))
+          val p = projection()
+          val w = if (atKw("WHERE")) { eatKw("WHERE"); Some(pred()) } else None
+          stages += SWith(p, w)
         } else if (atKw("UNWIND")) {
           eatKw("UNWIND")
           val e = expr()
@@ -561,19 +576,7 @@ object CypherFrontend {
         } else go = false
       }
       eatKw("RETURN")
-      val distinct = if (atKw("DISTINCT")) { eatKw("DISTINCT"); true } else false
-      val items = Seq.newBuilder[RetItem]
-      var star = false
-      if (atSym("*")) { eatSym("*"); star = true } else items += retItem()
-      while (atSym(",")) { eatSym(","); items += retItem() }
-      val order = Seq.newBuilder[OrderKey]
-      if (atKw("ORDER")) {
-        eatKw("ORDER"); eatKw("BY")
-        order += orderKey()
-        while (atSym(",")) { eatSym(","); order += orderKey() }
-      }
-      val skip = if (atKw("SKIP")) { eatKw("SKIP"); Some(num()) } else None
-      val limit = if (atKw("LIMIT")) { eatKw("LIMIT"); Some(num()) } else None
+      val ret = projection()
       // "}" ends a nested CALL { } subquery's frame
       require(pos == toks.length || atKw("UNION") || atSym("}"),
         s"trailing tokens from '${peek.map(_.text).getOrElse("")}'")
@@ -581,8 +584,7 @@ object CypherFrontend {
       // a correlated CALL body may be RETURN-only (the imports seed it)
       require(st.nonEmpty || allowEmptyStages,
         "query needs at least one reading clause before RETURN")
-      Query(st, distinct, items.result(), order.result(), skip, limit,
-        star = star)
+      Query(st, ret)
     }
 
     /** `query [UNION [ALL] query]*` — Cypher's top level. Mixing UNION
@@ -711,6 +713,30 @@ object CypherFrontend {
       (RelPat(v, types, forward = fwd || undirected, varLen,
         undirected = undirected, props = props), nodePat())
     }
+
+    /** The projection body after RETURN or WITH (see [[Projection]]). */
+    private def projection(): Projection = {
+      val distinct = if (atKw("DISTINCT")) { eatKw("DISTINCT"); true } else false
+      val star = atSym("*")
+      val items = Seq.newBuilder[RetItem]
+      if (star) eatSym("*") else items += retItem()
+      while (atSym(",")) { eatSym(","); items += retItem() }
+      val order = orderBy()
+      val skip = if (atKw("SKIP")) { eatKw("SKIP"); Some(num()) } else None
+      val limit = if (atKw("LIMIT")) { eatKw("LIMIT"); Some(num()) } else None
+      Projection(distinct, items.result(), order, skip, limit, star)
+    }
+
+    /** `[ORDER BY key [ASC|DESC], ...]`. */
+    private def orderBy(): Seq[OrderKey] =
+      if (!atKw("ORDER")) Nil
+      else {
+        eatKw("ORDER"); eatKw("BY")
+        val keys = Seq.newBuilder[OrderKey]
+        keys += orderKey()
+        while (atSym(",")) { eatSym(","); keys += orderKey() }
+        keys.result()
+      }
 
     private def retItem(): RetItem = {
       val p0 = pos
@@ -930,20 +956,10 @@ object CypherFrontend {
         val w = if (atKw("WHERE")) { eatKw("WHERE"); Some(pred()) } else None
         eatKw("RETURN")
         val ret = expr()
-        val ob = Seq.newBuilder[(Expr, Boolean)]
-        if (atKw("ORDER")) {
-          eatKw("ORDER"); eatKw("BY")
-          def key(): (Expr, Boolean) = {
-            val e = expr()
-            if (atKw("DESC")) { eatKw("DESC"); (e, false) }
-            else { if (atKw("ASC")) eatKw("ASC"); (e, true) }
-          }
-          ob += key()
-          while (atSym(",")) { eatSym(","); ob += key() }
-        }
+        val ob = orderBy()
         val lim = if (atKw("LIMIT")) { eatKw("LIMIT"); Some(num()) } else None
         eatSym("}")
-        ECollect(cs.result(), w, ret, ob.result(), lim)
+        ECollect(cs.result(), w, ret, ob, lim)
       case Some(TId(fn)) if Set("count", "sum", "min", "max", "avg", "collect",
           "stdev", "stdevp")(fn.toLowerCase)
           && toks.lift(pos + 1).exists(_.text == "(") =>
@@ -1373,34 +1389,35 @@ object CypherFrontend {
       df
     }
 
-    private def edgeSide(r: RelPat, rv: String): DataFrame = {
+    /** The edge set one hop of `r` draws from, with the names of its
+      * walk-orientation (from, to) columns: the type filter, the
+      * relationship property map ([[relPropsFilter]]) and, for
+      * `-[:T]-`, the symmetric closure. In that closure `src_uid` is the
+      * traversal ORIGIN (walk orientation, not storage orientation — the
+      * documented undirected divergence), and a self-loop's reversed
+      * copy is left out: an undirected loop is ONE match per hop, not
+      * two (Neo4j parity). Endpoint labels ride along when the edge
+      * frame carries them — startNode(r)/endNode(r) project them as the
+      * node's label — and swap with the orientation. */
+    private def hopEdges(r: RelPat): (DataFrame, String, String) = {
       var df = edges
       if (r.types.nonEmpty) df = df.filter(col("rel_type").isin(r.types: _*))
       df = relPropsFilter(df, r)
-      // endpoint labels ride along when the edge frame carries them —
-      // startNode(r)/endNode(r) project them as the node's label
       val labelCols =
         if (Seq("src_label", "dst_label").forall(edges.columns.contains))
           Seq("src_label", "dst_label")
         else Nil
       val cols = Seq("src_uid", "dst_uid", "rel_type") ++ labelCols ++ edgeProps
-      val base =
-        if (!r.undirected) df.select(cols.map(col): _*)
-        else
-          // `-[:T]-`: symmetric closure — each edge matches from both
-          // ends. The bound rel's namespaced src_uid is the traversal
-          // ORIGIN (walk orientation, not storage orientation — the
-          // documented undirected divergence). A self-loop is the same
-          // undirected match from either end, so its reversed copy is
-          // excluded (Neo4j matches an undirected loop once).
-          df.select(cols.map(col): _*).unionByName(
-            df.filter(col("src_uid") =!= col("dst_uid"))
-              .select((Seq(col("dst_uid").as("src_uid"),
-                col("src_uid").as("dst_uid"), col("rel_type")) ++
-                labelCols.map(c => // labels swap with the orientation
-                  col(if (c == "src_label") "dst_label" else "src_label").as(c)) ++
-                edgeProps.map(col)): _*))
-      base.select(cols.map(c => col(c).as(ns(rv, c))): _*)
+      val base = df.select(cols.map(col): _*)
+      val set =
+        if (!r.undirected) base
+        else base.unionByName(df.filter(col("src_uid") =!= col("dst_uid"))
+          .select((Seq(col("dst_uid").as("src_uid"),
+            col("src_uid").as("dst_uid"), col("rel_type")) ++
+            labelCols.map(c =>
+              col(if (c == "src_label") "dst_label" else "src_label").as(c)) ++
+            edgeProps.map(col)): _*))
+      if (r.forward) (set, "src_uid", "dst_uid") else (set, "dst_uid", "src_uid")
     }
 
     /** Compile one chain to a DataFrame of namespaced columns; returns
@@ -1450,21 +1467,9 @@ object CypherFrontend {
                 require(pathVar.isEmpty,
                   "length(p) over an unbounded `*` hop is not finite " +
                     "on cyclic graphs; bound the range (*1..k)")
-                var e = edges
-                if (rel.types.nonEmpty) e = e.filter(col("rel_type").isin(rel.types: _*))
-                e = relPropsFilter(e, rel) // per-hop property map
-                val (fromC, toC) =
-                  if (rel.forward) ("src_uid", "dst_uid") else ("dst_uid", "src_uid")
-                val base = e.select(col(fromC).as("src_uid"), col(toC).as("dst_uid"))
+                val (e, fromC, toC) = hopEdges(rel)
                 val reachEdges =
-                  // self-loops stay single-orientation: the reversed
-                  // copy is the same undirected edge (Neo4j matches a
-                  // loop once), and a duplicate level-1 row would
-                  // double-count closure pairs
-                  if (rel.undirected) base.unionByName(
-                    base.filter(col("src_uid") =!= col("dst_uid")).select(
-                      col("dst_uid").as("src_uid"), col("src_uid").as("dst_uid")))
-                  else base
+                  e.select(col(fromC).as("src_uid"), col(toC).as("dst_uid"))
                 // When the closure's STARTS join directly against the
                 // chain's head frame (first hop, lo <= 1 — the `lo > 1`
                 // form instead joins the closure on the exact-prefix's
@@ -1569,8 +1574,10 @@ object CypherFrontend {
             val rv = rel.v.getOrElse(freshVar())
             relVars += rv
             relOrder += rv
-            val (fromC, toC) = if (rel.forward) ("src_uid", "dst_uid") else ("dst_uid", "src_uid")
-            df = df.join(edgeSide(rel, rv), col(ns(cur, "uid")) === col(ns(rv, fromC)))
+            // the bound rel's columns keep the hop set's orientation
+            val (hop, fromC, toC) = hopEdges(rel)
+            df = df.join(hop.select(hop.columns.toSeq.map(c => col(c).as(ns(rv, c))): _*),
+              col(ns(cur, "uid")) === col(ns(rv, fromC)))
             val nv = nodePat.v.getOrElse(freshVar())
             nodeOrder += nv
             if (bound(nv)) { // cycle back to an already-bound variable
@@ -1657,16 +1664,9 @@ object CypherFrontend {
         pathStrCols += pv -> strCol
         return (df, Set(headVar, tailVar))
       }
-      var e = edges
-      if (rel.types.nonEmpty) e = e.filter(col("rel_type").isin(rel.types: _*))
-      e = relPropsFilter(e, rel) // per-hop property map
-      val (fromC, toC) = if (rel.forward) ("src_uid", "dst_uid") else ("dst_uid", "src_uid")
-      val e1dir = e.select(col(fromC).as(s"$pv$$from"), col(toC).as(s"$pv$$to"),
-        col("rel_type").as(s"$pv$$rt"))
-      val e1 = (if (rel.undirected) e1dir.unionByName(e1dir.select(
-        col(s"$pv$$to").as(s"$pv$$from"), col(s"$pv$$from").as(s"$pv$$to"),
-        col(s"$pv$$rt")))
-      else e1dir).distinct()
+      val (e, fromC, toC) = hopEdges(rel)
+      val e1 = e.select(col(fromC).as(s"$pv$$from"), col(toC).as(s"$pv$$to"),
+        col("rel_type").as(s"$pv$$rt")).distinct()
       val strCol = s"pathstr$$$pv"
       val reach =
         if (hi == Unbounded)
@@ -1744,10 +1744,7 @@ object CypherFrontend {
                          withLen: Boolean = false,
                          withHops: Boolean = false,
                          seedFrom: Option[DataFrame] = None): DataFrame = {
-      var e = edges
-      if (rel.types.nonEmpty) e = e.filter(col("rel_type").isin(rel.types: _*))
-      e = relPropsFilter(e, rel) // per-hop property map
-      val (fromC, toC) = if (rel.forward) ("src_uid", "dst_uid") else ("dst_uid", "src_uid")
+      val (e, fromC, toC) = hopEdges(rel)
       val from = s"$nsCol$$from"; val to = s"$nsCol$$to"
       val hops = s"$nsCol$$hops"; val mid = s"$nsCol$$mid"
       // `withHops`: a BOUND rel variable materializes the walk's hop
@@ -1760,12 +1757,7 @@ object CypherFrontend {
           array(struct(col(a).as("src"), col("rel_type"),
             col(b).as("dst"))).as(hops))
         else src.select(col(a).as(from), col(b).as(to))
-      val e1 =
-        // reversed half excludes self-loops: an undirected loop is ONE
-        // match per hop, not two (Neo4j parity)
-        if (rel.undirected) sel(fromC, toC, e).unionByName(
-          sel(toC, fromC, e.filter(col(fromC) =!= col(toC))))
-        else sel(fromC, toC, e)
+      val e1 = sel(fromC, toC, e)
       // each k-fold chain tags its constant depth when a named path
       // needs length(p); the column is a literal, so it costs nothing
       def tag(df: DataFrame, k: Int): DataFrame =
@@ -1823,8 +1815,10 @@ object CypherFrontend {
       var bound = seedBound
       // RETURN * / WITH * expansion: every NAMED pattern/relationship
       // variable in scope plus the live scalar aliases, name-sorted
-      // (deterministic; the driver compare is column-order-blind)
-      def starItems(frame: DataFrame): Seq[RetItem] = {
+      // (deterministic; the driver compare is column-order-blind), in
+      // front of the written items, which may not shadow them
+      def withStar(p: Projection): Projection = if (!p.star) p else {
+        require(df != null, "RETURN * / WITH * needs a reading clause")
         val pats = bound.toSeq.filterNot(_.startsWith("_anon"))
         // var-length rel bindings and named paths live OUTSIDE `bound`
         // (their state is materialized scratch columns, not a uid
@@ -1832,16 +1826,21 @@ object CypherFrontend {
         // matching Neo4j scope instead of silently narrowing; a final
         // RETURN of a path variable refuses loudly (exprCol).
         val hops = varLenHops.collect {
-          case (v, c) if frame.columns.contains(c) => v
+          case (v, c) if df.columns.contains(c) => v
         }.toSeq
         val paths = pathVars.collect {
-          case (v, c) if frame.columns.contains(c) => v
+          case (v, c) if df.columns.contains(c) => v
         }.toSeq
-        val scals = frame.columns
+        val scals = df.columns
           .filter(c => scalarVars(c) && !c.contains("$") && !c.startsWith("_"))
           .sorted.toSeq
-        ((pats ++ hops ++ paths).sorted ++ scals)
+        val expanded = ((pats ++ hops ++ paths).sorted ++ scals)
           .distinct.map(v => RetItem(EVar(v), None, v))
+        val clash = expanded.map(_.text).toSet intersect
+          p.items.map(_.name).toSet
+        require(clash.isEmpty,
+          s"RETURN * / WITH *: extra items shadow variables: ${clash.mkString(", ")}")
+        p.copy(items = expanded ++ p.items)
       }
       def applyClause(cl: MatchClause): Unit = {
         // a clause's comma chains join on shared vars (inner, one pattern)
@@ -1920,57 +1919,16 @@ object CypherFrontend {
       }
       q0.stages.foreach {
         case SMatch(cl) => applyClause(cl)
-        case SWith(ws0) =>
+        case SWith(p0, where) =>
           require(df != null, "WITH before any MATCH/UNWIND has no rows to project")
-          val ws =
-            if (!ws0.star) ws0
-            else ws0.copy(items = starItems(df) ++ ws0.items)
-          // subquery terms among the WITH items pre-join their
-          // columns, same contract as the RETURN twin
-          df = withProbes(df, ws.items.flatMap(i => probeTerms(i.expr)))(
-            applyWith(ws, _, bound, corrCols))
+          val p = withStar(p0)
+          df = project(p, df, bound, corrCols, carry = true)
           // carried pattern variables only — scalar aliases are plain
           // columns, never join keys for later MATCHes
-          bound = ws.items.collect {
+          bound = p.items.collect {
             case RetItem(EVar(v), None, _) if !scalarVars(v) => v
           }.toSet
-          // ORDER BY keys see the projected frame; their subquery
-          // terms pre-join onto it like the items' did
-          val orderTerms = ws.orderBy.flatMap(o => probeTerms(o._1))
-          def sortCols = ws.orderBy.map { case (e, asc) =>
-            if (asc) exprCol(e).asc_nulls_last else exprCol(e).desc_nulls_first
-          }
-          if (corrCols.nonEmpty && (ws.skip.isDefined || ws.limit.isDefined)) {
-            // per-row execution: an interior WITH ... SKIP/LIMIT inside
-            // a correlated CALL paginates PER IMPORT BINDING, so it
-            // compiles to the same row_number window as the finish
-            // stage, never a global limit
-            require(ws.orderBy.nonEmpty,
-              "correlated CALL: WITH ... SKIP/LIMIT needs ORDER BY " +
-                "(per-binding pagination must be deterministic)")
-            val lo = ws.skip.getOrElse(0L)
-            df = withProbes(df, orderTerms) { d =>
-              val w = org.apache.spark.sql.expressions.Window
-                .partitionBy(corrCols.map(c => col("`" + c + "`")): _*)
-                .orderBy(sortCols: _*)
-              d.withColumn("_rn$", row_number().over(w))
-                .filter(col("_rn$") > lit(lo) &&
-                  ws.limit.fold(lit(true))(n => col("_rn$") <= lit(lo + n)))
-                .drop("_rn$")
-            }
-            ws.where.foreach(p => df = applyPred(df, p, negated = false))
-          } else {
-          // WITH sub-clauses in openCypher order: ORDER BY, then
-          // SKIP/LIMIT (ORDER BY + LIMIT = one TakeOrdered top-N),
-          // then WHERE (HAVING semantics on the paginated frame;
-          // pattern predicates on carried node vars still compile to
-          // semi/anti joins on their uid)
-          if (ws.orderBy.nonEmpty)
-            df = withProbes(df, orderTerms)(_.orderBy(sortCols: _*))
-          ws.skip.foreach(n => df = df.offset(n.toInt))
-          ws.limit.foreach(n => df = df.limit(n.toInt))
-          ws.where.foreach(p => df = applyPred(df, p, negated = false))
-          }
+          where.foreach(w => df = applyPred(df, w, negated = false))
         case SUnwind(e, alias) =>
           require(!scalarVars(alias) && !bound(alias),
             s"UNWIND alias '$alias' is already bound")
@@ -2028,13 +1986,13 @@ object CypherFrontend {
           // imported scalars still resolve). Non-aggregate bodies
           // keep the inner join: zero subquery rows eliminates the
           // outer row (the openCypher CALL contract).
-          val aggOnly = inner.items.nonEmpty &&
-            inner.items.forall(i => hasAgg(i.expr))
+          val aggOnly = inner.ret.items.nonEmpty &&
+            inner.ret.items.forall(i => hasAgg(i.expr))
           df = df.join(idf, corr, if (aggOnly) "left_outer" else "inner")
           if (aggOnly) {
             val joinedSchema = df.schema
-            inner.items.foreach { i =>
-              val n = i.alias.getOrElse(i.text)
+            inner.ret.items.foreach { i =>
+              val n = i.name
               if (newCols.contains(n))
                 df = try df.withColumn(n, coalesce(col("`" + n + "`"),
                     exprCol(zeroRowExpr(i.expr)).cast(joinedSchema(n).dataType)))
@@ -2065,8 +2023,8 @@ object CypherFrontend {
           // result must NOT ship through the driver as a broadcast at
           // 100 TB: it crossJoins plainly and Catalyst picks the
           // strategy from its own size estimates.
-          val innerSmall = inner.limit.exists(_ <= 100000) ||
-            inner.items.forall(i => hasAgg(i.expr))
+          val innerSmall = inner.ret.limit.exists(_ <= 100000) ||
+            inner.ret.items.forall(i => hasAgg(i.expr))
           df =
             if (df == null) idf
             else if (innerSmall) df.crossJoin(broadcast(idf))
@@ -2074,219 +2032,100 @@ object CypherFrontend {
           scalarVars ++= idf.columns
       }
 
-      // RETURN *: expand to the in-scope variables now that every
-      // stage has run (the set is only known post-pipeline)
-      val q =
-        if (!q0.star) q0
-        else {
-          require(df != null, "RETURN * needs a reading clause")
-          val expanded = starItems(df)
-          val clash = expanded.map(_.text).toSet intersect
-            q0.items.map(i => i.alias.getOrElse(i.text)).toSet
-          require(clash.isEmpty,
-            s"RETURN *: extra items shadow variables: ${clash.mkString(", ")}")
-          q0.copy(items = expanded ++ q0.items)
-        }
-      // subquery terms in RETURN items / ORDER BY keys (CASE
-      // conditions, COUNT {} values etc.) pre-join their columns onto
-      // the frame; the projection keeps only the named outputs
-      withProbes(df, (q.items.map(_.expr) ++ q.orderBy.map(_.expr))
-        .flatMap(probeTerms(_)))(applyReturn(q, _, corrCols))
+      project(withStar(q0.ret), df, bound, corrCols, carry = false)
     }
 
-    /** RETURN projection/aggregation, then ORDER BY / SKIP / LIMIT;
-      * inside a correlated CALL (`corrCols` non-empty) per import
-      * binding. */
-    private def applyReturn(q: Query, df: DataFrame,
-                            corrCols: Seq[String]): DataFrame = {
-      val aggItems = q.items.filter(i => hasAgg(i.expr))
-      val outName = (i: RetItem) => i.alias.getOrElse(i.text)
-      if (corrCols.nonEmpty) {
-        // ---- correlated-CALL finish: RETURN evaluates once per
-        // import binding — the correlation key survives into the
-        // output frame, aggregates group by it, and ORDER BY +
-        // SKIP/LIMIT compile to a per-key row_number window (one
-        // window shuffle on the key, not N per-row invocations)
-        val corr = corrCols.map(c => col("`" + c + "`"))
-        val isOut = (k: OrderKey) =>
-          q.items.exists(i => i.text == k.ref || i.alias.contains(k.ref))
-        var res =
-          if (aggItems.isEmpty) {
-            // non-returned ORDER BY keys ride as temp columns so the
-            // window can sort by them post-projection
-            val ordTemps = q.orderBy.zipWithIndex.collect {
-              case (k, ix) if !isOut(k) => s"_ord$$$ix" -> exprCol(k.expr)
-            }
-            val base = df.select(corr ++
-              q.items.map(i => exprCol(i.expr).as(outName(i))) ++
-              ordTemps.map { case (n, c) => c.as(n) }: _*)
-            // DISTINCT inside the subquery dedupes per invocation =
-            // per import binding — the key rides the distinct
-            if (q.distinct) base.distinct() else base
-          } else {
-            q.orderBy.foreach(k => require(isOut(k),
-              "correlated CALL: ORDER BY keys must be returned items " +
-                "when RETURN aggregates"))
-            val keys = q.items.filterNot(i => hasAgg(i.expr))
-            val keyCols = keys.map(i => exprCol(i.expr).as(outName(i)))
-            val lifted = scala.collection.mutable.ArrayBuffer[(String, Expr)]()
-            val rewritten = aggItems.map(i => i -> liftAggs(i.expr, lifted))
-            val aggCols = lifted.toSeq.map { case (tmp, agg) => aggCol(agg).as(tmp) }
-            val grouped = df.groupBy(corr ++ keyCols: _*)
-              .agg(aggCols.head, aggCols.tail: _*)
-            scalarVars ++= lifted.map(_._1)
-            val reMap = rewritten.toMap
-            grouped.select(corr ++ q.items.map { i =>
-              if (hasAgg(i.expr)) exprCol(reMap(i)).as(outName(i))
-              else col("`" + outName(i) + "`")
-            }: _*)
-          }
-        if (q.skip.isDefined || q.limit.isDefined) {
-          require(q.orderBy.nonEmpty,
-            "correlated CALL with SKIP/LIMIT needs ORDER BY " +
-              "(per-binding top-k must be deterministic)")
-          val sortCols = q.orderBy.zipWithIndex.map { case (k, ix) =>
-            val name = q.items.find(i => i.text == k.ref || i.alias.contains(k.ref))
-              .map(outName).getOrElse(s"_ord$$$ix")
-            if (k.asc) col("`" + name + "`").asc_nulls_last
-            else col("`" + name + "`").desc_nulls_first
-          }
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(corr: _*).orderBy(sortCols: _*)
-          val lo = q.skip.getOrElse(0L)
-          res = res.withColumn("_rn$", row_number().over(w))
-            .filter(col("_rn$") > lit(lo) &&
-              q.limit.fold(lit(true))(n => col("_rn$") <= lit(lo + n)))
-            .drop("_rn$")
-        }
-        return res.drop(res.columns.filter(_.startsWith("_ord$")).toIndexedSeq: _*)
-      }
-      val result =
-        if (aggItems.isEmpty) {
-          val cols = q.items.map(i => exprCol(i.expr).as(outName(i)))
-          val base = df.select(cols: _*)
-          if (q.distinct) base.distinct() else base
-        } else {
-          // Cypher implicit grouping: group by all non-aggregate items.
-          // Nested aggregates (count(*) * 2) lift to temp columns: one
-          // hash aggregate computes the temps, a projection on top
-          // applies the surrounding expression.
-          val keys = q.items.filterNot(i => hasAgg(i.expr))
-          val keyCols = keys.map(i => exprCol(i.expr).as(outName(i)))
-          val lifted = scala.collection.mutable.ArrayBuffer[(String, Expr)]()
-          val rewritten = aggItems.map(i => i -> liftAggs(i.expr, lifted))
-          val aggCols = lifted.toSeq.map { case (tmp, agg) => aggCol(agg).as(tmp) }
-          val grouped =
-            if (keys.isEmpty) df.agg(aggCols.head, aggCols.tail: _*)
-            else df.groupBy(keyCols: _*).agg(aggCols.head, aggCols.tail: _*)
-          scalarVars ++= lifted.map(_._1)
-          val reMap = rewritten.toMap
-          // restore RETURN item order (backticks: names may contain dots)
-          grouped.select(q.items.map { i =>
-            if (hasAgg(i.expr)) exprCol(reMap(i)).as(outName(i))
-            else col("`" + outName(i) + "`")
-          }: _*)
-        }
-      val allKeysOutput = q.orderBy.forall(k =>
-        q.items.exists(i => i.text == k.ref || i.alias.contains(k.ref)))
-      val ordered =
-        if (q.orderBy.isEmpty) result
-        else if (allKeysOutput || aggItems.nonEmpty || q.distinct) {
-          // sort the projected frame by output column (aggregation and
-          // DISTINCT destroy non-output columns, so those REQUIRE the
-          // key to be a returned item — same rule as Cypher)
-          require(allKeysOutput,
-            "ORDER BY keys must be returned items when RETURN aggregates or is DISTINCT")
-          result.orderBy(q.orderBy.map { k =>
-            val alias = q.items.find(i => i.text == k.ref || i.alias.contains(k.ref))
-              .map(outName).getOrElse(k.ref)
-            if (k.asc) col("`" + alias + "`").asc_nulls_last
-            else col("`" + alias + "`").desc_nulls_first
-          }: _*)
-        } else {
-          // some key is NOT a returned item (ORDER BY n.age with only
-          // n.name returned): sort the pre-projection frame, then
-          // re-project — Project over Sort preserves the global order
-          val keyCols = q.orderBy.map { k =>
-            val e = q.items.find(i => i.alias.contains(k.ref) || i.text == k.ref)
-              .map(_.expr).getOrElse(k.expr)
-            if (k.asc) exprCol(e).asc_nulls_last else exprCol(e).desc_nulls_first
-          }
-          df.orderBy(keyCols: _*)
-            .select(q.items.map(i => exprCol(i.expr).as(outName(i))): _*)
-        }
-      val skipped = q.skip.fold(ordered)(n => ordered.offset(n.toInt))
-      q.limit.fold(skipped)(n => skipped.limit(n.toInt))
-    }
-
-    /** WITH projection/aggregation: a bare pattern variable passes
-      * through with its full namespaced column family (so later
-      * clauses and RETURN still reach `v.prop`); every other item
-      * needs an `AS` alias and becomes a plain scalar column. Any
-      * aggregate item triggers Cypher's implicit grouping by the
-      * non-aggregate items — grouping a pass-through variable groups
-      * by ALL its columns (functionally dependent on uid, so one hash
-      * aggregate, no re-join to recover properties). */
-    private def applyWith(ws: WithStage, in: DataFrame, bound: Set[String],
-                          corrCols: Seq[String]): DataFrame = {
-      val (varItems, exprItems) = ws.items.partition {
-        i => i.expr.isInstanceOf[EVar] && i.alias.isEmpty
-      }
-      val passVars = varItems.map { i =>
-        val v = i.expr.asInstanceOf[EVar].name
-        require(bound(v) || scalarVars(v) || pathVars.contains(v) ||
-            varLenHops.contains(v) || varLenVars.contains(v),
-          s"WITH references unbound variable $v")
-        v
-      }
-      exprItems.foreach(i => require(i.alias.isDefined,
+    /** The one projection stage — RETURN, WITH, and the finish of a
+      * correlated CALL body — in the order and with the ORDER BY rule
+      * [[Projection]] states. `carry` (WITH) passes a bare variable
+      * through with its whole column family (so later clauses still
+      * reach `v.prop`); every other WITH item needs an `AS` alias and
+      * becomes a plain scalar column. Any aggregate item triggers
+      * Cypher's implicit grouping by the non-aggregate items — grouping
+      * a carried variable groups by ALL its columns (functionally
+      * dependent on uid, so one hash aggregate, no re-join to recover
+      * properties). Inside a correlated CALL (`corrCols` non-empty) the
+      * correlation key threads through every stage even when the
+      * projection drops the imported variable: aggregates group PER
+      * BINDING (the per-row execution contract), paging is per binding,
+      * and the join back finds its key. Subquery terms in items and
+      * keys pre-join their columns onto the frame they are read in. */
+    private def project(p: Projection, in: DataFrame, bound: Set[String],
+                        corrCols: Seq[String], carry: Boolean): DataFrame = {
+      val carried = p.items.filter(i => carry && i.alias.isEmpty && i.expr.isInstanceOf[EVar])
+      val carriedVars = carried.map(_.expr.asInstanceOf[EVar].name)
+      carriedVars.foreach(v => require(bound(v) || scalarVars(v) ||
+          pathVars.contains(v) || varLenHops.contains(v) || varLenVars.contains(v),
+        s"WITH references unbound variable $v"))
+      val exprItems = p.items.filterNot(carried.contains)
+      if (carry) exprItems.foreach(i => require(i.alias.isDefined,
         s"WITH item '${i.text}' needs an AS alias"))
       val aggItems = exprItems.filter(i => hasAgg(i.expr))
-      val keyExprItems = exprItems.filterNot(i => hasAgg(i.expr))
-      // a path variable's state is its pathlen column; a var-length
-      // rel binding's is its rellen/relhops pair — WITH passes those
-      // through so length(p)/size(r)/[h IN r | ...] resolve later
-      def scratchCols(v: String): Seq[String] =
-        (pathVars.get(v).toSeq ++ pathStrCols.get(v).toSeq ++
-          varLenVars.get(v).toSeq ++
-          varLenHops.get(v).toSeq).filter(in.columns.contains)
-      def varCols(v: String): Seq[Column] =
-        if (scalarVars(v)) Seq(col(v))
-        else if (scratchCols(v).nonEmpty) scratchCols(v).map(c => col("`" + c + "`"))
-        else in.columns.filter(_.startsWith(v + "$")).toSeq.map(col)
-      val keyNames = passVars.flatMap { v =>
-        if (scalarVars(v)) Seq(v)
-        else if (scratchCols(v).nonEmpty) scratchCols(v)
-        else in.columns.filter(_.startsWith(v + "$")).toSeq
-      } ++ keyExprItems.map(_.alias.get)
-      // inside a correlated CALL body, the correlation key threads
-      // through every interior WITH even when the user's projection
-      // drops the imported variable: aggregates then group PER
-      // BINDING (the per-row execution contract) and the finish stage
-      // still finds its join-back key. Columns already projected
-      // (the import var carried explicitly) are not duplicated.
-      val corrKeep = corrCols.filterNot(keyNames.contains)
-        .filter(in.columns.contains)
-      val corrKeepCols = corrKeep.map(c => col("`" + c + "`"))
-      val keyCols = passVars.flatMap(varCols) ++
-        keyExprItems.map(i => exprCol(i.expr).as(i.alias.get))
-      val out =
-        if (aggItems.nonEmpty) {
-          // nested aggregates lift to temps (see the RETURN twin)
-          val lifted = scala.collection.mutable.ArrayBuffer[(String, Expr)]()
-          val rewritten = aggItems.map(i => i -> liftAggs(i.expr, lifted))
-          val aggCols = lifted.toSeq.map { case (tmp, agg) => aggCol(agg).as(tmp) }
-          val grouped = in.groupBy(corrKeepCols ++ keyCols: _*)
-            .agg(aggCols.head, aggCols.tail: _*)
-          scalarVars ++= lifted.map(_._1)
-          grouped.select(corrKeepCols ++ keyNames.map(c => col("`" + c + "`")) ++
-            rewritten.map { case (i, re) => exprCol(re).as(i.alias.get) }: _*)
+      // WITH's frame is read by name, so it lays carried columns first
+      // and aggregates last; RETURN keeps the written order
+      val order =
+        if (carry) carried ++ exprItems.filterNot(aggItems.contains) ++ aggItems
+        else p.items
+      // a carried variable's columns: a scalar's own, a path's or a
+      // var-length rel's scratch columns (length(p), size(r) and
+      // [h IN r | ...] resolve through them), else its namespaced family
+      def names(i: RetItem): Seq[String] = i.expr match {
+        case EVar(v) if carried.contains(i) =>
+          val scratch = (pathVars.get(v).toSeq ++ pathStrCols.get(v) ++
+            varLenVars.get(v) ++ varLenHops.get(v)).filter(in.columns.contains)
+          if (scalarVars(v)) Seq(v)
+          else if (scratch.nonEmpty) scratch
+          else in.columns.filter(_.startsWith(v + "$")).toSeq
+        case _ => Seq(i.name)
+      }
+      def byName(i: RetItem): Seq[Column] = names(i).map(c => col("`" + c + "`"))
+      def itemCols(i: RetItem): Seq[Column] =
+        if (carried.contains(i)) byName(i) else Seq(exprCol(i.expr).as(i.name))
+      val corrKeep = corrCols.filterNot(order.flatMap(names).contains)
+        .filter(in.columns.contains).map(c => col("`" + c + "`"))
+      val proj = (d: DataFrame) =>
+        if (aggItems.isEmpty) {
+          val sel = d.select(corrKeep ++ order.flatMap(itemCols): _*)
+          if (p.distinct) sel.distinct() else sel
         } else {
-          val sel = in.select(corrKeepCols ++ keyCols: _*)
-          if (ws.distinct) sel.distinct() else sel
+          // nested aggregates (count(*) * 2) lift to temp columns: one
+          // hash aggregate computes the temps, a projection on top
+          // applies the surrounding expression
+          val keyCols = corrKeep ++ order.filterNot(aggItems.contains).flatMap(itemCols)
+          val lifted = scala.collection.mutable.ArrayBuffer[(String, Expr)]()
+          val rewritten = aggItems.map(i => i -> liftAggs(i.expr, lifted)).toMap
+          val aggCols = lifted.toSeq.map { case (tmp, agg) => aggCol(agg).as(tmp) }
+          val grouped = d.groupBy(keyCols: _*).agg(aggCols.head, aggCols.tail: _*)
+          scalarVars ++= lifted.map(_._1)
+          grouped.select(corrKeep ++ order.flatMap(i => rewritten.get(i)
+            .fold(byName(i))(re => Seq(exprCol(re).as(i.name)))): _*)
         }
-      scalarVars ++= exprItems.flatMap(_.alias)
-      out
+      // the ORDER BY rule: a key is read after the projection unless it
+      // reads a variable the projection drops
+      val aliases = exprItems.flatMap(i => i.alias.map(_ -> i.expr)).toMap
+      val dropped = bound ++ scalarVars ++ pathVars.keySet ++ varLenVars.keySet ++
+        varLenHops.keySet -- carriedVars -- aliases.keySet
+      def named(k: OrderKey) = exprItems.find(i => i.text == k.ref || i.alias.contains(k.ref))
+      val preSort = p.orderBy.exists(k => named(k).isEmpty && (refs(k.expr) & dropped).nonEmpty)
+      require(!preSort || (aggItems.isEmpty && !p.distinct),
+        "ORDER BY keys must be returned items when RETURN aggregates or is DISTINCT")
+      val itemTerms = p.items.flatMap(i => probeTerms(i.expr))
+      val projected =
+        if (!preSort) withProbes(in, itemTerms)(proj)
+        else {
+          val keys = p.orderBy.map(k => k.copy(expr = named(k).fold(rewrite(k.expr) {
+            case EVar(a) if aliases.contains(a) => aliases(a)
+          })(_.expr)))
+          withProbes(in, itemTerms ++ keys.flatMap(k => probeTerms(k.expr)))(d =>
+            page(d, keys.map(k => sortKey(exprCol(k.expr), k.asc)),
+              p.skip, p.limit, corrCols)(proj))
+        }
+      scalarVars ++= aliases.keys
+      if (preSort) projected
+      else withProbes(projected, p.orderBy.filter(named(_).isEmpty)
+          .flatMap(k => probeTerms(k.expr)))(d =>
+        page(d, p.orderBy.map(k => sortKey(named(k).fold(exprCol(k.expr))(
+          i => col("`" + i.name + "`")), k.asc)), p.skip, p.limit, corrCols)(identity))
     }
 
     /** WHERE compilation. Pattern predicates become semi/anti joins on
@@ -2466,17 +2305,16 @@ object CypherFrontend {
         // and value (`v`) columns whatever the variables are named;
         // the returned value rides as the FINAL sort key so tie
         // order (and the no-ORDER-BY default) is deterministic
-        val sortPairs = ec.orderBy :+ (ec.ret, true)
-        val proj = withProbes(cdf, sortPairs.flatMap(o => probeTerms(o._1)))(
+        val keys = ec.orderBy :+ OrderKey(ec.ret, "", asc = true)
+        val proj = withProbes(cdf, keys.flatMap(k => probeTerms(k.expr)))(
           _.select(shared.map(v => col(ns(v, "uid")).as(s"$c$$k$$$v")) ++
-            sortPairs.zipWithIndex.map { case ((e2, _), j) =>
-              exprCol(e2).as(s"$c$$s$j") } :+
+            keys.zipWithIndex.map { case (k, j) =>
+              exprCol(k.expr).as(s"$c$$s$j") } :+
             exprCol(ec.ret).as(s"$c$$v"): _*))
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(shared.map(v => col(s"$c$$k$$$v")): _*)
-          .orderBy(sortPairs.zipWithIndex.map { case ((_, asc), j) =>
-            if (asc) col(s"$c$$s$j").asc_nulls_last
-            else col(s"$c$$s$j").desc_nulls_first }: _*)
+          .orderBy(keys.zipWithIndex.map { case (k, j) =>
+            sortKey(col(s"$c$$s$j"), k.asc) }: _*)
           .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
             org.apache.spark.sql.expressions.Window.unboundedFollowing)
         var lists = proj
@@ -2751,8 +2589,9 @@ object CypherFrontend {
       * refusal of a term it did not reach. */
     private val probedPositions = "compile in WHERE, RETURN/WITH items " +
       "and ORDER BY keys, UNWIND lists and COLLECT { } RETURN/ORDER BY, but " +
-      "not on the lambda variable of a quantifier nested inside another " +
-      "quantifier (lift the inner one out)"
+      "not on the variable of a list comprehension or reduce(), nor on the " +
+      "lambda variable of a quantifier that reads the variable of an " +
+      "enclosing quantifier, list comprehension or reduce()"
 
     private def exprCol(e: Expr): Column = e match {
       case EVar(v) if lambdaVars.contains(v) => lambdaVars(v)
@@ -3163,16 +3002,10 @@ object CypherFrontend {
     // result, which is what every observed user query intends —
     // instead of silently paginating one branch. Strip it from the
     // last part and re-apply post-union.
-    val tailMods = parts0.last match {
-      case q if parts0.size > 1 &&
-          (q.orderBy.nonEmpty || q.skip.isDefined || q.limit.isDefined) =>
-        Some((q.orderBy, q.skip, q.limit))
-      case _ => None
-    }
+    val tail = parts0.last.ret
     val parts =
-      if (tailMods.isDefined)
-        parts0.init :+ parts0.last.copy(orderBy = Nil, skip = None, limit = None)
-      else parts0
+      if (parts0.size == 1) parts0
+      else parts0.init :+ parts0.last.copy(ret = tail.copy(orderBy = Nil, skip = None, limit = None))
     // one Compiler per part: var-binding state is per-subquery scope
     val frames = parts.map(q => new Compiler(nodes, edges, params).compile(q))
     frames.tail.foreach { f =>
@@ -3182,19 +3015,47 @@ object CypherFrontend {
         "UNION parts must return the same column names: " +
           s"${frames.head.columns.mkString(", ")} vs ${f.columns.mkString(", ")}")
     }
-    val u = frames.reduce(_ unionByName _)
-    val base = if (parts.size > 1 && !all) u.distinct() else u
-    tailMods.fold(base) { case (ob, sk, lim) =>
-      var r = base
-      if (ob.nonEmpty) r = r.orderBy(ob.map { k =>
-        require(r.columns.contains(k.ref),
+    if (parts.size == 1) frames.head
+    else {
+      val u = frames.reduce(_ unionByName _)
+      // the tail is a DISTINCT-like stage over the output names: its
+      // keys must name output columns
+      val keys = tail.orderBy.map { k =>
+        require(u.columns.contains(k.ref),
           s"ORDER BY after UNION must use output column names (got '${k.ref}')")
-        if (k.asc) col("`" + k.ref + "`").asc_nulls_last
-        else col("`" + k.ref + "`").desc_nulls_first
-      }: _*)
-      sk.foreach(n => r = r.offset(n.toInt))
-      lim.foreach(n => r = r.limit(n.toInt))
-      r
+        sortKey(col("`" + k.ref + "`"), k.asc)
+      }
+      page(if (all) u else u.distinct(), keys, tail.skip, tail.limit, Nil)(identity)
     }
   }
+
+  /** Cypher's null ordering on a sort key: null sorts as the LARGEST
+    * value, last ascending and first descending. */
+  private def sortKey(c: Column, asc: Boolean): Column =
+    if (asc) c.asc_nulls_last else c.desc_nulls_first
+
+  /** The one paging step: sort `df` by `keys`, apply `proj`, then SKIP
+    * and LIMIT (ORDER BY + LIMIT plans as one TakeOrderedAndProject
+    * top-N). Inside a correlated CALL (`corrCols` non-empty) SKIP/LIMIT
+    * page each import binding instead: one row_number window partitioned
+    * by the correlation key (one window shuffle on the key, not one
+    * query per binding), then `proj`. */
+  private def page(df: DataFrame, keys: Seq[Column], skip: Option[Long],
+                   limit: Option[Long], corrCols: Seq[String])(
+      proj: DataFrame => DataFrame): DataFrame =
+    if (corrCols.nonEmpty && (skip.isDefined || limit.isDefined)) {
+      require(keys.nonEmpty, "correlated CALL: SKIP/LIMIT needs ORDER BY " +
+        "(per-binding pagination must be deterministic)")
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(corrCols.map(c => col("`" + c + "`")): _*).orderBy(keys: _*)
+      val lo = skip.getOrElse(0L)
+      proj(df.withColumn("_rn$", row_number().over(w))
+        .filter(col("_rn$") > lit(lo) &&
+          limit.fold(lit(true))(n => col("_rn$") <= lit(lo + n)))
+        .drop("_rn$"))
+    } else {
+      val sorted = proj(if (keys.isEmpty) df else df.orderBy(keys: _*))
+      val skipped = skip.fold(sorted)(n => sorted.offset(n.toInt))
+      limit.fold(skipped)(n => skipped.limit(n.toInt))
+    }
 }

@@ -2012,4 +2012,58 @@ class CypherFrontendSpec extends SparkSpec {
     assert(got === Seq(("Biomuell", Seq(1L), Seq("Laub")),
       ("Restmuell", Seq(1L, 2L), Seq("Bauschutt", "Asche"))))
   }
+
+  // three A nodes point at one B node; x2 is the oldest
+  private lazy val ages: (DataFrame, DataFrame) = (
+    Seq(("A", "u:x1", "x1", 30L), ("A", "u:x2", "x2", 50L),
+      ("A", "u:x3", "x3", 40L), ("B", "u:y", "y", 0L))
+      .toDF("label", "uid", "name", "age"),
+    Seq(("u:x1", "R", "u:y"), ("u:x2", "R", "u:y"), ("u:x3", "R", "u:y"))
+      .toDF("src_uid", "rel_type", "dst_uid"))
+  private def runAges(cypher: String) = CypherFrontend.run(cypher, ages._1, ages._2)
+
+  test("correlated CALL: a WITH ORDER BY key on a dropped variable sorts before the projection") {
+    for (finish <- Seq(
+        "WITH a.name AS an ORDER BY a.age DESC LIMIT 1 RETURN an",
+        "RETURN a.name AS an ORDER BY a.age DESC LIMIT 1")) {
+      val got = runAges(
+        s"""MATCH (b:B)
+           |CALL { WITH b MATCH (a:A)-->(b) $finish }
+           |RETURN b.name AS b, an""".stripMargin)
+        .as[(String, String)].collect().toSeq
+      assert(got === Seq(("y", "x2")), finish)
+    }
+  }
+
+  test("WITH refuses an ORDER BY key on a dropped variable when it aggregates") {
+    val e = intercept[IllegalArgumentException](runAges(
+      "MATCH (n) WITH n.label AS l, count(*) AS c ORDER BY n.age RETURN l, c"))
+    assert(e.getMessage.contains(
+      "ORDER BY keys must be returned items when RETURN aggregates or is DISTINCT"))
+  }
+
+  test("WITH DISTINCT refuses an ORDER BY key on a dropped variable") {
+    val e = intercept[IllegalArgumentException](runAges(
+      "MATCH (n) WITH DISTINCT n.label AS l ORDER BY n.age RETURN l"))
+    assert(e.getMessage.contains(
+      "ORDER BY keys must be returned items when RETURN aggregates or is DISTINCT"))
+  }
+
+  test("subquery terms on a list comprehension or reduce() variable are refused by the compiler") {
+    for ((q, what) <- Seq(
+        "MATCH (s:B) RETURN [x IN COLLECT { MATCH (w)-->(s) RETURN w } | COUNT { (x)-->() }] AS c" ->
+          "COUNT { } subqueries",
+        "MATCH (s:B) RETURN reduce(a = 0, x IN [s] | a + COUNT { (x)-->() }) AS c" ->
+          "COUNT { } subqueries",
+        "MATCH (s:B) RETURN [x IN [s] | any(y IN [x] WHERE (y)<--())] AS c" ->
+          "pattern predicates and EXISTS { }")) {
+      val e = intercept[Exception](runAges(q))
+      assert(e.getMessage.startsWith(s"$what compile in") &&
+        e.getMessage.contains("list comprehension or reduce()"), e.getMessage)
+    }
+    // a quantifier that reads no comprehension variable still pre-joins
+    val got = runAges("MATCH (s:B) RETURN [x IN [1, 2] | any(y IN [s] WHERE (y)<--())] AS c")
+      .as[Seq[Boolean]].collect().toSeq
+    assert(got === Seq(Seq(true, true)))
+  }
 }

@@ -852,4 +852,19 @@ class PlanQualitySpec extends SparkSpec {
       !plan.contains("BroadcastNestedLoopJoin"),
       s"the list join-back must stay an equi join in:\n$plan")
   }
+
+  test("Cypher RETURN, WITH and UNION-tail ORDER BY + LIMIT plan as TakeOrderedAndProject") {
+    val (nodes, edges) = (GraphQueries.nodes(spark, dir), GraphQueries.edges(spark, dir))
+    for (q <- Seq(
+        "MATCH (n:Nation) RETURN n.name AS name ORDER BY name DESC LIMIT 3",
+        "MATCH (n:Nation) RETURN n.name AS name ORDER BY n.uid LIMIT 3",
+        "MATCH (n:Nation) WITH n ORDER BY n.name LIMIT 3 RETURN n.name AS name",
+        """MATCH (n:Nation) RETURN n.name AS name
+          |UNION MATCH (r:Region) RETURN r.name AS name
+          |ORDER BY name LIMIT 3""".stripMargin)) {
+      val plan = planOf(graft.graph.CypherFrontend.run(q, nodes, edges))
+      assert(plan.contains("TakeOrderedAndProject"),
+        s"top-k planned as a global sort for $q in:\n$plan")
+    }
+  }
 }
