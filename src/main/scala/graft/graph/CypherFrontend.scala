@@ -694,7 +694,7 @@ object CypherFrontend {
           props = m.result()
           // on a var-length hop the map filters EVERY hop's edge
           // (Neo4j's contract) — compiled as one edge-set filter
-          // below the k-fold joins, see relPropsFilter
+          // below the k-fold joins, see propsFilter
         }
         eatSym("]")
       }
@@ -1283,61 +1283,78 @@ object CypherFrontend {
     * one flat row without struct overhead. */
   private def ns(v: String, c: String) = s"$v$$$c"
 
+  /** What a variable in scope is bound to, with the columns its kind
+    * reads. */
+  private sealed trait Binding
+  /** A node: its `v$uid`, `v$label`, `v$<prop>` column family. */
+  private case object Node extends Binding
+  /** A fixed-hop relationship: its `v$src_uid`, `v$rel_type`,
+    * `v$dst_uid`, `v$<prop>` column family. */
+  private case object Rel extends Binding
+  /** A WITH, UNWIND or CALL alias, or an imported scalar: the plain
+    * column `v`. */
+  private case object Scalar extends Binding
+  /** A bounded var-length relationship: its per-walk hop count (what
+    * `size(r)` reads) and its materialized hop list of (src, rel_type,
+    * dst) structs in walk orientation (what `r` and `r[i]` read). */
+  private case class VarLenRel(lenCol: String, hopsCol: String) extends Binding
+  /** A named path: its hop count (`length(p)`) and its canonical value
+    * (`RETURN p`): `uid|rel_type|uid|...` in walk order, the g43 law's
+    * `|`-join (direction rides the order, not arrows). */
+  private sealed trait PathBinding extends Binding {
+    def lenCol: String
+    def strCol: String
+  }
+  /** A fixed-length named path, with its node variables in walk order
+    * and its relationship variables in hop order — the
+    * nodes(p)/relationships(p) surface. */
+  private case class FixedPath(lenCol: String, strCol: String,
+                               nodes: Seq[String], rels: Seq[String]) extends PathBinding
+  /** A shortestPath / allShortestPaths path, or a named path with a
+    * var-length hop: its interior is not per-row columns (the value
+    * rides the hop list or the level sets' lexicographic-min witness,
+    * [[Traversal.reachFixpointWitness]] when unbounded). */
+  private case class WalkPath(lenCol: String, strCol: String) extends PathBinding
+  /** The variable of a list comprehension, reduce() or quantifier body:
+    * the higher-order function's element (or accumulator) column, and
+    * whether it iterates strings (split(), keys(), string-literal
+    * lists), which decides size()'s chars-vs-elements dispatch. */
+  private case class Lambda(c: Column, strings: Boolean) extends Binding
+  /** The variables in scope, by name. A stage's scope holds exactly the
+    * variables it binds: a WITH ends the scope of every variable it does
+    * not project. */
+  private type Scope = Map[String, Binding]
+
   private final class Compiler(nodes: DataFrame, edges: DataFrame,
-                               params: Map[String, Any]) {
+                               params: Map[String, Any], imports: Scope = Map.empty) {
     private val nodeProps = nodes.columns.filterNot(Set("uid", "label")).toSeq
     private val edgeProps =
       edges.columns.filterNot(Set("src_uid", "dst_uid", "rel_type", "src_label", "dst_label")).toSeq
     private var anon = 0
     private def freshVar(): String = { anon += 1; s"_anon$anon" }
-    /** Variables bound to relationships (vs nodes) — they carry
-      * rel_type/src_uid/dst_uid instead of uid/label. */
-    private var relVars = Set.empty[String]
-    /** Scalar variables bound by WITH aliases — plain columns, not
-      * namespaced node/rel bindings. */
-    private var scalarVars = Set.empty[String]
-    /** Path variables bound by shortestPath — only `length(p)` (the
-      * hop count) is projectable; maps to the min-depth column. */
-    private var pathVars = Map.empty[String, String]
-
-    /** Fixed-length named paths only: the chain's node variables in
-      * walk order / its relationship variables in hop order — the
-      * nodes(p)/relationships(p) surface. Var-length and shortestPath
-      * paths are absent (their walk interior is not per-row columns;
-      * they expose length(p) and the bound rel's hop list instead). */
-    private var pathNodeSeq = Map.empty[String, Seq[String]]
-    private var pathRelSeq = Map.empty[String, Seq[String]]
-    /** Canonical serialized path value — what a bare `RETURN p`
-      * projects: `uid|rel_type|uid|...` in walk order (the g43 law's
-      * `|`-join; direction is carried by the walk order, not arrows).
-      * Present for fixed-length, bounded var-length (the interior
-      * rides the materialized hop list) AND shortestPath paths — the
-      * bounded form carries a lexicographic-min witness through its
-      * level sets, the unbounded form through
-      * [[Traversal.reachFixpointWitness]]. Maps path var → its
-      * pathstr column. */
-    private var pathStrCols = Map.empty[String, String]
-    /** Bounded var-length relationship bindings: var → its per-walk
-      * hop-count column (`size(r)`'s fast path). */
-    private var varLenVars = Map.empty[String, String]
-    /** Bounded var-length relationship bindings: var → the walk's
-      * materialized hop list ((src, rel_type, dst) structs, walk
-      * orientation) — what a bare `r` / `r[i]` projects. */
-    private var varLenHops = Map.empty[String, String]
-    /** Lambda variables inside comprehension/reduce bodies — bound to
-      * the enclosing higher-order function's element column. Checked
-      * FIRST in exprCol so a lambda shadows an outer binding, matching
-      * Cypher scoping. */
-    private var lambdaVars = Map.empty[String, Column]
-    /** Lambda variables known to iterate STRING elements (split(),
-      * keys(), string-literal lists) — drives size()'s char-vs-element
-      * dispatch inside comprehension/reduce bodies. */
-    private var stringLambdas = Set.empty[String]
-    private def withLambda(binds: (String, Column)*)(body: => Column): Column = {
-      val saved = lambdaVars
-      lambdaVars = lambdaVars ++ binds
-      try body finally lambdaVars = saved
+    /** The scope the compiler stands in: the current stage's, widened by
+      * a clause's pattern variables, a subquery pattern's or the lambda
+      * variables of an enclosing body. Replaced, never mutated: a stage
+      * sets its successor's scope, a widening restores the enclosing one
+      * ([[scoped]]). A correlated CALL body starts from its imports. */
+    private var scope: Scope = imports
+    private def scoped[T](s: Scope)(body: => T): T = {
+      val saved = scope
+      scope = s
+      try body finally scope = saved
     }
+    /** The one variable lookup: `v`'s binding, or the refusal of a name
+      * no pattern, WITH, UNWIND, CALL or lambda binds here. */
+    private def resolve(v: String): Binding = scope.getOrElse(v,
+      throw new IllegalArgumentException(s"Variable `$v` not defined"))
+    /** `body` with `v` bound to the element `x` of `list`; a lambda
+      * shadows an outer binding of its name (Cypher scoping). */
+    private def withLambda(v: String, list: Expr, x: Column)(body: => Column): Column =
+      scoped(scope + (v -> Lambda(x, stringElems(list))))(body)
+    /** The pattern variables (nodes and fixed-hop relationships) of a
+      * scope: the names frames join on. */
+    private def patternVars(s: Scope): Set[String] =
+      s.collect { case (v, Node | Rel) => v }.toSet
     /** Best-effort: does this list expression carry string elements? */
     private def stringElems(list: Expr): Boolean = list match {
       case EFn("split", _) | EFn("keys", _) => true
@@ -1355,43 +1372,32 @@ object CypherFrontend {
 
     /** One variable's node table, all columns namespaced. */
     private def nodeSide(p: NodePat, v: String): DataFrame = {
-      var df = nodes
-      p.label.foreach(l => df = df.filter(col("label") === l))
-      p.props.foreach { case (k, e) =>
-        e match {
-          case EVar(sv) if scalarVars(sv) => sys.error(
-            s"property map cannot reference pipeline alias '$sv' (it lives " +
-              "outside the pattern's frame); correlate with WHERE instead")
-          case _ =>
-        }
-        df = df.filter(col(k) === exprCol(e))
-      }
-      df.select((Seq("uid", "label") ++ nodeProps).map(c => col(c).as(ns(v, c))): _*)
+      val df = p.label.fold(nodes)(l => nodes.filter(col("label") === l))
+      propsFilter(df, p.props)
+        .select((Seq("uid", "label") ++ nodeProps).map(c => col(c).as(ns(v, c))): _*)
     }
 
-    /** A relationship property map as a per-EDGE filter. On a fixed
-      * hop it is the edge's own predicate; on a var-length hop EVERY
-      * hop of the walk must satisfy it (Neo4j's `-[:T*1..3 {k: v}]->`
-      * contract), so the same filter applies to the edge set each
-      * k-fold join draws from — pushed below the joins, never a
-      * post-hoc hop-list scan. */
-    private def relPropsFilter(df0: DataFrame, r: RelPat): DataFrame = {
-      var df = df0
-      r.props.foreach { case (k, e) =>
+    /** A node or relationship property map as equality filters on the
+      * node or edge frame. A relationship's map is a per-EDGE filter: on
+      * a var-length hop EVERY hop of the walk must satisfy it (Neo4j's
+      * `-[:T*1..3 {k: v}]->` contract), so it applies to the edge set
+      * each k-fold join draws from — pushed below the joins, never a
+      * post-hoc hop-list scan. A scalar alias lives outside the
+      * pattern's frame, so a map cannot read one. */
+    private def propsFilter(df: DataFrame, props: Map[String, Expr]): DataFrame =
+      props.foldLeft(df) { case (d, (k, e)) =>
         e match {
-          case EVar(sv) if scalarVars(sv) => sys.error(
+          case EVar(sv) if scope.get(sv).contains(Scalar) => sys.error(
             s"property map cannot reference pipeline alias '$sv' (it lives " +
               "outside the pattern's frame); correlate with WHERE instead")
           case _ =>
         }
-        df = df.filter(col(k) === exprCol(e))
+        d.filter(col(k) === exprCol(e))
       }
-      df
-    }
 
     /** The edge set one hop of `r` draws from, with the names of its
       * walk-orientation (from, to) columns: the type filter, the
-      * relationship property map ([[relPropsFilter]]) and, for
+      * relationship property map ([[propsFilter]]) and, for
       * `-[:T]-`, the symmetric closure. In that closure `src_uid` is the
       * traversal ORIGIN (walk orientation, not storage orientation — the
       * documented undirected divergence), and a self-loop's reversed
@@ -1402,7 +1408,7 @@ object CypherFrontend {
     private def hopEdges(r: RelPat): (DataFrame, String, String) = {
       var df = edges
       if (r.types.nonEmpty) df = df.filter(col("rel_type").isin(r.types: _*))
-      df = relPropsFilter(df, r)
+      df = propsFilter(df, r.props)
       val labelCols =
         if (Seq("src_label", "dst_label").forall(edges.columns.contains))
           Seq("src_label", "dst_label")
@@ -1421,15 +1427,15 @@ object CypherFrontend {
     }
 
     /** Compile one chain to a DataFrame of namespaced columns; returns
-      * (df, boundVars). A `pathVar` (MATCH p = ...) additionally
-      * materializes the walk's hop count as a `pathlen$p` column —
-      * fixed hops contribute 1 each, a bounded var-length hop its
-      * unrolled depth — and registers it for `length(p)`. */
+      * (df, the chain's bindings). A `pathVar` (MATCH p = ...)
+      * additionally materializes the walk's hop count as a `pathlen$p`
+      * column — fixed hops contribute 1 each, a bounded var-length hop
+      * its unrolled depth — and its value as a `pathstr$p` column. */
     private def compileChain(ch: Chain,
-                             pathVar: Option[String] = None): (DataFrame, Set[String]) = {
+                             pathVar: Option[String] = None): (DataFrame, Scope) = {
       val headVar = ch.head.v.getOrElse(freshVar())
       var df = nodeSide(ch.head, headVar)
-      var bound = Set(headVar)
+      var chainScope: Scope = Map(headVar -> Node)
       var cur = headVar
       val lenParts = Seq.newBuilder[Column]
       // nodes(p)/relationships(p) bookkeeping (fixed-length chains)
@@ -1534,14 +1540,14 @@ object CypherFrontend {
             df = df.join(reachDf,
               col(ns(cur, "uid")) === col(s"$endCol$$from"))
               .drop(s"$endCol$$from")
-            if (bound(nv)) {
+            if (chainScope.contains(nv)) {
               df = df.filter(col(s"$endCol$$to") === col(ns(nv, "uid")))
                 .drop(s"$endCol$$to")
             } else {
               df = df.join(nodeSide(nodePat, nv),
                 col(s"$endCol$$to") === col(ns(nv, "uid")))
                 .drop(s"$endCol$$to")
-              bound += nv
+              chainScope += nv -> Node
             }
             // a bound var-length variable surfaces its per-walk hop
             // count as size(r) (the tagged depth column, a literal per
@@ -1551,11 +1557,10 @@ object CypherFrontend {
               val c = s"rellen$$$rv"
               df = df.withColumn(c, col(s"$endCol$$len"))
               if (pathVar.isEmpty) df = df.drop(s"$endCol$$len")
-              varLenVars += rv -> c
               val hc = s"relhops$$$rv"
               df = df.withColumn(hc, col(s"$endCol$$hops"))
                 .drop(s"$endCol$$hops")
-              varLenHops += rv -> hc
+              chainScope += rv -> VarLenRel(c, hc)
             }
             if (pathVar.isDefined) {
               // the serialized interior folds over the hop list (walk
@@ -1572,7 +1577,6 @@ object CypherFrontend {
           case None =>
             if (pathVar.isDefined) lenParts += lit(1)
             val rv = rel.v.getOrElse(freshVar())
-            relVars += rv
             relOrder += rv
             // the bound rel's columns keep the hop set's orientation
             val (hop, fromC, toC) = hopEdges(rel)
@@ -1580,13 +1584,13 @@ object CypherFrontend {
               col(ns(cur, "uid")) === col(ns(rv, fromC)))
             val nv = nodePat.v.getOrElse(freshVar())
             nodeOrder += nv
-            if (bound(nv)) { // cycle back to an already-bound variable
+            if (chainScope.contains(nv)) { // cycle back to an already-bound variable
               df = df.filter(col(ns(rv, toC)) === col(ns(nv, "uid")))
             } else {
               df = df.join(nodeSide(nodePat, nv), col(ns(rv, toC)) === col(ns(nv, "uid")))
-              bound += nv
+              chainScope += nv -> Node
             }
-            bound += rv
+            chainScope += rv -> Rel
             if (pathVar.isDefined)
               serialParts += concat(lit("|"), col(ns(rv, "rel_type")),
                 lit("|"), col(ns(nv, "uid")))
@@ -1601,18 +1605,14 @@ object CypherFrontend {
         // the per-hop depth scratch columns fold into the total
         df = df.drop(df.columns.filter(c =>
           c.endsWith("$len") && c != lenCol).toIndexedSeq: _*)
-        pathVars += pv -> lenCol
-        if (!hasVarLen) {
-          pathNodeSeq += pv -> nodeOrder.result()
-          pathRelSeq += pv -> relOrder.result()
-        }
         // the canonical path VALUE (`RETURN p`): uid|rel_type|uid|…
         val strCol = s"pathstr$$$pv"
         df = df.withColumn(strCol, concat(serialParts.result(): _*))
           .drop(serialScratch.result(): _*)
-        pathStrCols += pv -> strCol
+        chainScope += pv -> (if (hasVarLen) WalkPath(lenCol, strCol)
+          else FixedPath(lenCol, strCol, nodeOrder.result(), relOrder.result()))
       }
-      (df, bound)
+      (df, chainScope)
     }
 
     /** `p = shortestPath((a)-[:T*lo..hi]->(b))`: bounded unrolled BFS.
@@ -1623,9 +1623,9 @@ object CypherFrontend {
       * declarative — Catalyst sees hi chained equi-joins + one
       * aggregate; no driver iteration (the unbounded form is
       * `graph.Traversal.reachFixpoint`). `length(p)` projects the
-      * min depth. */
+      * min depth. Returns (df, the endpoints' and the path's bindings). */
     private def compileShortest(ch: Chain, pv: String,
-                                all: Boolean = false): (DataFrame, Set[String]) = {
+                                all: Boolean = false): (DataFrame, Scope) = {
       val (rel, tailPat) = ch.hops.head
       val (lo, hi) = rel.varLen.get
       val headVar = ch.head.v.getOrElse(freshVar())
@@ -1660,9 +1660,8 @@ object CypherFrontend {
               (acc, h) => concat(acc, lit("|"), h.getField("rel_type"),
                 lit("|"), h.getField("dst")))))
           .drop(s"$pv$$hops")
-        pathVars += (pv -> s"$pv$$len")
-        pathStrCols += pv -> strCol
-        return (df, Set(headVar, tailVar))
+        return (df, Map(headVar -> Node, tailVar -> Node,
+          pv -> WalkPath(s"$pv$$len", strCol)))
       }
       val (e, fromC, toC) = hopEdges(rel)
       val e1 = e.select(col(fromC).as(s"$pv$$from"), col(toC).as(s"$pv$$to"),
@@ -1732,9 +1731,8 @@ object CypherFrontend {
         .drop(s"$pv$$from")
         .join(nodeSide(tailPat, tailVar), col(s"$pv$$to") === col(ns(tailVar, "uid")))
         .drop(s"$pv$$to")
-      pathVars += (pv -> s"$pv$$len")
-      pathStrCols += pv -> strCol // unbounded too (witness fixpoint)
-      (df, Set(headVar, tailVar))
+      // unbounded too: the witness fixpoint carries the value
+      (df, Map(headVar -> Node, tailVar -> Node, pv -> WalkPath(s"$pv$$len", strCol)))
     }
 
     /** (from, to) pairs reachable by lo..hi chained hops of `rel`'s
@@ -1799,139 +1797,123 @@ object CypherFrontend {
       left.join(renamed, cond, joinType).drop(dupCols.map(_ + "#dup").toSeq: _*)
     }
 
-    def compile(q: Query): DataFrame = compileWith(q, None, Set.empty, Nil)
+    def compile(q: Query): DataFrame = compileWith(q, None, Nil)
 
-    /** Correlated-subquery variant: `seed` pre-binds imported
-      * variables (pattern vars ride their full namespaced column
-      * families so inner clauses still reach `v.prop`; scalar aliases
-      * ride as plain columns), and `corrCols` is the per-outer-row
-      * correlation key the finish stage preserves — aggregates group
-      * by it, ORDER BY + SKIP/LIMIT become a per-key row_number
-      * window. */
+    /** Correlated-subquery variant: `seed` carries the imported
+      * variables, which the compiler's starting scope binds (pattern
+      * vars ride their full namespaced column families so inner clauses
+      * still reach `v.prop`; scalar aliases ride as plain columns), and
+      * `corrCols` is the per-outer-row correlation key the finish stage
+      * preserves — aggregates group by it, ORDER BY + SKIP/LIMIT become
+      * a per-key row_number window. */
     private def compileWith(q0: Query, seed: Option[DataFrame],
-                            seedBound: Set[String],
                             corrCols: Seq[String]): DataFrame = {
       var df: DataFrame = seed.orNull
-      var bound = seedBound
-      // RETURN * / WITH * expansion: every NAMED pattern/relationship
-      // variable in scope plus the live scalar aliases, name-sorted
-      // (deterministic; the driver compare is column-order-blind), in
-      // front of the written items, which may not shadow them
+      // RETURN * / WITH * expansion: every NAMED variable in scope, the
+      // pattern, path and var-length relationship variables name-sorted,
+      // then the scalar aliases name-sorted (deterministic; results are
+      // compared column-order-blind), in front of the written items,
+      // which may not shadow them
       def withStar(p: Projection): Projection = if (!p.star) p else {
         require(df != null, "RETURN * / WITH * needs a reading clause")
-        val pats = bound.toSeq.filterNot(_.startsWith("_anon"))
-        // var-length rel bindings and named paths live OUTSIDE `bound`
-        // (their state is materialized scratch columns, not a uid
-        // family) — * includes them when their columns ride the frame,
-        // matching Neo4j scope instead of silently narrowing; a final
-        // RETURN of a path variable refuses loudly (exprCol).
-        val hops = varLenHops.collect {
-          case (v, c) if df.columns.contains(c) => v
-        }.toSeq
-        val paths = pathVars.collect {
-          case (v, c) if df.columns.contains(c) => v
-        }.toSeq
-        val scals = df.columns
-          .filter(c => scalarVars(c) && !c.contains("$") && !c.startsWith("_"))
-          .sorted.toSeq
-        val expanded = ((pats ++ hops ++ paths).sorted ++ scals)
-          .distinct.map(v => RetItem(EVar(v), None, v))
+        val (scals, vars) = scope.keys.toSeq.sorted.partition(scope(_) == Scalar)
+        val expanded = (vars.filterNot(_.startsWith("_anon")) ++
+          scals.filterNot(_.startsWith("_"))).map(v => RetItem(EVar(v), None, v))
         val clash = expanded.map(_.text).toSet intersect
           p.items.map(_.name).toSet
         require(clash.isEmpty,
           s"RETURN * / WITH *: extra items shadow variables: ${clash.mkString(", ")}")
         p.copy(items = expanded ++ p.items)
       }
+      // name hygiene: a CALL's outputs must not shadow ANY name in scope
+      // or any materialized column
+      def requireFresh(outs: Seq[String]): Unit = {
+        val clash = outs.toSet intersect (df.columns.toSet ++ scope.keySet)
+        require(clash.isEmpty,
+          s"CALL { } returns names already bound: ${clash.mkString(", ")}")
+      }
       def applyClause(cl: MatchClause): Unit = {
         // a clause's comma chains join on shared vars (inner, one pattern)
-        var (cdf, cbound) = cl.shortest match {
+        var (cdf, cscope) = cl.shortest match {
           case Some(pv) => compileShortest(cl.chains.head, pv, cl.shortestAll)
           case None => compileChain(cl.chains.head, cl.named)
         }
         cl.chains.tail.foreach { ch =>
-          val (chDf, chBound) = compileChain(ch)
-          val shared = (cbound & chBound).toSeq.sorted
+          val (chDf, chScope) = compileChain(ch)
+          val (cvars, chVars) = (patternVars(cscope), patternVars(chScope))
+          val shared = (cvars & chVars).toSeq.sorted
           if (shared.isEmpty) {
             // legal only when the clause WHERE correlates the chains
             // (pattern predicate spanning both / EXISTS {} touching
             // both) — applied right after the join below
-            require(cl.where.exists(p => predLinks(p, cbound, chBound)),
+            require(cl.where.exists(p => predLinks(p, cvars, chVars)),
               "disconnected comma patterns would be a cross product; " +
                 "share a variable or correlate them in WHERE")
             cdf = cdf.crossJoin(chDf)
           } else cdf = joinOnShared(cdf, chDf, shared, "inner", None)
-          cbound ++= chBound
+          cscope ++= chScope
         }
-        if (df == null) {
-          df = cdf
-          cl.where.foreach(p => df = applyPred(df, p, negated = false))
+        val (pipeVars, clauseVars) = (patternVars(scope), patternVars(cscope))
+        val shared = (pipeVars & clauseVars).toSeq.sorted
+        if (df != null && shared.isEmpty) {
+          // no shared pattern variable: legal only when the clause's
+          // WHERE correlates it to the pipeline's scalar columns
+          // (`UNWIND $keys AS k MATCH (n) WHERE n.key = k`) — the
+          // equality lands in the join condition, so Catalyst plans
+          // an equi-join, not a cartesian (PlanSweepSpec's law)
+          require(!cl.optional,
+            "OPTIONAL MATCH needs a shared variable with the rows so far")
+          require(cl.where.exists(refsScalar) ||
+              cl.where.exists(p => predLinks(p, pipeVars, clauseVars)),
+            "disconnected MATCH patterns would be a cross product; " +
+              "share a variable or correlate via WHERE on a WITH/UNWIND " +
+              "alias or a pattern predicate spanning both")
+        }
+        // the clause's WHERE reads the pipeline's and the clause's names
+        scope ++= cscope
+        if (df != null && cl.optional) {
+          // Cypher scoping: OPTIONAL MATCH's WHERE filters the
+          // matches INSIDE the left join — unmatched rows stay
+          // null-padded instead of being dropped post-join. Subquery
+          // terms in that WHERE pre-join their columns onto the
+          // CLAUSE frame, so the whole predicate stays a Column
+          // inside the join condition
+          val terms = cl.where.toSeq.flatMap(probeTerms(_))
+          // a pattern predicate here compiles against the CLAUSE
+          // frame; an endpoint bound only in the OUTER pipeline
+          // would silently degrade to an existential — refuse and
+          // point at the correlated form instead
+          terms.collect { case pp: PPattern => pp }.foreach { pp =>
+            (Seq(pp.v) ++ pp.targetVar).foreach { r =>
+              require(!(df.columns.contains(ns(r, "uid")) &&
+                  !cdf.columns.contains(ns(r, "uid"))),
+                s"OPTIONAL MATCH WHERE: pattern predicate endpoint '$r' " +
+                  "is bound outside this clause; write the pattern into " +
+                  "the OPTIONAL MATCH itself")
+            }
+          }
+          df = withProbes(cdf, terms) { wide =>
+            joinOnShared(df, wide, shared, "left_outer",
+              cl.where.map(p => (_: DataFrame) => predCol(p)))
+          }
         } else {
-          val shared = (bound & cbound).toSeq.sorted
-          if (shared.isEmpty) {
-            // no shared pattern variable: legal only when the clause's
-            // WHERE correlates it to the pipeline's scalar columns
-            // (`UNWIND $keys AS k MATCH (n) WHERE n.key = k`) — the
-            // equality lands in the join condition, so Catalyst plans
-            // an equi-join, not a cartesian (PlanSweepSpec's law)
-            require(!cl.optional,
-              "OPTIONAL MATCH needs a shared variable with the rows so far")
-            require(cl.where.exists(refsScalar) ||
-                cl.where.exists(p => predLinks(p, bound, cbound)),
-              "disconnected MATCH patterns would be a cross product; " +
-                "share a variable or correlate via WHERE on a WITH/UNWIND " +
-                "alias or a pattern predicate spanning both")
-            df = df.crossJoin(cdf)
-            cl.where.foreach(p => df = applyPred(df, p, negated = false))
-            bound ++= cbound
-            return
-          }
-          if (cl.optional) {
-            // Cypher scoping: OPTIONAL MATCH's WHERE filters the
-            // matches INSIDE the left join — unmatched rows stay
-            // null-padded instead of being dropped post-join. Subquery
-            // terms in that WHERE pre-join their columns onto the
-            // CLAUSE frame, so the whole predicate stays a Column
-            // inside the join condition
-            val terms = cl.where.toSeq.flatMap(probeTerms(_))
-            // a pattern predicate here compiles against the CLAUSE
-            // frame; an endpoint bound only in the OUTER pipeline
-            // would silently degrade to an existential — refuse and
-            // point at the correlated form instead
-            terms.collect { case pp: PPattern => pp }.foreach { pp =>
-              (Seq(pp.v) ++ pp.targetVar).foreach { r =>
-                require(!(df.columns.contains(ns(r, "uid")) &&
-                    !cdf.columns.contains(ns(r, "uid"))),
-                  s"OPTIONAL MATCH WHERE: pattern predicate endpoint '$r' " +
-                    "is bound outside this clause; write the pattern into " +
-                    "the OPTIONAL MATCH itself")
-              }
-            }
-            df = withProbes(cdf, terms) { wide =>
-              joinOnShared(df, wide, shared, "left_outer",
-                cl.where.map(p => (_: DataFrame) => predCol(p)))
-            }
-          } else {
-            df = joinOnShared(df, cdf, shared, "inner", None)
-            cl.where.foreach(p => df = applyPred(df, p, negated = false))
-          }
+          df =
+            if (df == null) cdf
+            else if (shared.isEmpty) df.crossJoin(cdf)
+            else joinOnShared(df, cdf, shared, "inner", None)
+          cl.where.foreach(p => df = applyPred(df, p, negated = false))
         }
-        bound ++= cbound
       }
       q0.stages.foreach {
         case SMatch(cl) => applyClause(cl)
-        case SWith(p0, where) =>
+        case SWith(p, where) =>
           require(df != null, "WITH before any MATCH/UNWIND has no rows to project")
-          val p = withStar(p0)
-          df = project(p, df, bound, corrCols, carry = true)
-          // carried pattern variables only — scalar aliases are plain
-          // columns, never join keys for later MATCHes
-          bound = p.items.collect {
-            case RetItem(EVar(v), None, _) if !scalarVars(v) => v
-          }.toSet
+          val (pdf, next) = project(withStar(p), df, corrCols, carry = true)
+          df = pdf
+          scope = next
           where.foreach(w => df = applyPred(df, w, negated = false))
         case SUnwind(e, alias) =>
-          require(!scalarVars(alias) && !bound(alias),
-            s"UNWIND alias '$alias' is already bound")
+          require(!scope.contains(alias), s"UNWIND alias '$alias' is already bound")
           // one output row per list element; at the pipeline head the
           // list (a literal or $param) seeds a single-row frame
           df =
@@ -1939,7 +1921,7 @@ object CypherFrontend {
               nodes.sparkSession.range(1).select(explode(exprCol(e)).as(alias))
             else withProbes(df, probeTerms(e))(
               _.withColumn(alias, explode(exprCol(e))))
-          scalarVars += alias
+          scope += alias -> Scalar
         case SCall(inner, imports) if imports.nonEmpty =>
           // correlated subquery: CALL { WITH a, b ... }. The inner
           // plan runs ONCE over the DISTINCT import bindings (the
@@ -1950,30 +1932,27 @@ object CypherFrontend {
           // unless Catalyst/AQE decides the side is small
           require(df != null,
             "correlated CALL { WITH ... } needs rows to import from")
-          imports.foreach { v =>
-            require(!relVars(v),
+          val importScope: Scope = imports.map { v =>
+            val b = scope.getOrElse(v, throw new IllegalArgumentException(
+              s"CALL { WITH $v }: '$v' is not bound"))
+            require(b != Rel,
               s"CALL { WITH $v }: relationship variables cannot be " +
                 "imported (no stable single-column key); import the " +
                 "endpoint nodes instead")
-            require(bound(v) || scalarVars(v),
-              s"CALL { WITH $v }: '$v' is not bound")
-          }
-          val nodeImports = imports.filter(v => bound(v) && !scalarVars(v))
+            require(b == Node || b == Scalar, s"CALL { WITH $v }: only " +
+              "node variables and scalar aliases can be imported")
+            v -> b
+          }.toMap
+          val nodeImports = imports.filter(importScope(_) == Node)
           val scalarImports = imports.filterNot(nodeImports.contains)
           val seedCols = nodeImports.flatMap(v =>
             df.columns.filter(_.startsWith(v + "$"))) ++ scalarImports
           val corr = nodeImports.map(v => ns(v, "uid")) ++ scalarImports
           val seedDf = df.select(seedCols.map(c => col("`" + c + "`")): _*).distinct()
-          val sub = new Compiler(nodes, edges, params)
-          sub.scalarVars ++= scalarImports
-          val idf = sub.compileWith(inner, Some(seedDf), nodeImports.toSet, corr)
+          val idf = new Compiler(nodes, edges, params, importScope)
+            .compileWith(inner, Some(seedDf), corr)
           val newCols = idf.columns.filterNot(corr.contains)
-          // name hygiene: inner outputs must not shadow ANY in-scope
-          // name — materialized columns, pattern variables, scalars
-          val clash = newCols.toSet intersect
-            (df.columns.toSet ++ bound ++ relVars ++ scalarVars)
-          require(clash.isEmpty,
-            s"CALL { } returns names already bound: ${clash.mkString(", ")}")
+          requireFresh(newCols.toSeq)
           // Join-back semantics (Neo4j per-row execution): a subquery
           // whose RETURN items are ALL aggregates yields exactly ONE
           // row per binding even when zero rows reach its RETURN —
@@ -2003,17 +1982,12 @@ object CypherFrontend {
                   }
             }
           }
-          scalarVars ++= newCols
+          scope ++= newCols.map(_ -> Scalar)
         case SCall(inner, _) =>
           // fresh scope, like a UNION part; output columns join the
           // pipeline as scalar aliases
           val idf = new Compiler(nodes, edges, params).compile(inner)
-          if (df != null) {
-            val clash = idf.columns.toSet intersect
-              (df.columns.toSet ++ bound ++ relVars ++ scalarVars)
-            require(clash.isEmpty,
-              s"CALL { } returns names already bound: ${clash.mkString(", ")}")
-          }
+          if (df != null) requireFresh(idf.columns.toSeq)
           // uncorrelated block: rows cross-multiply the incoming frame
           // (Neo4j's per-row execution of an import-free subquery). The
           // inner frame broadcasts ONLY when provably small — a keyless
@@ -2029,18 +2003,20 @@ object CypherFrontend {
             if (df == null) idf
             else if (innerSmall) df.crossJoin(broadcast(idf))
             else df.crossJoin(idf)
-          scalarVars ++= idf.columns
+          scope ++= idf.columns.map(_ -> Scalar)
       }
 
-      project(withStar(q0.ret), df, bound, corrCols, carry = false)
+      project(withStar(q0.ret), df, corrCols, carry = false)._1
     }
 
     /** The one projection stage — RETURN, WITH, and the finish of a
       * correlated CALL body — in the order and with the ORDER BY rule
-      * [[Projection]] states. `carry` (WITH) passes a bare variable
-      * through with its whole column family (so later clauses still
-      * reach `v.prop`); every other WITH item needs an `AS` alias and
-      * becomes a plain scalar column. Any aggregate item triggers
+      * [[Projection]] states; returns the projected frame and the next
+      * stage's scope, which holds exactly the stage's outputs. `carry`
+      * (WITH) passes a bare variable through with its whole column
+      * family and binding (so later clauses still reach `v.prop`); every
+      * other WITH item needs an `AS` alias and becomes a plain scalar
+      * column. Any aggregate item triggers
       * Cypher's implicit grouping by the non-aggregate items — grouping
       * a carried variable groups by ALL its columns (functionally
       * dependent on uid, so one hash aggregate, no re-join to recover
@@ -2050,13 +2026,11 @@ object CypherFrontend {
       * BINDING (the per-row execution contract), paging is per binding,
       * and the join back finds its key. Subquery terms in items and
       * keys pre-join their columns onto the frame they are read in. */
-    private def project(p: Projection, in: DataFrame, bound: Set[String],
-                        corrCols: Seq[String], carry: Boolean): DataFrame = {
+    private def project(p: Projection, in: DataFrame, corrCols: Seq[String],
+                        carry: Boolean): (DataFrame, Scope) = {
       val carried = p.items.filter(i => carry && i.alias.isEmpty && i.expr.isInstanceOf[EVar])
-      val carriedVars = carried.map(_.expr.asInstanceOf[EVar].name)
-      carriedVars.foreach(v => require(bound(v) || scalarVars(v) ||
-          pathVars.contains(v) || varLenHops.contains(v) || varLenVars.contains(v),
-        s"WITH references unbound variable $v"))
+      val carriedScope: Scope =
+        carried.map(_.expr).collect { case EVar(v) => v -> resolve(v) }.toMap
       val exprItems = p.items.filterNot(carried.contains)
       if (carry) exprItems.foreach(i => require(i.alias.isDefined,
         s"WITH item '${i.text}' needs an AS alias"))
@@ -2070,12 +2044,12 @@ object CypherFrontend {
       // var-length rel's scratch columns (length(p), size(r) and
       // [h IN r | ...] resolve through them), else its namespaced family
       def names(i: RetItem): Seq[String] = i.expr match {
-        case EVar(v) if carried.contains(i) =>
-          val scratch = (pathVars.get(v).toSeq ++ pathStrCols.get(v) ++
-            varLenVars.get(v) ++ varLenHops.get(v)).filter(in.columns.contains)
-          if (scalarVars(v)) Seq(v)
-          else if (scratch.nonEmpty) scratch
-          else in.columns.filter(_.startsWith(v + "$")).toSeq
+        case EVar(v) if carried.contains(i) => carriedScope(v) match {
+          case Scalar => Seq(v)
+          case b: PathBinding => Seq(b.lenCol, b.strCol)
+          case VarLenRel(len, hops) => Seq(len, hops)
+          case _ => in.columns.filter(_.startsWith(v + "$")).toSeq
+        }
         case _ => Seq(i.name)
       }
       def byName(i: RetItem): Seq[Column] = names(i).map(c => col("`" + c + "`"))
@@ -2090,29 +2064,36 @@ object CypherFrontend {
         } else {
           // nested aggregates (count(*) * 2) lift to temp columns: one
           // hash aggregate computes the temps, a projection on top
-          // applies the surrounding expression
+          // applies the surrounding expression, the temps in scope
           val keyCols = corrKeep ++ order.filterNot(aggItems.contains).flatMap(itemCols)
           val lifted = scala.collection.mutable.ArrayBuffer[(String, Expr)]()
           val rewritten = aggItems.map(i => i -> liftAggs(i.expr, lifted)).toMap
           val aggCols = lifted.toSeq.map { case (tmp, agg) => aggCol(agg).as(tmp) }
           val grouped = d.groupBy(keyCols: _*).agg(aggCols.head, aggCols.tail: _*)
-          scalarVars ++= lifted.map(_._1)
-          grouped.select(corrKeep ++ order.flatMap(i => rewritten.get(i)
-            .fold(byName(i))(re => Seq(exprCol(re).as(i.name)))): _*)
+          scoped(scope ++ lifted.map(_._1 -> Scalar))(
+            grouped.select(corrKeep ++ order.flatMap(i => rewritten.get(i)
+              .fold(byName(i))(re => Seq(exprCol(re).as(i.name)))): _*))
         }
       // the ORDER BY rule: a key is read after the projection unless it
       // reads a variable the projection drops
       val aliases = exprItems.flatMap(i => i.alias.map(_ -> i.expr)).toMap
-      val dropped = bound ++ scalarVars ++ pathVars.keySet ++ varLenVars.keySet ++
-        varLenHops.keySet -- carriedVars -- aliases.keySet
+      val next = carriedScope ++ aliases.keys.map(_ -> Scalar)
+      val dropped = scope.keySet -- next.keySet
       def named(k: OrderKey) = exprItems.find(i => i.text == k.ref || i.alias.contains(k.ref))
       val preSort = p.orderBy.exists(k => named(k).isEmpty && (refs(k.expr) & dropped).nonEmpty)
       require(!preSort || (aggItems.isEmpty && !p.distinct),
         "ORDER BY keys must be returned items when RETURN aggregates or is DISTINCT")
       val itemTerms = p.items.flatMap(i => probeTerms(i.expr))
-      val projected =
-        if (!preSort) withProbes(in, itemTerms)(proj)
-        else {
+      val out =
+        if (!preSort) {
+          // the keys read the projected frame, so they resolve in the
+          // next stage's scope
+          val projected = withProbes(in, itemTerms)(proj)
+          scoped(next)(withProbes(projected, p.orderBy.filter(named(_).isEmpty)
+              .flatMap(k => probeTerms(k.expr)))(d =>
+            page(d, p.orderBy.map(k => sortKey(named(k).fold(exprCol(k.expr))(
+              i => col("`" + i.name + "`")), k.asc)), p.skip, p.limit, corrCols)(identity)))
+        } else {
           val keys = p.orderBy.map(k => k.copy(expr = named(k).fold(rewrite(k.expr) {
             case EVar(a) if aliases.contains(a) => aliases(a)
           })(_.expr)))
@@ -2120,12 +2101,7 @@ object CypherFrontend {
             page(d, keys.map(k => sortKey(exprCol(k.expr), k.asc)),
               p.skip, p.limit, corrCols)(proj))
         }
-      scalarVars ++= aliases.keys
-      if (preSort) projected
-      else withProbes(projected, p.orderBy.filter(named(_).isEmpty)
-          .flatMap(k => probeTerms(k.expr)))(d =>
-        page(d, p.orderBy.map(k => sortKey(named(k).fold(exprCol(k.expr))(
-          i => col("`" + i.name + "`")), k.asc)), p.skip, p.limit, corrCols)(identity))
+      (out, next)
     }
 
     /** WHERE compilation. Pattern predicates become semi/anti joins on
@@ -2169,7 +2145,7 @@ object CypherFrontend {
         // shared variable's uid. The probe ships DISTINCT shared-key
         // tuples — never the match multiset — so a high-multiplicity
         // pattern cannot widen the outer frame.
-        val (cdf, shared) = chainFrame(chains, wh, df.columns, "EXISTS { }")
+        val (cdf, shared, _) = chainFrame(chains, wh, df.columns, "EXISTS { }")
         val exProbe = cdf
           .select(shared.map(v => col(ns(v, "uid")).as(s"_ex$$$v")): _*)
           .distinct()
@@ -2188,28 +2164,31 @@ object CypherFrontend {
         }
     }
 
-    /** Compile a multi-hop EXISTS/COUNT subquery's chains into one
-      * matched frame (inner WHERE applied) plus the variables shared
-      * with the outer scope — the common front half of the semi-join,
-      * flag-column, and count-column compilations. */
+    /** Compile a multi-hop EXISTS/COUNT/COLLECT subquery's chains into
+      * one matched frame (inner WHERE applied) plus the variables shared
+      * with the outer frame and the scope the subquery reads in (the
+      * enclosing one widened by its pattern's bindings) — the common
+      * front half of the semi-join, flag-column, count-column and
+      * list-column compilations. */
     private def chainFrame(chains: Seq[Chain], wh: Option[Pred],
                            outerCols: Array[String], what: String)
-        : (DataFrame, Seq[String]) = {
-      var (cdf, cbound) = compileChain(chains.head)
+        : (DataFrame, Seq[String], Scope) = {
+      var (cdf, cscope) = compileChain(chains.head)
       chains.tail.foreach { ch =>
-        val (chDf, chBound) = compileChain(ch)
-        val shared = (cbound & chBound).toSeq.sorted
+        val (chDf, chScope) = compileChain(ch)
+        val shared = (patternVars(cscope) & patternVars(chScope)).toSeq.sorted
         require(shared.nonEmpty,
           s"disconnected $what patterns would be a cross product; share a variable")
         cdf = joinOnShared(cdf, chDf, shared, "inner", None)
-        cbound ++= chBound
+        cscope ++= chScope
       }
-      wh.foreach(p => cdf = applyPred(cdf, p, negated = false))
-      val shared = cbound.toSeq
+      val inner = scope ++ cscope
+      wh.foreach(p => cdf = scoped(inner)(applyPred(cdf, p, negated = false)))
+      val shared = patternVars(cscope).toSeq
         .filter(v => outerCols.contains(ns(v, "uid"))).sorted
       require(shared.nonEmpty,
         s"$what must share at least one variable with the outer MATCH")
-      (cdf, shared)
+      (cdf, shared, inner)
     }
 
     /** Does the predicate CORRELATE variable sets `a` and `b` — a
@@ -2272,7 +2251,7 @@ object CypherFrontend {
       case pp: PPattern => joinPatternFlag(d, pp, c)
       case pe: PExistsChain =>
         // the DISTINCT shared-key tuples of the chain's compiled frame
-        val (cdf, shared) = chainFrame(pe.chains, pe.where, d.columns, "EXISTS { }")
+        val (cdf, shared, _) = chainFrame(pe.chains, pe.where, d.columns, "EXISTS { }")
         val probe = cdf
           .select(shared.map(v => col(ns(v, "uid")).as(s"$c$$$v")): _*)
           .distinct()
@@ -2289,7 +2268,7 @@ object CypherFrontend {
         d.join(counts, d(ns(cs.v, "uid")) === counts(s"$c$$probe"),
           "left_outer").drop(s"$c$$probe")
       case cc: ECountChain =>
-        val (cdf, shared) =
+        val (cdf, shared, _) =
           chainFrame(cc.chains, cc.where, d.columns, "COUNT { }")
         val counts = cdf
           .groupBy(shared.map(v => col(ns(v, "uid")).as(s"$c$$$v")): _*)
@@ -2299,18 +2278,18 @@ object CypherFrontend {
         d.join(counts, cond, "left_outer")
           .drop(shared.map(v => s"$c$$$v"): _*)
       case ec: ECollect =>
-        val (cdf, shared) =
+        val (cdf, shared, inner) =
           chainFrame(ec.chains, ec.where, d.columns, "COLLECT { }")
         // shared keys ride as `k$<var>`, apart from the sort (`s<j>`)
         // and value (`v`) columns whatever the variables are named;
         // the returned value rides as the FINAL sort key so tie
         // order (and the no-ORDER-BY default) is deterministic
         val keys = ec.orderBy :+ OrderKey(ec.ret, "", asc = true)
-        val proj = withProbes(cdf, keys.flatMap(k => probeTerms(k.expr)))(
+        val proj = scoped(inner)(withProbes(cdf, keys.flatMap(k => probeTerms(k.expr)))(
           _.select(shared.map(v => col(ns(v, "uid")).as(s"$c$$k$$$v")) ++
             keys.zipWithIndex.map { case (k, j) =>
               exprCol(k.expr).as(s"$c$$s$j") } :+
-            exprCol(ec.ret).as(s"$c$$v"): _*))
+            exprCol(ec.ret).as(s"$c$$v"): _*)))
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(shared.map(v => col(s"$c$$k$$$v")): _*)
           .orderBy(keys.zipWithIndex.map { case (k, j) =>
@@ -2373,7 +2352,7 @@ object CypherFrontend {
       // value, lambda-bound terms to their fresh columns, outer
       // columns ride along from the carried frame
       val counts = withProbes(ex, lambdaBound(q)) { ex2 =>
-        ex2.filter(withLambda(q.v -> col(elemC))(predCol(q.where)))
+        ex2.filter(withLambda(q.v, q.list, col(elemC))(predCol(q.where)))
           .groupBy(rid).agg(count(lit(1)).as(cntC))
       }
       val n = coalesce(col(cntC), lit(0L))
@@ -2507,24 +2486,20 @@ object CypherFrontend {
         case _ => sys.error("=~ needs a string-literal pattern")
       }
       case PStr(op, _, _) => sys.error(s"unknown string predicate $op")
-      case PIsNull(EVar(v), neg) if !scalarVars(v) =>
-        // a variable's null-ness is its binding's (left-join padding),
-        // never the identity struct's (structs are never null)
-        val c = col(ns(v, if (relVars(v)) "src_uid" else "uid"))
-        if (neg) c.isNotNull else c.isNull
       case PIsNull(e, neg) =>
-        if (neg) exprCol(e).isNotNull else exprCol(e).isNull
+        val c = keyCol(e)
+        if (neg) c.isNotNull else c.isNull
       case PBoolE(e) => exprCol(e) === lit(true)
       case PAnd(l, r) => predCol(l) && predCol(r)
       case POr(l, r) => predCol(l) || predCol(r)
       case PXor(l, r) => predCol(l) =!= predCol(r)
       case PNot(i) => !predCol(i)
-      case PHasLabel(v, label) => col(ns(v, "label")) === label
+      case PHasLabel(v, label) => family(v, "label") === label
       case PQuant(q, v, lst, w) =>
         // counts over the codegen'd `filter` higher-order function —
         // no explode, evaluated per row
         val lc = exprCol(lst)
-        val matches = size(filter(lc, x => withLambda(v -> x)(predCol(w))))
+        val matches = size(filter(lc, x => withLambda(v, lst, x)(predCol(w))))
         q match {
           case "all" => matches === size(lc)
           case "any" => matches > 0
@@ -2548,9 +2523,12 @@ object CypherFrontend {
       case ELit(_: Long) => Some(LongType)
       case ELit(_: Double) => Some(DoubleType)
       case ELit(_: Boolean) => Some(BooleanType)
-      case EProp(v, k) if !lambdaVars.contains(v) && !scalarVars(v) =>
-        val sch = if (relVars(v)) edges.schema else nodes.schema
-        sch.fields.find(_.name == k).map(_.dataType)
+      case EProp(v, k) =>
+        val sch = scope.get(v).collect {
+          case Node => nodes.schema
+          case Rel => edges.schema
+        }
+        sch.flatMap(_.fields.find(_.name == k).map(_.dataType))
       case EList(xs) =>
         Some(ArrayType(xs.flatMap(staticType).headOption.getOrElse(StringType)))
       case ELabels0(_) | EType(_) => Some(StringType)
@@ -2593,23 +2571,31 @@ object CypherFrontend {
       "lambda variable of a quantifier that reads the variable of an " +
       "enclosing quantifier, list comprehension or reduce()"
 
+    /** Column `c` of variable `v`'s namespaced family, once `v` resolves. */
+    private def family(v: String, c: String): Column = { resolve(v); col(ns(v, c)) }
+
+    /** The column that is null exactly when `e` is: a node's or a
+      * relationship's key (left-join padding; its identity struct is
+      * never null), else `e`'s value. What IS NULL and count(e) read. */
+    private def keyCol(e: Expr): Column = e match {
+      case EVar(v) => resolve(v) match {
+        case Node => col(ns(v, "uid"))
+        case Rel => col(ns(v, "src_uid"))
+        case _ => exprCol(e)
+      }
+      case _ => exprCol(e)
+    }
+
     private def exprCol(e: Expr): Column = e match {
-      case EVar(v) if lambdaVars.contains(v) => lambdaVars(v)
-      case EVar(v) if scalarVars(v) => col(v) // WITH-bound scalar alias
-      case EVar(v) if varLenHops.contains(v) =>
-        col("`" + varLenHops(v) + "`") // the walk's hop-struct list
-      case EVar(v) if varLenVars.contains(v) => sys.error(
-        s"'$v' binds a var-length relationship whose hop list was not " +
-          "materialized; project size($v) instead")
-      case EVar(v) if pathStrCols.contains(v) =>
-        // the canonical path VALUE: uid|rel_type|uid|… in walk order
-        // (per the g43 law — the interleaved identity sequence IS the
-        // path; direction rides the order, not arrows)
-        col("`" + pathStrCols(v) + "`")
-      case EVar(v) if pathVars.contains(v) => sys.error(
-        s"path variable '$v' has no materialized value column " +
-          s"(internal: every shortestPath form should register a " +
-          s"witness); project length($v)")
+      case EVar(v) => resolve(v) match {
+        case Lambda(c, _) => c
+        case Scalar => col(v)
+        case VarLenRel(_, hops) => col("`" + hops + "`") // the walk's hop-struct list
+        case p: PathBinding => col("`" + p.strCol + "`") // the canonical path value
+        // a bare node/rel variable projects its identity
+        case Rel => struct(col(ns(v, "rel_type")), col(ns(v, "src_uid")), col(ns(v, "dst_uid")))
+        case Node => struct(col(ns(v, "label")), col(ns(v, "uid")))
+      }
       case e @ (_: ECountSub | _: ECountChain) =>
         probeCols.get(e)
           .map(n => coalesce(col("`" + n + "`"), lit(0L)))
@@ -2624,13 +2610,11 @@ object CypherFrontend {
         // enclosing projection pre-joined; the null refill keeps Neo4j
         // semantics (no match = false, not null)
         predCol(p)
-      case EVar(v) => // a bare node/rel variable projects its identity
-        if (relVars(v))
-          struct(col(ns(v, "rel_type")), col(ns(v, "src_uid")), col(ns(v, "dst_uid")))
-        else struct(col(ns(v, "label")), col(ns(v, "uid")))
-      case EProp(v, k) if lambdaVars.contains(v) =>
-        lambdaVars(v).getField(k) // struct element inside a lambda body
-      case EProp(v, k) => col(ns(v, k))
+      case EProp(v, k) => resolve(v) match {
+        case Lambda(c, _) => c.getField(k) // struct element inside a lambda body
+        case Node | Rel => col(ns(v, k))
+        case _ => sys.error(s"$v.$k: only a node or relationship variable has properties")
+      }
       case ELit(null) => lit(null)
       case ELit(x) => lit(x)
       case EParam(n) => params.getOrElse(n,
@@ -2640,8 +2624,8 @@ object CypherFrontend {
         case xs: Array[_] => array(xs.toIndexedSeq.map(x => lit(x)): _*)
         case v => lit(v)
       }
-      case ELabels0(v) => col(ns(v, "label"))
-      case EType(v) => col(ns(v, "rel_type"))
+      case ELabels0(v) => family(v, "label")
+      case EType(v) => family(v, "rel_type")
       case EList(items) => array(items.map(exprCol): _*)
       case EArith(op, l, r) =>
         val (lc, rc) = (exprCol(l), exprCol(r))
@@ -2666,8 +2650,7 @@ object CypherFrontend {
           case other => sys.error(s"unknown arithmetic operator $other")
         }
       case EMapProj(v, keys) =>
-        require(!scalarVars(v) && !relVars(v),
-          s"map projection needs a node variable, got '$v'")
+        require(resolve(v) == Node, s"map projection needs a node variable, got '$v'")
         keys.foreach(k => require(nodeProps.contains(k),
           s"unknown property '$k' in map projection on '$v'"))
         // the selected subset of properties(v): string-valued map,
@@ -2699,20 +2682,14 @@ object CypherFrontend {
         when(ic >= 0, element_at(bc, ic + lit(1))).otherwise(element_at(bc, ic))
       case EComp(v, lst, wh, mp) =>
         val lc = exprCol(lst)
-        val savedS = stringLambdas
-        if (stringElems(lst)) stringLambdas += v
-        try {
-          val filtered = wh.fold(lc)(p =>
-            filter(lc, x => withLambda(v -> x)(predCol(p))))
-          mp.fold(filtered)(m =>
-            transform(filtered, x => withLambda(v -> x)(exprCol(m))))
-        } finally stringLambdas = savedS
+        val filtered = wh.fold(lc)(p =>
+          filter(lc, x => withLambda(v, lst, x)(predCol(p))))
+        mp.fold(filtered)(m =>
+          transform(filtered, x => withLambda(v, lst, x)(exprCol(m))))
       case EReduce(accN, init, v, lst, body) =>
-        val savedS = stringLambdas
-        if (stringElems(lst)) stringLambdas += v
-        try aggregate(exprCol(lst), exprCol(init),
-          (acc, x) => withLambda(accN -> acc, v -> x)(exprCol(body)))
-        finally stringLambdas = savedS
+        aggregate(exprCol(lst), exprCol(init), (acc, x) =>
+          scoped(scope + (accN -> Lambda(acc, strings = false)))(
+            withLambda(v, lst, x)(exprCol(body))))
       case ECase(operand, whens, els) =>
         val branches = whens.map {
           case (Left(p), t) => (predCol(p), exprCol(t))
@@ -2732,6 +2709,26 @@ object CypherFrontend {
       * deprecated Cypher — Neo4j 5 points at char_length). */
     private def fnCol(fn: String, args: Seq[Expr]): Column = {
       def a(i: Int): Column = exprCol(args(i))
+      // string-valued property map, absent (null) props filtered out —
+      // Neo4j's map of SET properties. Values cast to string for a
+      // uniform map type (documented divergence for non-string columns)
+      def propMap(v: String, props: Seq[String]): Column = map_filter(
+        map(props.flatMap(p => Seq(lit(p), col(ns(v, p)).cast("string"))): _*),
+        (_, pv) => pv.isNotNull)
+      // the one variable argument of properties(), labels(), keys(),
+      // id(), startNode()/endNode(), length(), nodes(), relationships()
+      lazy val varArg: Option[(String, Binding)] = args match {
+        case Seq(EVar(v)) => Some(v -> resolve(v))
+        case _ => None
+      }
+      // nodes(p)/relationships(p) read a fixed-length path's pattern
+      // variables, which a WITH that carries only the path drops
+      def members(pv: String, vs: Seq[String], kind: Binding): Seq[String] = {
+        require(vs.forall(scope.get(_).contains(kind)),
+          s"nodes($pv) and relationships($pv) read the path's pattern " +
+            "variables, which a WITH dropped; project them before the WITH")
+        vs
+      }
       def arity(ok: Boolean): Unit =
         require(ok, s"wrong number of arguments (${args.size}) for $fn()")
       fn match {
@@ -2784,14 +2781,17 @@ object CypherFrontend {
           // chars; everything list-shaped (literals, split/range/keys,
           // comprehensions, lifted collect() temps) in elements
           args(0) match {
-            // a var-length relationship binding: size(r) is the walk's
-            // hop count (the materialized depth column)
-            case EVar(v) if varLenVars.contains(v) => col(varLenVars(v))
+            case EVar(v) => resolve(v) match {
+              // a var-length relationship binding: size(r) is the walk's
+              // hop count (the materialized depth column)
+              case VarLenRel(len, _) => col(len)
+              case Lambda(_, true) => length(a(0))
+              case _ => size(a(0))
+            }
             case EProp(_, _) | ELit(_: String) |
                  EFn("tolower" | "toupper" | "tostring" | "trim" | "ltrim" |
                      "rtrim" | "replace" | "substring" | "left" | "right", _) =>
               length(a(0))
-            case EVar(v) if stringLambdas(v) => length(a(0))
             case _ => size(a(0))
           }
         case "range" =>
@@ -2799,79 +2799,61 @@ object CypherFrontend {
           // Cypher range() is inclusive on both ends, like sequence()
           if (args.size == 2) sequence(a(0).cast("long"), a(1).cast("long"))
           else sequence(a(0).cast("long"), a(1).cast("long"), a(2).cast("long"))
-        case "properties" => args match {
-          case Seq(EVar(v)) if !scalarVars(v) && !relVars(v) =>
-            // string-valued property map, absent (null) props filtered
-            // out — Neo4j's map of SET properties. Values cast to
-            // string for a uniform map type (documented divergence for
-            // non-string property columns).
-            map_filter(
-              map(nodeProps.flatMap(p =>
-                Seq(lit(p), col(ns(v, p)).cast("string"))): _*),
-              (_, pv) => pv.isNotNull)
-          case Seq(EVar(v)) if relVars(v) =>
-            // relationship property map: the non-identity edge columns
-            if (edgeProps.isEmpty) map()
-            else map_filter(
-              map(edgeProps.flatMap(p =>
-                Seq(lit(p), col(ns(v, p)).cast("string"))): _*),
-              (_, pv) => pv.isNotNull)
+        case "properties" => varArg match {
+          case Some((v, Node)) => propMap(v, nodeProps)
+          // relationship property map: the non-identity edge columns
+          case Some((v, Rel)) => if (edgeProps.isEmpty) map() else propMap(v, edgeProps)
           case _ => sys.error("properties() takes one bound node or relationship variable")
         }
-        case "labels" => args match {
+        case "labels" => varArg match {
           // full label list — single-label engine, so a 1-element array
-          case Seq(EVar(v)) if !scalarVars(v) && !relVars(v) =>
-            array(col(ns(v, "label")))
+          case Some((v, Node)) => array(col(ns(v, "label")))
           case _ => sys.error("labels() takes one bound node variable")
         }
         case "reverse" => arity(args.size == 1); reverse(a(0))
-        case "startnode" | "endnode" => args match {
+        case "startnode" | "endnode" => varArg match {
           // the endpoint as a node entity — needs src_label/dst_label
           // on the edge frame (GraphStore edges carry them)
-          case Seq(EVar(v)) if relVars(v) =>
+          case Some((v, Rel)) =>
             val side = if (fn == "startnode") "src" else "dst"
             struct(col(ns(v, s"${side}_label")).as("label"),
               col(ns(v, s"${side}_uid")).as("uid"))
           case _ => sys.error(s"$fn() takes one bound relationship variable")
         }
-        case "keys" => args match {
-          case Seq(EVar(v)) if !scalarVars(v) && !relVars(v) =>
-            map_keys(map_filter(
-              map(nodeProps.flatMap(p =>
-                Seq(lit(p), col(ns(v, p)).cast("string"))): _*),
-              (_, pv) => pv.isNotNull))
+        case "keys" => varArg match {
+          case Some((v, Node)) => map_keys(propMap(v, nodeProps))
           case _ => sys.error("keys() takes one bound node variable")
         }
-        case "length" => args match {
-          case Seq(EVar(pv)) if pathVars.contains(pv) => col(pathVars(pv))
+        case "length" => varArg match {
+          case Some((_, b: PathBinding)) => col(b.lenCol)
           case _ => sys.error(
             "length() takes a bound path variable (hop count), " +
               "e.g. MATCH p = (a)-[:T*1..2]->(b) RETURN length(p)")
         }
-        case "id" => args match {
-          case Seq(EVar(v)) if !scalarVars(v) && !relVars(v) => col(ns(v, "uid"))
+        case "id" => varArg match {
+          case Some((v, Node)) => col(ns(v, "uid"))
           case _ => sys.error("id() takes one bound node variable (returns the string uid)")
         }
-        case "nodes" => args match {
+        case "nodes" => varArg match {
           // fixed-length path: the walk's nodes as (label, uid)
           // structs in order — pure projection, zero extra data cost
-          case Seq(EVar(pv)) if pathNodeSeq.contains(pv) =>
-            array(pathNodeSeq(pv).map(v => struct(
+          case Some((pv, fp: FixedPath)) =>
+            array(members(pv, fp.nodes, Node).map(v => struct(
               col(ns(v, "label")).as("label"),
               col(ns(v, "uid")).as("uid"))): _*)
-          case Seq(EVar(pv)) if pathVars.contains(pv) => sys.error(
+          case Some((_, _: WalkPath)) => sys.error(
             "nodes(p) needs a fixed-length path; a var-length/" +
               "shortestPath walk exposes length(p) and the bound " +
               "relationship's hop list instead")
           case _ => sys.error("nodes() takes a named path variable")
         }
-        case "relationships" => args match {
-          case Seq(EVar(pv)) if pathRelSeq.contains(pv) =>
-            array(pathRelSeq(pv).map(rv => struct(
+        case "relationships" => varArg match {
+          case Some((pv, fp: FixedPath)) =>
+            array(members(pv, fp.rels, Rel).map(rv => struct(
               col(ns(rv, "rel_type")).as("rel_type"),
               col(ns(rv, "src_uid")).as("src_uid"),
               col(ns(rv, "dst_uid")).as("dst_uid"))): _*)
-          case Seq(EVar(pv)) if pathVars.contains(pv) => sys.error(
+          case Some((_, _: WalkPath)) => sys.error(
             "relationships(p) needs a fixed-length path; a var-length " +
               "walk's hops are the bound relationship variable's list")
           case _ => sys.error("relationships() takes a named path variable")
@@ -2885,7 +2867,7 @@ object CypherFrontend {
       * names shadow scalars; the over-approximation (not excluding
       * them) only ever widens the correlated path. */
     private def refsScalar(p: Pred): Boolean =
-      subterms(p).exists { case EVar(v) => scalarVars(v); case _ => false }
+      subterms(p).exists { case EVar(v) => scope.get(v).contains(Scalar); case _ => false }
 
     /** Does the expression contain an aggregate anywhere? (Cypher
       * allows aggregates inside arithmetic/functions/CASE in RETURN
@@ -2921,7 +2903,7 @@ object CypherFrontend {
 
     private def aggCol(e: Expr): Column = e match {
       case EAgg("count", None, _) => count(lit(1))
-      case EAgg("count", Some(EVar(v)), true) if relVars(v) =>
+      case EAgg("count", Some(EVar(v)), true) if resolve(v) == Rel =>
         // a relationship's identity is the full (src, type, dst) edge —
         // distinct on src alone would merge parallel edges. This is the
         // ENGINE's edge-identity contract (GraphStore.upsertEdges keys
@@ -2930,8 +2912,8 @@ object CypherFrontend {
         // edge frames that carry duplicate (src, type, dst) rows, where
         // Neo4j's per-relationship element ids would count each copy
         countDistinct(col(ns(v, "src_uid")), col(ns(v, "rel_type")), col(ns(v, "dst_uid")))
-      case EAgg("count", Some(a), true) => countDistinct(countableCol(a))
-      case EAgg("count", Some(a), false) => count(countableCol(a))
+      case EAgg("count", Some(a), true) => countDistinct(keyCol(a))
+      case EAgg("count", Some(a), false) => count(keyCol(a))
       case EAgg("collect", Some(a), d) =>
         val c = exprCol(a)
         if (d) collect_set(c) else collect_list(c)
@@ -2977,13 +2959,6 @@ object CypherFrontend {
       p
     }
 
-    /** count(n) counts bindings (nulls impossible for bound vars) —
-      * count the uid, not a struct, so codegen stays simple. */
-    private def countableCol(a: Expr): Column = a match {
-      case EVar(v) if !scalarVars(v) =>
-        col(ns(v, if (relVars(v)) "src_uid" else "uid"))
-      case other => exprCol(other)
-    }
   }
 
   /** Parse + compile a read-only Cypher query over `(nodes, edges)`.

@@ -2066,4 +2066,72 @@ class CypherFrontendSpec extends SparkSpec {
       .as[Seq[Boolean]].collect().toSeq
     assert(got === Seq(Seq(true, true)))
   }
+
+  // a -R-> b -R-> c: three nodes, two edges
+  private lazy val chain3: (DataFrame, DataFrame) = (
+    Seq(("A", "u:a", "a"), ("B", "u:b", "b"), ("C", "u:c", "c"))
+      .toDF("label", "uid", "name"),
+    Seq(("u:a", "R", "u:b"), ("u:b", "R", "u:c"))
+      .toDF("src_uid", "rel_type", "dst_uid"))
+  private def runChain3(cypher: String) = CypherFrontend.run(cypher, chain3._1, chain3._2)
+
+  /** A WITH ends the scope of every variable it does not project: each
+    * later reference is the compiler's refusal, as in Neo4j. */
+  private def assertDropped(v: String, cypher: String): Unit = {
+    val e = intercept[IllegalArgumentException](runChain3(cypher).collect())
+    assert(e.getMessage === s"Variable `$v` not defined", cypher)
+  }
+
+  test("scope: a scalar a WITH dropped is refused in ORDER BY") {
+    assertDropped("nm",
+      "MATCH (a:A) WITH a, a.name AS nm WITH a RETURN a.name AS n ORDER BY nm")
+  }
+
+  test("scope: a scalar a WITH dropped is refused in RETURN") {
+    assertDropped("nm", "MATCH (a:A) WITH a, a.name AS nm WITH a RETURN nm")
+  }
+
+  test("scope: a relationship a WITH dropped is refused, bare and in type()") {
+    assertDropped("r", "MATCH (a:A)-[r]->(b) WITH a RETURN r")
+    assertDropped("r", "MATCH (a:A)-[r]->(b) WITH a RETURN type(r) AS t")
+  }
+
+  test("scope: a fixed path a WITH dropped is refused in length()") {
+    assertDropped("p", "MATCH p = (a:A)-->(b) WITH a RETURN length(p) AS l")
+  }
+
+  test("scope: a shortestPath a WITH dropped is refused in length()") {
+    assertDropped("p",
+      "MATCH p = shortestPath((a:A)-[*..3]->(c:C)) WITH a RETURN length(p) AS l")
+  }
+
+  test("scope: a var-length relationship a WITH dropped is refused in size()") {
+    assertDropped("r", "MATCH (a:A)-[r*1..2]->(b) WITH a RETURN size(r) AS s")
+  }
+
+  test("scope: a node a WITH dropped is refused in a property read") {
+    assertDropped("b", "MATCH (a:A)-->(b) WITH a RETURN b.name AS n")
+  }
+
+  test("scope: a WITH may rebind a dropped relationship's name as a scalar") {
+    val got = runChain3("MATCH (a:A)-[r]->(b) WITH a, a.name AS r RETURN r")
+      .as[String].collect().toSeq
+    assert(got === Seq("a"))
+  }
+
+  test("scope: only a node or relationship variable has properties") {
+    // `p.len` used to read the shortestPath's hop-count scratch column
+    for (q <- Seq(
+        "MATCH p = shortestPath((a:A)-[*..3]->(c:C)) RETURN p.len AS x",
+        "MATCH (a:A)-[r*1..2]->(b) RETURN r.x AS x",
+        "MATCH (a:A) WITH a.name AS m RETURN m.x AS x")) {
+      val e = intercept[RuntimeException](runChain3(q).collect())
+      assert(e.getMessage.contains("only a node or relationship variable has properties"), q)
+    }
+  }
+
+  test("scope: a correlated CALL body sees only its imports") {
+    assertDropped("nm",
+      "MATCH (a:A) WITH a, a.name AS nm CALL { WITH a RETURN nm AS x } RETURN x")
+  }
 }
