@@ -1,21 +1,23 @@
 package graft.devtools
 
-/** Dev-only plan differential: for each SparkEntry query whose name
-  * matches one of the given regexes, print one JSON line
-  * `{"query": ..., "nodes": ..., "plan": ...}` — the optimized logical
-  * plan with expression ids (`#123`), plan ids and UUIDs (observation
-  * names) renumbered in order of first appearance, plus its node count;
-  * `{"query": ..., "error": ...}` when the query fails to build. Two
-  * builds' outputs are equal line for line exactly when every selected
-  * query compiles to the same optimized plan.
-  *
+import scala.collection.mutable
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.json4s.JObject
+import org.json4s.JsonDSL._
+import org.json4s.jackson.JsonMethods.{compact, render}
+
+/** Dev-only plan and job differential: for each SparkEntry query whose
+  * name matches one of the regexes, one JSON line: `build_jobs` (Spark
+  * jobs run while the frame is built), `jobs` (those plus one
+  * `collect`'s), and the optimized logical plan with expression ids,
+  * plan ids and UUIDs renumbered by first appearance, and its node
+  * count; or `error`. Jobs are counted on a warm repetition (caches
+  * cleared), so a first read's schema inference is not charged to
+  * whichever query runs first.
   * Usage: tools/run.sh graft.devtools.PlanDump <sfDir> <name-regex...>
-  *   e.g. `... PlanDump ../testdata/sf0.001 '^g' > plans.jsonl`
-  * Env: SPARK_GRAFT_CPUS (default 4).
-  *
-  * Building a query's DataFrame runs its eager stages (fixpoint loops,
-  * staged streams, localCheckpoints); the dumped plan is the returned
-  * frame's.
+  * (env SPARK_GRAFT_CPUS, default 4).
   */
 object PlanDump {
   private val ExprId = "#\\d+".r
@@ -26,7 +28,7 @@ object PlanDump {
     * rank of first appearance. */
   private def renumber(s: String, re: scala.util.matching.Regex,
                        tag: String => String): String = {
-    val seen = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+    val seen = mutable.LinkedHashMap.empty[String, Int]
     re.replaceAllIn(s, m => scala.util.matching.Regex.quoteReplacement(
       tag(m.group(0)) + seen.getOrElseUpdate(m.group(0), seen.size + 1)))
   }
@@ -37,32 +39,59 @@ object PlanDump {
     renumber(pids, Uuid, _ => "uuid-")
   }
 
-  private def json(s: String): String = s.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-    case '\t' => "\\t"; case '\r' => "\\r"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
+  /** Counts jobs through a public listener. [[drain]] runs a sentinel job
+    * in its own group and waits to see it start; the bus delivers in
+    * order, so every earlier job is counted by then (`Tracer`'s drain). */
+  private final class JobCount(sc: SparkContext) extends SparkListener {
+    private var jobs, sentinels = 0L
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "sentinel")) {
+        sentinels += 1
+        notifyAll()
+      } else jobs += 1
+    }
+    /** The jobs started before this call. */
+    def drain(): Long = {
+      val target = synchronized(sentinels) + 1
+      sc.setJobGroup("sentinel", "listener drain", interruptOnCancel = false)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000
+      synchronized {
+        while (sentinels < target) {
+          require(System.currentTimeMillis() < deadline, "listener drain timed out")
+          wait(1000)
+        }
+        jobs
+      }
+    }
   }
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: PlanDump <sfDir> <name-regex...>")
-    val sfDir = args(0)
     val filters = args.drop(1).map(_.r)
     val names = graft.SparkEntry.queries.keys.toSeq.sorted
       .filter(n => filters.exists(_.findFirstIn(n).isDefined))
     require(names.nonEmpty, s"no query matches ${args.drop(1).mkString(" ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = graft.core.GraftSession.local(cpus, "graft-plandump")
+    val spark = graft.core.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, "graft-plandump")
+    val count = new JobCount(spark.sparkContext)
+    spark.sparkContext.addSparkListener(count)
     names.foreach { name =>
-      // a query that fails to build is a record too, so a differential
-      // reports it instead of stopping
-      val rec = try {
-        val plan = graft.SparkEntry.queries(name)(spark, sfDir).queryExecution.optimizedPlan
-        s""""nodes": ${plan.collect { case p => p }.size}, "plan": "${json(normalize(plan.toString))}""""
-      } catch { case e: Exception => s""""error": "${json(String.valueOf(e.getMessage))}"""" }
-      println(s"""{"query": "$name", $rec}""")
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      val build = () => graft.SparkEntry.queries(name)(spark, args(0))
+      // a query that fails is a record too, so a differential reports it
+      val rec: JObject = try {
+        build().collect()
+        spark.catalog.clearCache()
+        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+        val j0 = count.drain()
+        val df = build()
+        val j1 = count.drain()
+        val plan = df.queryExecution.optimizedPlan
+        df.collect()
+        ("build_jobs" -> (j1 - j0)) ~ ("jobs" -> (count.drain() - j0)) ~
+          ("nodes" -> plan.collect { case p => p }.size) ~ ("plan" -> normalize(plan.toString))
+      } catch { case e: Exception => ("error" -> String.valueOf(e.getMessage)) }
+      println(compact(render(("query" -> name) ~ rec)))
     }
     spark.stop()
   }

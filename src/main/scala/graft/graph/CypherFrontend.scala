@@ -22,12 +22,13 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType,
   * unrolled joins — walk semantics, depth capped at 10 — and
   * unbounded `-[:R*]->` compiled to the `Traversal.reachFixpoint`
   * reachability closure, distinct pairs),
-  * `p = shortestPath((a)-[:T*..k]->(b))` with `length(p)` (bounded
-  * unrolled BFS: per-depth distinct level sets + one min-depth
-  * aggregate), general named paths `p = (a)-[:T*1..2]->(b)` whose
-  * `length(p)` is the walk's hop count (fixed hops count 1, a
-  * var-length hop its unrolled depth — a constant column per k-fold
-  * chain, zero data cost), per-clause
+  * `p = shortestPath((a)-[:T*lo..hi]->(b))` with `length(p)` and
+  * `RETURN p` (one rule for every form, `lo <= 1`: the seeded
+  * `Traversal.reachFixpointWitness` BFS to depth `hi`, or to the
+  * graph's depth for `*`), general named paths
+  * `p = (a)-[:T*1..2]->(b)` whose `length(p)` is the walk's hop count
+  * (fixed hops count 1, a var-length hop its unrolled depth — a
+  * constant column per k-fold chain, zero data cost), per-clause
   * `WHERE` with Cypher scoping (an OPTIONAL MATCH's predicate filters
   * its matches inside the left join, never the null-padded rows) over
   * comparisons / boolean ops / string
@@ -213,8 +214,9 @@ object CypherFrontend {
     * drop null-padded rows post-join). */
   private case class MatchClause(chains: Seq[Chain], optional: Boolean,
                                  where: Option[Pred],
-                                 /** `p = shortestPath((a)-[:T*..k]->(b))`:
-                                   * the bound path variable. */
+                                 /** `p = shortestPath((a)-[:T*lo..hi]->(b))`
+                                   * (lo <= 1, hi bounded or `*`): the
+                                   * bound path variable. */
                                  shortest: Option[String] = None,
                                  /** allShortestPaths: keep EVERY walk
                                    * tied at the min depth (one row per
@@ -504,12 +506,12 @@ object CypherFrontend {
           require(ch.hops.size == 1 && ch.hops.head._1.varLen.isDefined,
             "shortestPath needs exactly one var-length relationship, " +
               "e.g. shortestPath((a)-[:T*..4]->(b))")
-          require(ch.hops.head._1.varLen.get._2 != Unbounded ||
-              (ch.hops.head._1.varLen.get._1 <= 1 && !all),
-            (if (all) "allShortestPaths needs a bounded hop range " +
-              "(tied-path multiplicity rides the unrolled walks); use *..k"
-            else "shortestPath over an unbounded range needs lo <= 1 " +
-              "(min-depth pairs cannot skip shorter walks); use *..k"))
+          val (lo, hi) = ch.hops.head._1.varLen.get
+          if (all) require(hi != Unbounded, "allShortestPaths needs a bounded hop " +
+            "range (tied-path multiplicity rides the unrolled walks); use *..k")
+          // Neo4j too refuses a shortestPath minimal length other than 0 or 1
+          else require(lo <= 1, "shortestPath needs lo <= 1 " +
+            "(min-depth pairs cannot skip shorter walks); use *..k or *")
           // OPTIONAL shortestPath: the compiled (pairs, min-depth)
           // frame left-joins the pipeline like any optional clause —
           // unreachable endpoints null-pad r and length(p)
@@ -1312,8 +1314,8 @@ object CypherFrontend {
                                nodes: Seq[String], rels: Seq[String]) extends PathBinding
   /** A shortestPath / allShortestPaths path, or a named path with a
     * var-length hop: its interior is not per-row columns (the value
-    * rides the hop list or the level sets' lexicographic-min witness,
-    * [[Traversal.reachFixpointWitness]] when unbounded). */
+    * rides the hop list or, for shortestPath, the lexicographic-min
+    * witness of [[Traversal.reachFixpointWitness]]). */
   private case class WalkPath(lenCol: String, strCol: String) extends PathBinding
   /** The variable of a list comprehension, reduce() or quantifier body:
     * the higher-order function's element (or accumulator) column, and
@@ -1615,15 +1617,14 @@ object CypherFrontend {
       (df, chainScope)
     }
 
-    /** `p = shortestPath((a)-[:T*lo..hi]->(b))`: bounded unrolled BFS.
-      * Level sets are deduped per depth (distinct (from, to) pairs —
-      * path multiplicity is irrelevant to shortest-ness and without
-      * the dedup a diamond fan-out grows k^depth), depths unioned,
-      * then one min-depth hash aggregate per endpoint pair. Entirely
-      * declarative — Catalyst sees hi chained equi-joins + one
-      * aggregate; no driver iteration (the unbounded form is
-      * `graph.Traversal.reachFixpoint`). `length(p)` projects the
-      * min depth. Returns (df, the endpoints' and the path's bindings). */
+    /** `p = shortestPath((a)-[:T*lo..hi]->(b))` (lo <= 1): the seeded
+      * witness fixpoint [[Traversal.reachFixpointWitness]] to depth `hi`
+      * (to the graph's depth for `*`). BFS first reach is the min depth,
+      * so `length(p)` projects it, and each endpoint pair keeps the
+      * per-level min witness path string, which `RETURN p` projects.
+      * `allShortestPaths` instead keeps every walk tied at the min depth
+      * from the unrolled [[varReach]]. Returns (df, the endpoints' and
+      * the path's bindings). */
     private def compileShortest(ch: Chain, pv: String,
                                 all: Boolean = false): (DataFrame, Scope) = {
       val (rel, tailPat) = ch.hops.head
@@ -1632,24 +1633,24 @@ object CypherFrontend {
       val tailVar = tailPat.v.getOrElse(freshVar())
       require(headVar != tailVar, "shortestPath endpoints must be distinct variables")
       val headFrame = nodeSide(ch.head, headVar)
-      val headSeed = headFrame
-        .select(col(ns(headVar, "uid")).as(s"$pv$$from")).distinct()
+      val strCol = s"pathstr$$$pv"
+      val binds: Scope = Map(headVar -> Node, tailVar -> Node, pv -> WalkPath(s"$pv$$len", strCol))
       if (all) {
-        // allShortestPaths: EVERY walk tied at the pair's min depth —
-        // walk multiplicity from the unrolled varReach (no level
-        // dedup, SEEDED from the head set), one endpoint-pair window
-        // to find the min, one filter. Neo4j's cardinality: one row
-        // per tied shortest path. Hops materialize so `RETURN p`
-        // serializes each tied path (fixed-width structs — extra
-        // width, not extra rows).
+        // EVERY walk tied at the pair's min depth — walk multiplicity
+        // from the unrolled varReach (no level dedup, SEEDED from the
+        // head set), one endpoint-pair window to find the min, one
+        // filter. Neo4j's cardinality: one row per tied shortest path.
+        // Hops materialize so `RETURN p` serializes each tied path
+        // (fixed-width structs — extra width, not extra rows).
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(s"$pv$$from", s"$pv$$to")
+        val headSeed = headFrame
+          .select(col(ns(headVar, "uid")).as(s"$pv$$from")).distinct()
         val walks = varReach(rel, lo, hi, pv, withLen = true,
             withHops = true, seedFrom = Some(headSeed))
           .withColumn(s"$pv$$minlen", min(col(s"$pv$$len")).over(w))
           .filter(col(s"$pv$$len") === col(s"$pv$$minlen"))
           .drop(s"$pv$$minlen")
-        val strCol = s"pathstr$$$pv"
         val df = headFrame
           .join(walks, col(ns(headVar, "uid")) === col(s"$pv$$from"))
           .drop(s"$pv$$from")
@@ -1660,79 +1661,23 @@ object CypherFrontend {
               (acc, h) => concat(acc, lit("|"), h.getField("rel_type"),
                 lit("|"), h.getField("dst")))))
           .drop(s"$pv$$hops")
-        return (df, Map(headVar -> Node, tailVar -> Node,
-          pv -> WalkPath(s"$pv$$len", strCol)))
+        return (df, binds)
       }
       val (e, fromC, toC) = hopEdges(rel)
-      val e1 = e.select(col(fromC).as(s"$pv$$from"), col(toC).as(s"$pv$$to"),
-        col("rel_type").as(s"$pv$$rt")).distinct()
-      val strCol = s"pathstr$$$pv"
-      val reach =
-        if (hi == Unbounded)
-          // unbounded shortestPath: the witness-carrying reachability
-          // fixpoint — BFS level order + the visited-set anti-join
-          // guarantee first-reach = shortest, bounded only by the
-          // graph's diameter, and each (start, reached) pair carries
-          // the per-level lexicographic-min witness path string so
-          // `RETURN p` projects a real path value (the same greedy
-          // min-prefix composition the bounded level sets emit).
-          Traversal.reachFixpointWitness(e1.select(
-              col(s"$pv$$from").as("src_uid"), col(s"$pv$$to").as("dst_uid"),
-              col(s"$pv$$rt").as("rel_type"))
-              .distinct(),
-              // the closure is immediately joined to the head frame —
-              // seed the BFS with the head endpoint's uid set (the same
-              // hub-safe seeding the bounded level sets get for free)
-              seed = Some(headSeed.select(col(s"$pv$$from").as("src_uid"))))
-            .select(col("start").as(s"$pv$$from"),
-              col("reached").as(s"$pv$$to"), col("depth").as(s"$pv$$len"),
-              col("path").as(strCol))
-        else {
-          // level sets seeded from the head endpoint's node set: only
-          // walks FROM relevant sources enumerate (hub-safe). Each
-          // level carries ONE deterministic witness path string per
-          // (from, to) pair — the lexicographic min — so cardinality
-          // stays the deduped level set (groupBy replaces distinct,
-          // same shuffle) and `RETURN p` projects a real path value.
-          val pathAt1 = concat(col(s"$pv$$from"), lit("|"), col(s"$pv$$rt"),
-            lit("|"), col(s"$pv$$to"))
-          val e1s = e1.join(headSeed, Seq(s"$pv$$from"), "left_semi")
-            .withColumn(strCol, pathAt1)
-            .groupBy(s"$pv$$from", s"$pv$$to")
-            .agg(min(col(strCol)).as(strCol))
-          var step = e1s
-          var acc: Option[DataFrame] =
-            if (lo <= 1) Some(e1s.withColumn(s"$pv$$len", lit(1))) else None
-          for (k <- 2 to hi) {
-            step = step
-              .select(col(s"$pv$$from"), col(s"$pv$$to").as(s"$pv$$mid"),
-                col(strCol))
-              .join(e1.select(col(s"$pv$$from").as(s"$pv$$mid"),
-                col(s"$pv$$to"), col(s"$pv$$rt")), s"$pv$$mid")
-              .withColumn(strCol, concat(col(strCol), lit("|"),
-                col(s"$pv$$rt"), lit("|"), col(s"$pv$$to")))
-              .groupBy(s"$pv$$from", s"$pv$$to")
-              .agg(min(col(strCol)).as(strCol))
-            if (k >= lo) {
-              val lev = step.withColumn(s"$pv$$len", lit(k))
-              acc = Some(acc.fold(lev)(_.unionByName(lev)))
-            }
-          }
-          // min over (len, witness): the struct min compares depth
-          // first, then the string — one deterministic shortest path
-          acc.get.groupBy(s"$pv$$from", s"$pv$$to")
-            .agg(min(struct(col(s"$pv$$len"), col(strCol))).as(s"$pv$$w"))
-            .select(col(s"$pv$$from"), col(s"$pv$$to"),
-              col(s"$pv$$w").getField(s"$pv$$len").as(s"$pv$$len"),
-              col(s"$pv$$w").getField(strCol).as(strCol))
-        }
+      // the closure is joined to the head frame right away, so the BFS
+      // starts only from the head endpoint's uids (hub-safe)
+      val reach = Traversal.reachFixpointWitness(
+          e.select(col(fromC).as("src_uid"), col(toC).as("dst_uid"), col("rel_type")),
+          maxIter = hi,
+          seed = Some(headFrame.select(col(ns(headVar, "uid")).as("src_uid"))))
+        .select(col("start").as(s"$pv$$from"), col("reached").as(s"$pv$$to"),
+          col("depth").as(s"$pv$$len"), col("path").as(strCol))
       val df = headFrame
         .join(reach, col(ns(headVar, "uid")) === col(s"$pv$$from"))
         .drop(s"$pv$$from")
         .join(nodeSide(tailPat, tailVar), col(s"$pv$$to") === col(ns(tailVar, "uid")))
         .drop(s"$pv$$to")
-      // unbounded too: the witness fixpoint carries the value
-      (df, Map(headVar -> Node, tailVar -> Node, pv -> WalkPath(s"$pv$$len", strCol)))
+      (df, binds)
     }
 
     /** (from, to) pairs reachable by lo..hi chained hops of `rel`'s
@@ -1781,18 +1726,34 @@ object CypherFrontend {
       acc.get
     }
 
-    /** Join `right` (a clause's frame) to `left` on shared variable
-      * uids; duplicated shared-var columns are renamed with an exact
-      * marker set (never a suffix heuristic — user property names may
-      * end in any suffix) and dropped after the join. `extraCond`
-      * rides the join condition itself (the OPTIONAL WHERE). */
+    /** The pattern variables scopes `a` and `b` both bind, name-sorted,
+      * with their bindings; a name that is a node on one side and a
+      * relationship on the other is refused. */
+    private def sharedVars(a: Scope, b: Scope): Seq[(String, Binding)] =
+      (patternVars(a) & patternVars(b)).toSeq.sorted.map { v =>
+        require(a(v) == b(v), s"`$v` is bound both as a node and as a relationship")
+        v -> a(v)
+      }
+
+    /** Join `right` (a clause's frame) to `left` on the identity of each
+      * shared variable: a node's uid, a relationship's (src_uid,
+      * rel_type, dst_uid) — the `GraphStore.upsertEdges` MERGE key, in
+      * walk orientation for an undirected match. Duplicated shared-var
+      * columns are renamed with an exact marker set (never a suffix
+      * heuristic — user property names may end in any suffix) and
+      * dropped after the join. `extraCond` rides the join condition
+      * itself (the OPTIONAL WHERE). */
     private def joinOnShared(left: DataFrame, right: DataFrame,
-                             shared: Seq[String], joinType: String,
+                             shared: Seq[(String, Binding)], joinType: String,
                              extraCond: Option[DataFrame => Column]): DataFrame = {
-      val dupCols = right.columns.filter(c => shared.exists(v => c.startsWith(v + "$")))
+      val dupCols = right.columns.filter(c =>
+        shared.exists { case (v, _) => c.startsWith(v + "$") })
       val renamed = dupCols.foldLeft(right)((d, c) => d.withColumnRenamed(c, c + "#dup"))
-      var cond = shared.map(v => left(ns(v, "uid")) === renamed(ns(v, "uid") + "#dup"))
-        .reduce(_ && _)
+      val keys = shared.flatMap {
+        case (v, Rel) => Seq("src_uid", "rel_type", "dst_uid").map(ns(v, _))
+        case (v, _) => Seq(ns(v, "uid"))
+      }
+      var cond = keys.map(k => left(k) === renamed(k + "#dup")).reduce(_ && _)
       extraCond.foreach(f => cond = cond && f(renamed))
       left.join(renamed, cond, joinType).drop(dupCols.map(_ + "#dup").toSeq: _*)
     }
@@ -1840,21 +1801,20 @@ object CypherFrontend {
         }
         cl.chains.tail.foreach { ch =>
           val (chDf, chScope) = compileChain(ch)
-          val (cvars, chVars) = (patternVars(cscope), patternVars(chScope))
-          val shared = (cvars & chVars).toSeq.sorted
+          val shared = sharedVars(cscope, chScope)
           if (shared.isEmpty) {
             // legal only when the clause WHERE correlates the chains
             // (pattern predicate spanning both / EXISTS {} touching
             // both) — applied right after the join below
-            require(cl.where.exists(p => predLinks(p, cvars, chVars)),
+            require(cl.where.exists(p =>
+                predLinks(p, patternVars(cscope), patternVars(chScope))),
               "disconnected comma patterns would be a cross product; " +
                 "share a variable or correlate them in WHERE")
             cdf = cdf.crossJoin(chDf)
           } else cdf = joinOnShared(cdf, chDf, shared, "inner", None)
           cscope ++= chScope
         }
-        val (pipeVars, clauseVars) = (patternVars(scope), patternVars(cscope))
-        val shared = (pipeVars & clauseVars).toSeq.sorted
+        val shared = sharedVars(scope, cscope)
         if (df != null && shared.isEmpty) {
           // no shared pattern variable: legal only when the clause's
           // WHERE correlates it to the pipeline's scalar columns
@@ -1864,7 +1824,7 @@ object CypherFrontend {
           require(!cl.optional,
             "OPTIONAL MATCH needs a shared variable with the rows so far")
           require(cl.where.exists(refsScalar) ||
-              cl.where.exists(p => predLinks(p, pipeVars, clauseVars)),
+              cl.where.exists(p => predLinks(p, patternVars(scope), patternVars(cscope))),
             "disconnected MATCH patterns would be a cross product; " +
               "share a variable or correlate via WHERE on a WITH/UNWIND " +
               "alias or a pattern predicate spanning both")
@@ -2176,7 +2136,7 @@ object CypherFrontend {
       var (cdf, cscope) = compileChain(chains.head)
       chains.tail.foreach { ch =>
         val (chDf, chScope) = compileChain(ch)
-        val shared = (patternVars(cscope) & patternVars(chScope)).toSeq.sorted
+        val shared = sharedVars(cscope, chScope)
         require(shared.nonEmpty,
           s"disconnected $what patterns would be a cross product; share a variable")
         cdf = joinOnShared(cdf, chDf, shared, "inner", None)

@@ -30,9 +30,12 @@ import graft.core.ObservedCheckpoint
   *    before this loop starts.
   * Both paths apply the same rules level by level: a visited-set
   * anti-join on (start, reached), so first reach = min depth and cyclic
-  * graphs terminate (SURVEY §7 hard-part 5); SQL key equality (a null
-  * endpoint never joins); and, for witnesses, the per-level min path
-  * string in Spark's `min` order (UTF-8 bytes).
+  * graphs terminate (SURVEY §7 hard-part 5); and, for witnesses, the
+  * per-level min path string in Spark's `min` order (UTF-8 bytes). An
+  * edge with a null endpoint is dropped before level 1: a null key joins
+  * no node, and a null start would never enter the visited set, so a
+  * walk from it around a cycle would not end. Depth is bounded by the
+  * graph unless the caller passes `maxIter`.
   *
   * Scale notes: the join loop shuffles the frontier on dst each round;
   * at 100 TB the edge table would be bucketed by src_uid so each
@@ -49,11 +52,12 @@ object Traversal {
     * anyway (computing all-pairs reach from every node of a 100 TB
     * graph to then keep three sources is the textbook wasted pass,
     * guide §1.2). Results for seeded starts are identical to the
-    * unseeded closure's rows for those starts.
+    * unseeded closure's rows for those starts. `maxIter` caps the
+    * depth (the default: the graph's depth).
     */
-  def reachFixpoint(edges: DataFrame, maxIter: Int = 50,
+  def reachFixpoint(edges: DataFrame, maxIter: Int = Int.MaxValue,
                     seed: Option[DataFrame] = None): DataFrame = {
-    val e0 = edges.select(col("src_uid"), col("dst_uid"))
+    val e0 = keyed(edges.select(col("src_uid"), col("dst_uid")))
     def firstLevel(e: DataFrame) = seeded(e, seed).select(col("src_uid").as("start"),
       col("dst_uid").as("reached"), lit(1).as("depth"))
     driverReach(e0, seed, maxIter, firstLevel(e0).schema, witness = false).getOrElse(
@@ -67,20 +71,19 @@ object Traversal {
 
   /** [[reachFixpoint]] variant that also carries ONE deterministic
     * witness path per (start, reached) pair — the per-level
-    * lexicographic-min serialization `uid|rel_type|uid|…` — so
-    * `RETURN p` on an UNBOUNDED shortestPath projects a real path
-    * value. Input edges need (src_uid, dst_uid, rel_type). Semantics
-    * match the bounded level-set form: BFS first-reach = min depth
-    * (subpaths of shortest paths are shortest, so extending only the
-    * newly-reached frontier loses no witness), and within the
-    * first-reach level the groupBy min picks the same greedy
-    * min-prefix-composition witness the bounded compiler emits. The
-    * groupBy REPLACES the dropDuplicates of the plain fixpoint — same
-    * shuffle count per round, one string min-agg on top.
+    * lexicographic-min serialization `uid|rel_type|uid|…` — the value
+    * `RETURN p` projects for every Cypher `shortestPath`. Input edges
+    * need (src_uid, dst_uid, rel_type). BFS first reach = min depth, and
+    * a prefix of a shortest path is itself shortest, so extending only
+    * the newly reached frontier loses no witness: a pair's witness is
+    * the min, at its first-reach depth, over the extensions of the
+    * previous level's witnesses. The groupBy REPLACES the
+    * dropDuplicates of the plain fixpoint — same shuffle count per
+    * round, one string min-agg on top.
     */
-  def reachFixpointWitness(edges: DataFrame, maxIter: Int = 50,
+  def reachFixpointWitness(edges: DataFrame, maxIter: Int = Int.MaxValue,
                            seed: Option[DataFrame] = None): DataFrame = {
-    val e0 = edges.select(col("src_uid"), col("dst_uid"), col("rel_type"))
+    val e0 = keyed(edges.select(col("src_uid"), col("dst_uid"), col("rel_type")))
     def minPath(df: DataFrame, depth: Int): DataFrame =
       df.groupBy("start", "reached").agg(min(col("path")).as("path"))
         .withColumn("depth", lit(depth))
@@ -136,6 +139,10 @@ object Traversal {
     acc
   }
 
+  /** The edges with both endpoints set. */
+  private def keyed(e: DataFrame): DataFrame =
+    e.filter(col("src_uid").isNotNull && col("dst_uid").isNotNull)
+
   /** The level-1 edges: every edge, or only those leaving a seed node. */
   private def seeded(e: DataFrame, seed: Option[DataFrame]): DataFrame =
     seed.fold(e)(sd =>
@@ -172,16 +179,16 @@ object Traversal {
     val startSet = starts.map(_.get(0)).toSet
     val edgeList = edgeRows.toSeq.map(r =>
       (r.get(0), r.get(1), if (witness) utf8(r.get(2)) else null))
-    val adj = edgeList.filter(_._1 != null).groupBy(_._1)
+    val adj = edgeList.groupBy(_._1)
 
     type Hop = (Any, Any, UTF8String) // (start, reached, path)
     def sep(p: UTF8String, rel: UTF8String, d: Any): UTF8String =
-      if (p == null || rel == null || d == null) null
+      if (p == null || rel == null) null
       else UTF8String.concat(p, UTF8String.fromString("|"), rel,
         UTF8String.fromString("|"), utf8(d))
-    /** `hops` as (start, reached) groups, null-safe like Spark's
-      * groupBy, keeping the min non-null path as Spark's `min` does;
-      * each new group is charged to the budget, None once it is spent. */
+    /** `hops` as (start, reached) groups, keeping the min non-null path
+      * as Spark's `min` does; each new group is charged to the budget,
+      * None once it is spent. */
     def collapse(hops: Iterator[Hop]): Option[Vector[Hop]] = {
       val best = mutable.LinkedHashMap.empty[(Any, Any), UTF8String]
       while (hops.hasNext) {
@@ -199,7 +206,7 @@ object Traversal {
     }
 
     val level1 = edgeList.iterator
-      .filter(t => seed.isEmpty || (t._1 != null && startSet.contains(t._1)))
+      .filter(t => seed.isEmpty || startSet.contains(t._1))
       .map { case (s, d, rel) => (s, d, if (witness) sep(utf8(s), rel, d) else null) }
     var frontier: Seq[Hop] =
       if (witness) collapse(level1).getOrElse(return None)
@@ -214,15 +221,15 @@ object Traversal {
     def emit(level: Seq[Hop], depth: Int): Unit = level.foreach { case (s, r, p) =>
       out += (if (witness) Row(s, r, if (p == null) null else p.toString, depth)
               else Row(s, r, depth))
-      if (s != null && r != null) visited += ((s, r))
+      visited += ((s, r))
     }
     emit(frontier, 1)
     var i = 1
     while (i < maxIter && frontier.nonEmpty) {
       val next = collapse(for {
-        (s, r, p) <- frontier.iterator if r != null
+        (s, r, p) <- frontier.iterator
         (_, d, rel) <- adj.getOrElse(r, Nil).iterator
-        if s == null || d == null || !visited.contains((s, d))
+        if !visited.contains((s, d))
       } yield (s, d, if (witness) sep(p, rel, d) else null)).getOrElse(return None)
       if (next.nonEmpty) { i += 1; emit(next, i) }
       frontier = next

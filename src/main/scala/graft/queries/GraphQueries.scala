@@ -1081,11 +1081,12 @@ object GraphQueries extends QueryPack {
         |ORDER BY prefix""".stripMargin,
       nodes(s, dir), edges(s, dir))
 
-  /** g39 — `shortestPath` in Cypher text: bounded unrolled BFS
-    * (per-depth distinct level sets, one min-depth aggregate) joined to
-    * both endpoint scans. The census below is fully determined by the
-    * schema: customers/suppliers sit 2 hops from their region (1 from
-    * their nation), nations 1 hop — min depth, not walk multiplicity. */
+  /** g39 — `shortestPath` in Cypher text: the head-seeded witness BFS
+    * of [[graft.graph.Traversal.reachFixpointWitness]] to depth 3, whose
+    * first reach is the min depth, joined to both endpoint scans. The
+    * census below is fully determined by the schema:
+    * customers/suppliers sit 2 hops from their region (1 from their
+    * nation), nations 1 hop — min depth, not walk multiplicity. */
   def g39CypherShortestPath(s: SparkSession, dir: String): DataFrame =
     graft.graph.CypherFrontend.run(
       """MATCH p = shortestPath((a)-[:IN_NATION|IN_REGION*..3]->(r:Region))
@@ -1998,8 +1999,9 @@ object GraphQueries extends QueryPack {
     * `uid|rel_type|uid|…` in walk order (the g43 law's `|`-join;
     * direction rides the order). Fixed-length paths are pure column
     * concat; var-length paths fold the materialized hop list — no
-    * extra joins either way. shortestPath values stay refused (only
-    * min-depth is materialized). */
+    * extra joins either way. A shortestPath projects the BFS witness
+    * of [[graft.graph.Traversal.reachFixpointWitness]]: the
+    * lexicographic-min path at the pair's first-reach depth. */
   def g81CypherReturnPath(s: SparkSession, dir: String): DataFrame =
     graft.graph.CypherFrontend.run(
       """MATCH p = (c:Customer)-[*2..2]->(r:Region)
@@ -2052,8 +2054,8 @@ object GraphQueries extends QueryPack {
     * ([[graft.graph.Traversal.reachFixpointWitness]]) carries the
     * per-level lexicographic-min serialization through the BFS, so
     * `shortestPath((a)-[*]->(b))` projects a real path value at its
-    * first-reach depth — the same greedy min-prefix witness the
-    * bounded level sets emit. Over the Customer→Nation→Region forest
+    * first-reach depth — the one witness rule of every shortestPath,
+    * bounded or not. Over the Customer→Nation→Region forest
     * each source has exactly ONE walk to its region, so the oracle
     * rebuilds the identical strings with plain dimension joins; the
     * multi-path tie-break (min witness at the shortest depth) is

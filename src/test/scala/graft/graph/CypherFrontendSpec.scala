@@ -123,14 +123,48 @@ class CypherFrontendSpec extends SparkSpec {
       "MATCH p = shortestPath((a:Cat)-[:CHILD_OF*2..]->(b)) RETURN length(p)",
       chainNodes, chainEdges))
     assert(bad.getMessage.contains("lo <= 1"))
+    // one rule for every shortestPath: a bounded lo > 1 is refused too
+    val badBounded = intercept[IllegalArgumentException](CypherFrontend.run(
+      "MATCH p = shortestPath((a:Cat)-[:CHILD_OF*2..3]->(b)) RETURN length(p)",
+      chainNodes, chainEdges))
+    assert(badBounded.getMessage.contains("lo <= 1"))
+  }
+
+  test("unbounded means unbounded: [*], *2.. and shortestPath(*) walk a 60-node chain to its end") {
+    val n = 60
+    val lineNodes = (0 until n).map(i => ("N", s"u$i", s"n$i")).toDF("label", "uid", "name")
+    val lineEdges = (0 until n - 1).map(i => (s"u$i", "R", s"u${i + 1}"))
+      .toDF("src_uid", "rel_type", "dst_uid")
+    def one(cypher: String): Long =
+      CypherFrontend.run(cypher, lineNodes, lineEdges).as[Long].head()
+    assert(one("MATCH (a:N {name: 'n0'})-[*]->(b) RETURN count(*) AS c") === n - 1L)
+    assert(one("MATCH (a:N {name: 'n0'})-[*2..]->(b) RETURN count(*) AS c") === n - 2L)
+    val sp = CypherFrontend.run(
+      """MATCH p = shortestPath((a:N {name: 'n0'})-[*]->(b))
+        |RETURN count(*) AS c, max(length(p)) AS m""".stripMargin,
+      lineNodes, lineEdges).as[(Long, Long)].head()
+    assert(sp === ((n - 1L, n - 1L)))
+  }
+
+  test("a relationship variable shared between clauses or comma chains joins on the edge's identity") {
+    val ns2 = Seq(("N", "u:a", "a"), ("N", "u:b", "b"), ("N", "u:c", "c"))
+      .toDF("label", "uid", "name")
+    val es2 = Seq(("u:a", "R", "u:b"), ("u:b", "R", "u:c")).toDF("src_uid", "rel_type", "dst_uid")
+    for (q <- Seq(
+        "MATCH (a)-[r]->(b) MATCH (c)-[r]->(d) RETURN count(*) AS c",
+        "MATCH (a)-[r]->(b), (c)-[r]->(d) RETURN count(*) AS c"))
+      assert(CypherFrontend.run(q, ns2, es2).as[Long].head() === 2L, q)
+    // a name bound as a relationship cannot be rebound as a node
+    val clash = intercept[IllegalArgumentException](CypherFrontend.run(
+      "MATCH (a)-[r]->(b) MATCH (r) RETURN count(*) AS c", ns2, es2))
+    assert(clash.getMessage.contains("both as a node and as a relationship"))
   }
 
   test("unbounded shortestPath RETURN p: witness at first-reach depth, diamond tie-break = min witness, ≡ bounded form") {
     // A->B->C->D plus the A->X->C / A->Y->C diamond: three tied 2-hop
     // shortest paths A~>C must collapse to ONE deterministic witness —
     // the lexicographic min (via u:b) — and D's witness composes from
-    // C's elected prefix (greedy min-prefix composition, the same rule
-    // the bounded level sets apply).
+    // C's elected prefix (greedy min-prefix composition).
     val q = (range: String) =>
       s"""MATCH p = shortestPath((a:Cat {name: 'A'})-[:CHILD_OF$range]->(b:Cat))
          |RETURN b.name AS n, p AS path ORDER BY n""".stripMargin
@@ -142,7 +176,7 @@ class CypherFrontendSpec extends SparkSpec {
       ("D", "u:a|CHILD_OF|u:b|CHILD_OF|u:c|CHILD_OF|u:d"),
       ("X", "u:a|CHILD_OF|u:x"),
       ("Y", "u:a|CHILD_OF|u:y")))
-    // the bounded unrolled-BFS form elects the identical witnesses
+    // the bounded form, capped at depth 3, elects the identical witnesses
     val bounded = CypherFrontend.run(q("*..3"), chainNodes, chainEdges)
       .as[(String, String)].collect().toSeq
     assert(bounded === unbounded)
@@ -374,28 +408,37 @@ class CypherFrontendSpec extends SparkSpec {
         .orderBy("target").as[(String, Long)].collect().toSeq
       assert(cyG === direct, s"grouped hop diverged on graph: $ns / $es")
 
-      // shortestPath == reference BFS on the materialized graph
-      val cyS = CypherFrontend.run(
+      // shortestPath == reference BFS on the materialized graph: the
+      // min depth, and as witness the UTF-8-minimal extension of the
+      // previous depth's witnesses
+      def cyS() = CypherFrontend.run(
         """MATCH p = shortestPath((a:A)-[:R|S*..4]->(b:B))
-          |RETURN a.uid AS src, b.uid AS dst, length(p) AS len""".stripMargin,
-        nodesDf, edgesDf).as[(String, String, Int)].collect().toSet
-      val adj = es.groupBy(_._1).map { case (k, v) => k -> v.map(_._3).distinct }
-      def bfs(start: String): Map[String, Int] = {
-        var dist = Map(start -> 0)
-        var frontier = Seq(start)
+          |RETURN a.uid AS src, b.uid AS dst, length(p) AS len, p AS path""".stripMargin,
+        nodesDf, edgesDf).as[(String, String, Int, String)].collect().toSet
+      def utf8Min(x: String, y: String): String =
+        if (java.util.Arrays.compareUnsigned(x.getBytes("UTF-8"), y.getBytes("UTF-8")) <= 0) x
+        else y
+      def bfs(start: String): Map[String, (Int, String)] = {
+        var reached = Map(start -> ((0, start)))
+        var frontier = Map(start -> start)
         for (d <- 1 to 4) {
-          frontier = frontier.flatMap(u => adj.getOrElse(u, Seq.empty))
-            .distinct.filterNot(dist.contains)
-          frontier.foreach(v => dist += (v -> d))
+          frontier = frontier.toSeq.flatMap { case (u, w) =>
+            es.collect { case (`u`, rel, v) if !reached.contains(v) => v -> s"$w|$rel|$v" }
+          }.groupMapReduce(_._1)(_._2)(utf8Min)
+          frontier.foreach { case (v, w) => reached += v -> ((d, w)) }
         }
-        dist
+        reached
       }
       val labelOf = ns.map(n => n._2 -> n._1).toMap
       val expected = (for {
         a <- ns if a._1 == "A"
-        (b, d) <- bfs(a._2) if d >= 1 && labelOf(b) == "B"
-      } yield (a._2, b, d)).toSet
-      assert(cyS === expected, s"shortestPath diverged on graph: $ns / $es")
+        (b, (d, w)) <- bfs(a._2) if d >= 1 && labelOf(b) == "B"
+      } yield (a._2, b, d, w)).toSet
+      assert(cyS() === expected, s"shortestPath diverged on graph: $ns / $es")
+      // the same rows from the distributed level loop
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try assert(cyS() === expected, s"shortestPath loop diverged on graph: $ns / $es")
+      finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
   }
 

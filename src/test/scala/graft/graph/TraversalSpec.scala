@@ -40,7 +40,7 @@ class TraversalSpec extends SparkSpec {
   /** Both paths of both closures on `pairs` (rel_type R on every edge):
     * the plain rows, and the witness rows. */
   private def reach(pairs: Seq[(String, String)], seed: Seq[String] = Nil,
-                    maxIter: Int = 50): (Set[Seq[Any]], Set[Seq[Any]]) = {
+                    maxIter: Int = Int.MaxValue): (Set[Seq[Any]], Set[Seq[Any]]) = {
     val edges = pairs.map { case (a, b) => (a, b, "R") }.toDF("src_uid", "dst_uid", "rel_type")
     val sd = if (seed.isEmpty) None else Some(seed.toDF("src_uid"))
     val (pd, pl) = bothPaths(Traversal.reachFixpoint(edges, maxIter, sd))
@@ -76,6 +76,13 @@ class TraversalSpec extends SparkSpec {
       Set("n0|R|n1|R|n2|R|n3"))
     val (capped, _) = reach(chain, maxIter = 2)
     assert(capped === all.filter(_(2).asInstanceOf[Int] <= 2))
+  }
+
+  test("an edge from a null start into a cycle is dropped, and the walk ends") {
+    val (got, paths) = reach(Seq((null, "a"), ("a", "b"), ("b", "a")))
+    assert(got === Set(
+      Seq("a", "b", 1), Seq("a", "a", 2), Seq("b", "a", 1), Seq("b", "b", 2)))
+    assert(paths.map(_(2)) === Set("a|R|b", "a|R|b|R|a", "b|R|a", "b|R|a|R|b"))
   }
 
   test("self-loop: a node reaches itself at depth 1, and nothing loops") {
