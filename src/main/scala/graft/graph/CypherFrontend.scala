@@ -113,19 +113,11 @@ object CypherFrontend {
   /** `v {.k1, .k2}` map projection — the selected subset of
     * properties(v), same string-valued map contract. */
   private case class EMapProj(v: String, keys: Seq[String]) extends Expr
-  /** `COUNT { (v)-[:T]->(:L) }` subquery expression (Neo4j 5's
-    * counting sibling of EXISTS {}): the per-row match count of the
-    * pattern. Compiles to a pre-joined per-uid count column —
-    * one grouped count of the (label-filtered) edge set, one left
-    * join, coalesce 0. */
-  private case class ECountSub(v: String, types: Seq[String], forward: Boolean,
-                               targetLabel: Option[String],
-                               undirected: Boolean = false) extends Expr
-  /** `COUNT { (a)-[:X]->(b)-[:Y]->(c) [, chains] [WHERE pred] }` —
-    * the multi-hop counting subquery: the number of MATCHES (walks)
-    * of the pattern per binding of the shared variables. Compiles to
-    * one grouped count of the compiled pattern frame, left-joined on
-    * the shared keys (zero for no matches). */
+  /** `COUNT { [MATCH] chains [WHERE pred] }` (Neo4j 5's counting
+    * sibling of EXISTS {}): the number of MATCHES (walks) of the
+    * pattern per binding of the shared variables. Compiles to one
+    * grouped count of the matched frame ([[Compiler]]'s `chainFrame`),
+    * left-joined on the shared keys (zero for no matches). */
   private case class ECountChain(chains: Seq[Chain], where: Option[Pred]) extends Expr
   /** `COLLECT { [MATCH] chains [WHERE p] RETURN expr [ORDER BY ...]
     * [LIMIT n] }` (Neo4j 5.6's list-building subquery): the inner
@@ -166,24 +158,16 @@ object CypherFrontend {
   /** `e IN list` — literal/param lists compile to `isin` (pushdown-
     * friendly), column-valued lists to `array_contains`. */
   private case class PIn(l: Expr, r: Expr) extends Pred
-  /** Single-hop pattern predicate `(v)-[:T]->(target)`. `targetVar`
-    * is the target's variable name when one is written — if that
-    * variable is BOUND in the outer frame the predicate correlates
-    * both endpoints (edge-pair probe); unbound names are existential
-    * (same as `()`). */
-  private case class PPattern(v: String, types: Seq[String], forward: Boolean,
-                              targetLabel: Option[String],
-                              undirected: Boolean = false,
-                              targetVar: Option[String] = None) extends Pred
   /** `n:Label` label predicate in WHERE. */
   private case class PHasLabel(v: String, label: String) extends Pred
-  /** `EXISTS { (a)-[:X]->(b)-[:Y]->(c) [, chains] [WHERE pred] }` —
-    * the MULTI-HOP existential subquery (single-hop keeps the
-    * [[PPattern]] fast path). Compiles to a semi/anti join of the
-    * compiled pattern frame on every variable shared with the outer
-    * scope. Same walk semantics as MATCH (no relationship-uniqueness
-    * constraint — the engine-wide divergence documented for
-    * var-length paths). */
+  /** Every pattern subquery in predicate position: the bare pattern
+    * predicate `(a)-[:X]->(b)`, `exists((...))` and `EXISTS { [MATCH]
+    * chains [WHERE pred] }`. Compiles to a semi/anti join (or a flag
+    * column) of the matched frame ([[Compiler]]'s `chainFrame`) on every
+    * variable shared with the outer scope: a bound variable correlates,
+    * an unbound one is existential. Same walk semantics as MATCH (no
+    * relationship-uniqueness constraint — the engine-wide divergence
+    * documented for var-length paths). */
   private case class PExistsChain(chains: Seq[Chain], where: Option[Pred]) extends Pred
   /** `all/any/none/single(x IN list WHERE p)` quantified list
     * predicates — compile to a size() over the `filter` higher-order
@@ -288,8 +272,8 @@ object CypherFrontend {
   /** `t` with `f` applied to each of its direct children — the one place
     * the shape of [[Expr]] and [[Pred]] is spelled out. `f` must map an
     * expression to an expression and a predicate to a predicate.
-    * Subquery terms ([[PPattern]], [[PExistsChain]], [[ECountSub]],
-    * [[ECountChain]], [[ECollect]]) are leaves: their chains and inner
+    * Subquery terms ([[PExistsChain]], [[ECountChain]], [[ECollect]])
+    * are leaves: their chains and inner
     * WHERE / RETURN compile in their own frame (`chainFrame`), not in the
     * enclosing scope. */
   private def mapChildren(t: Term)(f: Term => Term): Term = {
@@ -320,8 +304,8 @@ object CypherFrontend {
       case PBoolE(x) => PBoolE(e(x))
       case PQuant(q, v, l, w) => PQuant(q, v, e(l), p(w))
       case _: EVar | _: EProp | _: ELit | _: EParam | _: ELabels0 | _: EType |
-           _: EMapProj | _: ECountSub | _: ECountChain | _: ECollect |
-           _: PPattern | _: PHasLabel | _: PExistsChain => t
+           _: EMapProj | _: ECountChain | _: ECollect | _: PHasLabel |
+           _: PExistsChain => t
     }
   }
 
@@ -351,8 +335,6 @@ object CypherFrontend {
       cs.flatMap(c => c.head.v.toSeq ++
         c.hops.flatMap { case (r, n) => r.v.toSeq ++ n.v.toSeq }).toSet
     t match {
-      case pp: PPattern => Some(Set(pp.v) ++ pp.targetVar)
-      case cs: ECountSub => Some(Set(cs.v))
       case PExistsChain(cs, _) => Some(chainVars(cs))
       case ECountChain(cs, _) => Some(chainVars(cs))
       case ec: ECollect => Some(chainVars(ec.chains))
@@ -898,17 +880,8 @@ object CypherFrontend {
         // back to the legacy property-existence function.
         pos += 1; eatSym("(")
         val save = pos
-        val asPattern: Option[Expr] = patternPredOpt() match {
-          case Some(p) if atSym(")") => Some(EPredVal(p))
-          case _ =>
-            pos = save
-            scala.util.Try {
-              val ch = chain(); require(ch.hops.nonEmpty, "not a pattern"); ch
-            }.toOption.filter(_ => atSym(")"))
-              .map(ch => EPredVal(PExistsChain(Seq(ch), None)))
-        }
-        asPattern match {
-          case Some(e) => eatSym(")"); e
+        patternOpt().filter(_ => atSym(")")) match {
+          case Some(ch) => eatSym(")"); EPredVal(PExistsChain(Seq(ch), None))
           case None =>
             pos = save
             val a = expr(); eatSym(")")
@@ -925,43 +898,23 @@ object CypherFrontend {
       case Some(TId(fn)) if fn.equalsIgnoreCase("count")
           && toks.lift(pos + 1).exists(_.text == "{") =>
         // COUNT { ... } subquery expression — EXISTS's counting
-        // sibling: the single-hop form keeps its degree-table fast
-        // path; multi-hop chains / comma patterns / an inner WHERE
-        // parse as a full counting pattern subquery
-        pos += 1; eatSym("{")
-        if (atKw("MATCH")) eatKw("MATCH")
-        val save = pos
-        val fast = patternPredOpt() match {
-          // a named target (bound or not) routes through the chain
-          // form, which binds shared variables correctly
-          case Some(PPattern(cv, ct, cf, ctl, cund, None)) if atSym("}") =>
-            eatSym("}"); Some(ECountSub(cv, ct, cf, ctl, cund))
-          case _ => pos = save; None
-        }
-        fast.getOrElse {
-          val cs = Seq.newBuilder[Chain]
-          cs += chain()
-          while (atSym(",")) { eatSym(","); cs += chain() }
-          val w = if (atKw("WHERE")) { eatKw("WHERE"); Some(pred()) } else None
-          eatSym("}")
-          ECountChain(cs.result(), w)
-        }
+        // sibling, the same braced pattern body
+        pos += 1
+        val (cs, w) = subqueryBody()
+        eatSym("}")
+        ECountChain(cs, w)
       case Some(TId(fn)) if fn.equalsIgnoreCase("collect")
           && toks.lift(pos + 1).exists(_.text == "{") =>
         // COLLECT { ... RETURN expr } subquery expression — the
         // list-building sibling of COUNT {}
-        pos += 1; eatSym("{")
-        if (atKw("MATCH")) eatKw("MATCH")
-        val cs = Seq.newBuilder[Chain]
-        cs += chain()
-        while (atSym(",")) { eatSym(","); cs += chain() }
-        val w = if (atKw("WHERE")) { eatKw("WHERE"); Some(pred()) } else None
+        pos += 1
+        val (cs, w) = subqueryBody()
         eatKw("RETURN")
         val ret = expr()
         val ob = orderBy()
         val lim = if (atKw("LIMIT")) { eatKw("LIMIT"); Some(num()) } else None
         eatSym("}")
-        ECollect(cs.result(), w, ret, ob, lim)
+        ECollect(cs, w, ret, ob, lim)
       case Some(TId(fn)) if Set("count", "sum", "min", "max", "avg", "collect",
           "stdev", "stdevp")(fn.toLowerCase)
           && toks.lift(pos + 1).exists(_.text == "(") =>
@@ -1110,23 +1063,10 @@ object CypherFrontend {
       // braced form of the bare pattern predicate (Neo4j 5 deprecates
       // the bare form); compiles to the same semi/anti join
       if (atKw("EXISTS") && toks.lift(pos + 1).exists(_.text == "{")) {
-        eatKw("EXISTS"); eatSym("{")
-        if (atKw("MATCH")) eatKw("MATCH") // EXISTS { MATCH ... } long form
-        // single-hop (v)-[:T]->(:L) keeps the PPattern fast path
-        // (semi-join on one distinct endpoint set); anything longer —
-        // multi-hop chains, comma patterns, an inner WHERE — parses
-        // as a full existential pattern subquery
-        val save = pos
-        patternPredOpt() match {
-          case Some(p) if atSym("}") => eatSym("}"); return p
-          case _ => pos = save
-        }
-        val cs = Seq.newBuilder[Chain]
-        cs += chain()
-        while (atSym(",")) { eatSym(","); cs += chain() }
-        val w = if (atKw("WHERE")) { eatKw("WHERE"); Some(pred()) } else None
+        eatKw("EXISTS")
+        val (cs, w) = subqueryBody()
         eatSym("}")
-        return PExistsChain(cs.result(), w)
+        return PExistsChain(cs, w)
       }
       // all/any/none/single(x IN list WHERE p) quantified predicates
       // ("ALL" tokenizes as a keyword — UNION ALL — the others as ids)
@@ -1148,24 +1088,12 @@ object CypherFrontend {
       // `(CASE ... END) = 1` — tried in that order, backtracking
       if (atSym("(")) {
         val save = pos
-        patternPredOpt() match {
-          // a trailing -/<- means the single-hop parse stopped short
-          // of a longer chain — fall through to the chain form
-          case Some(p) if !atSym("-") && !atSym("<-") => return p
-          case _ => pos = save
-        }
-        // bare MULTI-HOP or VAR-LENGTH pattern predicate:
-        // (a)-[:X]->()-[:Y]->(b), (w)-[*1..2]->(:F) — parse the full
-        // chain and compile as the equivalent EXISTS {} subquery
-        // (shared-variable semi/anti join; both endpoints correlate
-        // when bound)
-        scala.util.Try {
-          val ch = chain()
-          require(ch.hops.nonEmpty, "not a pattern")
-          ch
-        } match {
-          case scala.util.Success(ch) => return PExistsChain(Seq(ch), None)
-          case _ => pos = save
+        // a bare pattern predicate compiles as the equivalent EXISTS {}
+        // subquery (shared-variable semi/anti join; every bound
+        // endpoint correlates)
+        patternOpt() match {
+          case Some(ch) => return PExistsChain(Seq(ch), None)
+          case None => pos = save
         }
         val predErr: Exception =
           try {
@@ -1243,39 +1171,22 @@ object CypherFrontend {
       case _ => false
     }
 
-    /** Try `(v)-[:T1|T2]->()` / `(v)<-[:T]-(:Label)`; None if not that shape. */
-    private def patternPredOpt(): Option[Pred] =
-      try {
-        eatSym("(")
-        val v = ident()
-        eatSym(")")
-        val back = atSym("<-")
-        if (back) eatSym("<-") else eatSym("-")
-        var types: Seq[String] = Nil
-        if (atSym("[")) {
-          eatSym("[")
-          if (atSym(":")) {
-            eatSym(":")
-            val ts = Seq.newBuilder[String]
-            ts += ident()
-            while (atSym("|")) { eatSym("|"); if (atSym(":")) eatSym(":"); ts += ident() }
-            types = ts.result()
-          }
-          eatSym("]")
-        }
-        val fwd = atSym("->")
-        if (fwd) eatSym("->") else eatSym("-")
-        require(!(fwd && back), "a relationship cannot point both ways")
-        eatSym("(")
-        val tv = peek match {
-          case Some(TId(_)) => Some(ident())
-          case _ => None
-        }
-        val tl = if (atSym(":")) { eatSym(":"); Some(ident()) } else None
-        eatSym(")")
-        Some(PPattern(v, types, forward = fwd || (!fwd && !back),
-          targetLabel = tl, undirected = !fwd && !back, targetVar = tv))
-      } catch { case _: Throwable => None }
+    /** A chain of at least one hop here, or None with the position
+      * unspecified (the caller backtracks). */
+    private def patternOpt(): Option[Chain] =
+      scala.util.Try(chain()).toOption.filter(_.hops.nonEmpty)
+
+    /** The braced body of EXISTS { }, COUNT { } and COLLECT { } up to
+      * its RETURN or closing brace: `{ [MATCH] chains [WHERE pred]`. */
+    private def subqueryBody(): (Seq[Chain], Option[Pred]) = {
+      eatSym("{")
+      if (atKw("MATCH")) eatKw("MATCH")
+      val cs = Seq.newBuilder[Chain]
+      cs += chain()
+      while (atSym(",")) { eatSym(","); cs += chain() }
+      val w = if (atKw("WHERE")) { eatKw("WHERE"); Some(pred()) } else None
+      (cs.result(), w)
+    }
   }
 
   // ----------------------------------------------------------- compiler
@@ -1839,19 +1750,24 @@ object CypherFrontend {
           // CLAUSE frame, so the whole predicate stays a Column
           // inside the join condition
           val terms = cl.where.toSeq.flatMap(probeTerms(_))
-          // a pattern predicate here compiles against the CLAUSE
-          // frame; an endpoint bound only in the OUTER pipeline
-          // would silently degrade to an existential — refuse and
-          // point at the correlated form instead
-          terms.collect { case pp: PPattern => pp }.foreach { pp =>
-            (Seq(pp.v) ++ pp.targetVar).foreach { r =>
-              require(!(df.columns.contains(ns(r, "uid")) &&
-                  !cdf.columns.contains(ns(r, "uid"))),
-                s"OPTIONAL MATCH WHERE: pattern predicate endpoint '$r' " +
-                  "is bound outside this clause; write the pattern into " +
-                  "the OPTIONAL MATCH itself")
-            }
+          // a subquery term here compiles against the CLAUSE frame: a
+          // pattern variable bound only in the OUTER pipeline would
+          // silently degrade to an existential, and its inner WHERE or
+          // RETURN could not read one — refuse and point at the
+          // correlated form instead
+          def inner(t: Term): Seq[Term] = t match {
+            case PExistsChain(_, w) => w.toSeq
+            case ECountChain(_, w) => w.toSeq
+            case ec: ECollect => ec.where.toSeq ++ (ec.ret +: ec.orderBy.map(_.expr))
+            case _ => Nil
           }
+          def binds(d: DataFrame, v: String) = d.columns.exists(c => c == v || c.startsWith(v + "$"))
+          terms.flatMap(t => subqueryVars(t).toSeq.flatten ++ inner(t).flatMap(refs))
+            .distinct.foreach { r =>
+              require(!binds(df, r) || binds(cdf, r),
+                s"OPTIONAL MATCH WHERE: variable '$r' is bound outside " +
+                  "this clause; write the pattern into the OPTIONAL MATCH itself")
+            }
           df = withProbes(cdf, terms) { wide =>
             joinOnShared(df, wide, shared, "left_outer",
               cl.where.map(p => (_: DataFrame) => predCol(p)))
@@ -2064,54 +1980,23 @@ object CypherFrontend {
       (out, next)
     }
 
-    /** WHERE compilation. Pattern predicates become semi/anti joins on
-      * the variable's uid; everything else is a Column filter. NOT
-      * distributes into pattern predicates (anti join), else negates
+    /** WHERE compilation. Pattern subqueries become semi/anti joins on
+      * the shared variables' uids; everything else is a Column filter.
+      * NOT distributes into pattern subqueries (anti join), else negates
       * the Column. */
     private def applyPred(df: DataFrame, p: Pred, negated: Boolean): DataFrame = p match {
       case PNot(inner) => applyPred(df, inner, !negated)
       case PAnd(l, r) if !negated => applyPred(applyPred(df, l, false), r, false)
-      case pp @ PPattern(v, types, fwd, tl, und, tv0) =>
-        val joinType = if (negated) "left_anti" else "left_semi"
-        val vBound = df.columns.contains(ns(v, "uid"))
-        val tBound = tv0.filter(tv => df.columns.contains(ns(tv, "uid")))
-        tBound match {
-          case Some(tv) if vBound =>
-            // both endpoints bound: (w)-[:R]->(s) correlates the PAIR —
-            // one distinct edge-pair probe, two-key semi/anti join
-            val pair = pairProbe(types, fwd, tl, und)
-            df.join(pair, df(ns(v, "uid")) === pair("_src") &&
-              df(ns(tv, "uid")) === pair("_dst"), joinType)
-          case Some(tv) =>
-            // only the TARGET is bound ((x)-[:R]->(s:Label), x
-            // existential): flip the orientation and probe the
-            // target's endpoint set. A written label on the BOUND
-            // endpoint still binds (Neo4j parity): it rides the join
-            // condition, so the anti form keeps rows whose endpoint
-            // fails the label — NOT(edge ∧ label) — instead of
-            // silently dropping the check.
-            val probe = patternProbe(types, !fwd, None, und)
-            var cond = df(ns(tv, "uid")) === probe("_probe")
-            tl.foreach(l => cond = cond && df(ns(tv, "label")) === lit(l))
-            df.join(probe, cond, joinType)
-          case None => // unbound/absent target = existential, like ()
-            val probe = patternProbe(types, fwd, tl, und)
-            df.join(probe, df(ns(v, "uid")) === probe("_probe"), joinType)
-        }
       case PExistsChain(chains, wh) =>
-        // multi-hop existential: compile the pattern into its own
-        // frame (the SAME chain compiler MATCH uses), apply the inner
-        // WHERE there, then semi/anti join the outer frame on every
-        // shared variable's uid. The probe ships DISTINCT shared-key
-        // tuples — never the match multiset — so a high-multiplicity
-        // pattern cannot widen the outer frame.
-        val (cdf, shared, _) = chainFrame(chains, wh, df.columns, "EXISTS { }")
-        val exProbe = cdf
-          .select(shared.map(v => col(ns(v, "uid")).as(s"_ex$$$v")): _*)
-          .distinct()
-        val exCond = shared.map(v => df(ns(v, "uid")) === exProbe(s"_ex$$$v"))
-          .reduce(_ && _)
-        df.join(exProbe, exCond, if (negated) "left_anti" else "left_semi")
+        // compile the pattern into its matched frame, then semi/anti
+        // join the outer frame on every shared variable's uid. A
+        // compiled chain's keys are made DISTINCT first (its walks
+        // multiply per key); a hop probe ships one row per edge
+        val m = chainFrame(chains, wh, df.columns, "EXISTS { }", keysOnly = true)
+        val keys = m.keys(v => s"_ex$$$v")
+        val probe = if (m.hop) keys else keys.distinct()
+        df.join(probe, m.on(df, probe, v => s"_ex$$$v"),
+          if (negated) "left_anti" else "left_semi")
       case other =>
         // pattern predicates nested under OR/XOR/NOT-of-OR positions
         // cannot be whole-frame semi/anti joins, and COUNT {}
@@ -2124,31 +2009,83 @@ object CypherFrontend {
         }
     }
 
-    /** Compile a multi-hop EXISTS/COUNT/COLLECT subquery's chains into
-      * one matched frame (inner WHERE applied) plus the variables shared
-      * with the outer frame and the scope the subquery reads in (the
-      * enclosing one widened by its pattern's bindings) — the common
-      * front half of the semi-join, flag-column, count-column and
-      * list-column compilations. */
+    /** A pattern subquery's matched frame: one row per match, with the
+      * `v$uid` key of each variable in `shared` (bound in the outer
+      * frame, sorted), and the scope the subquery reads in. `hop`: the
+      * frame is one hop's edges (the shape rule of [[chainFrame]]), and
+      * `labels` are labels written on shared variables that the outer
+      * row must carry (a compiled chain filters them itself). */
+    private case class Matched(df: DataFrame, shared: Seq[String], scope: Scope,
+                               hop: Boolean = false, labels: Seq[(String, String)] = Nil) {
+      /** The shared keys of every match, key `v` named `name(v)`. */
+      def keys(name: String => String): DataFrame =
+        df.select(shared.map(v => col(ns(v, "uid")).as(name(v))): _*)
+      /** The condition joining outer frame `d` to `probe`, whose key of
+        * `v` is `name(v)`. */
+      def on(d: DataFrame, probe: DataFrame, name: String => String): Column =
+        (shared.map(v => d(ns(v, "uid")) === probe(name(v))) ++
+          labels.map { case (v, l) => d(ns(v, "label")) === lit(l) }).reduce(_ && _)
+    }
+
+    /** Compile an EXISTS/COUNT/COLLECT subquery's chains into its
+      * [[Matched]] frame (inner WHERE applied), the common front half of
+      * the semi-join, flag-column, count-column and list-column
+      * compilations. `keysOnly`: the caller reads only the shared keys
+      * (EXISTS, COUNT; COLLECT's RETURN reads the match).
+      *
+      * The one shape rule: when the caller reads only keys and the
+      * subquery is one chain of one fixed hop with no relationship
+      * variable and no inner WHERE, whose two endpoints are distinct
+      * variables or anonymous, each either bound in the outer frame
+      * without a property map or unbound with at most a label, the
+      * matched frame is the hop's edge set ([[hopEdges]]) projected to
+      * the bound endpoints' uids: no node join for an unbound unlabeled
+      * endpoint, a join with the label's node uids for an unbound labeled
+      * one, and a bound endpoint's label in the join condition. So a
+      * dangling edge (its unbound endpoint is no node) matches the hop
+      * probe but not a compiled chain. Every other subquery compiles its
+      * chains as MATCH does. */
     private def chainFrame(chains: Seq[Chain], wh: Option[Pred],
-                           outerCols: Array[String], what: String)
-        : (DataFrame, Seq[String], Scope) = {
-      var (cdf, cscope) = compileChain(chains.head)
-      chains.tail.foreach { ch =>
-        val (chDf, chScope) = compileChain(ch)
-        val shared = sharedVars(cscope, chScope)
-        require(shared.nonEmpty,
-          s"disconnected $what patterns would be a cross product; share a variable")
-        cdf = joinOnShared(cdf, chDf, shared, "inner", None)
-        cscope ++= chScope
+                           outerCols: Array[String], what: String,
+                           keysOnly: Boolean): Matched = {
+      def bound(n: NodePat) = n.v.exists(v => outerCols.contains(ns(v, "uid")))
+      // a bound endpoint's label is checked on the outer row's label
+      def checkable(n: NodePat) =
+        n.props.isEmpty && (!bound(n) || n.label.isEmpty || outerCols.contains(ns(n.v.get, "label")))
+      chains match {
+        case Seq(Chain(head, Seq((rel, tail))))
+            if keysOnly && wh.isEmpty && rel.v.isEmpty && rel.varLen.isEmpty &&
+              (head.v.isEmpty || head.v != tail.v) && (bound(head) || bound(tail)) &&
+              checkable(head) && checkable(tail) =>
+          val (e, fromC, toC) = hopEdges(rel)
+          val ends = Seq(head -> fromC, tail -> toC)
+          val hop = ends.foldLeft(e) {
+            case (d, (n, c)) if !bound(n) && n.label.isDefined =>
+              d.join(nodes.filter(col("label") === n.label.get).select(col("uid").as(c)), c)
+            case (d, _) => d
+          }
+          val keyed = ends.filter(x => bound(x._1)).sortBy(_._1.v)
+          Matched(hop.select(keyed.map { case (n, c) => col(c).as(ns(n.v.get, "uid")) }: _*),
+            keyed.flatMap(_._1.v), scope, hop = true,
+            keyed.flatMap { case (n, _) => n.label.map(n.v.get -> _) })
+        case _ =>
+          var (cdf, cscope) = compileChain(chains.head)
+          chains.tail.foreach { ch =>
+            val (chDf, chScope) = compileChain(ch)
+            val shared = sharedVars(cscope, chScope)
+            require(shared.nonEmpty,
+              s"disconnected $what patterns would be a cross product; share a variable")
+            cdf = joinOnShared(cdf, chDf, shared, "inner", None)
+            cscope ++= chScope
+          }
+          val inner = scope ++ cscope
+          wh.foreach(p => cdf = scoped(inner)(applyPred(cdf, p, negated = false)))
+          val shared = patternVars(cscope).toSeq
+            .filter(v => outerCols.contains(ns(v, "uid"))).sorted
+          require(shared.nonEmpty,
+            s"$what must share at least one variable with the outer MATCH")
+          Matched(cdf, shared, inner)
       }
-      val inner = scope ++ cscope
-      wh.foreach(p => cdf = scoped(inner)(applyPred(cdf, p, negated = false)))
-      val shared = patternVars(cscope).toSeq
-        .filter(v => outerCols.contains(ns(v, "uid"))).sorted
-      require(shared.nonEmpty,
-        s"$what must share at least one variable with the outer MATCH")
-      (cdf, shared, inner)
     }
 
     /** Does the predicate CORRELATE variable sets `a` and `b` — a
@@ -2198,48 +2135,30 @@ object CypherFrontend {
 
     /** Left-join subquery term `t`'s column `c` onto `d`: one keyed join
       * against a probe of DISTINCT keys or one aggregate row per key,
-      * never the match multiset, so `d` keeps its rows. A pattern flags
-      * its endpoint probe; an EXISTS {} chain the DISTINCT shared-key
-      * tuples of its compiled frame (inner WHERE applied). COUNT {}
-      * counts the filtered edge set per endpoint (single hop, the
-      * degree table) or the compiled frame per shared-key tuple — the
-      * MATCHES per binding, walk multiplicity included, zero supplied
-      * by coalesce at the use site. COLLECT {} is one ordered window
-      * collect over the compiled frame, the empty list for no matches.
-      * A quantifier takes the explode route. */
+      * never the match multiset, so `d` keeps its rows. A pattern
+      * predicate or EXISTS {} flags the DISTINCT shared-key tuples of
+      * its matched frame; COUNT {} counts that frame per shared-key
+      * tuple — the MATCHES per binding, walk multiplicity included, zero
+      * supplied by coalesce at the use site. COLLECT {} is one ordered
+      * window collect over the compiled frame, the empty list for no
+      * matches. A quantifier takes the explode route. */
     private def joinProbe(d: DataFrame, t: Term, c: String): DataFrame = t match {
-      case pp: PPattern => joinPatternFlag(d, pp, c)
       case pe: PExistsChain =>
-        // the DISTINCT shared-key tuples of the chain's compiled frame
-        val (cdf, shared, _) = chainFrame(pe.chains, pe.where, d.columns, "EXISTS { }")
-        val probe = cdf
-          .select(shared.map(v => col(ns(v, "uid")).as(s"$c$$$v")): _*)
-          .distinct()
-          .withColumn(c, lit(true))
-        val cond = shared.map(v => d(ns(v, "uid")) === probe(s"$c$$$v"))
-          .reduce(_ && _)
-        d.join(probe, cond, "left_outer").drop(shared.map(v => s"$c$$$v"): _*)
+        val m = chainFrame(pe.chains, pe.where, d.columns, "EXISTS { }", keysOnly = true)
+        val probe = m.keys(v => s"$c$$$v").distinct().withColumn(c, lit(true))
+        d.join(probe, m.on(d, probe, v => s"$c$$$v"), "left_outer")
+          .drop(m.shared.map(v => s"$c$$$v"): _*)
       case q: PQuant => joinLambdaQuantFlag(d, q, c)
-      case cs: ECountSub =>
-        val counts = patternProbe(cs.types, cs.forward, cs.targetLabel,
-            cs.undirected)
-          .groupBy(col("_probe").as(s"$c$$probe"))
-          .agg(count(lit(1)).as(c))
-        d.join(counts, d(ns(cs.v, "uid")) === counts(s"$c$$probe"),
-          "left_outer").drop(s"$c$$probe")
       case cc: ECountChain =>
-        val (cdf, shared, _) =
-          chainFrame(cc.chains, cc.where, d.columns, "COUNT { }")
-        val counts = cdf
-          .groupBy(shared.map(v => col(ns(v, "uid")).as(s"$c$$$v")): _*)
+        val m = chainFrame(cc.chains, cc.where, d.columns, "COUNT { }", keysOnly = true)
+        val counts = m.df
+          .groupBy(m.shared.map(v => col(ns(v, "uid")).as(s"$c$$$v")): _*)
           .agg(count(lit(1)).as(c))
-        val cond = shared.map(v => d(ns(v, "uid")) === counts(s"$c$$$v"))
-          .reduce(_ && _)
-        d.join(counts, cond, "left_outer")
-          .drop(shared.map(v => s"$c$$$v"): _*)
+        d.join(counts, m.on(d, counts, v => s"$c$$$v"), "left_outer")
+          .drop(m.shared.map(v => s"$c$$$v"): _*)
       case ec: ECollect =>
-        val (cdf, shared, inner) =
-          chainFrame(ec.chains, ec.where, d.columns, "COLLECT { }")
+        val m = chainFrame(ec.chains, ec.where, d.columns, "COLLECT { }", keysOnly = false)
+        val (cdf, shared, inner) = (m.df, m.shared, m.scope)
         // shared keys ride as `k$<var>`, apart from the sort (`s<j>`)
         // and value (`v`) columns whatever the variables are named;
         // the returned value rides as the FINAL sort key so tie
@@ -2263,11 +2182,9 @@ object CypherFrontend {
         ec.limit.foreach(n =>
           lists = lists.withColumn(c, slice(col(c), 1, n.toInt)))
         val dt = lists.schema(c).dataType
-        val cond = shared.map(v => d(ns(v, "uid")) === lists(s"$c$$k$$$v"))
-          .reduce(_ && _)
         // empty-list refill happens HERE, where the element type
         // is known (the use site cannot type an empty array)
-        d.join(lists, cond, "left_outer")
+        d.join(lists, m.on(d, lists, v => s"$c$$k$$$v"), "left_outer")
           .drop(shared.map(v => s"$c$$k$$$v"): _*)
           .withColumn(c, coalesce(col("`" + c + "`"),
             array().cast(dt)))
@@ -2330,94 +2247,8 @@ object CypherFrontend {
         .drop(rid, szC, cntC)
     }
 
-    /** The probe endpoints of one relationship pattern as a 1-column
-      * frame (`_probe`): the variable-side uids of the (type- and
-      * target-label-filtered) edge set; an undirected pattern probes
-      * BOTH endpoint columns (symmetric union). Multiset — callers
-      * distinct()/aggregate as their join shape needs. */
-    private def patternProbe(types: Seq[String], fwd: Boolean,
-                             tl: Option[String], und: Boolean): DataFrame = {
-      var e = edges
-      if (types.nonEmpty) e = e.filter(col("rel_type").isin(types: _*))
-      def oneDir(ed: DataFrame, probeCol: String, otherCol: String): DataFrame =
-        tl match {
-          case Some(l) =>
-            ed.join(nodes.filter(col("label") === l)
-              .select(col("uid").as(otherCol)), otherCol)
-              .select(col(probeCol).as("_probe"))
-          case None => ed.select(col(probeCol).as("_probe"))
-        }
-      // undirected: a self-loop probes its endpoint ONCE (the reversed
-      // orientation is the same undirected match — Neo4j counts it once)
-      if (und) oneDir(e, "src_uid", "dst_uid").unionByName(
-        oneDir(e.filter(col("src_uid") =!= col("dst_uid")), "dst_uid", "src_uid"))
-      else if (fwd) oneDir(e, "src_uid", "dst_uid")
-      else oneDir(e, "dst_uid", "src_uid")
-    }
-
-    /** A pattern predicate's flag column: its DISTINCT endpoint probe
-      * left-joined on the bound endpoint's uid (both endpoints bound:
-      * the DISTINCT pair probe on both uids). */
-    private def joinPatternFlag(d: DataFrame, pp: PPattern, flag: String): DataFrame = {
-      val vBound = d.columns.contains(ns(pp.v, "uid"))
-      val tBound = pp.targetVar.filter(tv => d.columns.contains(ns(tv, "uid")))
-      def oneKeyFlag(keyVar: String, flipped: Boolean): DataFrame = {
-        val probe = patternProbe(pp.types,
-            if (flipped) !pp.forward else pp.forward,
-            if (flipped) None else pp.targetLabel, pp.undirected)
-          .select(col("_probe").as(s"$flag$$probe")).distinct()
-          .withColumn(flag, lit(true))
-        var cond = d(ns(keyVar, "uid")) === probe(s"$flag$$probe")
-        // flipped probe: the BOUND endpoint's written label still
-        // binds (same Neo4j-parity rule as the semi/anti form)
-        if (flipped)
-          pp.targetLabel.foreach(l =>
-            cond = cond && d(ns(keyVar, "label")) === lit(l))
-        d.join(probe, cond, "left_outer").drop(s"$flag$$probe")
-      }
-      tBound match {
-        case Some(tv) if vBound => // both bound: 2-key pair flag
-          val pair = pairProbe(pp.types, pp.forward, pp.targetLabel,
-              pp.undirected)
-            .select(col("_src").as(s"$flag$$s"), col("_dst").as(s"$flag$$d"))
-            .distinct().withColumn(flag, lit(true))
-          d.join(pair, d(ns(pp.v, "uid")) === pair(s"$flag$$s") &&
-            d(ns(tv, "uid")) === pair(s"$flag$$d"), "left_outer")
-            .drop(s"$flag$$s", s"$flag$$d")
-        case Some(tv) => // target-only bound: flipped 1-key flag
-          oneKeyFlag(tv, flipped = true)
-        case None =>
-          oneKeyFlag(pp.v, flipped = false)
-      }
-    }
-
-    /** Distinct (source, target) uid pairs of the (type- and
-      * target-label-filtered) edge set, walk orientation applied —
-      * the probe for pattern predicates whose BOTH endpoints are
-      * bound. Undirected: a self-loop pairs once. */
-    private def pairProbe(types: Seq[String], fwd: Boolean,
-                          tl: Option[String], und: Boolean): DataFrame = {
-      var e = edges
-      if (types.nonEmpty) e = e.filter(col("rel_type").isin(types: _*))
-      def orient(ed: DataFrame, srcC: String, dstC: String): DataFrame = {
-        val base = ed.select(col(srcC).as("_src"), col(dstC).as("_dst"))
-        tl match {
-          case Some(l) => base.join(nodes.filter(col("label") === l)
-            .select(col("uid").as("_dst")), Seq("_dst"), "left_semi")
-          case None => base
-        }
-      }
-      val oriented =
-        if (und) orient(e, "src_uid", "dst_uid").unionByName(
-          orient(e.filter(col("src_uid") =!= col("dst_uid")),
-            "dst_uid", "src_uid"))
-        else if (fwd) orient(e, "src_uid", "dst_uid")
-        else orient(e, "dst_uid", "src_uid")
-      oriented.distinct()
-    }
-
     private def predCol(p: Pred): Column = p match {
-      case t @ (_: PPattern | _: PExistsChain) if probeCols.contains(t) =>
+      case t: PExistsChain if probeCols.contains(t) =>
         coalesce(col(probeCols(t)), lit(false))
       case q: PQuant if probeCols.contains(q) => col(probeCols(q))
       case PCmp("=", l, r) => exprCol(l) === exprCol(r)
@@ -2467,7 +2298,7 @@ object CypherFrontend {
           case "single" => matches === 1
           case other => sys.error(s"unknown quantifier $other")
         }
-      case _: PPattern | _: PExistsChain =>
+      case _: PExistsChain =>
         sys.error(s"pattern predicates and EXISTS { } $probedPositions")
     }
 
@@ -2556,7 +2387,7 @@ object CypherFrontend {
         case Rel => struct(col(ns(v, "rel_type")), col(ns(v, "src_uid")), col(ns(v, "dst_uid")))
         case Node => struct(col(ns(v, "label")), col(ns(v, "uid")))
       }
-      case e @ (_: ECountSub | _: ECountChain) =>
+      case e: ECountChain =>
         probeCols.get(e)
           .map(n => coalesce(col("`" + n + "`"), lit(0L)))
           .getOrElse(sys.error(

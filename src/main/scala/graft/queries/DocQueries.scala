@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
@@ -33,11 +33,10 @@ object DocQueries extends QueryPack {
       .as[DocExtract.RawDoc]
   }
 
-  /** q80 — extraction → Source-node projection: decode + normalize +
-    * paragraph-packed chunking on real bytes, engine-wide uid scheme,
-    * non-stub provenance. */
-  def q80DocExtract(s: SparkSession, dir: String): DataFrame =
-    DocExtract.extractAll(rawDocs(s, dir)).toDF()
+  /** Extracted documents as Source nodes, by doc_id — the one output
+    * shape of q80, q83, q84 and q101. */
+  private def sourceNodes(extracted: Dataset[DocExtract.Extracted]): DataFrame =
+    extracted.toDF()
       .select(col("doc_id"), col("name"),
         graft.core.Uid.uid(col("name")).as("uid"),
         col("source_type").as("type"),
@@ -46,6 +45,12 @@ object DocQueries extends QueryPack {
         col("n_chunks"),
         col("provenance"))
       .orderBy("doc_id")
+
+  /** q80 — extraction → Source-node projection: decode + normalize +
+    * paragraph-packed chunking on real bytes, engine-wide uid scheme,
+    * non-stub provenance. */
+  def q80DocExtract(s: SparkSession, dir: String): DataFrame =
+    sourceNodes(DocExtract.extractAll(rawDocs(s, dir)))
 
   /** q81 — per-chunk DERIVED_FROM provenance edges for the extracted
     * corpus, joinable to q80's Source uids. */
@@ -54,20 +59,21 @@ object DocQueries extends QueryPack {
       .select("chunk_uid", "rel_type", "src_uid", "name", "chunk_idx")
       .orderBy("name", "chunk_idx")
 
-  /** The documents corpus re-packaged as REAL .docx files (one plain
-    * paragraph each), built per-row with the zero-egress OOXML writer.
-    * Packaging runs in the same task that will extract — docx bytes
-    * never shuffle, exactly like the binary-source path. */
-  private def rawDocxDocs(s: SparkSession, dir: String) = {
+  /** The documents corpus re-packaged as REAL files of type `tag`, named
+    * `<tag>_<doc_id>`, whose bytes `file(doc_id, text)` writes per row.
+    * Packaging runs in the same task that will extract — the bytes never
+    * shuffle, exactly like the binary-source path. */
+  private def rawFiles(s: SparkSession, dir: String, tag: String)(
+      file: (Long, String) => Array[Byte]): Dataset[DocExtract.RawDoc] = {
     import s.implicits._
     Tables.documents(s, dir)
       .select(col("doc_id"), col("text")).as[(Long, String)]
-      .map { case (id, text) =>
-        DocExtract.RawDoc(id, "docx", s"docx_$id", DocExtract.docxBytes(text)) }
+      .map { case (id, text) => DocExtract.RawDoc(id, tag, s"${tag}_$id", file(id, text)) }
   }
 
   /** q83 — the real DOCX extractor end-to-end: corpus text → OOXML
-    * package → bounded unzip + StAX paragraph extraction → Source-node
+    * package (one plain paragraph, the zero-egress OOXML writer) →
+    * bounded unzip + StAX paragraph extraction → Source-node
     * projection. The round trip pins the writer AND the extractor to
     * the oracle's laws (trimmed text round-trips byte-exactly through
     * XML escaping, ceil(len/500) chunking, 120-char title); heading
@@ -75,81 +81,38 @@ object DocQueries extends QueryPack {
     * DocExtractSpec fixtures instead (not SQL-expressible from the
     * corpus). */
   def q83DocxExtract(s: SparkSession, dir: String): DataFrame =
-    DocExtract.extractAll(rawDocxDocs(s, dir),
-        () => new DocExtract.DocxExtractor()).toDF()
-      .select(col("doc_id"), col("name"),
-        graft.core.Uid.uid(col("name")).as("uid"),
-        col("source_type").as("type"),
-        col("title"),
-        length(col("text")).cast("long").as("text_len"),
-        col("n_chunks"),
-        col("provenance"))
-      .orderBy("doc_id")
+    sourceNodes(DocExtract.extractAll(
+      rawFiles(s, dir, "docx")((_, text) => DocExtract.docxBytes(text)),
+      () => new DocExtract.DocxExtractor()))
 
-  /** The documents corpus re-packaged as REAL single-page PDF files
-    * (Flate-compressed content streams, proper xref), built per-row by
-    * the zero-egress [[graft.sources.Pdf]] writer. Same no-shuffle
-    * contract as the docx path: bytes are born and parsed in one task. */
-  private def rawPdfDocs(s: SparkSession, dir: String) = {
-    import s.implicits._
-    Tables.documents(s, dir)
-      .select(col("doc_id"), col("text")).as[(Long, String)]
-      .map { case (id, text) =>
-        DocExtract.RawDoc(id, "pdf", s"pdf_$id", graft.sources.Pdf.pdfBytes(text)) }
-  }
-
-  /** q84 — the real PDF extractor end-to-end: corpus text → PDF bytes
-    * (compressed stream + xref) → object scan → page walk → inflate →
-    * text-operator replay → Source-node projection. The round trip pins
-    * writer and parser to the oracle's laws (PDF string escaping is
-    * lossless, ceil(len/500) chunking, 120-char title). Multi-page,
-    * multi-paragraph, TJ-kerning, hex-string, ObjStm and /Info /Title
-    * behavior is pinned by PdfSpec fixtures (not SQL-expressible). */
+  /** q84 — the real PDF extractor end-to-end: corpus text → single-page
+    * PDF bytes (Flate-compressed content stream + proper xref, the
+    * zero-egress [[graft.sources.Pdf]] writer) → object scan → page
+    * walk → inflate → text-operator replay → Source-node projection.
+    * The round trip pins writer and parser to the oracle's laws (PDF
+    * string escaping is lossless, ceil(len/500) chunking, 120-char
+    * title). Multi-page, multi-paragraph, TJ-kerning, hex-string,
+    * ObjStm and /Info /Title behavior is pinned by PdfSpec fixtures
+    * (not SQL-expressible). */
   def q84PdfExtract(s: SparkSession, dir: String): DataFrame =
-    DocExtract.extractAll(rawPdfDocs(s, dir),
-        () => new DocExtract.PdfExtractor()).toDF()
-      .select(col("doc_id"), col("name"),
-        graft.core.Uid.uid(col("name")).as("uid"),
-        col("source_type").as("type"),
-        col("title"),
-        length(col("text")).cast("long").as("text_len"),
-        col("n_chunks"),
-        col("provenance"))
-      .orderBy("doc_id")
-
-  /** The documents corpus re-packaged as REAL web pages (full head +
-    * nav/header/footer chrome, entities, a script the tokenizer must
-    * not leak), built per-row by [[graft.sources.Html.pageBytes]]. Same
-    * no-shuffle contract as the docx/pdf paths: bytes are born and
-    * parsed in one task. */
-  private def rawHtmlDocs(s: SparkSession, dir: String) = {
-    import s.implicits._
-    Tables.documents(s, dir)
-      .select(col("doc_id"), col("text")).as[(Long, String)]
-      .map { case (id, text) =>
-        DocExtract.RawDoc(id, "html", s"html_$id",
-          graft.sources.Html.pageBytes(s"Doc $id", text)) }
-  }
+    sourceNodes(DocExtract.extractAll(
+      rawFiles(s, dir, "pdf")((_, text) => graft.sources.Pdf.pdfBytes(text)),
+      () => new DocExtract.PdfExtractor()))
 
   /** q101 — the real HTML extractor end-to-end: corpus text → full web
-    * page (chrome + entities + script) → tag-tokenizer extraction →
-    * Source-node projection. The round trip pins the writer AND the
-    * extractor to the oracle's laws (escape/decode is lossless, the
-    * boilerplate chrome contributes nothing, the `<title>` tag wins,
-    * ceil(len/500) chunking). Nested skip subtrees, numeric character
-    * references, quoted-'>' attributes, br/block behavior and CDATA
-    * are pinned by HtmlSpec fixtures (not SQL-expressible). */
+    * page (head + nav/header/footer chrome, entities, a script the
+    * tokenizer must not leak; [[graft.sources.Html.pageBytes]]) →
+    * tag-tokenizer extraction → Source-node projection. The round trip
+    * pins the writer AND the extractor to the oracle's laws
+    * (escape/decode is lossless, the boilerplate chrome contributes
+    * nothing, the `<title>` tag wins, ceil(len/500) chunking). Nested
+    * skip subtrees, numeric character references, quoted-'>'
+    * attributes, br/block behavior and CDATA are pinned by HtmlSpec
+    * fixtures (not SQL-expressible). */
   def q101HtmlExtract(s: SparkSession, dir: String): DataFrame =
-    DocExtract.extractAll(rawHtmlDocs(s, dir),
-        () => new DocExtract.HtmlExtractor()).toDF()
-      .select(col("doc_id"), col("name"),
-        graft.core.Uid.uid(col("name")).as("uid"),
-        col("source_type").as("type"),
-        col("title"),
-        length(col("text")).cast("long").as("text_len"),
-        col("n_chunks"),
-        col("provenance"))
-      .orderBy("doc_id")
+    sourceNodes(DocExtract.extractAll(
+      rawFiles(s, dir, "html")((id, text) => graft.sources.Html.pageBytes(s"Doc $id", text)),
+      () => new DocExtract.HtmlExtractor()))
 
   /** q85 — the RAG chunk TABLE: the reference's extraction → chunk →
     * embedding flow (`README.md:122-127`, `etl_implementation.md:

@@ -396,6 +396,41 @@ class CypherFrontendSpec extends SparkSpec {
         .select("name").as[String].collect().sorted.toSeq
       assert(cy === typed, s"orphans diverged on graph: $ns / $es")
 
+      // every single-hop pattern subquery == its braced `WHERE true`
+      // form, which compiles the full chain instead of the hop probe.
+      // The generated edges join existing nodes only: an edge whose
+      // unbound endpoint is no node matches the hop probe but not the
+      // chain, by design
+      def rows(q: String) = CypherFrontend.run(q, nodesDf, edgesDf)
+        .collect().map(_.toSeq.mkString("|")).sorted.toSeq
+      for ((hop, braced) <- Seq(
+          "(w)-[:R]->()" -> "EXISTS { (w)-[:R]->() WHERE true }",
+          "NOT (w)-[:R|S]-()" -> "NOT EXISTS { (w)-[:R|S]-() WHERE true }",
+          "(w)-[:R]->(:B) OR w.name = 'n0'" ->
+            "EXISTS { (w)-[:R]->(:B) WHERE true } OR w.name = 'n0'",
+          "NOT (x:A)-[:S]->(w:A)" -> "NOT EXISTS { (x:A)-[:S]->(w:A) WHERE true }",
+          "(w)<-[:R]-(v:B)" -> "EXISTS { (w)<-[:R]-(v:B) WHERE true }")) {
+        val q = s"MATCH (w) WHERE %s RETURN w.name"
+        assert(rows(q.format(hop)) === rows(q.format(braced)),
+          s"$hop diverged from its chain form on graph: $ns / $es")
+      }
+      for ((hop, braced) <- Seq(
+          "COUNT { (w)-[:R|S]-() }" -> "COUNT { (w)-[:R|S]-() WHERE true }",
+          "COUNT { (w)-[:R]->(:A) }" -> "COUNT { (w)-[:R]->(:A) WHERE true }",
+          "exists((w)<-[:S]-(:A))" -> "EXISTS { (w)<-[:S]-(:A) WHERE true }",
+          "exists((w)-[:S]->(v:B))" -> "EXISTS { (w)-[:S]->(v:B) WHERE true }")) {
+        val q = s"MATCH (w:A) RETURN w.name, %s AS x"
+        assert(rows(q.format(hop)) === rows(q.format(braced)),
+          s"$hop diverged from its chain form on graph: $ns / $es")
+      }
+      // both endpoints bound: the pair correlates
+      for (neg <- Seq("", "NOT ")) {
+        val q = "MATCH (a:A), (b:B) WHERE %s RETURN a.name, b.name"
+        assert(rows(q.format(neg + "(a)-[:R]->(b:B)")) ===
+          rows(q.format(neg + "EXISTS { (a)-[:R]->(b:B) WHERE true }")),
+          s"$neg(a)-[:R]->(b) diverged from its chain form on graph: $ns / $es")
+      }
+
       // grouped hop == direct DataFrame aggregation
       val cyG = CypherFrontend.run(
         """MATCH (a:A)-[:R]->(b)
@@ -1587,7 +1622,7 @@ class CypherFrontendSpec extends SparkSpec {
         |RETURN w.name AS w ORDER BY w""".stripMargin)
       .as[String].collect().toSeq
     assert(or === Seq("Asche", "Laub"))
-    // EXISTS {} fast path with a bound target correlates the pair too
+    // EXISTS {} with a bound target correlates the pair too
     val ex = run(
       """MATCH (w:WasteItem) MATCH (f:Facility)
         |WHERE EXISTS { (w)-[:DISPOSED_AT]->(f) }
@@ -1970,6 +2005,26 @@ class CypherFrontendSpec extends SparkSpec {
         |WHERE any(x IN items WHERE COUNT { (x)-[:DISPOSED_AT]->() } >= 1)
         |RETURN s.name AS n""".stripMargin).as[String].collect().toSeq
     assert(lambda === Seq("Restmuell"))
+  }
+
+  test("OPTIONAL MATCH WHERE refuses every subquery term on a variable bound only before the clause") {
+    // w is bound by the first MATCH, not by the OPTIONAL MATCH whose
+    // WHERE reads it: compiled against the clause's frame it would be
+    // existential (a silent wrong answer: the only row is [Asche, null])
+    // or, read in an inner WHERE, an unresolved column
+    for (term <- Seq(
+        "(w)-[:DISPOSED_AT]->()",
+        "(w)-[:DISPOSED_AT]->()<-[:DISPOSED_AT]-(o)",
+        "COUNT { (w)-[:DISPOSED_AT]->()<-[:DISPOSED_AT]-(o) } > 0",
+        "COUNT { (w)-[:DISPOSED_AT]->() } > 0",
+        "EXISTS { (w)-[:DISPOSED_AT]->(f:Facility) WHERE f.name IS NOT NULL }",
+        "EXISTS { (o)-[:DISPOSED_AT]->(f) WHERE f.name = w.name }")) {
+      val e = intercept[IllegalArgumentException](run(
+        s"""MATCH (w:WasteItem)-[:DISPOSED_IN]->(s:WasteStream)
+           |OPTIONAL MATCH (s)<-[:DISPOSED_IN]-(o:WasteItem) WHERE $term
+           |RETURN w.name, o.name""".stripMargin).collect())
+      assert(e.getMessage.contains("'w' is bound outside this clause"), s"$term: ${e.getMessage}")
+    }
   }
 
   test("OPTIONAL MATCH WHERE with a lambda-bound quantifier keeps the null-padded rows") {

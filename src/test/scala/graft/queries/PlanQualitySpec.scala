@@ -867,4 +867,19 @@ class PlanQualitySpec extends SparkSpec {
         s"top-k planned as a global sort for $q in:\n$plan")
     }
   }
+
+  test("g10: Cypher NOT (c)-[:PLACED]->() is one LeftAnti join whose probe scans only the edges") {
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val opt = GraphQueries.g10DslOrphans(spark, dir).queryExecution.optimizedPlan
+    val joins = opt.collect { case j: Join => j }
+    assert(joins.size === 1 && joins.head.joinType == LeftAnti,
+      s"expected exactly one join, a LeftAnti, in:\n$opt")
+    // g10's edge set is the orders scan; the node table is a union of
+    // four other scans, none of which the probe may read
+    val orders = graft.core.Tables.orders(spark, dir).columns.toSet
+    val probeScans = joins.head.right.collectLeaves().map(_.output.map(_.name).toSet)
+    assert(probeScans === Seq(orders),
+      s"the anti join's probe must scan the edge relation alone in:\n$opt")
+  }
 }
