@@ -39,9 +39,8 @@ object ObservedCheckpoint {
     (ck, await(obs, MetricsWait))
   }
 
-  /** The metrics of `obs`, observed on an action that has already run
-    * (a checkpoint here, a write in the ETL), or [[ObservedMetricsTimeout]]
-    * after `wait`. */
+  /** The metrics of `obs`, observed on a checkpoint that has already
+    * run, or [[ObservedMetricsTimeout]] after `wait`. */
   private[graft] def await(obs: Observation, wait: FiniteDuration): Row =
     try Await.result(obs.future, wait)
     catch {

@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.spark.sql.functions._
 
 import graft.core.GraftSession
+import graft.graph.GraphStore
 
 /** CLI parity with the reference's three entry points (SURVEY.md §3):
   *
@@ -58,7 +59,7 @@ object EtlMain {
         val streams = WasteItems.streamNodes(cls).count()
         // a corrupt store fails the dry-run instead of reporting every
         // target as unmatched: readOr only falls back when there is no store
-        val knownFacilities = Pipeline.readOr(spark, Pipeline.nodesPath(store),
+        val knownFacilities = GraphStore.readOr(spark, Pipeline.nodesPath(store),
             cls.select(lit("").as("label"), lit("").as("uid"), col("target").as("name")).limit(0))
           .filter(col("label") === "Facility").select("uid", "name")
         val unmatched = WasteItems.unmatchedFacilities(cls, knownFacilities)

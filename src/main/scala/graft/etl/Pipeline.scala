@@ -3,8 +3,8 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{ObservedCheckpoint, Tables}
 import graft.graph.{GraphStore, SchemaRegistry}
+import graft.graph.GraphStore.{readOr, Rewrite}
 
 /** End-to-end ETL orchestration — the reference's three entry points
   * (`facilities.py` phase 1, `waste_items.py` phase 2,
@@ -21,16 +21,6 @@ object Pipeline {
 
   private[etl] def nodesPath(store: String) = s"$store/nodes"
   private def edgesPath(store: String) = s"$store/edges"
-
-  /** Existence check, NOT a catch-all: swallowing a transient read
-    * error would hand back the empty scaffold and the phase's final
-    * overwrite would wipe the store. A real read failure must fail the
-    * run. */
-  private[etl] def readOr(spark: SparkSession, path: String, scaffold: DataFrame): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Tables.parquet(spark, path) else scaffold
-  }
 
   /** Align a stored frame to the expected column ORDER by name (the
     * partitioned store moves `label` to the end on read). Same column
@@ -58,24 +48,19 @@ object Pipeline {
   /** Phase 1 (`facilities.py`): JSON → dedup-merge → Facility node
     * upsert. Returns facilities imported.
     *
-    * Import counters (SURVEY A5) ride the write job via `observe` —
-    * the distributed replacement for the reference's per-row counter
-    * increments. No extra pass over the store: at 100 TB a post-hoc
-    * count() is a full re-scan per metric. The wait for the observed
-    * counters is bounded ([[ObservedCheckpoint.await]]), so a lost
-    * listener event fails the import instead of hanging it. */
+    * Import counters (SURVEY A5) ride the commit's checkpoint job
+    * ([[GraphStore.commit]]) — the distributed replacement for the
+    * reference's per-row counter increments. No extra pass over the
+    * store: at 100 TB a post-hoc count() is a full re-scan per metric. */
   def importFacilities(spark: SparkSession, jsonPath: String, store: String,
                        clock: Column): Long = {
     val incoming = Facilities.facilityNodes(spark, jsonPath)
       .withColumn("created_at", clock).withColumn("updated_at", clock)
     val existing = aligned(readOr(spark, nodesPath(store), incoming.limit(0)), incoming)
-    val merged = GraphStore.upsertNodes(existing, incoming, clock, Facilities.fieldNames)
-      .localCheckpoint(true)
-    val obs = org.apache.spark.sql.Observation()
-    GraphStore.writeNodes(merged.observe(obs,
-      coalesce(sum(when(col("label") === "Facility", 1L)), lit(0L)).as("facilities")),
-      nodesPath(store)) // label-partitioned
-    counters(obs).getLong(0)
+    val Seq((_, nodes)) = GraphStore.commit(Rewrite.nodes(
+      GraphStore.upsertNodes(existing, incoming, clock, Facilities.fieldNames),
+      nodesPath(store), labelCount("Facility")))
+    nodes.getLong(1)
   }
 
   /** Phase 2 (`waste_items.py`): CSV → parse/classify → WasteItem +
@@ -99,31 +84,18 @@ object Pipeline {
       aligned(readOr(spark, nodesPath(store), scaffolded.limit(0)), scaffolded)
     val facilities = existingNodes.filter(col("label") === "Facility")
       .select("uid", "name")
-    // materialize BOTH merge results before any overwrite — every plan
-    // below reads the paths being rewritten (read-then-overwrite hazard)
-    val mergedNodes = GraphStore.upsertNodes(existingNodes, scaffolded, clock, Facilities.fieldNames)
-      .localCheckpoint(true)
     val incomingEdges = WasteItems.edges(cls, facilities, clock)
-    val existingEdges = readOr(spark, edgesPath(store), incomingEdges.limit(0))
-    val mergedEdges = GraphStore.upsertEdges(existingEdges, incomingEdges).localCheckpoint(true)
-
-    // counters ride the two write jobs (observe), not three extra scans
-    val nodeObs = org.apache.spark.sql.Observation()
-    val edgeObs = org.apache.spark.sql.Observation()
-    GraphStore.writeNodes(mergedNodes.observe(nodeObs,
-      coalesce(sum(when(col("label") === "WasteItem", 1L)), lit(0L)).as("items"),
-      coalesce(sum(when(col("label") === "WasteStream", 1L)), lit(0L)).as("streams")),
-      nodesPath(store)) // label-partitioned
-    GraphStore.writeEdges(mergedEdges.observe(edgeObs, count(lit(1)).as("edges")),
-      edgesPath(store)) // rel_type-partitioned
-
-    val nodeCounts = counters(nodeObs)
-    (nodeCounts.getLong(0), nodeCounts.getLong(1), counters(edgeObs).getLong(0))
+    val Seq((_, nodes), (_, edges)) = GraphStore.commit(
+      Rewrite.nodes(GraphStore.upsertNodes(existingNodes, scaffolded, clock, Facilities.fieldNames),
+        nodesPath(store), labelCount("WasteItem"), labelCount("WasteStream")),
+      Rewrite.edges(GraphStore.upsertEdges(readOr(spark, edgesPath(store), incomingEdges.limit(0)),
+        incomingEdges), edgesPath(store)))
+    (nodes.getLong(1), nodes.getLong(2), edges.getLong(0))
   }
 
-  /** The counters observed on a finished write job, in `observe` order. */
-  private def counters(obs: org.apache.spark.sql.Observation) =
-    ObservedCheckpoint.await(obs, ObservedCheckpoint.MetricsWait)
+  /** The number of `label` nodes in a frame, as an observable metric. */
+  private def labelCount(label: String): Column =
+    coalesce(sum(when(col("label") === label, 1L)), lit(0L)).as(label)
 
   /** `init_db --stats` (`neo4j_db.py:122-148`): label counts from one
     * aggregation plus an edge count, two jobs each (AQE runs the shuffle

@@ -342,6 +342,15 @@ object CypherFrontend {
     }
   }
 
+  /** The terms a subquery term compiles over its own matched frame: its
+    * inner WHERE, and COLLECT's RETURN and ORDER BY keys. */
+  private def subqueryReads(t: Term): Seq[Term] = t match {
+    case PExistsChain(_, w) => w.toSeq
+    case ECountChain(_, w) => w.toSeq
+    case ec: ECollect => ec.where.toSeq ++ (ec.ret +: ec.orderBy.map(_.expr))
+    case _ => Nil
+  }
+
   /** The subquery terms in a quantifier's body that bind its OWN lambda
     * variable — the parts the higher-order `filter` cannot evaluate (a
     * join per element), compiled by the explode route instead. */
@@ -1268,6 +1277,16 @@ object CypherFrontend {
       * scope: the names frames join on. */
     private def patternVars(s: Scope): Set[String] =
       s.collect { case (v, Node | Rel) => v }.toSet
+    /** The columns of variable `v`, bound as `b`, in frame `d`: a
+      * scalar's own, a path's or a var-length rel's scratch columns
+      * (length(p), size(r) and [h IN r | ...] resolve through them), else
+      * its namespaced family. */
+    private def varCols(v: String, b: Binding, d: DataFrame): Seq[String] = b match {
+      case Scalar => Seq(v)
+      case p: PathBinding => Seq(p.lenCol, p.strCol)
+      case VarLenRel(len, hops) => Seq(len, hops)
+      case _ => d.columns.filter(_.startsWith(v + "$")).toSeq
+    }
     /** Best-effort: does this list expression carry string elements? */
     private def stringElems(list: Expr): Boolean = list match {
       case EFn("split", _) | EFn("keys", _) => true
@@ -1755,14 +1774,8 @@ object CypherFrontend {
           // silently degrade to an existential, and its inner WHERE or
           // RETURN could not read one — refuse and point at the
           // correlated form instead
-          def inner(t: Term): Seq[Term] = t match {
-            case PExistsChain(_, w) => w.toSeq
-            case ECountChain(_, w) => w.toSeq
-            case ec: ECollect => ec.where.toSeq ++ (ec.ret +: ec.orderBy.map(_.expr))
-            case _ => Nil
-          }
           def binds(d: DataFrame, v: String) = d.columns.exists(c => c == v || c.startsWith(v + "$"))
-          terms.flatMap(t => subqueryVars(t).toSeq.flatten ++ inner(t).flatMap(refs))
+          terms.flatMap(t => subqueryVars(t).toSeq.flatten ++ subqueryReads(t).flatMap(refs))
             .distinct.foreach { r =>
               require(!binds(df, r) || binds(cdf, r),
                 s"OPTIONAL MATCH WHERE: variable '$r' is bound outside " +
@@ -1916,16 +1929,8 @@ object CypherFrontend {
       val order =
         if (carry) carried ++ exprItems.filterNot(aggItems.contains) ++ aggItems
         else p.items
-      // a carried variable's columns: a scalar's own, a path's or a
-      // var-length rel's scratch columns (length(p), size(r) and
-      // [h IN r | ...] resolve through them), else its namespaced family
       def names(i: RetItem): Seq[String] = i.expr match {
-        case EVar(v) if carried.contains(i) => carriedScope(v) match {
-          case Scalar => Seq(v)
-          case b: PathBinding => Seq(b.lenCol, b.strCol)
-          case VarLenRel(len, hops) => Seq(len, hops)
-          case _ => in.columns.filter(_.startsWith(v + "$")).toSeq
-        }
+        case EVar(v) if carried.contains(i) => varCols(v, carriedScope(v), in)
         case _ => Seq(i.name)
       }
       def byName(i: RetItem): Seq[Column] = names(i).map(c => col("`" + c + "`"))
@@ -1987,12 +1992,12 @@ object CypherFrontend {
     private def applyPred(df: DataFrame, p: Pred, negated: Boolean): DataFrame = p match {
       case PNot(inner) => applyPred(df, inner, !negated)
       case PAnd(l, r) if !negated => applyPred(applyPred(df, l, false), r, false)
-      case PExistsChain(chains, wh) =>
+      case pe: PExistsChain =>
         // compile the pattern into its matched frame, then semi/anti
-        // join the outer frame on every shared variable's uid. A
-        // compiled chain's keys are made DISTINCT first (its walks
-        // multiply per key); a hop probe ships one row per edge
-        val m = chainFrame(chains, wh, df.columns, "EXISTS { }", keysOnly = true)
+        // join the outer frame on its keys. A compiled chain's keys are
+        // made DISTINCT first (its walks multiply per key); a hop probe
+        // ships one row per edge
+        val m = chainFrame(pe, df)
         val keys = m.keys(v => s"_ex$$$v")
         val probe = if (m.hop) keys else keys.distinct()
         df.join(probe, m.on(df, probe, v => s"_ex$$$v"),
@@ -2011,27 +2016,43 @@ object CypherFrontend {
 
     /** A pattern subquery's matched frame: one row per match, with the
       * `v$uid` key of each variable in `shared` (bound in the outer
-      * frame, sorted), and the scope the subquery reads in. `hop`: the
-      * frame is one hop's edges (the shape rule of [[chainFrame]]), and
-      * `labels` are labels written on shared variables that the outer
-      * row must carry (a compiled chain filters them itself). */
+      * frame, sorted), the `corr` key columns of the outer variables its
+      * inner reads correlate on (see [[chainFrame]]), and the scope the
+      * subquery reads in. `hop`: the frame is one hop's edges (the shape
+      * rule of [[chainFrame]]), and `labels` are labels written on shared
+      * variables that the outer row must carry (a compiled chain filters
+      * them itself). */
     private case class Matched(df: DataFrame, shared: Seq[String], scope: Scope,
-                               hop: Boolean = false, labels: Seq[(String, String)] = Nil) {
-      /** The shared keys of every match, key `v` named `name(v)`. */
-      def keys(name: String => String): DataFrame =
-        df.select(shared.map(v => col(ns(v, "uid")).as(name(v))): _*)
-      /** The condition joining outer frame `d` to `probe`, whose key of
-        * `v` is `name(v)`. */
+                               hop: Boolean = false, labels: Seq[(String, String)] = Nil,
+                               corr: Seq[String] = Nil) {
+      /** The key names: each shared variable, then each `corr` column. */
+      def names: Seq[String] = shared ++ corr
+      /** The key columns of the frame, key `k` named `name(k)`. */
+      def keyCols(name: String => String): Seq[Column] =
+        shared.map(v => col(ns(v, "uid")).as(name(v))) ++ corr.map(c => col("`" + c + "`").as(name(c)))
+      /** The keys of every match. */
+      def keys(name: String => String): DataFrame = df.select(keyCols(name): _*)
+      /** The condition joining outer frame `d` to `probe`, whose key `k`
+        * is `name(k)`; a `corr` key matches null to null. */
       def on(d: DataFrame, probe: DataFrame, name: String => String): Column =
         (shared.map(v => d(ns(v, "uid")) === probe(name(v))) ++
+          corr.map(c => d("`" + c + "`") <=> probe("`" + name(c) + "`")) ++
           labels.map { case (v, l) => d(ns(v, "label")) === lit(l) }).reduce(_ && _)
     }
 
-    /** Compile an EXISTS/COUNT/COLLECT subquery's chains into its
-      * [[Matched]] frame (inner WHERE applied), the common front half of
-      * the semi-join, flag-column, count-column and list-column
-      * compilations. `keysOnly`: the caller reads only the shared keys
-      * (EXISTS, COUNT; COLLECT's RETURN reads the match).
+    /** Compile an EXISTS/COUNT/COLLECT subquery term `t`, read from
+      * frame `outer`, into its [[Matched]] frame (inner WHERE applied),
+      * the common front half of the semi-join, flag-column, count-column
+      * and list-column compilations. EXISTS and COUNT read only the keys;
+      * COLLECT's RETURN reads the match.
+      *
+      * An outer variable that the inner WHERE (or COLLECT's RETURN or
+      * ORDER BY) reads but the pattern does not bind correlates, as in
+      * Neo4j: the outer frame's distinct tuples of the shared keys and of
+      * those variables are joined into the matched frame before the
+      * WHERE, and each such variable's key (a node's uid, a
+      * relationship's identity, a scalar's value) joins the key of the
+      * probe.
       *
       * The one shape rule: when the caller reads only keys and the
       * subquery is one chain of one fixed hop with no relationship
@@ -2045,16 +2066,21 @@ object CypherFrontend {
       * dangling edge (its unbound endpoint is no node) matches the hop
       * probe but not a compiled chain. Every other subquery compiles its
       * chains as MATCH does. */
-    private def chainFrame(chains: Seq[Chain], wh: Option[Pred],
-                           outerCols: Array[String], what: String,
-                           keysOnly: Boolean): Matched = {
+    private def chainFrame(t: Term, outer: DataFrame): Matched = {
+      val (chains, wh, what) = t match {
+        case PExistsChain(cs, w) => (cs, w, "EXISTS { }")
+        case ECountChain(cs, w) => (cs, w, "COUNT { }")
+        case ec: ECollect => (ec.chains, ec.where, "COLLECT { }")
+        case other => sys.error(s"not a subquery term: $other")
+      }
+      val outerCols = outer.columns
       def bound(n: NodePat) = n.v.exists(v => outerCols.contains(ns(v, "uid")))
       // a bound endpoint's label is checked on the outer row's label
       def checkable(n: NodePat) =
         n.props.isEmpty && (!bound(n) || n.label.isEmpty || outerCols.contains(ns(n.v.get, "label")))
       chains match {
         case Seq(Chain(head, Seq((rel, tail))))
-            if keysOnly && wh.isEmpty && rel.v.isEmpty && rel.varLen.isEmpty &&
+            if !t.isInstanceOf[ECollect] && wh.isEmpty && rel.v.isEmpty && rel.varLen.isEmpty &&
               (head.v.isEmpty || head.v != tail.v) && (bound(head) || bound(tail)) &&
               checkable(head) && checkable(tail) =>
           val (e, fromC, toC) = hopEdges(rel)
@@ -2078,13 +2104,27 @@ object CypherFrontend {
             cdf = joinOnShared(cdf, chDf, shared, "inner", None)
             cscope ++= chScope
           }
-          val inner = scope ++ cscope
-          wh.foreach(p => cdf = scoped(inner)(applyPred(cdf, p, negated = false)))
           val shared = patternVars(cscope).toSeq
             .filter(v => outerCols.contains(ns(v, "uid"))).sorted
           require(shared.nonEmpty,
             s"$what must share at least one variable with the outer MATCH")
-          Matched(cdf, shared, inner)
+          val corrVars = (subqueryReads(t).flatMap(refs).toSet -- cscope.keySet).toSeq.sorted
+            .filter(v => scope.get(v).exists(b => !b.isInstanceOf[Lambda] &&
+              varCols(v, b, outer).exists(outerCols.contains)))
+          val corr = corrVars.flatMap(v => scope(v) match {
+            case Node => Seq(ns(v, "uid"))
+            case Rel => Seq("src_uid", "rel_type", "dst_uid").map(ns(v, _))
+            case b => varCols(v, b, outer)
+          })
+          if (corr.nonEmpty) {
+            val sharedKeys = shared.map(ns(_, "uid"))
+            val carried = sharedKeys ++ corrVars.flatMap(v => varCols(v, scope(v), outer))
+            cdf = cdf.join(outer.select(carried.map(c => col("`" + c + "`")): _*)
+              .dropDuplicates(sharedKeys ++ corr), sharedKeys)
+          }
+          val inner = scope ++ cscope
+          wh.foreach(p => cdf = scoped(inner)(applyPred(cdf, p, negated = false)))
+          Matched(cdf, shared, inner, corr = corr)
       }
     }
 
@@ -2144,48 +2184,46 @@ object CypherFrontend {
       * matches. A quantifier takes the explode route. */
     private def joinProbe(d: DataFrame, t: Term, c: String): DataFrame = t match {
       case pe: PExistsChain =>
-        val m = chainFrame(pe.chains, pe.where, d.columns, "EXISTS { }", keysOnly = true)
+        val m = chainFrame(pe, d)
         val probe = m.keys(v => s"$c$$$v").distinct().withColumn(c, lit(true))
         d.join(probe, m.on(d, probe, v => s"$c$$$v"), "left_outer")
-          .drop(m.shared.map(v => s"$c$$$v"): _*)
+          .drop(m.names.map(v => s"$c$$$v"): _*)
       case q: PQuant => joinLambdaQuantFlag(d, q, c)
       case cc: ECountChain =>
-        val m = chainFrame(cc.chains, cc.where, d.columns, "COUNT { }", keysOnly = true)
-        val counts = m.df
-          .groupBy(m.shared.map(v => col(ns(v, "uid")).as(s"$c$$$v")): _*)
-          .agg(count(lit(1)).as(c))
+        val m = chainFrame(cc, d)
+        val counts = m.df.groupBy(m.keyCols(v => s"$c$$$v"): _*).agg(count(lit(1)).as(c))
         d.join(counts, m.on(d, counts, v => s"$c$$$v"), "left_outer")
-          .drop(m.shared.map(v => s"$c$$$v"): _*)
+          .drop(m.names.map(v => s"$c$$$v"): _*)
       case ec: ECollect =>
-        val m = chainFrame(ec.chains, ec.where, d.columns, "COLLECT { }", keysOnly = false)
-        val (cdf, shared, inner) = (m.df, m.shared, m.scope)
-        // shared keys ride as `k$<var>`, apart from the sort (`s<j>`)
+        val m = chainFrame(ec, d)
+        val (cdf, names, inner) = (m.df, m.names, m.scope)
+        // the keys ride as `k$<name>`, apart from the sort (`s<j>`)
         // and value (`v`) columns whatever the variables are named;
         // the returned value rides as the FINAL sort key so tie
         // order (and the no-ORDER-BY default) is deterministic
         val keys = ec.orderBy :+ OrderKey(ec.ret, "", asc = true)
         val proj = scoped(inner)(withProbes(cdf, keys.flatMap(k => probeTerms(k.expr)))(
-          _.select(shared.map(v => col(ns(v, "uid")).as(s"$c$$k$$$v")) ++
+          _.select(m.keyCols(v => s"$c$$k$$$v") ++
             keys.zipWithIndex.map { case (k, j) =>
               exprCol(k.expr).as(s"$c$$s$j") } :+
             exprCol(ec.ret).as(s"$c$$v"): _*)))
         val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(shared.map(v => col(s"$c$$k$$$v")): _*)
+          .partitionBy(names.map(v => col(s"$c$$k$$$v")): _*)
           .orderBy(keys.zipWithIndex.map { case (k, j) =>
             sortKey(col(s"$c$$s$j"), k.asc) }: _*)
           .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
             org.apache.spark.sql.expressions.Window.unboundedFollowing)
         var lists = proj
           .withColumn(c, collect_list(col(s"$c$$v")).over(w))
-          .select(shared.map(v => col(s"$c$$k$$$v")) :+ col(c): _*)
-          .dropDuplicates(shared.map(v => s"$c$$k$$$v"))
+          .select(names.map(v => col(s"$c$$k$$$v")) :+ col(c): _*)
+          .dropDuplicates(names.map(v => s"$c$$k$$$v"))
         ec.limit.foreach(n =>
           lists = lists.withColumn(c, slice(col(c), 1, n.toInt)))
         val dt = lists.schema(c).dataType
         // empty-list refill happens HERE, where the element type
         // is known (the use site cannot type an empty array)
         d.join(lists, m.on(d, lists, v => s"$c$$k$$$v"), "left_outer")
-          .drop(shared.map(v => s"$c$$k$$$v"): _*)
+          .drop(names.map(v => s"$c$$k$$$v"): _*)
           .withColumn(c, coalesce(col("`" + c + "`"),
             array().cast(dt)))
       case other => sys.error(s"not a subquery term: $other")

@@ -23,8 +23,10 @@ import org.apache.spark.sql.types._
   *   - `clearAll()` — `MATCH (n) DETACH DELETE n` (`neo4j_db.py:148-155`):
   *     the held frames become empty with schema preserved.
   *   - `save(dir)` / [[GraphDb.load]] — durability via the partitioned
-  *     parquet store ([[GraphStore.writeNodes]]), standing in for the
-  *     bolt server's own persistence.
+  *     parquet store through [[GraphStore.commit]] and
+  *     [[GraphStore.readOr]], standing in for the bolt server's own
+  *     persistence: saving to the directory the session loaded is safe,
+  *     and an empty table or a missing edge table loads as an empty one.
   *   - `isConnected` — session liveness (`neo4j_db.py:108-115`).
   *
   * State is an immutable frame pair swapped atomically on write —
@@ -179,10 +181,13 @@ final class GraphDb private (val spark: SparkSession,
 
   def isConnected: Boolean = !spark.sparkContext.isStopped
 
-  /** Persist both frames to the partitioned parquet store. */
-  def save(dir: String): Unit = {
-    GraphStore.writeNodes(g.nodes, s"$dir/nodes")
-    GraphStore.writeEdges(g.edges, s"$dir/edges")
+  /** Persist both frames to the partitioned parquet store; the session
+    * then holds them as written, not the files the save replaced. */
+  def save(dir: String): Unit = synchronized {
+    val Seq((n, _), (e, _)) = GraphStore.commit(
+      GraphStore.Rewrite.nodes(g.nodes, s"$dir/nodes"),
+      GraphStore.Rewrite.edges(g.edges, s"$dir/edges"))
+    g = CypherWrite.Graph(n, e)
   }
 
   /** The reference's per-item params dict as a one-row frame. Nulls
@@ -246,10 +251,10 @@ object GraphDb {
             clock: () => Column = () => current_timestamp()): GraphDb =
     new GraphDb(spark, CypherWrite.Graph(nodes, edges), clock)
 
-  /** Reopen a [[GraphDb#save]]d store. */
+  /** Reopen a [[GraphDb#save]]d store (or an ETL store: one without
+    * edges yet loads them empty). A store without nodes fails the load. */
   def load(spark: SparkSession, dir: String,
            clock: () => Column = () => current_timestamp()): GraphDb =
-    new GraphDb(spark, CypherWrite.Graph(
-      GraphStore.readNodes(spark, s"$dir/nodes"),
-      GraphStore.readEdges(spark, s"$dir/edges")), clock)
+    new GraphDb(spark, CypherWrite.Graph(GraphStore.readNodes(spark, s"$dir/nodes"),
+      GraphStore.readOr(spark, s"$dir/edges", empty(spark).edges)), clock)
 }

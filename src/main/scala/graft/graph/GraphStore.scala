@@ -1,7 +1,9 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.core.{ObservedCheckpoint, Tables}
 
 /** Property-graph storage on columnar tables (SURVEY.md §1.4).
   *
@@ -16,6 +18,10 @@ import org.apache.spark.sql.functions._
   * and `[:REL]` filters prune files before any IO; node/edge uids are
   * deterministic (graft.core.Uid) so upserts are idempotent joins, and
   * repeated traversal joins can be co-located by bucketing on uid.
+  *
+  * One commit rule: every rewrite of a stored table (the ETL imports,
+  * `GraphDb.save`, the streaming sinks) reads it with [[readOr]] and
+  * writes it back with [[commit]].
   */
 object GraphStore {
 
@@ -108,22 +114,54 @@ object GraphStore {
       edges.filter(col("rel_type").isin(relTypes: _*)).select(col("src_uid").as("uid")).distinct(),
       Seq("uid"), "left_anti")
 
-  /** Physical layout (SURVEY §4): nodes partition by label, edges by
+  /** Reads go through [[graft.core.Tables.parquet]]: an unchanged store
+    * reuses its inferred schema instead of running a footer job per read. */
+  def readNodes(spark: SparkSession, path: String): DataFrame = Tables.parquet(spark, path)
+  def readEdges(spark: SparkSession, path: String): DataFrame = Tables.parquet(spark, path)
+
+  /** The stored table at `path`, or `scaffold` when there is none. An
+    * existence check, NOT a catch-all: a read error handed back as the
+    * scaffold would be committed over the store, so it fails the caller. */
+  def readOr(spark: SparkSession, path: String, scaffold: DataFrame): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) Tables.parquet(spark, path)
+    else scaffold
+  }
+
+  /** One table a [[commit]] rewrites: its new contents, its path, its
+    * partition column and the counters its checkpoint observes. */
+  final class Rewrite private (val frame: DataFrame, val path: String,
+                               val partitionBy: Option[String], val counters: Seq[Column])
+
+  /** The store layout (SURVEY §4): nodes partition by label, edges by
     * rel_type, so `MATCH (:Label)` / `[:REL]` predicates prune files
     * before any IO — the columnar replacement for Neo4j's label/type
     * indexes. At cluster scale add `.bucketBy(n, "uid")` (table format
-    * permitting) to co-locate repeated traversal joins.
-    */
-  def writeNodes(nodes: DataFrame, path: String): Unit =
-    nodes.write.mode("overwrite").partitionBy("label").parquet(path)
+    * permitting) to co-locate repeated traversal joins. */
+  object Rewrite {
+    def nodes(frame: DataFrame, path: String, counters: Column*): Rewrite =
+      new Rewrite(frame, path, Some("label"), counters)
+    def edges(frame: DataFrame, path: String, counters: Column*): Rewrite =
+      new Rewrite(frame, path, Some("rel_type"), counters)
+    /** A table with no partition layout (a streaming sink's state). */
+    def flat(frame: DataFrame, path: String): Rewrite = new Rewrite(frame, path, None, Nil)
+  }
 
-  def writeEdges(edges: DataFrame, path: String): Unit =
-    edges.write.mode("overwrite").partitionBy("rel_type").parquet(path)
-
-  /** Reads go through [[graft.core.Tables.parquet]]: an unchanged store
-    * reuses its inferred schema instead of running a footer job per read. */
-  def readNodes(spark: SparkSession, path: String): DataFrame = graft.core.Tables.parquet(spark, path)
-  def readEdges(spark: SparkSession, path: String): DataFrame = graft.core.Tables.parquet(spark, path)
+  /** Overwrite the tables of one step. The frames usually read the paths
+    * they replace, and Spark deletes a path before its write job runs, so
+    * ALL frames are checkpointed first (one job each, observing the row
+    * count and the counters), then each path is overwritten. A table with
+    * no rows is written unpartitioned, so it reads back with its schema.
+    * Returns each table as written with its metrics (rows, counters...). */
+  def commit(tables: Rewrite*): Seq[(DataFrame, Row)] = {
+    val done = tables.map(t =>
+      ObservedCheckpoint.aggregate(t.frame, count(lit(1)).as("rows"), t.counters: _*))
+    tables.zip(done).foreach { case (t, (ck, m)) =>
+      val w = if (m.getLong(0) == 0) ck.write else t.partitionBy.fold(ck.write)(ck.write.partitionBy(_))
+      w.mode("overwrite").parquet(t.path)
+    }
+    done
+  }
 
   /** The 100 TB layout (SURVEY §4 "bucketing node/edge tables by uid"):
     * nodes bucketed+sorted by `uid`, edges by `src_uid`, same bucket

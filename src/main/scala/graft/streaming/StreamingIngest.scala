@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.graph.GraphStore
+import graft.graph.GraphStore.Rewrite
 
 /** Structured Streaming ingest over the same batch upsert core
   * (SURVEY.md §2.10 — the north-star streaming extension; the reference
@@ -27,41 +28,22 @@ object StreamingIngest {
     stream.withWatermark(tsCol, delay).dropDuplicates(uidCol, tsCol)
 
   /** The per-microbatch sink body: idempotent upsert of node-shaped rows
-    * into a parquet-backed node store. Reads the current store (empty
-    * scaffold on first batch), merges, rewrites. `localCheckpoint`
-    * materializes the merge BEFORE overwrite — reading and overwriting
-    * the same path lazily would corrupt it.
+    * into a parquet-backed node store, read with [[GraphStore.readOr]]
+    * (empty scaffold on the first batch; a read failure fails the batch,
+    * which the checkpoint retries) and rewritten by [[GraphStore.commit]].
     */
   def upsertBatch(storePath: String, propCols: Seq[String])(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    // Existence check, NOT a catch-all: swallowing a transient read
-    // error here would treat a populated store as empty and the
-    // overwrite below would wipe it. A real read failure must fail the
-    // batch (the checkpoint retries it).
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val existing =
-      if (fs.exists(p)) spark.read.parquet(storePath) else batch.limit(0)
+    val existing = GraphStore.readOr(batch.sparkSession, storePath, batch.limit(0))
     // upsertNodes requires uid-unique incoming: reduce the microbatch to
     // latest-per-uid first (several updates can land in one batch).
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("uid").orderBy(col("updated_at").desc)
     val latest = batch.withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1).drop("_rn")
-    val merged = GraphStore.upsertNodes(existing, latest,
-      current_timestamp(), propCols).localCheckpoint(true)
-    merged.write.mode("overwrite").parquet(storePath)
+    GraphStore.commit(Rewrite.flat(
+      GraphStore.upsertNodes(existing, latest, current_timestamp(), propCols), storePath))
   }
 
-  /** The edge-side microbatch sink (S5's relationship MERGE under
-    * streaming delivery): edges keyed (src_uid, dst_uid, rel_type)
-    * carrying first/last-seen stats, merged by per-column MIN/MAX.
-    * Unlike a count, min/max merges are idempotent AND associative —
-    * replaying a batch or splitting it differently leaves the store
-    * byte-identical, which is the only property that makes a
-    * checkpoint-retried sink safe. Same existence-check discipline as
-    * [[upsertBatch]]: a transient store-read failure must fail the
-    * batch, not masquerade as an empty store. */
   /** The aggregate-state microbatch sink (q74's partial-merge algebra
     * under streaming delivery), in the idempotent-under-replay form:
     * each batch OVERWRITES its own partial-rollup partition
@@ -106,10 +88,9 @@ object StreamingIngest {
     * dependent; the tombstone is what buys commutativity.
     */
   def cdcBatch(storePath: String)(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
     // the store is seeded with the base snapshot before the stream
     // starts — a missing store is a bug, not an empty state
-    val existing = spark.read.parquet(storePath)
+    val existing = batch.sparkSession.read.parquet(storePath)
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("c_custkey").orderBy(col("seq").desc)
     val latest = batch.withColumn("_rn", row_number().over(w))
@@ -129,20 +110,21 @@ object StreamingIngest {
           .as("seq"),
         when(applied, col("c.op") === "D")
           .otherwise(coalesce(col("b.deleted"), lit(false))).as("deleted"))
-      .localCheckpoint(true)
-    merged.write.mode("overwrite").parquet(storePath)
+    GraphStore.commit(Rewrite.flat(merged, storePath))
   }
 
-  def upsertEdgeBatch(storePath: String)(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val p = new org.apache.hadoop.fs.Path(storePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val existing =
-      if (fs.exists(p)) spark.read.parquet(storePath) else batch.limit(0)
-    val merged = existing.unionByName(batch)
-      .groupBy("src_uid", "dst_uid", "rel_type")
-      .agg(min("first_us").as("first_us"), max("last_us").as("last_us"))
-      .localCheckpoint(true)
-    merged.write.mode("overwrite").parquet(storePath)
-  }
+  /** The edge-side microbatch sink (S5's relationship MERGE under
+    * streaming delivery): edges keyed (src_uid, dst_uid, rel_type)
+    * carrying first/last-seen stats, merged by per-column MIN/MAX.
+    * Unlike a count, min/max merges are idempotent AND associative —
+    * replaying a batch or splitting it differently leaves the store
+    * byte-identical, which is the only property that makes a
+    * checkpoint-retried sink safe. Same read-then-overwrite path as
+    * [[upsertBatch]]. */
+  def upsertEdgeBatch(storePath: String)(batch: DataFrame, batchId: Long): Unit =
+    GraphStore.commit(Rewrite.flat(
+      GraphStore.readOr(batch.sparkSession, storePath, batch.limit(0)).unionByName(batch)
+        .groupBy("src_uid", "dst_uid", "rel_type")
+        .agg(min("first_us").as("first_us"), max("last_us").as("last_us")),
+      storePath))
 }

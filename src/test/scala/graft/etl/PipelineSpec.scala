@@ -50,4 +50,18 @@ class PipelineSpec extends SparkSpec {
     Pipeline.reset(spark, store)
     assert(!new java.io.File(s"$store/nodes").exists())
   }
+
+  test("an import whose every table cell is '-' writes an empty edge table that reads back") {
+    // Banane has no disposal target: the edge table is empty, and it
+    // must still read back for the re-import and for stats
+    val dir = Files.createTempDirectory("graft-pipeline-empty")
+    val csv = dir.resolve("items.csv")
+    Files.write(csv, "Abfallart,Entsorgungsweg\nBanane,-\n".getBytes("UTF-8"))
+    val store = dir.toString + "/graph"
+    for (_ <- 1 to 2)
+      assert(Pipeline.importWasteItems(spark, csv.toString, store, clock) === ((1L, 0L, 0L)))
+    val st = Pipeline.stats(spark, store)
+    assert(st.labels === Map("WasteItem" -> 1L))
+    assert(st.totalEdges === 0L)
+  }
 }

@@ -2027,6 +2027,66 @@ class CypherFrontendSpec extends SparkSpec {
     }
   }
 
+  // the fixture graph plus a stream that shares a facility's name and
+  // more disposal edges: w1 reaches two streams and both facilities
+  private lazy val corrNodes = nodes.unionByName(
+    Seq(("WasteStream", "u:s3", "Wertstoffhof A", null.asInstanceOf[String]))
+      .toDF("label", "uid", "name", "address"))
+  private lazy val corrEdges = edges.unionByName(Seq(
+    ("u:w1", "DISPOSED_IN", "u:s3"),
+    ("u:w1", "DISPOSED_AT", "u:f2"),
+    ("u:w2", "DISPOSED_AT", "u:f2"),
+    ("u:w3", "DISPOSED_AT", "u:f1"),
+    ("u:w4", "DISPOSED_AT", "u:f1")).toDF("src_uid", "rel_type", "dst_uid"))
+  private def corrRows(cypher: String): Seq[String] =
+    CypherFrontend.run(cypher, corrNodes, corrEdges, Map.empty)
+      .collect().map(_.toSeq.map {
+        case l: scala.collection.Seq[_] => l.mkString("[", ", ", "]")
+        case v => String.valueOf(v)
+      }.mkString("|")).sorted.toSeq
+
+  test("EXISTS { } correlates an inner WHERE on an outer variable its pattern does not bind") {
+    val head = "MATCH (w:WasteItem)-[:DISPOSED_AT]->(f:Facility)"
+    val sub = "EXISTS { (w)-[:DISPOSED_IN]->(s) WHERE f.name = 'Wertstoffhof A' }"
+    val moved = "(f.name = 'Wertstoffhof A' AND EXISTS { (w)-[:DISPOSED_IN]->(s) })"
+    for ((where, rewrite, expected) <- Seq(
+        (sub, moved, Seq("Bauschutt|Wertstoffhof A", "Laub|Wertstoffhof A")),
+        (s"NOT $sub", s"NOT $moved",
+          Seq("Altlack|Wertstoffhof A", "Asche|Wertstoffhof B", "Bauschutt|Wertstoffhof B")),
+        (s"w.name = 'Asche' OR $sub", s"w.name = 'Asche' OR $moved",
+          Seq("Asche|Wertstoffhof B", "Bauschutt|Wertstoffhof A", "Laub|Wertstoffhof A")))) {
+      val got = corrRows(s"$head WHERE $where RETURN w.name, f.name")
+      assert(got === expected, where)
+      assert(got === corrRows(s"$head WHERE $rewrite RETURN w.name, f.name"), where)
+    }
+  }
+
+  test("COUNT { } and COLLECT { } correlate inner reads of outer nodes and scalars") {
+    val head = "MATCH (w:WasteItem)-[:DISPOSED_AT]->(f:Facility)"
+    // per (w, f) row, the streams of w not named like f
+    val decorrelated = corrRows(
+      s"""$head OPTIONAL MATCH (w)-[:DISPOSED_IN]->(s) WHERE s.name <> f.name
+         |WITH w, f, count(s) AS c RETURN w.name, f.name, c""".stripMargin)
+    assert(decorrelated === Seq("Altlack|Wertstoffhof A|0", "Asche|Wertstoffhof B|1",
+      "Bauschutt|Wertstoffhof A|1", "Bauschutt|Wertstoffhof B|2", "Laub|Wertstoffhof A|1"))
+    assert(corrRows(s"""$head RETURN w.name, f.name,
+         |COUNT { (w)-[:DISPOSED_IN]->(s) WHERE s.name <> f.name } AS c""".stripMargin)
+      === decorrelated)
+    // the same read through a scalar alias
+    assert(corrRows(s"""$head WITH w, f, f.name AS fn RETURN w.name, fn,
+         |COUNT { (w)-[:DISPOSED_IN]->(s) WHERE s.name <> fn } AS c""".stripMargin)
+      === decorrelated)
+    // COLLECT's WHERE, ORDER BY and RETURN read the outer row too
+    val lists = corrRows(s"""$head RETURN w.name, f.name, COLLECT {
+         |MATCH (w)-[:DISPOSED_IN]->(s) WHERE s.name <> f.name
+         |RETURN s.name + '@' + f.name ORDER BY s.name DESC } AS l""".stripMargin)
+    assert(lists === Seq("Altlack|Wertstoffhof A|[]",
+      "Asche|Wertstoffhof B|[Restmuell@Wertstoffhof B]",
+      "Bauschutt|Wertstoffhof A|[Restmuell@Wertstoffhof A]",
+      "Bauschutt|Wertstoffhof B|[Wertstoffhof A@Wertstoffhof B, Restmuell@Wertstoffhof B]",
+      "Laub|Wertstoffhof A|[Biomuell@Wertstoffhof A]"))
+  }
+
   test("OPTIONAL MATCH WHERE with a lambda-bound quantifier keeps the null-padded rows") {
     // w1 is Restmuell's only item with a facility edge; Biomuell's w3
     // has none, so its binding is rejected and padded, not dropped

@@ -90,6 +90,39 @@ class GraphDbSpec extends SparkSpec {
       Seq("label", "uid", "name", "created_at", "updated_at"))
   }
 
+  test("save to the directory the session was loaded from keeps old and new nodes") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-graphdb-resave").toString
+    val db = GraphDb.empty(spark, clock = clk)
+    db.query(itemTemplate, Map("name" -> "Asche", "uid" -> uidOf("Asche")))
+    db.query(streamTemplate, Map("item_name" -> "Asche",
+      "stream_name" -> "Restmuell", "stream_uid" -> uidOf("Restmuell")))
+    db.save(dir)
+    val re = GraphDb.load(spark, dir, clk)
+    re.query(itemTemplate, Map("name" -> "Laub", "uid" -> uidOf("Laub")))
+    re.save(dir) // the merged frame reads the files this save replaces
+    // the saving session keeps answering after its own save
+    assert(re.query("MATCH (n) RETURN count(*) AS c").as[Long].head() === 3L)
+    val names = GraphDb.load(spark, dir, clk)
+      .query("MATCH (n) RETURN n.name AS name ORDER BY name").as[String].collect().toSeq
+    assert(names === Seq("Asche", "Laub", "Restmuell"))
+  }
+
+  test("a graph with nodes and no edges saves and loads back") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-graphdb-noedges").toString
+    val db = GraphDb.empty(spark, clock = clk)
+    db.query(itemTemplate, Map("name" -> "Asche", "uid" -> uidOf("Asche")))
+    db.save(dir)
+    val re = GraphDb.load(spark, dir, clk)
+    assert(re.query("MATCH (n) RETURN count(*) AS c").as[Long].head() === 1L)
+    assert(re.query("MATCH ()-[r]->() RETURN count(r) AS c").as[Long].head() === 0L)
+    assert(re.edges.columns.toSet === db.edges.columns.toSet)
+  }
+
+  test("loading a directory with no saved nodes fails instead of opening an empty graph") {
+    val missing = java.nio.file.Files.createTempDirectory("graft-graphdb-missing").toString + "/nope"
+    intercept[org.apache.spark.sql.AnalysisException](GraphDb.load(spark, missing, clk))
+  }
+
   test("batch form: one distributed upsert for a whole params frame") {
     val db = GraphDb.empty(spark, clock = clk)
     val batch = (1 to 50).map(i => (s"Item $i", uidOf(s"Item $i"))).toDF("name", "uid")

@@ -8,7 +8,8 @@ import graft.SparkSpec
 import graft.functions.SkewJoin
 
 /** Physical layout + skew: partition pruning on the label/rel_type
-  * partitioned store, and salted-join equivalence. */
+  * partitioned store that [[GraphStore.commit]] writes, and salted-join
+  * equivalence. */
 class StoreLayoutSpec extends SparkSpec {
   import spark.implicits._
 
@@ -18,7 +19,7 @@ class StoreLayoutSpec extends SparkSpec {
       ("WasteItem", "u1", "Banane"), ("WasteItem", "u2", "Farbeimer"),
       ("Facility", "u3", "Hof"), ("WasteStream", "u4", "Biotonne"))
       .toDF("label", "uid", "name")
-    GraphStore.writeNodes(nodes, dir)
+    GraphStore.commit(GraphStore.Rewrite.nodes(nodes, dir))
     val q = GraphStore.readNodes(spark, dir).filter(col("label") === "WasteItem")
     val scan = q.queryExecution.executedPlan.collectLeaves().head.toString
     assert(scan.contains("PartitionFilters") && scan.contains("label"),
@@ -33,7 +34,7 @@ class StoreLayoutSpec extends SparkSpec {
     val edges = Seq(
       ("a", "b", "DISPOSED_IN"), ("a", "c", "DISPOSED_AT"), ("b", "c", "DISPOSED_AT"))
       .toDF("src_uid", "dst_uid", "rel_type")
-    GraphStore.writeEdges(edges, dir)
+    GraphStore.commit(GraphStore.Rewrite.edges(edges, dir))
     val q = GraphStore.readEdges(spark, dir).filter(col("rel_type") === "DISPOSED_AT")
     assert(q.count() === 2)
     val scan = q.queryExecution.executedPlan.collectLeaves().head.toString
