@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
   PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions.{expr, timestamp_micros}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Parquet table access for the driver-generated corpus (TESTDATA.md).
   *
@@ -42,6 +42,29 @@ object Tables {
       stamp(df).foreach(files => schemas.put(path, (settings, files, df.schema)))
       df
     }
+  }
+
+  /** Cache the schema of the table just written at `path`, so its next
+    * [[parquet]] read infers nothing: the writer knows what inference
+    * would find, `written` (partition columns last) made [[nullable]].
+    * The stamp comes from a file index over the fresh files. */
+  def seed(spark: SparkSession, path: String, written: StructType): Unit = {
+    val settings = SchemaSettings.map(k => spark.conf.getOption(k))
+    val schema = nullable(written)
+    stamp(spark.read.schema(schema).parquet(path))
+      .foreach(files => schemas.put(path, (settings, files, schema)))
+  }
+
+  /** `schema` as a parquet read returns it: every field, array element
+    * and map key/value nullable (Spark's own `asNullable` is private). */
+  def nullable(schema: StructType): StructType = {
+    def loose(t: DataType): DataType = t match {
+      case s: StructType => nullable(s)
+      case a: ArrayType => ArrayType(loose(a.elementType), containsNull = true)
+      case m: MapType => MapType(loose(m.keyType), loose(m.valueType), valueContainsNull = true)
+      case other => other
+    }
+    StructType(schema.fields.map(f => f.copy(dataType = loose(f.dataType), nullable = true)))
   }
 
   /** (path, modification time, length) of every file the read's file

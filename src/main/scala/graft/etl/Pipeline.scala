@@ -99,9 +99,9 @@ object Pipeline {
 
   /** `init_db --stats` (`neo4j_db.py:122-148`): label counts from one
     * aggregation plus an edge count, two jobs each (AQE runs the shuffle
-    * stage as its own job). Right after an import it runs 6 jobs: the
-    * rewritten node and edge directories each need a schema-inference
-    * job first; on an unchanged store it runs 4. */
+    * stage as its own job): 4 jobs, right after an import too, since
+    * [[GraphStore.commit]] seeds the schemas it writes and the read
+    * infers nothing. */
   def stats(spark: SparkSession, store: String): Stats = {
     val nodes = readOr(spark, nodesPath(store),
       spark.emptyDataFrame.withColumn("label", lit("")))

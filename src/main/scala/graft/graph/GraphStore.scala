@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.core.{ObservedCheckpoint, Tables}
 
@@ -19,9 +20,11 @@ import graft.core.{ObservedCheckpoint, Tables}
   * deterministic (graft.core.Uid) so upserts are idempotent joins, and
   * repeated traversal joins can be co-located by bucketing on uid.
   *
-  * One commit rule: every rewrite of a stored table (the ETL imports,
-  * `GraphDb.save`, the streaming sinks) reads it with [[readOr]] and
-  * writes it back with [[commit]].
+  * One commit rule: every rewrite of a stored table (the ETL imports
+  * and `GraphDb.save`) reads it with [[readOr]] and writes it back with
+  * [[commit]]. The streaming sinks keep their state in
+  * [[graft.streaming.StateVersions]] instead, whose batches never read
+  * the path they write.
   */
 object GraphStore {
 
@@ -131,7 +134,7 @@ object GraphStore {
   /** One table a [[commit]] rewrites: its new contents, its path, its
     * partition column and the counters its checkpoint observes. */
   final class Rewrite private (val frame: DataFrame, val path: String,
-                               val partitionBy: Option[String], val counters: Seq[Column])
+                               val partitionBy: String, val counters: Seq[Column])
 
   /** The store layout (SURVEY §4): nodes partition by label, edges by
     * rel_type, so `MATCH (:Label)` / `[:REL]` predicates prune files
@@ -140,11 +143,9 @@ object GraphStore {
     * permitting) to co-locate repeated traversal joins. */
   object Rewrite {
     def nodes(frame: DataFrame, path: String, counters: Column*): Rewrite =
-      new Rewrite(frame, path, Some("label"), counters)
+      new Rewrite(frame, path, "label", counters)
     def edges(frame: DataFrame, path: String, counters: Column*): Rewrite =
-      new Rewrite(frame, path, Some("rel_type"), counters)
-    /** A table with no partition layout (a streaming sink's state). */
-    def flat(frame: DataFrame, path: String): Rewrite = new Rewrite(frame, path, None, Nil)
+      new Rewrite(frame, path, "rel_type", counters)
   }
 
   /** Overwrite the tables of one step. The frames usually read the paths
@@ -152,13 +153,18 @@ object GraphStore {
     * ALL frames are checkpointed first (one job each, observing the row
     * count and the counters), then each path is overwritten. A table with
     * no rows is written unpartitioned, so it reads back with its schema.
-    * Returns each table as written with its metrics (rows, counters...). */
+    * Each written schema seeds [[Tables.parquet]]'s cache (the nullable
+    * data columns, then the partition column), so the next read of a
+    * table infers nothing. Returns each table as written with its
+    * metrics (rows, counters...). */
   def commit(tables: Rewrite*): Seq[(DataFrame, Row)] = {
     val done = tables.map(t =>
       ObservedCheckpoint.aggregate(t.frame, count(lit(1)).as("rows"), t.counters: _*))
     tables.zip(done).foreach { case (t, (ck, m)) =>
-      val w = if (m.getLong(0) == 0) ck.write else t.partitionBy.fold(ck.write)(ck.write.partitionBy(_))
+      val (part, data) = ck.schema.partition(f => m.getLong(0) > 0 && f.name == t.partitionBy)
+      val w = if (part.isEmpty) ck.write else ck.write.partitionBy(t.partitionBy)
       w.mode("overwrite").parquet(t.path)
+      Tables.seed(ck.sparkSession, t.path, StructType(data ++ part))
     }
     done
   }

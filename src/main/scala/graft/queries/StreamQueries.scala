@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
+import graft.streaming.StateVersions
+
 /** Structured Streaming driven through the DuckDB gate (SURVEY §2.10):
   * the events table replayed through real `readStream` file sources,
   * AvailableNow triggers, and memory sinks, with each final result
@@ -280,7 +282,7 @@ object StreamQueries extends QueryPack {
     // the whole store from an empty input
     runStream(s, "s05",
       BatchSink(st => StreamingIngest.upsertBatch(store(st), Seq("last_type", "last_value")),
-        st => s.read.parquet(store(st))
+        st => StateVersions.current(s, store(st))
           .select(col("uid"), col("last_type"), col("last_value"))),
       extraConf = noTrailingBatch)(stagedTable(s, dir, "events")) { src =>
       val nodes = src().select(
@@ -581,7 +583,7 @@ object StreamQueries extends QueryPack {
     // empty batch is a no-op that would still rewrite the store
     runStream(s, "s11",
       BatchSink(st => StreamingIngest.upsertEdgeBatch(store(st)),
-        st => s.read.parquet(store(st))),
+        st => StateVersions.current(s, store(st))),
       extraConf = noTrailingBatch)(stagedTable(s, dir, "events")) { src =>
       src().select(
         concat(lit("User:"), col("user_id")).as("src_uid"),
@@ -598,31 +600,24 @@ object StreamQueries extends QueryPack {
   /** s12 — streaming incremental rollup (q74's merge algebra across
     * micro-batches): the events table staged as FOUR files so
     * AvailableNow + maxFilesPerTrigger=1 delivers four batches; each
-    * batch writes its own partial (event_type, day) rollup partition
+    * batch folds its rows into the (event_type, day) rollup state
     * ([[graft.streaming.StreamingIngest.rollupBatch]] — idempotent
-    * under checkpoint replay because a batch overwrites only its own
-    * `batch=<id>` partition), and the result is the merge-on-read of
-    * all partials: counts and decimal sums add, min/max fold. The
-    * result hash-equals the one-pass batch rollup precisely because
-    * the merge algebra is associative — the row→batch split cannot
-    * matter, which is also why the repartition(4) staging needs no
-    * determinism of its own.
+    * under checkpoint replay because batch n always folds version n of
+    * the state into version n+1): counts and decimal sums add, min/max
+    * fold, and the result is the last version. The result hash-equals
+    * the one-pass batch rollup precisely because the merge algebra is
+    * associative — the row→batch split cannot matter, which is also
+    * why the repartition(4) staging needs no determinism of its own.
     *
-    * Scale: the 100 TB/day ingest shape — per-batch partials sized by
-    * the rollup key-space, an append-only store, zero base rescans;
-    * compaction (a re-merge rewrite) bounds the partition count. */
+    * Scale: the 100 TB/day ingest shape — state sized by the rollup
+    * key-space, two versions kept, zero base rescans. */
   def s12StreamRollupMerge(s: SparkSession, dir: String): DataFrame = {
     import graft.streaming.StreamingIngest
     def store(state: Path) = state.resolve("rollup").toString
     runStream(s, "s12",
       BatchSink(st => StreamingIngest.rollupBatch(store(st)),
-        st => s.read.parquet(store(st))
-          .groupBy("event_type", "d")
-          .agg(sum("cnt").as("cnt"), sum("total").as("mtotal"),
-            min("vmin").as("vmin"), max("vmax").as("vmax"))
-          .select(col("event_type"), col("d"), col("cnt"),
-            round(col("mtotal"), 2).cast("double").as("total"),
-            col("vmin"), col("vmax")))) { d =>
+        st => StateVersions.current(s, store(st))
+          .withColumn("total", round(col("total"), 2).cast("double")))) { d =>
       s.read.parquet(s"$dir/events.parquet").repartition(4)
         .write.mode("overwrite").parquet(d.in.toString)
       s.read.parquet(d.in.toString).schema
@@ -654,16 +649,16 @@ object StreamQueries extends QueryPack {
     def store(state: Path) = state.resolve("snapshot").toString
     runStream(s, "s13",
       BatchSink(st => StreamingIngest.cdcBatch(store(st)),
-        st => s.read.parquet(store(st))
+        st => StateVersions.current(s, store(st))
           .filter(!col("deleted"))
           .select("c_custkey", "c_name", "c_acctbal")),
       eventTs = false) { d =>
       val base = graft.core.Tables.customer(s, dir)
         .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
-      // seed the store with the base snapshot at seq 0, nothing deleted
-      base.withColumn("seq", lit(0))
-        .withColumn("deleted", lit(false))
-        .write.mode("overwrite").parquet(store(d.state))
+      // seed the store's version 0 with the base snapshot at seq 0,
+      // nothing deleted
+      StateVersions.seed(store(d.state),
+        base.withColumn("seq", lit(0)).withColumn("deleted", lit(false)))
       // the change feed: deletes at seq 2, first updates at seq 1, a
       // second update wave at seq 3 (%33 ⊂ %11 — exercises the seq
       // gate), inserts as updates on unseen keys. %50∩%33 keys see
@@ -816,9 +811,9 @@ object StreamQueries extends QueryPack {
     * THREE forced micro-batches (event_id mod 3 slices,
     * maxFilesPerTrigger=1 — components genuinely form across batch
     * boundaries), each batch folds its bipartite co-click incidence
-    * into a star-compressed component store (CC over star(prior) ∪
-    * batch — O(vertices + batch) input per step, never the history),
-    * and the FINAL STORE is projected exactly like g49 and checked
+    * into a star-compressed component store (CC over star(v{n}) ∪
+    * batch n → v{n+1} — O(vertices + batch) input per step, never the
+    * history), and the FINAL STORE is projected exactly like g49 and checked
     * against the same batch recursive-CTE oracle. Star forests
     * preserve connectivity and the component minimum, so
     * "incremental ≡ batch" is an algebraic identity here, enforced by
@@ -829,7 +824,7 @@ object StreamQueries extends QueryPack {
     val ev = graft.core.Tables(s, dir, "events")
     runStream(s, "s18",
       BatchSink(st => StreamingCC.mergeBatch(st.toString), { st =>
-        val users = StreamingCC.latest(s, st.toString)
+        val users = StateVersions.current(s, st.toString)
           .filter(col("vid") % 2 === 0)
           .select(expr("vid div 2").as("user_id"), col("component"))
         val full = users.join(
@@ -856,8 +851,8 @@ object StreamQueries extends QueryPack {
     * verdicts are IDENTICAL to d39's batch first-sight law, and the
     * gate checks that with the batch oracle. State is the first-sight
     * hash set — the cardinality any exact global dedup must hold
-    * somewhere (s03's argument) — appended per batch in versioned
-    * parquet, replay-idempotent like s18's store.
+    * somewhere (s03's argument) — folded per batch into the next
+    * version of the set, replay-idempotent like s18's store.
     *
     * Per doc: window count and duplicated-window count (the span merge
     * is d39's batch post-pass; counts are the streaming-side verdict a
@@ -880,8 +875,8 @@ object StreamQueries extends QueryPack {
 
   /** s20 — streaming release manifest (d42's incremental twin): docs
     * arrive in three slices and each micro-batch folds its per-shard
-    * (count, char volume, xor fingerprint) partials into the running
-    * manifest — counts ADD, fingerprints XOR, both associative and
+    * (count, char volume, xor fingerprint) into the next version of the
+    * running manifest — counts ADD, fingerprints XOR, both associative and
     * commutative, so the final state equals the batch manifest from
     * ANY slicing or arrival order (no doc-order requirement, unlike
     * s19 — this is the strongest merge-law family). Gated against
@@ -892,7 +887,7 @@ object StreamQueries extends QueryPack {
     import graft.streaming.StreamingManifest
     runStream(s, "s20",
       BatchSink(st => StreamingManifest.foldBatch(st.toString),
-        st => s.read.parquet(StreamingManifest.latest(st.toString))
+        st => StateVersions.current(s, st.toString)
           .select("shard", "n_docs", "n_chars", "content_fp")),
       eventTs = false) { d =>
       val docs = s.read.parquet(s"$dir/documents.parquet")
@@ -903,22 +898,21 @@ object StreamQueries extends QueryPack {
   }
 
   /** s21 — streaming sketch profile: the a02 mergeable-HLL law under
-    * incremental delivery. Each micro-batch writes its own partition
-    * of per-key PARTIAL sketches ([[StreamingIngest.sketchBatch]] —
-    * replay rewrites the same bytes, so exactly-once holds on top of
-    * a non-idempotent payload), and compact-on-read merges them with
-    * `hll_union_agg`. Gated like a02: the merged row counts must be
-    * EXACT (partial counts are associative), the merged estimate
-    * within 5% of exact distinct — DuckDB's sketch differs from
-    * DataSketches, so the law, not the bits, is the contract. */
+    * incremental delivery. Each micro-batch unions its per-key PARTIAL
+    * sketches into the next version of the sketch state with
+    * `hll_union_agg` ([[StreamingIngest.sketchBatch]] — a replayed
+    * batch refolds the same prior version, so exactly-once holds on
+    * top of a non-idempotent payload). Gated like a02: the merged row
+    * counts must be EXACT (partial counts are associative), the merged
+    * estimate within 5% of exact distinct — DuckDB's sketch differs
+    * from DataSketches, so the law, not the bits, is the contract. */
   def s21StreamSketch(s: SparkSession, dir: String): DataFrame = {
     def store(state: Path) = state.resolve("sketches").toString
     runStream(s, "s21",
       BatchSink(st => graft.streaming.StreamingIngest.sketchBatch(store(st)), { st =>
-        val merged = s.read.parquet(store(st))
-          .groupBy("event_type")
-          .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("est"),
-            sum(col("cnt")).as("n_events"))
+        val merged = StateVersions.current(s, store(st))
+          .select(col("event_type"), hll_sketch_estimate(col("sk")).as("est"),
+            col("cnt").as("n_events"))
         val exact = graft.core.Tables.events(s, dir)
           .groupBy("event_type")
           .agg(countDistinct(col("user_id")).as("exact_users"),
@@ -926,8 +920,9 @@ object StreamQueries extends QueryPack {
         merged.join(exact, "event_type")
           .select(col("event_type"), col("exact_users"), col("n_events"),
             (col("n_events") === col("exact_events")).as("count_ok"),
-            (abs(col("est") - col("exact_users")) <=
-              col("exact_users") * 0.05).as("sketch_ok"))
+            // a key without a sketch fails the gate
+            coalesce(abs(col("est") - col("exact_users")) <=
+              col("exact_users") * 0.05, lit(false)).as("sketch_ok"))
           .orderBy("event_type")
       }))(stagedTable(s, dir, "events"))(src => src())
   }

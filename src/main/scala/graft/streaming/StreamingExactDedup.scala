@@ -14,16 +14,12 @@ import org.apache.spark.sql.functions._
   * doc ids, so "in state ∨ intra-batch rank > 1" ≡ "global
   * row_number > 1".
   *
-  * The hash-set state is APPEND-ONLY (first-sight hashes never
-  * leave), so it lives as one parquet DELTA dir per batch (`h/d{n}` =
-  * the hashes batch n saw first): batch n reads d0..d{n−1} as its
-  * prior and writes only its own new hashes — the old v{n}→v{n+1}
-  * full-set rewrite re-wrote every hash ever seen once per batch,
-  * quadratic total state bytes over the stream's life (guide §1.2).
-  * Replay stays idempotent — a Spark retry of batch n overwrites
-  * d{n} from the same deterministic inputs and never reads its own
-  * stale partial (the prior filter is strictly `< n`); verdicts land
-  * in b{n} subdirs as before. State size is the distinct-window
+  * The hash-set state is a [[StateVersions]] store: batch n reads
+  * v{n} as its prior and writes v{n+1} = v{n} ∪ the hashes it saw
+  * first, so a stream keeps two sets, not one delta per batch for
+  * every later batch to read. Replay stays idempotent — a Spark retry
+  * of batch n scores against the same v{n} and rewrites the same
+  * verdicts in its b{n} subdir. State size is the distinct-window
   * cardinality, which is what any EXACT global dedup must hold
   * somewhere (s03's argument); the bounded-horizon trade is s09's
   * watermark variant.
@@ -43,17 +39,7 @@ object StreamingExactDedup {
         posexplode(transform(sequence(lit(0), size(col("w")) - K),
           i => md5(concat_ws(" ", slice(col("w"), i + 1, lit(K))))))
           .as(Seq("pos", "h")))
-    val deltaDirs = Option(new java.io.File(s"$stateRoot/h").listFiles())
-      .toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.matches("d\\d+") &&
-        f.getName.drop(1).toLong < batchId)
-      .map(_.toString).sorted
-    val prior =
-      if (deltaDirs.nonEmpty) s.read.parquet(deltaDirs: _*)
-      else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("h",
-            org.apache.spark.sql.types.StringType))))
+    val prior = StateVersions.read(s, stateRoot, batchId, wins.select("h").limit(0))
     val scored = wins
       .withColumn("rn", row_number().over(
         Window.partitionBy("h").orderBy("doc_id", "pos")))
@@ -69,8 +55,8 @@ object StreamingExactDedup {
         coalesce(col("n_windows"), lit(0L)).as("n_windows"),
         coalesce(col("n_dup"), lit(0L)).as("n_dup"))
       .write.mode("overwrite").parquet(s"$stateRoot/verdicts/b$batchId")
-    scored.filter(col("seen").isNull && col("rn") === 1)
-      .select("h").distinct()
-      .write.mode("overwrite").parquet(s"$stateRoot/h/d$batchId")
+    // rn = 1 leaves one row per first-seen hash
+    StateVersions.write(stateRoot, batchId,
+      prior.unionByName(scored.filter(col("seen").isNull && col("rn") === 1).select("h")))
   }
 }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.graph.GraphStore
-import graft.graph.GraphStore.Rewrite
 
 /** Structured Streaming ingest over the same batch upsert core
   * (SURVEY.md §2.10 — the north-star streaming extension; the reference
@@ -15,7 +14,9 @@ import graft.graph.GraphStore.Rewrite
   * state (late duplicates beyond the delay are handled by the upsert's
   * idempotency anyway — two layers, both required at scale: dedup for
   * state size, upsert for exactly-once-effect on re-delivery after
-  * watermark eviction or batch replay).
+  * watermark eviction or batch replay). Every sink's store is a
+  * [[StateVersions]] store: batch n folds v{n} into v{n+1}, so a
+  * replayed batch refolds the same prior instead of its own output.
   */
 object StreamingIngest {
 
@@ -28,53 +29,48 @@ object StreamingIngest {
     stream.withWatermark(tsCol, delay).dropDuplicates(uidCol, tsCol)
 
   /** The per-microbatch sink body: idempotent upsert of node-shaped rows
-    * into a parquet-backed node store, read with [[GraphStore.readOr]]
-    * (empty scaffold on the first batch; a read failure fails the batch,
-    * which the checkpoint retries) and rewritten by [[GraphStore.commit]].
-    */
+    * into a parquet-backed node store (empty before the first batch). */
   def upsertBatch(storePath: String, propCols: Seq[String])(batch: DataFrame, batchId: Long): Unit = {
-    val existing = GraphStore.readOr(batch.sparkSession, storePath, batch.limit(0))
+    val existing = StateVersions.read(batch.sparkSession, storePath, batchId, batch.limit(0))
     // upsertNodes requires uid-unique incoming: reduce the microbatch to
     // latest-per-uid first (several updates can land in one batch).
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("uid").orderBy(col("updated_at").desc)
     val latest = batch.withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1).drop("_rn")
-    GraphStore.commit(Rewrite.flat(
-      GraphStore.upsertNodes(existing, latest, current_timestamp(), propCols), storePath))
+    StateVersions.write(storePath, batchId,
+      GraphStore.upsertNodes(existing, latest, current_timestamp(), propCols))
   }
 
   /** The aggregate-state microbatch sink (q74's partial-merge algebra
-    * under streaming delivery), in the idempotent-under-replay form:
-    * each batch OVERWRITES its own partial-rollup partition
-    * (`store/batch=<id>`), so a checkpoint-retried batch rewrites the
-    * same bytes instead of double-counting — additive folds are NOT
-    * idempotent (unlike the edge sink's min/max), and per-batch
-    * partition isolation is what restores exactly-once on top of them.
-    * Reading the store then merges the partials by key: the
-    * append-deltas, compact-on-read shape of production incremental
-    * views. */
-  def rollupBatch(storePath: String)(batch: DataFrame, batchId: Long): Unit =
-    batch.groupBy(col("event_type"), to_date(col("ts")).as("d"))
-      .agg(count(lit(1)).as("cnt"),
-        sum(col("value").cast("decimal(18,6)")).as("total"),
-        min(col("value")).as("vmin"), max(col("value")).as("vmax"))
-      .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
+    * under streaming delivery): per (event_type, day) the state keeps
+    * count, decimal sum, min and max, and each batch folds its rows into
+    * it — counts and sums add, min/max fold. The sum's type is cast back
+    * after each fold, so every version has one schema. Additive folds
+    * are not idempotent by themselves (unlike the edge sink's min/max);
+    * the versioned store is what keeps a replayed batch from counting
+    * twice. */
+  def rollupBatch(storePath: String)(batch: DataFrame, batchId: Long): Unit = {
+    val rows = batch.select(col("event_type"), to_date(col("ts")).as("d"),
+      lit(1L).as("cnt"), col("value").cast("decimal(18,6)").as("total"),
+      col("value").as("vmin"), col("value").as("vmax"))
+    StateVersions.fold(storePath, batchId, rows)(_.groupBy("event_type", "d")
+      .agg(sum("cnt").as("cnt"), sum("total").cast("decimal(28,6)").as("total"),
+        min("vmin").as("vmin"), max("vmax").as("vmax")))
+  }
 
   /** The sketch-state microbatch sink (a02's mergeable-HLL algebra
-    * under streaming delivery): each batch overwrites its OWN
-    * partition with per-key PARTIAL HLL sketches + row counts —
-    * rollupBatch's idempotent-under-replay discipline with a sketch
-    * payload. Compact-on-read merges with `hll_union_agg`: sketch
-    * union is associative and order-free, so any batch split (or a
-    * checkpoint replay, which rewrites the same bytes) yields the
-    * same profile — the shape that lets 1000 executors profile
-    * 100 TB/day with one pass and a few KB of state per key. */
+    * under streaming delivery): per key the state keeps one HLL sketch
+    * and a row count, and each batch unions its PARTIAL sketches into
+    * it with `hll_union_agg`. Sketch union is associative and
+    * order-free, so any batch split (or a replayed batch, which refolds
+    * the same prior) yields the same profile — the shape that lets 1000
+    * executors profile 100 TB/day with one pass and a few KB of state
+    * per key. */
   def sketchBatch(storePath: String)(batch: DataFrame, batchId: Long): Unit =
-    batch.groupBy(col("event_type"))
-      .agg(hll_sketch_agg(col("user_id"), 14).as("sk"),
-        count(lit(1)).as("cnt"))
-      .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
+    StateVersions.fold(storePath, batchId, batch.groupBy(col("event_type"))
+      .agg(hll_sketch_agg(col("user_id"), 14).as("sk"), count(lit(1)).as("cnt")))(
+      _.groupBy("event_type").agg(hll_union_agg(col("sk")).as("sk"), sum("cnt").as("cnt")))
 
   /** CDC micro-batch apply (q63's general MERGE, incrementally): each
     * change row carries (key, full new values, op ∈ U/D, seq). The
@@ -88,9 +84,10 @@ object StreamingIngest {
     * dependent; the tombstone is what buys commutativity.
     */
   def cdcBatch(storePath: String)(batch: DataFrame, batchId: Long): Unit = {
-    // the store is seeded with the base snapshot before the stream
-    // starts — a missing store is a bug, not an empty state
-    val existing = batch.sparkSession.read.parquet(storePath)
+    // the store is seeded with the base snapshot as version 0 before the
+    // stream starts — a missing store is a bug, not an empty state
+    val existing = StateVersions.read(batch.sparkSession, storePath, batchId,
+      sys.error(s"cdcBatch: no seeded snapshot under $storePath"))
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("c_custkey").orderBy(col("seq").desc)
     val latest = batch.withColumn("_rn", row_number().over(w))
@@ -110,7 +107,7 @@ object StreamingIngest {
           .as("seq"),
         when(applied, col("c.op") === "D")
           .otherwise(coalesce(col("b.deleted"), lit(false))).as("deleted"))
-    GraphStore.commit(Rewrite.flat(merged, storePath))
+    StateVersions.write(storePath, batchId, merged)
   }
 
   /** The edge-side microbatch sink (S5's relationship MERGE under
@@ -119,12 +116,8 @@ object StreamingIngest {
     * Unlike a count, min/max merges are idempotent AND associative —
     * replaying a batch or splitting it differently leaves the store
     * byte-identical, which is the only property that makes a
-    * checkpoint-retried sink safe. Same read-then-overwrite path as
-    * [[upsertBatch]]. */
+    * checkpoint-retried sink safe. */
   def upsertEdgeBatch(storePath: String)(batch: DataFrame, batchId: Long): Unit =
-    GraphStore.commit(Rewrite.flat(
-      GraphStore.readOr(batch.sparkSession, storePath, batch.limit(0)).unionByName(batch)
-        .groupBy("src_uid", "dst_uid", "rel_type")
-        .agg(min("first_us").as("first_us"), max("last_us").as("last_us")),
-      storePath))
+    StateVersions.fold(storePath, batchId, batch)(_.groupBy("src_uid", "dst_uid", "rel_type")
+      .agg(min("first_us").as("first_us"), max("last_us").as("last_us")))
 }

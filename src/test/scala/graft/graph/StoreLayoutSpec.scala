@@ -41,6 +41,21 @@ class StoreLayoutSpec extends SparkSpec {
     assert(scan.contains("PartitionFilters") && scan.contains("rel_type"))
   }
 
+  test("commit seeds the schema a read of the written table infers") {
+    val root = Files.createTempDirectory("graft-store").toString
+    // label sits mid-frame and the tuple's numbers are non-nullable: the
+    // read puts the partition column last and makes every column nullable
+    val nodes = Seq((1L, "WasteItem", 2.5), (2L, "Facility", 1.0)).toDF("n", "label", "w")
+    GraphStore.commit(GraphStore.Rewrite.nodes(nodes, s"$root/nodes"),
+      GraphStore.Rewrite.edges(Seq(("a", "b", "R")).toDF("src_uid", "dst_uid", "rel_type")
+        .limit(0), s"$root/edges"))
+    for (path <- Seq(s"$root/nodes", s"$root/edges")) {
+      val seeded = graft.core.Tables.parquet(spark, path).schema
+      assert(seeded === spark.read.parquet(path).schema, path)
+    }
+    assert(graft.core.Tables.parquet(spark, s"$root/nodes").schema.fieldNames.last === "label")
+  }
+
   test("salted join equals plain join on skewed data") {
     // 90% of rows share one key — the skew shape salting exists for
     val big = (1 to 1000).map(i => (if (i <= 900) "hot" else s"k$i", i))

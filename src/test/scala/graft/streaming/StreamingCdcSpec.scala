@@ -41,13 +41,12 @@ class StreamingCdcSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("graft-cdcspec")
     try {
       val store = tmp.resolve("state").toString
-      base.withColumn("seq", lit(0)).withColumn("deleted", lit(false))
-        .write.mode("overwrite").parquet(store)
+      StateVersions.seed(store, base.withColumn("seq", lit(0)).withColumn("deleted", lit(false)))
       val bs = batches
       (order ++ replay).zipWithIndex.foreach { case (b, i) =>
         StreamingIngest.cdcBatch(store)(bs(b), i.toLong)
       }
-      spark.read.parquet(store).filter(!col("deleted"))
+      StateVersions.current(spark, store).filter(!col("deleted"))
         .select("c_custkey", "c_name", "c_acctbal")
         .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
     } finally graft.core.TempDirs.deleteQuietly(tmp, "cdcspec")

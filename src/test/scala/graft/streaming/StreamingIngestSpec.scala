@@ -34,14 +34,14 @@ class StreamingIngestSpec extends SparkSpec {
         Ev("u1", "Alpha", "S1", ts("2026-01-01 10:00:01")), // in-batch dup
         Ev("u2", "Beta", "S2", ts("2026-01-01 10:00:02")))
       q.processAllAvailable()
-      val after1 = spark.read.parquet(dir)
+      val after1 = StateVersions.current(spark, dir)
       assert(after1.count() === 2)
 
       mem.addData(
         Ev("u1", "Alpha", "S9", ts("2026-01-01 10:01:00")), // cross-batch update
         Ev("u3", "Gamma", "", ts("2026-01-01 10:01:30")))
       q.processAllAvailable()
-      val after2 = spark.read.parquet(dir)
+      val after2 = StateVersions.current(spark, dir)
       assert(after2.count() === 3)
       val u1 = after2.filter(col("uid") === "u1").head()
       assert(u1.getAs[String]("segment") === "S9") // non-empty incoming wins
@@ -56,7 +56,7 @@ class StreamingIngestSpec extends SparkSpec {
       .toDF("src_uid", "dst_uid", "rel_type", "first_us", "last_us")
     val b1 = Seq(("a", "b", "R", 3L, 15L), ("a", "c", "R", 6L, 40L), ("d", "a", "R", 1L, 2L))
       .toDF("src_uid", "dst_uid", "rel_type", "first_us", "last_us")
-    def stored() = spark.read.parquet(store)
+    def stored() = StateVersions.current(spark, store)
       .select("src_uid", "dst_uid", "rel_type", "first_us", "last_us")
       .collect().map(_.toString).sorted.toSeq
     StreamingIngest.upsertEdgeBatch(store)(b0, 0L)
@@ -82,10 +82,10 @@ class StreamingIngestSpec extends SparkSpec {
       .toDF("event_type", "ts", "value")
     StreamingIngest.rollupBatch(store)(b0, 0L)
     StreamingIngest.rollupBatch(store)(b1, 1L)
-    // a checkpoint retry re-delivers batch 1: the overwrite of its own
-    // partition must leave the store unchanged
+    // a checkpoint retry re-delivers batch 1: it refolds the same prior
+    // version, so the store must be unchanged
     StreamingIngest.rollupBatch(store)(b1, 1L)
-    val merged = spark.read.parquet(store)
+    val merged = StateVersions.current(spark, store)
       .groupBy("event_type", "d")
       .agg(sum("cnt").as("cnt"), sum("total").as("total"),
         min("vmin").as("vmin"), max("vmax").as("vmax"))
@@ -110,9 +110,9 @@ class StreamingIngestSpec extends SparkSpec {
       .toDF("event_type", "user_id")
     StreamingIngest.sketchBatch(store)(b0, 0L)
     StreamingIngest.sketchBatch(store)(b1, 1L)
-    // checkpoint retry: rewriting batch 1's partition changes nothing
+    // checkpoint retry: refolding batch 1 changes nothing
     StreamingIngest.sketchBatch(store)(b1, 1L)
-    val merged = spark.read.parquet(store)
+    val merged = StateVersions.current(spark, store)
       .groupBy("event_type")
       .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("est"),
         sum("cnt").as("cnt"))

@@ -11,7 +11,7 @@ import graft.SparkSpec
   * different slicing entirely) must land on the identical manifest —
   * add/xor folds are associative and commutative, so state cannot
   * remember history shape. Also pins retry idempotency: re-folding a
-  * batch id rewrites the same v{n+1}. */
+  * batch id leaves the same published state. */
 class StreamingManifestSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
@@ -24,7 +24,7 @@ class StreamingManifestSpec extends SparkSpec {
       slices.zipWithIndex.foreach { case (df, i) =>
         StreamingManifest.foldBatch(root)(df, i.toLong)
       }
-      spark.read.parquet(StreamingManifest.latest(root)).collect()
+      StateVersions.current(spark, root).collect()
         .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
         .toMap
     } finally graft.core.TempDirs.deleteQuietly(java.nio.file.Paths.get(root), "spec")
@@ -46,9 +46,9 @@ class StreamingManifestSpec extends SparkSpec {
     try {
       StreamingManifest.foldBatch(root)(s0, 0L)
       StreamingManifest.foldBatch(root)(s1, 1L)
-      val once = spark.read.parquet(s"$root/v2").collect().map(_.toSeq).toSet
+      val once = StateVersions.current(spark, root).collect().map(_.toSeq).toSet
       StreamingManifest.foldBatch(root)(s1, 1L) // replay
-      val twice = spark.read.parquet(s"$root/v2").collect().map(_.toSeq).toSet
+      val twice = StateVersions.current(spark, root).collect().map(_.toSeq).toSet
       assert(once == twice, "batch replay must rewrite identical state")
     } finally graft.core.TempDirs.deleteQuietly(java.nio.file.Paths.get(root), "spec")
   }
