@@ -162,6 +162,13 @@ object GraftSession {
       // static: read once, when the first session in the JVM creates the
       // cache, so it must be on the builder of that first session
       .config(CodegenCacheKey, CodegenCacheEntries.toString)
+      // Each stream runs in a clone of the session; with artifact
+      // isolation on (Spark's default) every clone gets its own executor
+      // class loader, so the clone's tasks miss the class cache and
+      // recompile every generated class. The engine adds no session
+      // artifacts (jars, files), so sharing the loader changes nothing
+      // else. Read once, when a session is created.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .getOrCreate()
     val cacheEntries = spark.conf.get(CodegenCacheKey)
     require(cacheEntries == CodegenCacheEntries.toString,

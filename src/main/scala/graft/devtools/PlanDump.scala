@@ -3,6 +3,7 @@ package graft.devtools
 import scala.collection.mutable
 
 import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -12,12 +13,14 @@ import org.json4s.jackson.JsonMethods.{compact, parse, render}
 
 /** Dev-only plan and job differential: one JSON line per read, with
   * `build_jobs` (Spark jobs run while the frame is built), `jobs` (those
-  * plus one `collect`'s), and the optimized logical plan with expression
-  * ids, plan ids and UUIDs renumbered by first appearance, and its node
-  * count; or `error`. Each read is built and collected once cold, then
-  * its jobs are counted on two warm repetitions (caches cleared before
-  * each), so a first read's schema inference is not charged to whichever
-  * query runs first; when the two counts differ the record also carries
+  * plus one `collect`'s), `compiles` (generated classes compiled during
+  * the second warm repetition, so a read that recompiles on every run
+  * shows), and the optimized logical plan with expression ids, plan ids
+  * and UUIDs renumbered by first appearance, and its node count; or
+  * `error`. Each read is built and collected once cold, then its jobs
+  * are counted on two warm repetitions (caches cleared before each), so
+  * a first read's schema inference is not charged to whichever query
+  * runs first; when the two counts differ the record also carries
   * `"jobs_unstable": [a, b]` and `jobs` is the first. Two modes:
   * {{{
   * tools/run.sh graft.devtools.PlanDump <sfDir> <name-regex...>
@@ -53,7 +56,7 @@ object PlanDump {
   /** Counts jobs through a public listener. [[drain]] runs a sentinel job
     * in its own group and waits to see it start; the bus delivers in
     * order, so every earlier job is counted by then (`Tracer`'s drain). */
-  private final class JobCount(sc: SparkContext) extends SparkListener {
+  private[graft] final class JobCount(sc: SparkContext) extends SparkListener {
     private var jobs, sentinels = 0L
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
       if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "sentinel")) {
@@ -93,8 +96,10 @@ object PlanDump {
         (j1 - j0, count.drain() - j0, plan)
       }
       val (buildJobs, jobs, plan) = warm()
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val again = warm()._2
       val rec = ("build_jobs" -> buildJobs) ~ ("jobs" -> jobs) ~
+        ("compiles" -> (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled)) ~
         ("nodes" -> plan.collect { case p => p }.size) ~ ("plan" -> normalize(plan.toString))
       if (again == jobs) rec else rec ~ ("jobs_unstable" -> List(jobs, again))
     } catch { case e: Exception => "error" -> String.valueOf(e.getMessage) }

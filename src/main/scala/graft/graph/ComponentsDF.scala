@@ -12,14 +12,14 @@ import org.apache.spark.sql.functions._
   * Components in MapReduce and Beyond", SoCC'14), run entirely inside
   * Catalyst — no RDD conversion, no Pregel runtime.
   *
-  * Two paths, one contract, picked by [[DriverFinish]]'s memory rule on
-  * the edge count the first round already observes × Catalyst's row
-  * size (no extra job):
+  * Two paths, one contract, picked by [[DriverFinish]]'s size rule:
   *  - an edge list within `spark.sql.autoBroadcastJoinThreshold` is
-  *    collected once and finished on the driver by union-find with
-  *    min-id roots — the star loop's cost at these sizes is scheduling
-  *    per round, not bytes. The result has at most two rows of the
-  *    same width per edge, so it stays within twice the budget;
+  *    finished on the driver by union-find with min-id roots — at these
+  *    sizes the star loop's cost is scheduling per round, not bytes.
+  *    When Catalyst's estimate of the `(u, v)` projection fits, it is
+  *    collected as is in one job (union-find takes duplicates); else the
+  *    loop's first deduplicated checkpoint is collected if its observed
+  *    count × row size fits. The result stays within twice the budget;
   *  - a larger list (or any list when the threshold is −1) runs the
   *    star-contraction loop below. There each round's two shuffles
   *    ride the same AQE machinery as every other operator, and
@@ -56,25 +56,25 @@ object ComponentsDF {
 
   /** Connected components over an undirected edge list.
     *
-    * @param edges DataFrame with numeric columns `src`, `dst`
-    *              (self-loops and duplicates tolerated).
+    * @param edges numeric `src`, `dst`; self-loops, nulls, duplicates tolerated.
     * @return (vid, component) for every vertex incident to an edge;
     *         component = min vertex id in the component. Isolated
     *         vertices are the caller's to union in (they never appear
     *         in an edge list).
     */
   def run(edges: DataFrame, maxIter: Int = 25): DataFrame = {
-    // The convergence fingerprint rides each round's materialization as
-    // an observed metric — one job per round instead of checkpoint +
-    // fingerprint re-scan (guide §1.2: don't re-pass over what the
-    // round already materialized).
-    var (e, fp) = checkpointFp(edges
+    val uv = edges
       .select(least(col("src"), col("dst")).cast("long").as("u"),
         greatest(col("src"), col("dst")).cast("long").as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct())
-    if (DriverFinish.fits(e.sparkSession, BigInt(fp._1) * DriverFinish.rowBytes(e.schema)))
-      e.sparkSession.createDataFrame(unionFind(e.collect()).asJava, starForest(e).schema)
+    val spark = uv.sparkSession
+    def driverFinish(e: DataFrame) =
+      spark.createDataFrame(unionFind(e.collect()).asJava, starForest(uv).schema)
+    if (DriverFinish.fits(spark, uv.queryExecution.optimizedPlan.stats.sizeInBytes))
+      return driverFinish(uv)
+    // each round's checkpoint observes its convergence fingerprint (guide §1.2)
+    var (e, fp) = checkpointFp(uv.distinct())
+    if (DriverFinish.fits(spark, BigInt(fp._1) * DriverFinish.rowBytes(e.schema))) driverFinish(e)
     else {
       var converged = false
       var i = 0

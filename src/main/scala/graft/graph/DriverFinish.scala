@@ -19,11 +19,16 @@ import org.apache.spark.sql.types.StructType
   * depends on the kernel and the shape (BENCH_NOTES, "Loop kernels:
   * where each path wins").
   *
-  * Sizes are in Catalyst's unit, the one the threshold is defined in:
-  * an edge input is the optimizer's size estimate of its plan (the number
-  * `JoinSelection` compares with the threshold) or, where the kernel
-  * already observes the row count, rows × [[rowBytes]] — the size
-  * Catalyst gives a relation of known row count.
+  * One size rule, in Catalyst's unit, the one the threshold is defined
+  * in: estimate first, then the observed count. An edge input fits when
+  * the optimizer's size estimate of its plan does (the number
+  * `JoinSelection` compares with the threshold), and the kernel then
+  * collects it without running anything first. When the estimate does
+  * not fit, a kernel that observes the row count anyway on its loop's
+  * first checkpoint ([[ComponentsDF.run]]) still finishes on the driver
+  * if rows × [[rowBytes]] — the size Catalyst gives a relation of known
+  * row count — fits, so an overestimated input never leaves the driver
+  * finish for the loop.
   */
 private[graph] object DriverFinish {
 

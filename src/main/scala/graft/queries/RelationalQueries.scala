@@ -1682,13 +1682,18 @@ object RelationalQueries extends QueryPack {
           coalesce(col("d.first_day"), col("b.first_day"))).as("first_day"),
         greatest(coalesce(col("b.last_day"), col("d.last_day")),
           coalesce(col("d.last_day"), col("b.last_day"))).as("last_day"))
-      .withColumn("a", expr("2 * CAST(mtotal * 1000000 AS DECIMAL(38,0)) + 100 * cnt"))
+      .withColumn("a", expr("CAST(mtotal * 1000000 AS DECIMAL(38,0)) + 50 * cnt"))
       .select(col("status"), col("month"), col("cnt"),
         round(col("mtotal"), 2).cast("double").as("total"),
         // avg_price in EXACT integer HALF_UP arithmetic, then one
         // double division both engines perform on the same integer:
-        // round(mtotal/cnt, 4) computed as ⌊a / (200·cnt)⌋ / 10⁴ with
-        // a = 2·mtotal·10⁶ + 100·cnt. The old round(double/cnt, 4) diverged
+        // round(mtotal/cnt, 4) computed as ⌊a / (100·cnt)⌋ / 10⁴ with
+        // a = mtotal·10⁶ + 50·cnt (mtotal·10⁶ is integral at scale 6).
+        // mtotal is DECIMAL(29,6), so |a| < 10²⁹ + 50·2⁶³ never overflows
+        // DECIMAL(38,0); |quotient| ≤ 10¹⁶ + 1 fits a long, since each
+        // order's price is a DECIMAL(18,6) and an average cannot exceed
+        // its largest term (a sum beyond DECIMAL(28,6) fails under ANSI
+        // with ARITHMETIC_OVERFLOW). The old round(double/cnt, 4) diverged
         // cross-engine on decimal .00005 boundaries (Spark rounds the
         // shortest double repr HALF_UP, DuckDB rounds the binary value
         // — sf0.001's 2207782.51/8 = …81375 scored .8138 vs .8137), an
@@ -1697,7 +1702,7 @@ object RelationalQueries extends QueryPack {
         // directly, see OPTIMIZATION_r12.md). The division FLOORS like
         // DuckDB's `//`: Spark's `div` truncates toward zero, so a
         // negative a is floored as (a - pmod(a, b)) div b, b > 0.
-        (expr("CAST((a - pmod(a, 200 * cnt)) div (200 * cnt) AS DOUBLE)")
+        (expr("CAST((a - pmod(a, 100 * cnt)) div (100 * cnt) AS DOUBLE)")
           / 10000).as("avg_price"),
         col("first_day"), col("last_day"))
       .orderBy("status", "month")

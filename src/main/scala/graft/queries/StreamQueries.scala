@@ -3,6 +3,7 @@ package graft.queries
 import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
@@ -417,9 +418,10 @@ object StreamQueries extends QueryPack {
   }
 
   /** Stage a table into `n` slice files (slice = rows where `k` = 0..n−1)
-    * with ascending modification times, in ONE Spark job: range-partition
+    * with ascending modification times, in ONE Spark job: hash-partition
     * on the slice key (equal keys land in exactly one partition, so
-    * `partitionBy` writes exactly one part file per slice) and move each
+    * `partitionBy` writes exactly one part file per slice; unlike a range
+    * partitioning, no job samples the key's bounds first) and move each
     * part into the watch dir. The per-slice `filter → coalesce(1) → write`
     * loop this replaces paid one full scan+write job PER SLICE (guide
     * §2.4: one exchange where the data is already keyed the way the
@@ -431,7 +433,7 @@ object StreamQueries extends QueryPack {
                           streamDir: Path, scratch: Path): Unit = {
     val outDir = scratch.resolve("slices")
     df.withColumn("_k", k.cast("int"))
-      .repartitionByRange(n, col("_k"))
+      .repartition(n, col("_k"))
       .write.partitionBy("_k").mode("overwrite").parquet(outDir.toString)
     (0 until n).foreach { i =>
       val sliceDir = outDir.resolve(s"_k=$i")
@@ -824,16 +826,13 @@ object StreamQueries extends QueryPack {
     val ev = graft.core.Tables(s, dir, "events")
     runStream(s, "s18",
       BatchSink(st => StreamingCC.mergeBatch(st.toString), { st =>
-        val users = StateVersions.current(s, st.toString)
+        // one window pass: each user's component minimum and size
+        val comp = Window.partitionBy("component")
+        StateVersions.current(s, st.toString)
           .filter(col("vid") % 2 === 0)
           .select(expr("vid div 2").as("user_id"), col("component"))
-        val full = users.join(
-            users.groupBy("component").agg(min(col("user_id")).as("comp_user")),
-            "component")
-          .select(col("user_id"), col("comp_user").as("component"))
-        full.join(full.groupBy(col("component"))
-            .agg(count(lit(1)).as("comp_size")), "component")
-          .select("user_id", "component", "comp_size")
+          .select(col("user_id"), min(col("user_id")).over(comp).as("component"),
+            count(lit(1)).over(comp).as("comp_size"))
       })) { d =>
       stageSlices(ev, col("event_id") % 3, 3, d.in, d.scratch)
       ev.schema

@@ -32,7 +32,7 @@ object StreamingCC {
   /** foreachBatch body: fold one micro-batch of `events` rows into the
     * bipartite co-click incidence (user at 2·id, bucket at 2·b+1, the
     * g49 encoding) and advance the component state one version.
-    * `ComponentsDF.run` dedups its edges, so the incidence is not. */
+    * `ComponentsDF.run` takes duplicate edges, so the incidence keeps them. */
   def mergeBatch(stateRoot: String)(batch: DataFrame, batchId: Long): Unit = {
     val incidence = batch.filter(col("event_type") === "click")
       .select((col("user_id") * 2).as("src"),

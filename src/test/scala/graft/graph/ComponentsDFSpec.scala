@@ -119,6 +119,33 @@ class ComponentsDFSpec extends SparkSpec {
     }
   }
 
+  test("the driver finish is one job and agrees with the loop on dups, self-loops and nulls") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-cc-onejob")
+    try {
+      // a parquet input, as the callers read: a local Seq would fold
+      // into a LocalRelation and collect without any job
+      Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (2L, 1L), (1L, 2L), (3L, 3L),
+          (2L, 4L), (5L, null), (null, 6L), (null, null), (7L, 8L), (8L, 7L))
+        .toDF("src", "dst").write.parquet(dir.resolve("e").toString)
+      val edges = spark.read.parquet(dir.resolve("e").toString) // schema inference: not counted
+      val count = new graft.devtools.PlanDump.JobCount(spark.sparkContext)
+      spark.sparkContext.addSparkListener(count)
+      val driver = try {
+        val j0 = count.drain()
+        val out = ComponentsDF.run(edges)
+        assert(count.drain() - j0 === 1L, "the driver finish should collect its edges in one job")
+        out
+      } finally spark.sparkContext.removeSparkListener(count)
+      assert(isLocal(driver), "a small input should take the driver finish")
+      val want = Map(1L -> 1L, 2L -> 1L, 4L -> 1L, 7L -> 7L, 8L -> 7L)
+      assert(assignment(driver) === want)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try assert(assignment(ComponentsDF.run(edges)) === want, "the loop disagrees")
+      finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    } finally graft.core.TempDirs.deleteQuietly(dir, "spec")
+  }
+
   test("both paths return the same schema") {
     val pairs = Seq((1L, 2L), (3L, 2L))
     var schemas = Map.empty[String, org.apache.spark.sql.types.StructType]

@@ -27,4 +27,23 @@ class IncrementalAggSpec extends SparkSpec {
       assert(got === Seq(("F", 2L, -1.0), ("O", 1L, 2.0001)))
     } finally graft.core.TempDirs.deleteQuietly(dir, "q74spec")
   }
+
+  test("q74: orders at the price type's largest magnitude average exactly") {
+    val dir = Files.createTempDirectory("graft-q74")
+    try {
+      def ts(d: String) = java.sql.Timestamp.valueOf(s"$d 00:00:00")
+      // the largest DECIMAL(18,6) price, q74's per-order type: a sum of
+      // two on each side of the cutoff, and one negative
+      val top = BigDecimal("999999999999.999999")
+      Seq(("F", top, ts("1997-06-02")), ("F", top, ts("1997-06-20")),
+        ("O", -top, ts("1997-07-01")))
+        .toDF("o_orderstatus", "o_totalprice", "o_orderdate")
+        .select($"o_orderstatus", $"o_totalprice".cast("decimal(18,6)"), $"o_orderdate")
+        .write.parquet(dir.resolve("orders.parquet").toString)
+      val got = RelationalQueries.q74IncrementalAgg(spark, dir.toString)
+        .select("status", "cnt", "avg_price").as[(String, Long, Double)].collect().toSeq
+      // 999999999999.999999 rounds HALF_UP to 1000000000000.0000
+      assert(got === Seq(("F", 2L, 1.0e12), ("O", 1L, -1.0e12)))
+    } finally graft.core.TempDirs.deleteQuietly(dir, "q74spec")
+  }
 }

@@ -5,8 +5,9 @@ import java.nio.file.{Files, Path}
 import graft.SparkSpec
 
 /** The staged-stream runner's contracts that no gate exercises: a
-  * watermark drop fails the query whatever its sink, and the session
-  * conf the runner swaps in is restored when the stream fails. */
+  * watermark drop fails the query whatever its sink, the session conf
+  * the runner swaps in is restored when the stream fails, and a second
+  * run of a stream reuses the generated classes of the first. */
 class StreamQueriesSpec extends SparkSpec {
   import spark.implicits._
 
@@ -59,5 +60,16 @@ class StreamQueriesSpec extends SparkSpec {
       spark.conf.set(shuffleKey, prevShuffle)
       graft.core.TempDirs.deleteQuietly(dir, "sqspec")
     }
+  }
+
+  test("s18: a second run in one session compiles no generated classes") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val sf = "/root/testdata/sf0.001"
+    val first = StreamQueries.s18StreamComponents(spark, sf).collect()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val second = StreamQueries.s18StreamComponents(spark, sf).collect()
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before === 0L,
+      "each stream's cloned session recompiled the classes of the last run")
+    assert(second.toSeq === first.toSeq)
   }
 }

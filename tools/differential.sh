@@ -17,7 +17,10 @@
 # difference is printed as unstable, and not counted, when one build's
 # counts disagree: a record's two warm repetitions (`jobs_unstable`) or,
 # for statements, its two runs, since the count can move between JVM
-# runs of one build.
+# runs of one build. A record whose second warm repetition compiled
+# generated classes on either build (PlanDump's `compiles`) is printed
+# with both counts, and not counted: a read that compiles when warm
+# recompiles on every run.
 # Exit 0 when nothing differs, 1 otherwise. The corpus is read from
 # ../testdata beside the checkout (as tools/pregate.sh does).
 set -euo pipefail
@@ -96,6 +99,9 @@ def compare(label, x, y, unstable):
         if k not in x or k not in y:
             report(f"{label} {k}: only in {'change' if k in y else rev[:12]}")
             continue
+        compiles = [x[k].get("compiles"), y[k].get("compiles")]
+        if any(compiles):
+            print(f"{label} {k}: compiles {json.dumps(compiles)}")  # cost, not a change
         moved = [f for f in FIELDS if x[k].get(f) != y[k].get(f)]
         if not moved:
             continue
